@@ -535,8 +535,11 @@ def _paged_topk(
 # with a weakref.finalize that drops the entry when the result handle
 # is collected, so an abandoned result stops pinning the Python-side
 # page objects (the EXECUTOR blocks still need an explicit release or
-# session end — exactly the leak release_paged_result closes).
-_PAGED_RESULT_PAGES: dict[int, list[DataFrame]] = {}
+# session end — exactly the leak release_paged_result closes). A page
+# that IS the result (the single-page shape) is stored as None and
+# resolved to the result at release time: storing it would pin the
+# result strongly, and the finalize could never fire.
+_PAGED_RESULT_PAGES: dict[int, list[DataFrame | None]] = {}
 
 
 def _register_paged_result(out: DataFrame, pages: list[DataFrame]) -> None:
@@ -545,7 +548,7 @@ def _register_paged_result(out: DataFrame, pages: list[DataFrame]) -> None:
     import weakref
 
     key = id(out)
-    _PAGED_RESULT_PAGES[key] = pages
+    _PAGED_RESULT_PAGES[key] = [None if p is out else p for p in pages]
     # Drop the entry when the result handle is collected WITHOUT
     # keeping the result alive ourselves (a strong key would pin it,
     # and with it every page plan, forever).
@@ -574,6 +577,7 @@ def release_paged_result(result: DataFrame, blocking: bool = False) -> list[int]
     pages = _PAGED_RESULT_PAGES.pop(id(result), None)
     released: list[int] = []
     for p in pages or ():
+        p = result if p is None else p
         try:
             jrdd = p._jdf.queryExecution().analyzed().rdd()
             jrdd.unpersist(blocking)

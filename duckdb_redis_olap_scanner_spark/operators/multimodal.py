@@ -38,11 +38,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-# Module-level (not in-function) codec imports: the gate rotation's
-# dirty-closure walk resolves references through module GLOBALS, so a
-# lazy `from .flac import ...` inside a function would hide flac.py
-# edits from the changed-since-verified tier. None of these import
-# multimodal at module scope, so there is no cycle.
+# None of these codec modules import multimodal at module scope, so
+# there is no cycle.
 from . import flac as _flac
 from . import jpeg as _jpeg
 from . import gif as _gif
@@ -2418,9 +2415,11 @@ def encode_avi_payload(doc_id: int) -> bytes:
     avih = struct.pack(
         "<14I", 33333, 0, 0, 0, nf, 0, 1, 0, w, h, 0, 0, 0, 0
     )
+    # dwScale=1, dwRate=30: rate/scale = 30 fps, matching avih
+    # dwMicroSecPerFrame=33333
     strh = struct.pack(
         "<4s4sIHHIIIIIIIIhhhh",
-        b"vids", b"DIB ", 0, 0, 0, 0, 30, 1, 0, nf, stride * h, 0, 0,
+        b"vids", b"DIB ", 0, 0, 0, 0, 1, 30, 0, nf, stride * h, 0, 0,
         0, 0, w, h,
     )
     strf = struct.pack(
@@ -2588,7 +2587,7 @@ def encode_avi_mjpeg_payload(doc_id: int) -> bytes:
     )
     strh = struct.pack(
         "<4s4sIHHIIIIIIIIhhhh",
-        b"vids", b"MJPG", 0, 0, 0, 0, 30, 1, 0, nf, 0, 0, 0,
+        b"vids", b"MJPG", 0, 0, 0, 0, 1, 30, 0, nf, 0, 0, 0,
         0, 0, w, h,
     )
     strf = struct.pack(
@@ -2653,8 +2652,16 @@ def decode_avi_mjpeg(payload: bytes) -> dict:
             elif cid == b"avih":
                 avih = struct.unpack_from("<14I", payload, data_start)
             elif cid == b"strh":
-                handler = payload[data_start + 4 : data_start + 8]
-            elif cid in (b"00dc", b"00db"):
+                # the video codec comes from the FIRST 'vids' stream: a
+                # trailing audio strl must not overwrite it
+                if (
+                    handler is None
+                    and payload[data_start : data_start + 4] == b"vids"
+                ):
+                    handler = payload[data_start + 4 : data_start + 8]
+            elif cid == b"00dc":
+                # compressed stream-0 frames only: '00db' (raw DIB) and
+                # other streams' chunks are not JPEG frames
                 frames.append(payload[data_start : data_start + size])
             pos = data_start + size + (size & 1)
 
@@ -2693,9 +2700,7 @@ def decode_avi_mjpeg(payload: bytes) -> dict:
 def synthesize_avi_mjpeg(docs: DataFrame) -> DataFrame:
     """(doc_id, payload binary, mime): one real MJPEG AVI per doc,
     synthesized in the workers — the :func:`synthesize_media` shape
-    for the one kind whose payload composes two codecs (kept as its
-    own function so adding it could not re-dirty the verified
-    synthesize_media closure; see VERDICT r17 task 1)."""
+    for the one kind whose payload composes two codecs."""
     from ..engine import ship_package
 
     def _synth(batch_iter: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -2755,11 +2760,7 @@ def decode_avi_mjpeg_features(media: DataFrame) -> DataFrame:
 # ---------------------------------------------------------------------------
 # Interleaved audio+video AVI: MJPEG '00dc' frames + G.711 mu-law
 # '01wb' audio chunks in one movi stream — the canonical two-stream
-# container composition (r18 VERDICT task 6). New top-level functions
-# (not new kinds in synthesize_media / decode_avi_mjpeg) so landing
-# them cannot re-dirty any verified closure; the catalog entry that
-# drives them is QUEUED in plans/queued_entries_r20.py until the r20
-# gate window has slack (COVERAGE.md "Round 19").
+# container composition (r18 VERDICT task 6).
 # ---------------------------------------------------------------------------
 
 AVI_AV_SCHEMA = (
@@ -2984,8 +2985,7 @@ def decode_avi_mjpeg_mulaw(payload: bytes) -> dict:
 def synthesize_avi_interleaved(docs: DataFrame) -> DataFrame:
     """(doc_id, payload binary, mime): one real two-stream MJPEG +
     mu-law AVI per doc, synthesized in the workers (the
-    :func:`synthesize_avi_mjpeg` shape; own function for the same
-    no-re-dirty reason)."""
+    :func:`synthesize_avi_mjpeg` shape)."""
     from ..engine import ship_package
 
     def _synth(batch_iter: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:

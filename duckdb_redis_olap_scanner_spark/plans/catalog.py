@@ -30,7 +30,6 @@ order-insensitively but exactly):
 from __future__ import annotations
 
 import os
-import sys
 import threading
 from collections.abc import Callable
 from dataclasses import dataclass, field
@@ -45,9 +44,8 @@ class CatalogEntry:
     oracle: str | None
     tags: tuple[str, ...] = field(default=())
     doc: str = ""
-    # The undecorated registered function — the root of the
-    # referenced-callable closure used by the changed-since-verified
-    # gate tier (see ``_changed_since_verified``).
+    # The un-memoized builder: calls it bypass the per-(session,
+    # sf_dir) prepared-plan cache that ``fn`` goes through.
     raw_fn: Callable | None = None
 
 
@@ -107,8 +105,8 @@ def _session_key(spark: SparkSession) -> str:
 # never collects. Instead: bounded per-session LRU. The cap covers
 # any realistic number of CONCURRENT sessions (tunable for drivers
 # that genuinely serve more — exceeding it with LIVE sessions turns
-# the prepared-plan cache into thrash, so the first eviction warns
-# once with the knob's name); a long-lived driver cycling
+# the prepared-plan cache into thrash, so each evicted session key
+# warns once with the knob's name); a long-lived driver cycling
 # newSession() per request evicts the dead ones as it goes.
 def _session_cap() -> int:
     raw = os.environ.get("SPARK_GRAFT_MAX_CACHED_SESSIONS", "8")
@@ -134,49 +132,54 @@ _ALL_MEMOS: list[dict] = []
 # concurrent insert from another session's thread would raise
 # "dictionary changed size during iteration" (r17 review pass 2).
 _CACHE_LOCK = threading.RLock()
-_WARNED_EVICTION = False
+# Session keys whose eviction was already logged: each evicted key
+# warns once, so a driver that raised the cap and still thrashes keeps
+# hearing about it, while re-evicting the same key stays quiet.
+_WARNED_EVICTION: set[str] = set()
 
 
-def _touch_session(key: str) -> None:
-    global _WARNED_EVICTION
+def _evict_locked(key: str) -> list:
+    """Move ``key`` to the LRU's young end and evict past the cap.
+    The caller holds ``_CACHE_LOCK``; returns the evicted frames, which
+    the caller releases with :func:`_release` AFTER dropping the lock."""
     doomed: list = []
-    with _CACHE_LOCK:
-        if key in _SESSION_LRU:
-            # dict preserves insertion order; re-insert = move to end
-            del _SESSION_LRU[key]
-            _SESSION_LRU[key] = None
-        else:
-            _SESSION_LRU[key] = None
-        while len(_SESSION_LRU) > _MAX_CACHED_SESSIONS:
-            dead = next(iter(_SESSION_LRU))
-            del _SESSION_LRU[dead]
-            if not _WARNED_EVICTION:
-                _WARNED_EVICTION = True
-                import logging
+    # dict preserves insertion order; re-insert = move to end
+    _SESSION_LRU.pop(key, None)
+    _SESSION_LRU[key] = None
+    while len(_SESSION_LRU) > _MAX_CACHED_SESSIONS:
+        dead = next(iter(_SESSION_LRU))
+        del _SESSION_LRU[dead]
+        if dead not in _WARNED_EVICTION:
+            _WARNED_EVICTION.add(dead)
+            import logging
 
-                logging.getLogger(__name__).warning(
-                    "evicting cached plans of session %s (more than "
-                    "%d session keys seen). Benign for discarded "
-                    "newSession()s; if this many sessions are LIVE, "
-                    "raise SPARK_GRAFT_MAX_CACHED_SESSIONS to avoid "
-                    "prepared-plan cache thrash.",
-                    dead,
-                    _MAX_CACHED_SESSIONS,
-                )
-            for memo in _ALL_MEMOS:
-                for k in [k for k in memo if k[0] == dead]:
-                    doomed.append(memo.pop(k))
-            for k in [k for k in _TABLE_CACHE if k[0] == dead]:
-                doomed.append(_TABLE_CACHE.pop(k))
-    # Release JVM-side storage OUTSIDE the lock: table_keyed frames
-    # are persisted (.cache()), and dropping the last Python
-    # reference would strand their blocks in the shared CacheManager
-    # with no handle left to free them (r17 review pass 2) — but each
-    # unpersist is a py4j round trip, and holding the global lock
-    # across the sweep would stall every catalog call in every
-    # session (pass 3). unpersist on a never-persisted frame is a
-    # no-op; a stopped session raises, which is equally fine — its
-    # blocks died with the context.
+            logging.getLogger(__name__).warning(
+                "evicting cached plans of session %s (more than "
+                "%d session keys seen). Benign for discarded "
+                "newSession()s; if this many sessions are LIVE, "
+                "raise SPARK_GRAFT_MAX_CACHED_SESSIONS to avoid "
+                "prepared-plan cache thrash.",
+                dead,
+                _MAX_CACHED_SESSIONS,
+            )
+        for memo in _ALL_MEMOS:
+            for k in [k for k in memo if k[0] == dead]:
+                doomed.append(memo.pop(k))
+        for k in [k for k in _TABLE_CACHE if k[0] == dead]:
+            doomed.append(_TABLE_CACHE.pop(k))
+    return doomed
+
+
+def _release(doomed: list) -> None:
+    """Release evicted frames' JVM-side storage, never under the lock:
+    table_keyed frames are persisted (.cache()), and dropping the last
+    Python reference would strand their blocks in the shared
+    CacheManager with no handle left to free them (r17 review pass 2)
+    — but each unpersist is a py4j round trip, and holding the global
+    lock across the sweep would stall every catalog call in every
+    session (pass 3). unpersist on a never-persisted frame is a no-op;
+    a stopped session raises, which is equally fine — its blocks died
+    with the context."""
     for df in doomed:
         try:
             df.unpersist()
@@ -184,16 +187,23 @@ def _touch_session(key: str) -> None:
             pass
 
 
+def _touch_session(key: str) -> None:
+    with _CACHE_LOCK:
+        doomed = _evict_locked(key)
+    _release(doomed)
+
+
 def _insert_cache_row(cache: dict, k, df) -> None:
     """All cache inserts go through here: under the lock, AND with the
     session key re-touched — a key evicted between the caller's
     _session_key() and this insert would otherwise leave the new row
-    unsweepable forever (r17 review pass 3). The RLock makes the
-    nested _touch_session safe; its eviction work happens before our
-    insert, so the row we add belongs to a key that is in the LRU."""
+    unsweepable forever (r17 review pass 3). The eviction work happens
+    before our insert, so the row we add belongs to a key that is in
+    the LRU; the evicted frames are released after the lock drops."""
     with _CACHE_LOCK:
-        _touch_session(k[0])
+        doomed = _evict_locked(k[0])
         cache[k] = df
+    _release(doomed)
 
 
 def register(
@@ -235,489 +245,38 @@ def register(
     return deco
 
 
-# Entries the driver's correctness gate already hash-verified in a prior
-# round (CORRECTNESS_r01.json). The gate checks the FIRST 50 registry
-# entries in iteration order, so ``registry()`` orders not-yet-verified
-# entries first: each round the unverified frontier rotates into the
-# gate while previously-verified entries keep their local oracle-parity
-# test (tests/test_oracle_parity.py runs the identical check over ALL
-# entries). ``_prior_verified()`` additionally reads every
-# CORRECTNESS_r*.json in the repo root, so the rotation advances each
-# round without editing this baseline set.
-_PRIOR_VERIFIED: frozenset[str] = frozenset({
-    # --- round 1 (CORRECTNESS_r01.json, all hash_match=true) ---
-    "q1_pricing_summary", "q3_shipping_priority", "q5_local_supplier_volume",
-    "q6_forecast_revenue", "q10_returned_items", "join_inner_groupby",
-    "join_left_outer", "join_right_outer", "join_full_outer", "join_semi",
-    "join_anti", "join_theta", "join_cross", "agg_distinct_count",
-    "distinct_rows", "agg_rollup", "agg_cube", "agg_grouping_sets",
-    "agg_having", "agg_stats", "agg_approx_distinct", "agg_approx_percentile",
-    "window_row_number", "window_rank_dense", "window_lag_lead",
-    "window_running_sum", "window_moving_avg", "window_ntile_first_last",
-    "topk_orders", "sort_multi_key", "set_union_all", "set_intersect",
-    "set_except", "string_funcs", "like_case_funcs", "regexp_funcs",
-    "math_funcs", "date_funcs", "json_funcs", "conditional_agg",
-    "null_funcs", "cast_funcs", "array_funcs", "subquery_in_scalar",
-    "pivot_event_types", "events_sessionize", "set_except_all",
-    "set_intersect_all", "lateral_posexplode", "map_funcs",
-})
-
-
-def _repo_root() -> str:
-    """Where the driver writes CORRECTNESS_r*.json (patchable in tests)."""
-    return os.path.dirname(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    )
-
-
-def _verified_rounds() -> dict[str, int]:
-    """name → the NEWEST driver round with a green CORRECTNESS row for
-    it (``hash_match`` for oracled entries, error-free ``rows_match``
-    for rows-only ones). Baseline entries count as round 1."""
-    import glob
-    import json
-    import re
-
-    rounds: dict[str, int] = {n: 1 for n in _PRIOR_VERIFIED}
-    for path in sorted(glob.glob(os.path.join(_repo_root(), "CORRECTNESS_r*.json"))):
-        m = re.search(r"CORRECTNESS_r(\d+)\.json$", path)
-        rno = int(m.group(1)) if m else 0
-        try:
-            with open(path) as f:
-                rows = json.load(f)
-        except (OSError, ValueError):
-            continue
-        for name, row in rows.items():
-            if not isinstance(row, dict) or row.get("err"):
-                continue
-            if row.get("hash_match") or (
-                row.get("rows_match") and name in _REGISTRY
-                and _REGISTRY[name].oracle is None
-            ):
-                rounds[name] = max(rounds.get(name, 0), rno)
-    return rounds
-
-
-def _prior_verified() -> frozenset[str]:
-    """The baseline set plus every entry a recorded driver round has
-    already verified."""
-    return frozenset(_verified_rounds())
-
-
-def _round_commits(root: str) -> dict[int, str]:
-    """Driver round number → the commit that last touched its
-    CORRECTNESS file, from ONE ``git log`` pass. Empty when git/history
-    is unavailable (e.g. the synthetic tmp repo roots the rotation
-    tests use) — callers then skip the changed-since-verified tier and
-    fall back to pure LRU."""
-    import re
-    import subprocess
-
-    out: dict[int, str] = {}
-    try:
-        log = subprocess.run(
-            ["git", "log", "--format=%H", "--name-only",
-             "--", "CORRECTNESS_r*.json"],
-            cwd=root, capture_output=True, text=True, timeout=60,
-        )
-        if log.returncode != 0:
-            return {}
-        sha = ""
-        # newest-first: the first commit naming a round's file wins
-        for line in log.stdout.splitlines():
-            line = line.strip()
-            if re.fullmatch(r"[0-9a-f]{40}", line):
-                sha = line
-            else:
-                m = re.fullmatch(r"CORRECTNESS_r(\d+)\.json", line)
-                if m and int(m.group(1)) not in out:
-                    out[int(m.group(1))] = sha
-    except (OSError, subprocess.SubprocessError):
-        return {}
-    return out
-
-
-def _git_blob(root: str, commit: str, relpath: str,
-              _cache: dict[tuple[str, str], str | None] = {}) -> str | None:
-    """File content at a commit (None if absent there)."""
-    import subprocess
-
-    key = (commit, relpath)
-    if key not in _cache:
-        try:
-            show = subprocess.run(
-                ["git", "show", f"{commit}:{relpath}"],
-                cwd=root, capture_output=True, text=True, timeout=60,
-            )
-            _cache[key] = show.stdout if show.returncode == 0 else None
-        except (OSError, subprocess.SubprocessError):
-            _cache[key] = None
-    return _cache[key]
-
-
-def _code_imports(code, _cache: dict = {}) -> list:
-    """(module_name, attr_or_None) pairs for every import executed by
-    this code object — ``IMPORT_NAME`` gives the module (possibly ""
-    for ``from . import x``), each following ``IMPORT_FROM`` one
-    imported attr. Cached per code object (the walker revisits shared
-    helpers across entries)."""
-    import dis
-
-    key = id(code)
-    hit = _cache.get(key)
-    if hit is not None and hit[0] is code:
-        return hit[1]
-    pairs: list = []
-    current: str | None = None
-    saw_from = False
-    trailing: list = []  # components of a dotted ``import a.b.c as x``
-    for ins in dis.get_instructions(code):
-        if ins.opname == "IMPORT_NAME":
-            if current is not None and not saw_from:
-                pairs.append((current, None))  # plain ``import x.y``
-            current, saw_from = ins.argval, False
-            trailing = current.split(".")[1:]
-        elif ins.opname == "IMPORT_FROM" and current is not None:
-            saw_from = True
-            if trailing and ins.argval == trailing[0]:
-                # ``import a.b.c as x`` compiles to IMPORT_NAME a.b.c
-                # + IMPORT_FROM per trailing component (3.7+): record
-                # the leaf MODULE, not bogus attr pairs. Matching each
-                # expected component in order keeps a genuine ``from
-                # a.b import c`` as an attr pair (a ``from a.b import
-                # b`` misreads as the module — a harmless
-                # over-approximation, the module covers the attr).
-                trailing.pop(0)
-                if (current, None) not in pairs:
-                    pairs.append((current, None))
-            else:
-                trailing = []
-                pairs.append((current, ins.argval))
-    if current is not None and not saw_from:
-        pairs.append((current, None))
-    _cache[key] = (code, pairs)
-    return pairs
-
-
-def _resolve_import_all(modname: str, base_pkg: str, pkg: str):
-    """Best-effort resolution of an imported module name, yielding
-    EVERY in-package candidate: absolute first, then relative to the
-    importing module's package chain. Only modules inside this package
-    resolve (stdlib/pyspark imports yield nothing — they can't dirty
-    entries). Candidates under the package prefix that aren't in
-    ``sys.modules`` yet are IMPORTED: a module referenced only from
-    entry bodies (ann_index before any entry ran) would otherwise be
-    invisible to the dirty walk — the exact hole the bytecode recovery
-    exists to close (r15 review). Yielding ALL candidates, not just
-    the first, lets the caller keep looking when the imported attr is
-    missing on a shallower match: the bytecode drops the relative-
-    import LEVEL, so ``from .. import helper`` inside ``pkg.plans.x``
-    produces candidates ``pkg.plans`` (no ``helper`` attr) and then
-    ``pkg`` (the real target) — first-match-wins silently dropped the
-    pair (ADVICE r16)."""
-    candidates = []
-    if modname:
-        candidates.append(modname)
-    p = base_pkg
-    while p:
-        candidates.append(f"{p}.{modname}" if modname else p)
-        p = p.rpartition(".")[0]
-    for cand in candidates:
-        mod = sys.modules.get(cand)
-        if mod is None and (cand + ".").startswith(pkg) \
-                and cand not in _IMPORT_MISSES \
-                and cand not in _IMPORT_TRANSIENT:
-            import importlib
-
-            try:
-                mod = importlib.import_module(cand)
-            except ModuleNotFoundError:
-                _IMPORT_MISSES.add(cand)  # permanent: not a module
-                mod = None
-            except Exception:
-                # The module can't import in THIS process state (e.g.
-                # custom_fns needs a live SparkSession at import) — it
-                # stays unresolved for now, but the failure is only
-                # cached until the next walk (_changed_since_verified
-                # clears it): the state may have changed by then, and
-                # a forever-cached transient failure would re-open the
-                # missed-local-import hole for that module (r15
-                # review pass 2).
-                _IMPORT_TRANSIENT.add(cand)
-                mod = None
-        if mod is not None and (mod.__name__ + ".").startswith(pkg):
-            yield mod
-
-
-def _resolve_import(modname: str, base_pkg: str, pkg: str):
-    """First in-package candidate, for callers that need exactly one
-    module (the submodule retry, where the name is already fully
-    qualified)."""
-    return next(_resolve_import_all(modname, base_pkg, pkg), None)
-
-
-_IMPORT_MISSES: set[str] = set()
-_IMPORT_TRANSIENT: set[str] = set()  # cleared per dirty walk
-
-
-def _referenced_pkg_callables(fn) -> frozenset:
-    """The transitive closure of THIS-PACKAGE functions/classes an
-    entry's registered function actually references — resolved by
-    walking code objects' global-name loads (``co_names``, including
-    nested lambdas/comprehensions and closure cells) rather than
-    module imports, so one edited helper dirties only the entries that
-    call it, not every entry in a 2 kLoC module. Names reached through
-    a package-module alias (``D.segment_dedup``) are resolved against
-    that module's namespace. Function-LOCAL imports (``from .catalog
-    import agg_width`` inside a body) never bind in ``__globals__``,
-    so they are recovered from the bytecode: each ``IMPORT_NAME`` is
-    resolved against ``sys.modules`` (absolute, then relative to the
-    enclosing package chain) and its ``IMPORT_FROM`` attrs pushed —
-    without this, editing a locally-imported helper dirtied nothing
-    (the r15 honesty fix)."""
-    import inspect
-    import types
-
-    pkg = __name__.split(".")[0] + "."
-
-    def in_pkg(obj) -> bool:
-        return (getattr(obj, "__module__", "") or "").startswith(pkg) or \
-            getattr(obj, "__module__", "") == pkg[:-1]
-
-    out: set = set()
-    visited: set = set()
-    stack = [fn]
-
-    def push(obj) -> None:
-        obj = getattr(obj, "__func__", obj)  # classmethod/staticmethod
-        if callable(obj) and in_pkg(obj):
-            stack.append(obj)
-
-    while stack:
-        f = stack.pop()
-        f = inspect.unwrap(f)
-        try:
-            if f in visited:
-                continue
-            visited.add(f)
-        except TypeError:
-            continue
-        if isinstance(f, type):
-            # A class: its getsource covers the whole body, and its
-            # methods are walked for further references — this is how
-            # entries reach Engine and (through ALL_DATASOURCES) the
-            # DataSource/Reader classes behind string format names.
-            if in_pkg(f):
-                out.add(f)
-                for v in vars(f).values():
-                    push(v)
-            continue
-        code = getattr(f, "__code__", None)
-        if code is None:
-            # pyspark UDF wrappers hold the python fn as ``.func``
-            inner = getattr(f, "func", None)
-            code = getattr(inner, "__code__", None)
-            if code is None:
-                continue
-            f = inner
-        if in_pkg(f):
-            out.add(f)
-        names: set[str] = set()
-        local_imports: list[tuple[str, str | None]] = []  # (module, attr)
-        codes = [code]
-        while codes:
-            c = codes.pop()
-            names.update(c.co_names)
-            names.update(c.co_freevars)
-            codes.extend(k for k in c.co_consts if isinstance(k, types.CodeType))
-            local_imports.extend(_code_imports(c))
-        g = getattr(f, "__globals__", {})
-        base_pkg = getattr(
-            sys.modules.get(getattr(f, "__module__", "") or ""),
-            "__package__", None) or ""
-        pkg_mods = []
-        for modname, attr in local_imports:
-            target = None
-            # Try EVERY candidate module, not just the first: the
-            # bytecode loses the relative-import level, so the attr
-            # may only exist on a shallower package in the chain —
-            # first-match-wins silently dropped ``from .. import
-            # helper`` when a deeper candidate lacked it (ADVICE r16).
-            for mod in _resolve_import_all(modname, base_pkg, pkg):
-                target = getattr(mod, attr, None) if attr else mod
-                if target is None and attr:
-                    # ``from pkg import submodule`` where the
-                    # submodule was never imported: the attribute
-                    # doesn't exist on the package object until import
-                    # — resolve it as a module in its own right (r15
-                    # review: ann_index is imported only inside entry
-                    # bodies).
-                    target = _resolve_import(
-                        f"{mod.__name__}.{attr}", "", pkg
-                    )
-                if target is not None:
-                    break
-            if isinstance(target, types.ModuleType):
-                # ``from . import dedup as D`` / ``import pkg.mod``:
-                # attribute uses (D.segment_dedup) resolve via co_names
-                # against the module namespace, same as global aliases.
-                if (target.__name__ + ".").startswith(pkg):
-                    pkg_mods.append(target)
-            elif isinstance(target, (list, tuple)) and len(target) <= 64:
-                for x in target:
-                    push(x)
-            elif target is not None:
-                push(target)
-        for n in names:
-            obj = g.get(n)
-            if isinstance(obj, types.ModuleType):
-                if (obj.__name__ + ".").startswith(pkg):
-                    pkg_mods.append(obj)
-            elif isinstance(obj, (list, tuple)) and len(obj) <= 64:
-                # registry constants like engine.ALL_DATASOURCES
-                for x in obj:
-                    push(x)
-            else:
-                push(obj)
-        for mod in pkg_mods:
-            for n in names:
-                push(getattr(mod, n, None))
-        for cell in getattr(f, "__closure__", None) or ():
-            try:
-                push(cell.cell_contents)
-            except ValueError:
-                continue
-    return frozenset(out)
-
-
-_DIRTY_CACHE: dict[tuple, dict[str, int]] = {}
-
-
-def _changed_since_verified(rounds: dict[str, int]) -> dict[str, int]:
-    """Entries running code the driver never hash-checked: some
-    function in the entry's referenced-callable closure has source text
-    (current, in-memory) that did NOT exist verbatim in its file's blob
-    at the commit of the entry's last verified round.
-
-    Returns dirty-entry → "change round": the OLDEST driver round whose
-    commit already contains the entry's current code — i.e. roughly the
-    round the change landed (max round + 1 when only the uncommitted
-    working tree matches). ``registry()`` bumps dirty entries to the
-    front of the verified gate window, newest change first, instead of
-    waiting ~ceil(N/50) rounds for LRU to cycle back to them. Memoized
-    per (repo root, verified-rounds state): one git history walk + a
-    few hundred cached blob substring checks."""
-    import inspect
-
-    root = _repo_root()
-    cache_key = (root, tuple(sorted(rounds.items())))
-    hit = _DIRTY_CACHE.get(cache_key)
-    if hit is not None:
-        return hit
-    # Retry transiently-unimportable modules each fresh walk — the
-    # process state (a live SparkSession) may have changed since.
-    _IMPORT_TRANSIENT.clear()
-    commits = _round_commits(root)
-    if not commits:
-        _DIRTY_CACHE[cache_key] = {}
-        return {}
-
-    src_cache: dict = {}
-
-    def fn_src_and_file(f):
-        if f not in src_cache:
-            try:
-                src = inspect.getsource(f)
-                rel = os.path.relpath(
-                    os.path.abspath(inspect.getfile(f)), root)
-            except (OSError, TypeError):
-                src, rel = None, None
-            src_cache[f] = (src, rel)
-        return src_cache[f]
-
-    changed_at: dict[tuple, bool] = {}
-
-    def changed(f, commit) -> bool:
-        key = (f, commit)
-        if key not in changed_at:
-            src, rel = fn_src_and_file(f)
-            if src is None:
-                changed_at[key] = False
-            else:
-                blob = _git_blob(root, commit, rel)
-                changed_at[key] = blob is None or src not in blob
-        return changed_at[key]
-
-    dirty: dict[str, int] = {}
-    for name, rno in rounds.items():
-        entry = _REGISTRY.get(name)
-        commit = commits.get(rno)
-        if entry is None or entry.raw_fn is None or commit is None:
-            continue
-        closure = _referenced_pkg_callables(entry.raw_fn)
-        if any(changed(f, commit) for f in closure):
-            dirty[name] = min(
-                (r for r, c in commits.items()
-                 if not any(changed(f, c) for f in closure)),
-                default=max(commits) + 1,
-            )
-    _DIRTY_CACHE[cache_key] = dirty
-    return dirty
+# The plan modules, in declaration order: registry() orders entries by
+# their module's position here, then by registration order within the
+# module, so the order never depends on which module a process happened
+# to import first.
+_PLAN_MODULES = (
+    "relational",
+    "pipeline_ops",
+    "redis_demo",
+    "streaming_ops",
+    "temporal_ops",
+    "relational2",
+    "pipeline_ops2",
+    "pipeline_ops3",
+    "pipeline_ops4",
+    "pipeline_ops5",
+)
 
 
 def registry() -> dict[str, CatalogEntry]:
-    """All catalog entries (imports the defining modules on first use).
+    """All catalog entries in declaration order (imports the defining
+    modules on first use; each registers its entries on import)."""
+    import importlib
 
-    Iteration order is verification-priority order: entries without a
-    prior driver CORRECTNESS row first (registration order within the
-    frontier), then verified entries whose source-file closure CHANGED
-    after their last verified round ("dirty" — running code the driver
-    never hash-checked; see ``_changed_since_verified``), then the
-    remaining prior-verified entries. Both verified tiers sort
-    least-recently-verified first (registration order within a round).
-    The driver's gate checks the first 50 entries, so once the frontier
-    is empty every entry cycles back through the gate every
-    ~ceil(N/50) rounds — and a modified entry re-enters the very next
-    window instead of waiting out the LRU cycle. See
-    ``_verified_rounds``.
-    """
-    # Local imports to avoid import cycles; each module registers on import.
-    from . import relational  # noqa: F401
-    from . import pipeline_ops  # noqa: F401
-    from . import redis_demo  # noqa: F401
-    from . import streaming_ops  # noqa: F401
-    from . import temporal_ops  # noqa: F401
-
-    # Round-2 additions import LAST: within the unverified frontier,
-    # round-1 entries (never yet driver-checked) keep gate priority.
-    from . import relational2  # noqa: F401
-    from . import pipeline_ops2  # noqa: F401
-    from . import pipeline_ops3  # noqa: F401
-    from . import pipeline_ops4  # noqa: F401
-    from . import pipeline_ops5  # noqa: F401
-
-    # r20 landing of the r19-queued interleaved-AVI entry (the
-    # prescribed one-call step from plans/queued_entries_r20.py).
-    from . import queued_entries_r20
-
-    queued_entries_r20.register_queued()
-
-    rounds = _verified_rounds()
-    frontier = {n: e for n, e in _REGISTRY.items() if n not in rounds}
-    dirty = _changed_since_verified(rounds)
-    reg_pos = {n: i for i, n in enumerate(_REGISTRY)}
-    verified = {
-        n: _REGISTRY[n]
-        for n in sorted(
-            (n for n in _REGISTRY if n in rounds),
-            key=lambda n: (
-                # dirty first; within dirty, newest change first
-                (0, -dirty[n]) if n in dirty else (1, 0),
-                rounds[n], reg_pos[n],
-            ),
+    rank = {}
+    for i, mod in enumerate(_PLAN_MODULES):
+        rank[importlib.import_module(f".{mod}", __package__).__name__] = i
+    return dict(
+        sorted(
+            _REGISTRY.items(),
+            key=lambda kv: rank.get(kv[1].raw_fn.__module__, len(rank)),
         )
-    }
-    return {**frontier, **verified}
+    )
 
 
 # Catalog metadata cache: (session key, sf_dir, table) → analyzed DataFrame.
@@ -963,17 +522,15 @@ def maybe_broadcast(
 # driver-serial builds never pay there, which is the memory-safe
 # direction. At this sandbox's default 32 cores the value is exactly
 # the measured 8 MiB anchor, so all committed plan artifacts re-diff
-# byte-identical.
+# byte-identical. Resolved at call time, so the gate follows the live
+# SPARK_GRAFT_CPUS rather than whatever it held at import.
 _MERGE_ANCHOR_BYTES = 8 << 20  # measured at _MERGE_ANCHOR_CPUS cores
 _MERGE_ANCHOR_CPUS = 32
 
 
-def _derived_merge_over_bcast_bytes() -> int:
+def merge_over_bcast_bytes() -> int:
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", str(_MERGE_ANCHOR_CPUS)))
     return (_MERGE_ANCHOR_BYTES * _MERGE_ANCHOR_CPUS) // max(cpus, 1)
-
-
-MERGE_OVER_BCAST_BYTES = _derived_merge_over_bcast_bytes()
 
 # Below this much source parquet a (group, value)→count histogram's
 # map-side hash aggregation cannot pay for itself before the percentile
@@ -1011,7 +568,8 @@ COUNT_PROBE_CAP_BYTES = BROADCAST_CAP_BYTES * 64
 # ~64 B built ≈ 256 MB at the default 8 GiB driver — the r21 measured
 # anchor, reproduced exactly at the default config) and the serial
 # build in the few-hundred-ms range (~0.5-0.8 s/M rows measured).
-# Far below Spark's hard 512 M-row/8 GiB broadcast cap.
+# Far below Spark's hard 512 M-row/8 GiB broadcast cap. Resolved at
+# call time from the live SPARK_GRAFT_DRIVER_MEM.
 _COUNTED_ROWS_PER_DRIVER_GIB = 500_000
 
 
@@ -1030,7 +588,6 @@ def _derived_counted_broadcast_max_rows() -> int:
     return max(100_000, int(_driver_mem_gib() * _COUNTED_ROWS_PER_DRIVER_GIB))
 
 
-COUNTED_BROADCAST_MAX_ROWS = _derived_counted_broadcast_max_rows()
 # Byte budget for the same relation (r21 ADVICE: the row gate alone
 # lets a wide-columned frame through — q5's build carries n_name).
 # Estimated as count × schema width (fixed-width types exact, strings
@@ -1064,7 +621,7 @@ def broadcast_when_counted(
     df: DataFrame,
     sf_dir: str,
     name: str,
-    max_rows: int = COUNTED_BROADCAST_MAX_ROWS,
+    max_rows: int | None = None,
     probe_cap_bytes: int = COUNT_PROBE_CAP_BYTES,
 ) -> DataFrame | None:
     """Runtime-statistics broadcast gate for a FILTERED build side in
@@ -1083,6 +640,17 @@ def broadcast_when_counted(
     count is ground truth the same way AQE's runtime stage sizes are;
     the probe is a real job inside the timed region on every
     execution — never cached across runs.
+
+    Precondition: ``df`` holds at most one row per row of table
+    ``name`` — ``name`` read through filters, projections and inner
+    joins on a UNIQUE key of the other side (the callers pass filtered
+    orders, or orders joined to customer on c_custkey), never a join
+    on a non-unique key, an explode or a union, which could add rows.
+    The footer shortcut below relies on it: it bounds ``df`` by
+    ``name``'s unfiltered row count.
+
+    ``max_rows`` defaults to the driver-heap-derived cap, resolved per
+    call from the live ``SPARK_GRAFT_DRIVER_MEM``.
 
     The caller reaches this only when ``fits_broadcast`` already said
     no, so the regimes are:
@@ -1103,10 +671,12 @@ def broadcast_when_counted(
       exercising the fallback shape. The bench never sets it.
     - When the gate table's parquet FOOTER already proves the
       unfiltered row count ≤ ``max_rows``, the filtered frame can
-      only be smaller — broadcast without paying the count job
-      (footer reads are metadata-only; a failed read falls through
-      to the probe).
+      only be smaller (the precondition above) — broadcast without
+      paying the count job (footer reads are metadata-only; a failed
+      read falls through to the probe).
     """
+    if max_rows is None:
+        max_rows = _derived_counted_broadcast_max_rows()
     try:
         size = _file_size(sf_dir, name)
     except OSError:
@@ -1147,7 +717,7 @@ def merge_join_above(
     df: DataFrame,
     sf_dir: str,
     name: str,
-    threshold: int = MERGE_OVER_BCAST_BYTES,
+    threshold: int | None = None,
 ) -> DataFrame:
     """Cost-based SORT_MERGE hint for a join whose PROBE side is already
     hash-partitioned on the join key (a preceding per-key aggregation):
@@ -1179,7 +749,12 @@ def merge_join_above(
     For joins that probe a large un-keyed, un-filtered fact stream
     (q5/q7) the broadcast avoids a full fact exchange and stays the
     measured winner — keep those on the planner / maybe_broadcast.
+
+    ``threshold`` defaults to the core-count-derived crossover,
+    resolved per call from the live ``SPARK_GRAFT_CPUS``.
     """
+    if threshold is None:
+        threshold = merge_over_bcast_bytes()
     try:
         size = _file_size(sf_dir, name)
     except OSError:

@@ -611,13 +611,9 @@ def ann_pq_adc(spark: SparkSession, sf: str):
     return S.pq_adc_topk(table(spark, sf, "embeddings"))
 
 
-@register(
-    "ann_ivf_pq",
-    # The composed IVF-PQ plan: coarse max-dot cells (same contract as
-    # ann_ivf_topk) gate candidates to each query's 2 probed
-    # cells; PQ codes (same training as pipeline_pq_encode) rank them
-    # by summed ADC lookup distances with (dist, id) ties.
-    oracle="""
+# The ann_ivf_pq oracle, shared with ann_ivf_pq_persisted
+# (pipeline_ops5), whose persisted index answers the same query.
+_SQL_IVF_PQ = """
     WITH base AS (SELECT vec_id, list_transform(embedding, x -> CAST(FLOOR(CAST(x AS DOUBLE) * 1000) AS BIGINT)) AS v FROM embeddings),
     prm AS (SELECT CAST(len(v) / 4 AS BIGINT) AS sd FROM base LIMIT 1),
     coarse AS (SELECT vec_id AS ccid, v AS ccv FROM base
@@ -699,7 +695,16 @@ def ann_pq_adc(spark: SparkSession, sf: str):
                  AS rank
       FROM adc
     ) WHERE rank <= 5
-    """,
+    """
+
+
+@register(
+    "ann_ivf_pq",
+    # The composed IVF-PQ plan: coarse max-dot cells (same contract as
+    # ann_ivf_topk) gate candidates to each query's 2 probed
+    # cells; PQ codes (same training as pipeline_pq_encode) rank them
+    # by summed ADC lookup distances with (dist, id) ties.
+    oracle=_SQL_IVF_PQ,
     tags=("similarity",),
     doc="IVF-PQ search: 16 coarse cells probed 2-deep per "
     "query, candidates ranked by PQ asymmetric distance (4x8 "

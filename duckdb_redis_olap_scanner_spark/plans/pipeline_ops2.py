@@ -2,10 +2,6 @@
 (resize, frame-sample), the SQL-string entry point, and
 driver-verifiable entries for the skew operators.
 
-Like ``relational2``, this module registers AFTER every round-1 module
-(see ``catalog.registry``) so the driver's 50-entry correctness gate
-drains the round-1 unverified frontier first.
-
 The media math is a deterministic stand-in (no image/audio libs in
 this container — see ``operators/multimodal.py``); the Spark-side
 plumbing (binary column, metadata struct, Arrow batch shape,

@@ -4,11 +4,6 @@ context-window chunking, sequence packing, int8 embedding
 quantization, semantic prototypes + k-means refinement, rolling
 anomaly detection, and the end-to-end curation DAG flagship.
 
-Registers AFTER ``pipeline_ops2`` (see ``catalog.registry``) so these
-new entries form the round-6 unverified frontier and get driver-gate
-priority, while every previously-verified entry keeps cycling through
-the gate least-recently-verified first.
-
 Determinism contract (same as the rest of the catalog): integer
 counts, rational idf instead of ``ln`` (libm ulp drift), fixed-order
 column addition instead of row SUMs for float accumulation, explicit

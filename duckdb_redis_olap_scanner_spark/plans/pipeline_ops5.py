@@ -41,7 +41,7 @@ from ..operators import similarity as S
 from ..operators import text as T
 from ..operators.text import sql_md5_hash64
 from .catalog import _keyed_parts, register, table
-from .pipeline_ops import _SQL_QUANT_EMB, _SQL_TOKS
+from .pipeline_ops import _SQL_IVF_PQ, _SQL_QUANT_EMB, _SQL_TOKS
 
 _SQL_STOPS = ", ".join(f"'{w}'" for w in T.STOPWORDS)
 
@@ -1573,6 +1573,117 @@ def multimodal_decode_avi(spark: SparkSession, sf: str):
 def multimodal_decode_avi_mjpeg(spark: SparkSession, sf: str):
     return M.decode_avi_mjpeg_features(
         M.synthesize_avi_mjpeg(table(spark, sf, "documents"))
+    )
+
+
+@register(
+    "multimodal_decode_avi_interleaved",
+    # Two-stream AVI: stream 0 is the MJPEG video of
+    # multimodal_decode_avi_mjpeg (frame f = the closed-form JFIF for
+    # jid = d + 6*f), stream 1 is G.711 mu-law audio, one 267-sample
+    # '01wb' chunk interleaved after each '00dc' frame. The oracle reproduces BOTH streams in SQL: the
+    # per-(frame, block, component) sparse coefficient synthesis +
+    # dequantization of the video (verbatim from the MJPEG entry) and
+    # the standard integer mu-law expansion of the audio stream
+    # (verbatim from the wav_mulaw entry) over the interleaved global
+    # sample index s = f*267 + j, b_s = (d*13 + s*31) % 256. Both
+    # checksums are position-weighted ((f+1) / (s+1)), so frame order
+    # AND audio chunk order are pinned.
+    oracle="""
+    WITH dims AS (
+      SELECT doc_id,
+             CAST(8 * (1 + doc_id % 3) AS INT) AS width,
+             CAST(8 * (1 + doc_id % 2) AS INT) AS height,
+             (1 + doc_id % 3) * (1 + doc_id % 2) AS nb,
+             2 + doc_id % 4 AS nf
+      FROM documents),
+    fbc AS (
+      SELECT doc_id, width, height, nb, nf,
+             unnest(range(0, nf * nb * 3)) AS i
+      FROM dims),
+    t AS (
+      SELECT doc_id, width, height, nb, nf,
+             i // (nb * 3) AS f,
+             (i % (nb * 3)) // 3 AS b,
+             i % 3 AS c,
+             doc_id + 6 * (i // (nb * 3)) AS jid
+      FROM fbc),
+    q AS (
+      SELECT doc_id, width, height, nb, nf, f, b, c,
+             ((jid*5 + b*11 + c*23) % 61) - 30 AS dc,
+             1 + ((jid + b + c) % 9) AS z1,
+             ((jid + 7*b + 13*c) % 19) - 9 AS v1,
+             20 + ((jid*3 + b*7 + c*5) % 40) AS z2,
+             ((jid*7 + 3*b + 5*c) % 13) - 6 AS v2
+      FROM t),
+    d AS (
+      SELECT doc_id, width, height, nb, nf, f, b, c, z1, z2,
+             dc * (CASE WHEN c = 0 THEN 1 ELSE 2 END) AS dq0,
+             v1 * (CASE WHEN c = 0 THEN 1 + (5*z1) % 16
+                        ELSE 2 + (3*z1) % 24 END) AS dq1,
+             v2 * (CASE WHEN c = 0 THEN 1 + (5*z2) % 16
+                        ELSE 2 + (3*z2) % 24 END) AS dq2
+      FROM q),
+    vstats AS (
+      SELECT doc_id, width, height,
+             CAST(nf AS INT) AS n_frames,
+             CAST(nf * nb * 3 AS INT) AS n_blocks,
+             CAST(SUM(dq0) AS BIGINT) AS sum_dc,
+             CAST(SUM(dq1 + dq2) AS BIGINT) AS sum_ac,
+             CAST(SUM((f + 1) * ((b*192 + c*64 + 1) * dq0
+                               + (b*192 + c*64 + z1 + 1) * dq1
+                               + (b*192 + c*64 + z2 + 1) * dq2))
+                  AS BIGINT) AS frame_checksum
+      FROM d
+      GROUP BY doc_id, width, height, nb, nf),
+    aud AS (
+      SELECT doc_id, nf, unnest(range(0, nf * 267)) AS s
+      FROM dims),
+    au AS (
+      SELECT doc_id, nf, s,
+             255 - ((doc_id * 13 + s * 31) % 256) AS uu
+      FROM aud),
+    av AS (
+      SELECT doc_id, nf, s,
+             CASE WHEN uu >= 128
+                  THEN 132 - ((uu % 16) * 8 + 132)
+                             * (1 << ((uu // 16) % 8))
+                  ELSE ((uu % 16) * 8 + 132)
+                       * (1 << ((uu // 16) % 8)) - 132
+             END AS val
+      FROM au),
+    astats AS (
+      SELECT doc_id,
+             CAST(8000 AS INT) AS sample_rate,
+             CAST(nf * 267 AS INT) AS n_audio_samples,
+             CAST(SUM(val) AS BIGINT) AS audio_sum,
+             CAST(SUM((s + 1) * val) AS BIGINT) AS audio_checksum
+      FROM av GROUP BY doc_id, nf)
+    SELECT v.doc_id, v.width, v.height, v.n_frames, v.n_blocks,
+           v.sum_dc, v.sum_ac, v.frame_checksum,
+           a.sample_rate, a.n_audio_samples, a.audio_sum,
+           a.audio_checksum
+    FROM vstats v JOIN astats a ON v.doc_id = a.doc_id
+    """,
+    tags=("multimodal",),
+    doc="REAL two-stream container decode, no codec library: "
+    "synthesize a true interleaved A/V AVI per doc (hdrl with TWO "
+    "strls — 'vids'/MJPG and 'auds'/WAVEFORMAT tag 7; movi "
+    "alternating one complete baseline JFIF '00dc' chunk and one "
+    "267-sample G.711 mu-law '01wb' chunk per frame), then fully "
+    "demux and decode BOTH streams: recursive LIST walk with "
+    "positional strh→strf binding, first-'vids' codec decision, "
+    "strict MJPG/mu-law/geometry/frame-count/interleave validation, "
+    "complete T.81 entropy decode per video frame and the standard "
+    "integer G.711 expansion over the concatenated audio — composing "
+    "three decoders this package already carries "
+    "(operators/multimodal.decode_avi_mjpeg_mulaw). frame_checksum "
+    "and audio_checksum are position-weighted, pinning frame AND "
+    "audio chunk order.",
+)
+def multimodal_decode_avi_interleaved(spark: SparkSession, sf: str):
+    return M.decode_avi_interleaved_features(
+        M.synthesize_avi_interleaved(table(spark, sf, "documents"))
     )
 
 
@@ -3176,6 +3287,48 @@ def pipeline_incremental_ann_indexed(spark: SparkSession, sf: str):
     return AI.ann_indexed_topk(
         spark, name, cent_ids, cent_vecs,
         emb.filter(F.col("vec_id") < 5), k=5, n_probe=2,
+    )
+
+
+@register(
+    "ann_ivf_pq_persisted",
+    # The persisted index holds every vector's (cell, codes) against
+    # the SAME frozen generations — built from the even half, the odd
+    # half appended, evens ∪ odds = the full corpus — so the ADC probe
+    # answers exactly what the one-shot ivf_pq_topk computes: the
+    # ann_ivf_pq oracle, by construction.
+    oracle=_SQL_IVF_PQ,
+    tags=("similarity",),
+    doc="IVF-PQ search against a PERSISTED code table: "
+    "(vec_id, cell, codes) bucketed on cell — ~85x smaller than the "
+    "raw-vector IVF index, the 100 TB deployment shape where probes "
+    "scan codes and never raw vectors. Built from the even half of "
+    "the corpus and INCREMENTALLY appended with the odd half against "
+    "the same frozen coarse+codebook generations (sidecar-recorded, "
+    "generation-checked, retry-idempotent — the dedup_index "
+    "maintenance loop applied to PQ codes); each query's probed "
+    "cells become bucket-pruning IN literals and its m x ks ADC "
+    "lookup table rides a broadcast Q-row frame, scored as a pure "
+    "zip_with/element_at expression under WindowGroupLimit. Result "
+    "contract identical to ann_ivf_pq by construction "
+    "(operators/ann_index.ivf_pq_indexed_topk).",
+)
+def ann_ivf_pq_persisted(spark: SparkSession, sf: str):
+    from ..operators import ann_index as AI
+
+    emb = table(spark, sf, "embeddings")
+    coarse, cent, sd = AI.ivf_pq_codebooks(emb, 16)
+    name, path = _index_ns(spark, f"ivf_pq_idx_{_index_tag(sf)}")
+    AI.write_ivf_pq_index(
+        emb.filter(F.col("vec_id") % 2 == 0), coarse, cent, sd,
+        name, path=path,
+    )
+    AI.append_to_ivf_pq_index(
+        emb.filter(F.col("vec_id") % 2 == 1), coarse, cent, sd, name
+    )
+    return AI.ivf_pq_indexed_topk(
+        spark, name, coarse, cent, sd,
+        emb.filter(F.col("vec_id") < 3), k=5, n_probe=2,
     )
 
 

@@ -23,12 +23,12 @@ from pyspark.sql import Column, SparkSession, Window
 from pyspark.sql import functions as F
 
 from .catalog import (
-    MERGE_OVER_BCAST_BYTES,
     broadcast_when_counted,
     fits_broadcast,
     gather_sort,
     maybe_broadcast,
     merge_join_above,
+    merge_over_bcast_bytes,
     register,
     table,
 )
@@ -2387,7 +2387,7 @@ def q14_promo_effect(spark: SparkSession, sf: str):
         "p_partkey", F.col("p_type").like("PROMO%").alias("is_promo")
     )
     disc_cents = _cents(F.col("l_extendedprice") * (F.lit(1.0) - F.col("l_discount")))
-    # part scales with SF → strategy split at MERGE_OVER_BCAST_BYTES
+    # part scales with SF → strategy split at merge_over_bcast_bytes()
     # (r21, 100× sf10-equivalent): below it the (partkey, bool)
     # projection broadcast-builds in tens of ms (sf0.1/10× plans
     # unchanged); above it the probe stream is FILTERED far below the
@@ -2396,7 +2396,7 @@ def q14_promo_effect(spark: SparkSession, sf: str):
     # exchanges beat the driver-serial multi-M-row broadcast build,
     # 0.66 s vs 1.12 s min-of-5. Merge stays memory-safe at cluster
     # volume, where part outgrows any driver.
-    if fits_broadcast(sf, "part", MERGE_OVER_BCAST_BYTES):
+    if fits_broadcast(sf, "part", merge_over_bcast_bytes()):
         p = maybe_broadcast(p, sf, "part")
     else:
         p = p.hint("merge")
@@ -2499,7 +2499,7 @@ def q13_customer_distribution(spark: SparkSession, sf: str):
     # (custkey, count) pairs, and the aggregate's row count is bounded
     # by customer cardinality — broadcastable at test scale.
     per_cust = o.groupBy("o_custkey").agg(F.count(F.lit(1)).alias("c_count"))
-    # Strategy split at MERGE_OVER_BCAST_BYTES of customer (r21, 100×
+    # Strategy split at merge_over_bcast_bytes() of customer (r21, 100×
     # sf10-equivalent measurement): below it the per-cust count table
     # is a tens-of-ms broadcast build (sf0.1/10× plans unchanged);
     # above it the driver-serial build of a million-plus-row relation
@@ -2513,7 +2513,7 @@ def q13_customer_distribution(spark: SparkSession, sf: str):
     # zero bucket as |customer| − |per_cust| measured WORSE at 100×,
     # 1.53 s: the reused-exchange second aggregation pass costs more
     # than the join it saves — negative result, kept the join.)
-    if fits_broadcast(sf, "customer", MERGE_OVER_BCAST_BYTES):
+    if fits_broadcast(sf, "customer", merge_over_bcast_bytes()):
         per_cust = maybe_broadcast(per_cust, sf, "customer")
     else:
         per_cust = per_cust.hint("merge")

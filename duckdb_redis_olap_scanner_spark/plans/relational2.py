@@ -20,10 +20,6 @@ Determinism: money aggregates quantized to integer cents
 regardless of partial-agg order); quantity averages computed over
 integer-valued doubles (order-free exact sums), year via EXTRACT/year
 cast to INT on both sides.
-
-This module registers AFTER every round-1 module (see
-``catalog.registry``) so the driver's 50-entry correctness gate drains
-the round-1 unverified frontier before these new entries enter it.
 """
 
 from __future__ import annotations

@@ -3,19 +3,13 @@
 
 VERDICT r11 found a hand-edited drift (COVERAGE.md said 219 entries,
 the registry has 218). This script is the fix: every count quoted in
-COVERAGE.md comes from ``catalog.registry()`` + the committed
-CORRECTNESS_r*.json gate files, so the docs can always be re-derived:
+COVERAGE.md comes from ``catalog.registry()``, so the docs can always
+be re-derived:
 
     python scripts/coverage_counts.py
 
-Prints (and nothing else, so it can be diffed in CI / by the judge):
-
-* total registered entries, split by oracle-checked vs rows-only;
-* the per-round verification-freshness histogram (newest green
-  driver round per entry, baseline set = round 1);
-* the CURRENT gate-window composition — the first 50 entries in
-  ``registry()`` iteration order, i.e. exactly what the next driver
-  round will hash-check — bucketed by last-verified round.
+Prints (and nothing else, so it can be diffed in CI) the total
+registered entries, split by oracle-checked vs rows-only.
 
 No SparkSession is needed: registering the catalog only builds
 closures.
@@ -23,7 +17,6 @@ closures.
 
 from __future__ import annotations
 
-import collections
 import json
 import os
 import sys
@@ -35,35 +28,12 @@ def main() -> int:
     from duckdb_redis_olap_scanner_spark.plans import catalog as C
 
     reg = C.registry()
-    rounds = C._verified_rounds()
-    names = list(reg)
-
-    oracled = [n for n in names if reg[n].oracle is not None]
-    rows_only = [n for n in names if reg[n].oracle is None]
-
-    hist = collections.Counter(rounds.get(n, 0) for n in names)
-    window = names[:50]
-    win_hist = collections.Counter(rounds.get(n, 0) for n in window)
-    frontier = [n for n in window if n not in rounds]
-    dirty = C._changed_since_verified(rounds)
-
+    rows_only = [n for n, e in reg.items() if e.oracle is None]
     out = {
-        "entries_total": len(names),
-        "entries_oracle_checked": len(oracled),
+        "entries_total": len(reg),
+        "entries_oracle_checked": len(reg) - len(rows_only),
         "entries_rows_only": len(rows_only),
         "rows_only_names": sorted(rows_only),
-        "freshness_by_round": {
-            str(r): hist[r] for r in sorted(hist)
-        },
-        "gate_window_by_round": {
-            ("new" if r == 0 else str(r)): win_hist[r]
-            for r in sorted(win_hist)
-        },
-        "gate_window_frontier": frontier,
-        "gate_window_stale_le_r7": sum(
-            1 for n in window if 0 < rounds.get(n, 0) <= 7
-        ),
-        "dirty_total": len(dirty),
     }
     json.dump(out, sys.stdout, indent=2)
     print()

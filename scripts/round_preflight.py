@@ -1,10 +1,8 @@
 #!/usr/bin/env python
-"""One-screen pre-flight for a build round (r18+; see COVERAGE.md
-"Round 18" for why rounds must stay wide-edit-free while the re-gate
-backlog drains).
+"""One-screen pre-flight for a build round.
 
 Prints a single JSON object combining the two existing generators —
-``coverage_counts.py`` (registry/dirty/gate-window state) and
+``coverage_counts.py`` (registry counts) and
 ``third_opinion_coverage.py`` (audit completeness) — plus the
 committed bench artifacts' headline numbers, so the round can start
 (and end) with one reproducible snapshot:
@@ -12,9 +10,8 @@ committed bench artifacts' headline numbers, so the round can start
     python scripts/round_preflight.py
 
 Nothing here is new state: every field is re-derived from the
-registry, the CORRECTNESS_r*.json files, and the committed BENCH
-artifacts. A field reading "missing" means the artifact is absent,
-not that the check failed.
+registry and the committed BENCH artifacts. A field reading "missing"
+means the artifact is absent, not that the check failed.
 """
 
 from __future__ import annotations
@@ -88,9 +85,6 @@ def main() -> int:
     out = {
         "entries_total": cov["entries_total"],
         "entries_oracle_checked": cov["entries_oracle_checked"],
-        "dirty_total": cov["dirty_total"],
-        "gate_window_by_round": cov["gate_window_by_round"],
-        "gate_window_frontier": cov["gate_window_frontier"],
         "third_opinion": {
             "with": audit["with_third_opinion"],
             "without": audit["without"],

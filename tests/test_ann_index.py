@@ -14,8 +14,10 @@ that makes the probe read n_probe/n_cells of the corpus bytes), and
 from __future__ import annotations
 
 import contextlib
+import gc
 import io
 import re
+import weakref
 
 import pytest
 from pyspark.sql import functions as F
@@ -594,3 +596,59 @@ def test_corrupt_sidecar_fails_generation_check(spark, emb, centroids,
         ).count() > 0
     finally:
         spark.sql("DROP TABLE IF EXISTS test_ivf_corrupt")
+
+
+class _Collectable:
+    """weakref-able stand-in for a page/result DataFrame."""
+
+
+def test_single_page_result_is_not_pinned_by_registry():
+    """Single-page shape: pages == [out]. The registry entry must not
+    hold OUT strongly — before the fix _PAGED_RESULT_PAGES[id(out)]
+    was [out] itself, so the finalize never fired and the handle (and
+    its checkpoint blocks' Python-side handle) was pinned for the
+    session."""
+    out = _Collectable()
+    AI._register_paged_result(out, [out])
+    key = id(out)
+    ref = weakref.ref(out)
+    del out
+    gc.collect()
+    assert ref() is None, "registry pinned the single-page result"
+    assert key not in AI._PAGED_RESULT_PAGES
+
+
+def test_multi_page_registration_still_releases_and_finalizes():
+    """Multi-page behavior is unchanged: pages are held until the
+    result handle dies (release needs them), then the finalize drops
+    the entry."""
+    pages = [_Collectable(), _Collectable()]
+    out = _Collectable()
+    AI._register_paged_result(out, pages)
+    key = id(out)
+    assert key in AI._PAGED_RESULT_PAGES
+    page_ref = weakref.ref(pages[0])
+    del pages
+    gc.collect()
+    # pages survive while the result handle lives — release depends on it
+    assert page_ref() is not None
+    del out
+    gc.collect()
+    assert key not in AI._PAGED_RESULT_PAGES
+    gc.collect()
+    assert page_ref() is None
+
+
+def test_release_resolves_single_page_weakref():
+    """release_paged_result on a live single-page result must still
+    find the page through the weak slot (and pop the entry). The stub
+    has no JVM plan, so the unpersist attempt is swallowed by the
+    plan-shape guard — the contract here is entry resolution, not RDD
+    ids."""
+    out = _Collectable()
+    AI._register_paged_result(out, [out])
+    key = id(out)
+    assert AI.release_paged_result(out) == []
+    assert key not in AI._PAGED_RESULT_PAGES
+    # double release: safe no-op
+    assert AI.release_paged_result(out) == []

@@ -6,10 +6,8 @@ the G.711 mu-law expansion over the '01wb' chunks — so these tests pin
 the DEMUX composition: positional strh→strf binding, the first-'vids'
 codec decision, the strict audio-format handshake, the 1:1 interleave
 contract, and the position weighting that pins BOTH streams' chunk
-order. The catalog entry is QUEUED (plans/queued_entries_r20.py — not
-registered until r20's gate window has slack), but its oracle parity
-is proven HERE against DuckDB at sf0.001 so registration is purely
-mechanical.
+order. The catalog entry's oracle parity is checked at the end of this
+file and in tests/test_oracle_parity.py.
 """
 
 from __future__ import annotations
@@ -239,65 +237,25 @@ def test_roundtrip_property_any_doc_id(d):
     ) == closed_form_av_stats(d)
 
 
-def test_register_queued_is_idempotent_and_landed_via_registry():
-    """r20 landed the entry: importing the queued module alone must
-    still have NO side effect, ``registry()`` (which now performs the
-    explicit ``register_queued()`` call) must include the entry with
-    its oracle, and repeated ``register_queued()`` calls must stay
-    idempotent (registry() re-runs its import block per call). Run in
-    a subprocess so THIS process's registry stays agreed with the
-    coverage scripts."""
-    import os
-    import subprocess
-    import sys
-
-    code = (
-        "from duckdb_redis_olap_scanner_spark.plans import "
-        "queued_entries_r20 as Q\n"
-        "from duckdb_redis_olap_scanner_spark.plans.catalog import "
-        "_REGISTRY\n"
-        "assert Q.ENTRY_NAME not in _REGISTRY, 'import had a side effect'\n"
-        "from duckdb_redis_olap_scanner_spark.plans.catalog import "
-        "registry\n"
-        "n0 = len(registry())\n"
-        "assert Q.ENTRY_NAME in _REGISTRY, 'registry() did not land it'\n"
-        "Q.register_queued(); Q.register_queued()\n"
-        "assert len(registry()) == n0\n"
-        "e = _REGISTRY[Q.ENTRY_NAME]\n"
-        "assert e.oracle == Q.ORACLE and e.tags == Q.TAGS\n"
-        "print('QUEUED_OK')\n"
-    )
-    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    out = subprocess.run(
-        [sys.executable, "-c", code], capture_output=True, text=True,
-        cwd=root, timeout=120,
-    )
-    assert out.returncode == 0, out.stderr
-    assert "QUEUED_OK" in out.stdout
-
-
 def test_queued_entry_matches_duckdb_oracle(spark):
-    """The r20 registration dry run: the queued entry's Spark query vs
-    its DuckDB oracle at sf0.001 — the driver gate's comparison, run
-    locally so landing the entry is purely mechanical. The queued
-    module is import-side-effect-free (registration is the explicit
-    register_queued() call r20 makes), so exercising it here cannot
-    make the in-process registry disagree with the subprocess scripts
-    (test_plans.py::test_coverage_counts_script_matches_registry)."""
+    """The entry's Spark query vs its DuckDB oracle at sf0.001, run
+    through the catalog registry (the entry was once queued outside
+    it; it is a plain registered entry now), plus its output schema."""
     import duckdb
 
-    from duckdb_redis_olap_scanner_spark.plans import queued_entries_r20 as Q
+    from duckdb_redis_olap_scanner_spark.plans.catalog import registry
 
     from .conftest import SF_DIR
 
-    sdf = Q.multimodal_decode_avi_interleaved(spark, SF_DIR)
+    entry = registry()["multimodal_decode_avi_interleaved"]
+    sdf = entry.fn(spark, SF_DIR)
     srows = sorted(tuple(r) for r in sdf.collect())
     con = duckdb.connect()
     con.execute(
         "CREATE VIEW documents AS SELECT * FROM "
         f"read_parquet('{SF_DIR}/documents.parquet')"
     )
-    orows = sorted(tuple(r) for r in con.execute(Q.ORACLE).fetchall())
+    orows = sorted(tuple(r) for r in con.execute(entry.oracle).fetchall())
     con.close()
     assert len(srows) == len(orows) > 0
     assert srows == orows

@@ -206,3 +206,100 @@ def test_roundtrip_property_any_doc_id(d):
     assert M.decode_avi_mjpeg(M.encode_avi_mjpeg_payload(d)) == (
         closed_form_stats(d)
     )
+
+
+def _chunk(fourcc: bytes, data: bytes) -> bytes:
+    return (
+        struct.pack("<4sI", fourcc, len(data))
+        + data
+        + (b"\x00" if len(data) & 1 else b"")
+    )
+
+
+def _lst(list_type: bytes, body: bytes) -> bytes:
+    return _chunk(b"LIST", list_type + body)
+
+
+def _mjpeg_avi_with_audio(doc_id: int) -> bytes:
+    """The encoder's exact layout plus a SECOND stream: an 'auds' strl
+    after the video strl, and one '01wb' audio chunk interleaved in
+    movi — the conforming shape the pre-fix decoder rejected (last
+    strh won) or mis-fed to the JPEG decoder ('00db' collected)."""
+    w, h, nf = M._mjpeg_params(doc_id)
+    avih = struct.pack("<14I", 33333, 0, 0, 0, nf, 0, 2, 0, w, h, 0, 0, 0, 0)
+    strh_v = struct.pack(
+        "<4s4sIHHIIIIIIIIhhhh",
+        b"vids", b"MJPG", 0, 0, 0, 0, 1, 30, 0, nf, 0, 0, 0, 0, 0, w, h,
+    )
+    strf_v = struct.pack(
+        "<IiiHHIIiiII",
+        40, w, h, 1, 24, struct.unpack("<I", b"MJPG")[0], 0, 2835, 2835, 0, 0,
+    )
+    strh_a = struct.pack(
+        "<4s4sIHHIIIIIIIIhhhh",
+        b"auds", b"\x00\x00\x00\x00", 0, 0, 0, 0, 1, 8000, 0, 8000, 0, 0, 0,
+        0, 0, 0, 0,
+    )
+    strf_a = struct.pack("<HHIIHH", 1, 1, 8000, 8000, 1, 8)  # PCM fmt
+    hdrl = _lst(
+        b"hdrl",
+        _chunk(b"avih", avih)
+        + _lst(b"strl", _chunk(b"strh", strh_v) + _chunk(b"strf", strf_v))
+        + _lst(b"strl", _chunk(b"strh", strh_a) + _chunk(b"strf", strf_a)),
+    )
+    movi_chunks = []
+    for f in range(nf):
+        movi_chunks.append(
+            _chunk(
+                b"00dc",
+                J.encode_jpeg_payload(doc_id + M.AVI_MJPEG_JID_STRIDE * f),
+            )
+        )
+        movi_chunks.append(_chunk(b"01wb", bytes(16)))  # interleaved audio
+    movi = _lst(b"movi", b"".join(movi_chunks))
+    body = b"AVI " + hdrl + movi
+    return struct.pack("<4sI", b"RIFF", len(body)) + body
+
+
+def test_decode_avi_mjpeg_tolerates_trailing_audio_stream():
+    """A second (audio) strl must not overwrite the video handler, and
+    '01wb' / stream-0 raw chunks must not reach the JPEG decoder: the
+    two-stream file decodes to EXACTLY the single-stream stats."""
+    doc_id = 7
+    want = M.decode_avi_mjpeg(M.encode_avi_mjpeg_payload(doc_id))
+    got = M.decode_avi_mjpeg(_mjpeg_avi_with_audio(doc_id))
+    assert got == want
+
+
+def test_decode_avi_mjpeg_ignores_raw_dib_chunks():
+    """'00db' (stream-0 UNCOMPRESSED) chunks are not MJPEG frames; a
+    stray one must not be fed to the JPEG decoder. With the fix the
+    frame count check still sees exactly avih dwTotalFrames '00dc'
+    frames."""
+    payload = M.encode_avi_mjpeg_payload(3)
+    # splice a '00db' junk chunk at the very end of movi: grow the
+    # RIFF, LIST(movi) sizes by its full footprint
+    junk = _chunk(b"00db", b"\x00" * 10)
+    movi_at = payload.index(b"LIST", 12)
+    while payload[movi_at + 8 : movi_at + 12] != b"movi":
+        movi_at = payload.index(b"LIST", movi_at + 1)
+    riff_size = struct.unpack_from("<I", payload, 4)[0] + len(junk)
+    movi_size = struct.unpack_from("<I", payload, movi_at + 4)[0] + len(junk)
+    out = bytearray(payload) + junk
+    struct.pack_into("<I", out, 4, riff_size)
+    struct.pack_into("<I", out, movi_at + 4, movi_size)
+    want = M.decode_avi_mjpeg(payload)
+    assert M.decode_avi_mjpeg(bytes(out)) == want
+
+
+@pytest.mark.parametrize(
+    "encode", [M.encode_avi_payload, M.encode_avi_mjpeg_payload]
+)
+def test_strh_scale_rate_declare_30fps(encode):
+    """dwScale=1, dwRate=30 (rate/scale = fps) — consistent with avih
+    dwMicroSecPerFrame=33333. The reversed pair declared 1/30 fps to
+    external players."""
+    payload = encode(5)
+    at = payload.index(b"strh") + 8
+    scale, rate = struct.unpack_from("<II", payload, at + 20)
+    assert (scale, rate) == (1, 30)

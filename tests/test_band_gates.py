@@ -179,7 +179,36 @@ def test_derived_band_thresholds_match_measured_anchors():
     # fewer cores -> exchange slower -> broadcast pays longer
     assert (C._MERGE_ANCHOR_BYTES * C._MERGE_ANCHOR_CPUS) // 8 == 32 << 20
     # default 8 GiB driver reproduces the r21 4 M-row cap
-    assert C._derived_counted_broadcast_max_rows() in (
-        C.COUNTED_BROADCAST_MAX_ROWS,
-    )
     assert int(8.0 * C._COUNTED_ROWS_PER_DRIVER_GIB) == 4_000_000
+
+
+def test_band_thresholds_follow_live_session_facts(spark, monkeypatch):
+    """Both derived thresholds resolve per call, so a changed
+    SPARK_GRAFT_CPUS / SPARK_GRAFT_DRIVER_MEM takes effect within one
+    process instead of staying frozen at import time."""
+
+    class FakeDF:
+        def __init__(self):
+            self.hints = []
+
+        def hint(self, h):
+            self.hints.append(h)
+            return self
+
+    # 16 MiB of orders: above the 8 MiB crossover at 32 cores, below
+    # the 64 MiB one at 4 cores.
+    monkeypatch.setattr(C, "_file_size", lambda d, n: 16 << 20)
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "32")
+    assert C.merge_join_above(FakeDF(), SF_DIR, "orders").hints == ["merge"]
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "4")
+    assert C.merge_join_above(FakeDF(), SF_DIR, "orders").hints == []
+
+    # 1 M rows: under the 4 M-row cap of an 8 GiB driver, over the
+    # 500 k-row cap of a 1 GiB one. The gate table has no parquet
+    # footer, so both calls run the count probe.
+    df = spark.range(1_000_000)
+    monkeypatch.setattr(C, "_file_size", lambda d, n: 1 << 20)
+    monkeypatch.setenv("SPARK_GRAFT_DRIVER_MEM", "8g")
+    assert C.broadcast_when_counted(df, SF_DIR, "no_footer") is not None
+    monkeypatch.setenv("SPARK_GRAFT_DRIVER_MEM", "1g")
+    assert C.broadcast_when_counted(df, SF_DIR, "no_footer") is None

@@ -17,11 +17,15 @@ class impossible to reintroduce:
 3. `test_table_cache_is_session_unique` pins the r16 cache-poisoning
    finding (fixed in r17): `_session_key` now includes the JVM
    sessionUUID, so sibling `newSession()`s can never share cache rows.
+4. The session-LRU eviction tests pin that evicted frames are
+   unpersisted with `_CACHE_LOCK` released and that each evicted
+   session key logs one warning.
 """
 
 from __future__ import annotations
 
 import inspect
+import threading
 
 import pytest
 
@@ -180,3 +184,88 @@ def test_table_cache_is_session_unique(spark):
         catalog.table(spark, sf_small, "customer").createOrReplaceTempView(
             "customer"
         )
+
+
+class _StubDF:
+    """Duck-typed stand-in for a cached DataFrame: its unpersist()
+    probes — from ANOTHER thread, so RLock reentrancy can't lie —
+    whether _CACHE_LOCK is free while the sweep releases storage."""
+
+    def __init__(self, sink: dict):
+        self._sink = sink
+
+    def unpersist(self):
+        got = {}
+
+        def probe():
+            ok = catalog._CACHE_LOCK.acquire(timeout=5)
+            got["ok"] = ok
+            if ok:
+                catalog._CACHE_LOCK.release()
+
+        t = threading.Thread(target=probe)
+        t.start()
+        t.join()
+        self._sink.setdefault("probes", []).append(got.get("ok", False))
+
+
+def _churn_keys(prefix: str, n: int, memo: dict, sink: dict) -> None:
+    for i in range(n):
+        catalog._insert_cache_row(memo, (f"{prefix}-{i}", "sf"), _StubDF(sink))
+
+
+def test_insert_cache_row_unpersists_outside_lock():
+    """Evictions triggered THROUGH _insert_cache_row must run their
+    unpersist round trips with _CACHE_LOCK released: a py4j call under
+    the global lock stalls every catalog call in every session."""
+    sink: dict = {}
+    memo: dict = {}
+    catalog._ALL_MEMOS.append(memo)
+    try:
+        # One sweepable victim row, then enough fresh keys through the
+        # _insert_cache_row path to evict it (and then some).
+        catalog._insert_cache_row(memo, ("bundle-victim", "sf"), _StubDF(sink))
+        _churn_keys("bundle-churn", catalog._MAX_CACHED_SESSIONS + 2, memo, sink)
+        assert sink.get("probes"), "churn never evicted the victim row"
+        assert all(sink["probes"]), (
+            "unpersist ran while _CACHE_LOCK was held: the sweep must "
+            "collect doomed frames under the lock and release them after"
+        )
+    finally:
+        catalog._ALL_MEMOS.remove(memo)
+
+
+def test_eviction_warns_per_evicted_key(caplog):
+    """Two distinct evicted session keys → two warnings, each naming
+    its key. The old once-per-process latch went silent after the
+    first eviction for the life of the driver."""
+    sink: dict = {}
+    memo: dict = {}
+    catalog._ALL_MEMOS.append(memo)
+    try:
+        with caplog.at_level("WARNING", logger=catalog.__name__):
+            catalog._insert_cache_row(memo, ("bundle-warn-a", "sf"), _StubDF(sink))
+            catalog._insert_cache_row(memo, ("bundle-warn-b", "sf"), _StubDF(sink))
+            _churn_keys(
+                "bundle-warn-churn",
+                catalog._MAX_CACHED_SESSIONS + 2,
+                memo,
+                sink,
+            )
+        warned = [r.getMessage() for r in caplog.records]
+        assert any("bundle-warn-a" in m for m in warned)
+        assert any("bundle-warn-b" in m for m in warned)
+        # and re-evicting the SAME key does not spam
+        with caplog.at_level("WARNING", logger=catalog.__name__):
+            caplog.clear()
+            catalog._insert_cache_row(memo, ("bundle-warn-a", "sf"), _StubDF(sink))
+            _churn_keys(
+                "bundle-warn-churn2",
+                catalog._MAX_CACHED_SESSIONS + 2,
+                memo,
+                sink,
+            )
+        again = [r.getMessage() for r in caplog.records]
+        assert not any("bundle-warn-a" in m for m in again)
+    finally:
+        catalog._ALL_MEMOS.remove(memo)

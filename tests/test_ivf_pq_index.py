@@ -74,7 +74,7 @@ def _rows(df):
 def test_indexed_probe_matches_unindexed_ivf_pq(spark, emb, books, pq_index):
     """The persisted probe answers exactly what the one-shot
     ivf_pq_topk computes over the same corpus — the contract the
-    queued entry's oracle reuse rests on."""
+    persisted entry's oracle reuse rests on."""
     coarse, cent, sd = books
     name, _path = pq_index
     got = _rows(
@@ -231,30 +231,10 @@ def test_verify_audit_passes_then_catches_duplicates(
         spark.sql("DROP TABLE IF EXISTS test_ivf_pq_verify")
 
 
-def test_queued_entry_matches_duckdb_oracle(spark):
-    """The future landing's dry run at sf0.001 — columns, rows,
-    values against the (verbatim-reused) ann_ivf_pq oracle."""
-    import duckdb
-
-    from duckdb_redis_olap_scanner_spark.plans import queued_entries_r21 as Q
-
-    sdf = Q.ann_ivf_pq_persisted(spark, SF_DIR)
-    srows = _rows(sdf)
-    con = duckdb.connect()
-    con.execute(
-        "CREATE VIEW embeddings AS SELECT * FROM "
-        f"read_parquet('{SF_DIR}/embeddings.parquet')"
-    )
-    cur = con.execute(Q.PQ_ORACLE)
-    assert [d[0] for d in cur.description] == sdf.columns
-    assert srows == sorted(tuple(r) for r in cur.fetchall())
-
-
 def test_pq_oracle_is_verbatim_ann_ivf_pq():
-    """The queued entry's oracle must stay byte-identical to the
-    registered ann_ivf_pq oracle it claims to reuse — if that entry's
-    semantics ever change, this trips instead of silently diverging."""
-    from duckdb_redis_olap_scanner_spark.plans import queued_entries_r21 as Q
+    """The persisted entry answers exactly what the one-shot ann_ivf_pq
+    computes, so it is checked against that entry's oracle itself."""
     from duckdb_redis_olap_scanner_spark.plans.catalog import registry
 
-    assert Q.PQ_ORACLE.strip() == registry()["ann_ivf_pq"].oracle.strip()
+    reg = registry()
+    assert reg["ann_ivf_pq_persisted"].oracle is reg["ann_ivf_pq"].oracle

@@ -417,7 +417,59 @@ def test_coverage_counts_script_matches_registry():
     assert d["entries_total"] == (
         d["entries_oracle_checked"] + d["entries_rows_only"]
     )
-    assert sum(d["gate_window_by_round"].values()) == min(50, len(reg))
+
+
+def test_registry_is_declaration_order(monkeypatch, tmp_path):
+    """registry() lists entries in declaration order: plan modules in
+    ``catalog._PLAN_MODULES`` order, source order within each. The
+    order needs no subprocess (git or otherwise) and does not depend
+    on the working directory."""
+    import ast
+    import json
+    import os
+    import subprocess
+    import sys
+
+    from duckdb_redis_olap_scanner_spark.plans import catalog as C
+
+    def no_subprocess(*args, **kwargs):
+        raise OSError("registry() must not spawn processes")
+
+    with monkeypatch.context() as m:
+        m.setattr(subprocess, "run", no_subprocess)
+        got = list(C.registry())
+
+    declared = []
+    plans_dir = os.path.dirname(os.path.abspath(C.__file__))
+    for mod in C._PLAN_MODULES:
+        with open(os.path.join(plans_dir, f"{mod}.py")) as f:
+            tree = ast.parse(f.read())
+        for node in tree.body:
+            if not isinstance(node, ast.FunctionDef):
+                continue
+            for dec in node.decorator_list:
+                if isinstance(dec, ast.Call) and getattr(
+                    dec.func, "id", ""
+                ) == "register":
+                    declared.append(dec.args[0].value)
+    assert got == declared
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    code = (
+        "import json, subprocess, sys\n"
+        f"sys.path.insert(0, {root!r})\n"
+        "def no_subprocess(*args, **kwargs):\n"
+        "    raise OSError('registry() must not spawn processes')\n"
+        "subprocess.run = no_subprocess\n"
+        "from duckdb_redis_olap_scanner_spark.plans.catalog import "
+        "registry\n"
+        "print(json.dumps(list(registry())))\n"
+    )
+    out = subprocess.run(
+        [sys.executable, "-c", code], capture_output=True, text=True,
+        cwd=str(tmp_path), timeout=120, check=True,
+    )
+    assert json.loads(out.stdout) == got
 
 
 def test_keyed_agg_width_volume_proportional(tmp_path):
@@ -495,8 +547,8 @@ def test_merge_join_above_is_size_gated(tmp_path):
     import os
 
     from duckdb_redis_olap_scanner_spark.plans.catalog import (
-        MERGE_OVER_BCAST_BYTES,
         merge_join_above,
+        merge_over_bcast_bytes,
     )
 
     class FakeDF:
@@ -512,7 +564,7 @@ def test_merge_join_above_is_size_gated(tmp_path):
     df = FakeDF()
     assert merge_join_above(df, str(tmp_path), "orders") is df
     assert df.hints == []  # below threshold: planner broadcast
-    os.truncate(p, MERGE_OVER_BCAST_BYTES)
+    os.truncate(p, merge_over_bcast_bytes())
     assert merge_join_above(df, str(tmp_path), "orders") is df
     assert df.hints == ["merge"]  # at threshold: merge
     df2 = FakeDF()

@@ -4,7 +4,7 @@ The two-stream path composes the product's RIFF walk, its T.81
 decoder AND its G.711 expansion, with the synthesis side writing all
 three — so a matched demux misreading (strf→stream binding, chunk id
 routing, interleave accounting) or a matched companding misreading
-would cancel in the oracle gate. This audit re-derives the queued
+would cancel in the oracle gate. This audit re-derives the
 entry's rows with NO product decode helpers: an independent
 two-stream RIFF demuxer typed from the RIFF/AVI spec (own padding and
 LIST handling, own positional strh→strf binding, own per-stream chunk
@@ -13,9 +13,7 @@ frames, and an independent G.711 mu-law expansion typed from the
 standard (complement, 4-bit mantissa, 3-bit exponent, bias 0x84 —
 restated below, not imported) for the '01wb' chunks.
 
-Entries audited here: multimodal_decode_avi_interleaved (registered
-in r20 via plans/queued_entries_r20.register_queued(), called from
-catalog.registry(); audited in r19 ahead of the landing).
+Entries audited here: multimodal_decode_avi_interleaved.
 """
 
 from __future__ import annotations

@@ -1,7 +1,7 @@
 """Third-opinion audit, batch 28 (r20): persisted IVF-PQ index.
 
-The queued ``ann_ivf_pq_persisted`` entry reuses the ann_ivf_pq oracle
-verbatim on the claim that the persisted (cell, codes) table +
+The ``ann_ivf_pq_persisted`` entry reuses the ann_ivf_pq oracle on the
+claim that the persisted (cell, codes) table +
 sidecar-recorded codebooks reproduce the one-shot plan exactly; the
 in-suite tests prove probe==one-shot THROUGH the product's own code.
 This audit breaks the loop with the batch-7 independent Python
@@ -9,12 +9,10 @@ derivations (integer L2/dot, seed+one-Lloyd-step training, tie rules
 — typed from the spec there, not imported from the product): it
 re-derives (a) every stored index ROW (cell + codes straight off the
 parquet files, no product reader), (b) the sidecar codebooks against
-independent training, and (c) the probe results of the queued entry.
+independent training, and (c) the probe results of the entry.
 
-Entries audited here: ann_ivf_pq_persisted (QUEUED in
-plans/queued_entries_r21.py; audited now so a future landing is
-purely mechanical — the registered ann_ivf_pq it mirrors is audited
-in batch 7).
+Entries audited here: ann_ivf_pq_persisted (the ann_ivf_pq it mirrors
+is audited in batch 7).
 """
 
 from __future__ import annotations
@@ -26,7 +24,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from duckdb_redis_olap_scanner_spark.operators import ann_index as AI
-from duckdb_redis_olap_scanner_spark.plans.catalog import table
+from duckdb_redis_olap_scanner_spark.plans.catalog import registry, table
 
 from .conftest import SF_DIR
 from .test_third_opinion7 import (
@@ -87,13 +85,12 @@ def test_stored_rows_match_independent_encode(vecs, built):  # noqa: F811
         assert got[i] == (cell1[i][0], _codes(x, cent, sd)), f"vec {i}"
 
 
-def test_queued_entry_rows_match_independent_probe(spark, vecs):  # noqa: F811
-    from duckdb_redis_olap_scanner_spark.plans import queued_entries_r21 as Q
-
+def test_entry_rows_match_independent_probe(spark, vecs):  # noqa: F811
+    entry = registry()["ann_ivf_pq_persisted"]
     got = sorted(
         (int(r.query_id), int(r.neighbor_id), int(r.cell),
          int(r.adc_dist), int(r.rank))
-        for r in Q.ann_ivf_pq_persisted(spark, SF_DIR).collect()
+        for r in entry.fn(spark, SF_DIR).collect()
     )
     cent, sd = _pq_train(vecs)
     codes = {i: _codes(x, cent, sd) for i, x in vecs.items()}
