@@ -172,7 +172,7 @@ def _evict_locked(key: str) -> list:
 
 def _release(doomed: list) -> None:
     """Release evicted frames' JVM-side storage, never under the lock:
-    table_keyed frames are persisted (.cache()), and dropping the last
+    a cached frame may be persisted (.cache()), and dropping the last
     Python reference would strand their blocks in the shared
     CacheManager with no handle left to free them (r17 review pass 2)
     — but each unpersist is a py4j round trip, and holding the global
@@ -335,8 +335,7 @@ def _file_size(sf_dir: str, name: str) -> int:
 
 
 def suggested_shuffle_partitions(sf_dir: str, cpus: int) -> int:
-    """Volume-proportional ``spark.sql.shuffle.partitions`` (also the
-    partition count of :func:`table_keyed` secondary layouts).
+    """Volume-proportional ``spark.sql.shuffle.partitions``.
 
     Sized from lineitem (the largest table) at ``_PART_BYTES`` of
     source parquet per reduce partition, clamped to [4, cpus]: at test
@@ -467,25 +466,22 @@ def keyed_agg_width(sf_dir: str, name: str, cpus: int) -> int | None:
 BROADCAST_CAP_BYTES = 64 << 20
 
 
-def fits_broadcast(
-    sf_dir: str, name: str, cap_bytes: int = BROADCAST_CAP_BYTES
-) -> bool:
+def fits_broadcast(sf_dir: str, name: str) -> bool:
     """The size gate behind :func:`maybe_broadcast`, exposed for call
     sites that SWITCH SHAPE on broadcastability (e.g. q4's semi-join
     rewrite) instead of merely hinting: True iff table ``name``'s
-    on-disk parquet is under ``cap_bytes``. Missing stats → False (the
-    safe cluster assumption: never assume a table is small)."""
+    on-disk parquet is under ``BROADCAST_CAP_BYTES``. Missing stats →
+    False (the safe cluster assumption: never assume a table is small)."""
     try:
-        return _file_size(sf_dir, name) < cap_bytes
+        return _file_size(sf_dir, name) < BROADCAST_CAP_BYTES
     except OSError:
         return False
 
 
-def maybe_broadcast(
-    df: DataFrame, sf_dir: str, name: str, cap_bytes: int = BROADCAST_CAP_BYTES
-) -> DataFrame:
+def maybe_broadcast(df: DataFrame, sf_dir: str, name: str) -> DataFrame:
     """Cost-based broadcast hint from REAL table statistics: hint
-    broadcast iff ``name``'s on-disk parquet is under ``cap_bytes``.
+    broadcast iff ``name``'s on-disk parquet is under
+    ``BROADCAST_CAP_BYTES``.
 
     Static planning can't be trusted either way here: with a hard
     ``F.broadcast`` an SF-scaling table (customer, supplier, part)
@@ -495,42 +491,17 @@ def maybe_broadcast(
     0.35→0.23 s at sf0.1). File size is ground truth: filters and
     projections at the call site only shrink the true build side
     below it, and compressed parquet understates memory by a bounded
-    2-4× that ``cap_bytes`` already budgets for. The SAME call site
-    broadcasts at test scale and falls back to the co-partitioned
-    shuffled join at 100 TB, with no code change — the table() scans
-    are hash-partitioned on their join keys exactly for that fallback.
+    2-4× that the cap already budgets for. The SAME call site
+    broadcasts at test scale and leaves the join to the planner (a
+    sort-merge join past its auto-broadcast threshold) at 100 TB,
+    with no code change.
     """
-    if fits_broadcast(sf_dir, name, cap_bytes):
+    if fits_broadcast(sf_dir, name):
         from pyspark.sql import functions as F
 
         return F.broadcast(df)
     return df
 
-
-# Above this much source parquet, collecting the build side to the
-# driver and building the broadcast hash relation there (serial) costs
-# more than one narrow distributed exchange + merge — see
-# merge_join_above. r22 (VERDICT item 6): derived from session facts
-# instead of a host literal. The crossover is where the DRIVER-SERIAL
-# build time stops hiding under the cluster-parallel exchange+sort it
-# replaces, so it scales INVERSELY with the session's core count: the
-# measured anchor is 8 MiB at 32 cores (r21 interleaved A/Bs: q18
-# 1.34→0.82 s, q10 1.33→0.87 s, q3 0.99→0.69 s at the 10× dir), and
-# with fewer cores the exchange side slows proportionally while the
-# serial build does not, so the broadcast stays worthwhile longer. At
-# cluster width (hundreds of cores) the threshold tends to zero —
-# driver-serial builds never pay there, which is the memory-safe
-# direction. At this sandbox's default 32 cores the value is exactly
-# the measured 8 MiB anchor, so all committed plan artifacts re-diff
-# byte-identical. Resolved at call time, so the gate follows the live
-# SPARK_GRAFT_CPUS rather than whatever it held at import.
-_MERGE_ANCHOR_BYTES = 8 << 20  # measured at _MERGE_ANCHOR_CPUS cores
-_MERGE_ANCHOR_CPUS = 32
-
-
-def merge_over_bcast_bytes() -> int:
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", str(_MERGE_ANCHOR_CPUS)))
-    return (_MERGE_ANCHOR_BYTES * _MERGE_ANCHOR_CPUS) // max(cpus, 1)
 
 # Below this much source parquet a (group, value)→count histogram's
 # map-side hash aggregation cannot pay for itself before the percentile
@@ -560,44 +531,37 @@ def histogram_pays(sf_dir: str, name: str) -> bool:
 # extra pass over a huge table, and the memory-safe fallback shape is
 # the right plan there anyway. 4 GiB ≈ 64× the static broadcast cap.
 COUNT_PROBE_CAP_BYTES = BROADCAST_CAP_BYTES * 64
-# Row cap for a probe-approved broadcast build. r22 (VERDICT item 6):
-# derived from the driver's heap instead of a host literal — the build
-# is driver-serial and the built relation lives on the driver AND
-# every executor, so the bound is a memory budget: ~500 k narrow rows
-# per driver-GiB keeps the relation near 3% of the heap (4 M rows ×
-# ~64 B built ≈ 256 MB at the default 8 GiB driver — the r21 measured
-# anchor, reproduced exactly at the default config) and the serial
-# build in the few-hundred-ms range (~0.5-0.8 s/M rows measured).
-# Far below Spark's hard 512 M-row/8 GiB broadcast cap. Resolved at
-# call time from the live SPARK_GRAFT_DRIVER_MEM.
+# Row cap for a probe-approved broadcast build, derived from the
+# driver's heap: the build is driver-serial and the built relation
+# lives on the driver AND every executor, so the bound is a memory
+# budget: ~500 k narrow rows per driver-GiB keeps the relation near 3%
+# of the heap (4 M rows × ~64 B built ≈ 256 MB at the default 8 GiB
+# driver, the measured anchor) and the serial build in the
+# few-hundred-ms range (~0.5-0.8 s/M rows measured). Far below Spark's
+# hard 512 M-row/8 GiB broadcast cap.
 _COUNTED_ROWS_PER_DRIVER_GIB = 500_000
-
-
-def _driver_mem_gib() -> float:
-    raw = os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g").strip().lower()
-    mult = {"k": 1 / (1 << 20), "m": 1 / 1024, "g": 1.0, "t": 1024.0}
-    try:
-        if raw[-1] in mult:
-            return float(raw[:-1]) * mult[raw[-1]]
-        return float(raw) / (1 << 30)  # plain bytes
-    except (ValueError, IndexError):
-        return 8.0
-
-
-def _derived_counted_broadcast_max_rows() -> int:
-    return max(100_000, int(_driver_mem_gib() * _COUNTED_ROWS_PER_DRIVER_GIB))
-
-
-# Byte budget for the same relation (r21 ADVICE: the row gate alone
-# lets a wide-columned frame through — q5's build carries n_name).
-# Estimated as count × schema width (fixed-width types exact, strings
-# budgeted) against the same ~3%-of-driver-heap envelope as the row
-# cap.
+# Byte budget for the same relation: the row gate alone lets a
+# wide-columned frame through (q5's build carries n_name). Estimated
+# as count × schema width (fixed-width types exact, strings budgeted)
+# against the same ~3%-of-driver-heap envelope as the row cap.
 _COUNTED_BCAST_BYTES_PER_DRIVER_GIB = 32 << 20
 
 
-def _counted_broadcast_max_bytes() -> int:
-    return int(_driver_mem_gib() * _COUNTED_BCAST_BYTES_PER_DRIVER_GIB)
+def _driver_heap_gib(spark: SparkSession) -> float:
+    """The live session's ``spark.driver.memory`` in GiB (Spark's own
+    size parser and its 1g default)."""
+    conf = spark.sparkContext._jsc.sc().conf()
+    return conf.getSizeAsBytes("spark.driver.memory", "1g") / (1 << 30)
+
+
+def _counted_broadcast_max_rows(spark: SparkSession) -> int:
+    return max(
+        100_000, int(_driver_heap_gib(spark) * _COUNTED_ROWS_PER_DRIVER_GIB)
+    )
+
+
+def _counted_broadcast_max_bytes(spark: SparkSession) -> int:
+    return int(_driver_heap_gib(spark) * _COUNTED_BCAST_BYTES_PER_DRIVER_GIB)
 
 
 _EST_FIELD_BYTES = {
@@ -618,11 +582,7 @@ def _est_row_bytes(df: DataFrame) -> int:
 
 
 def broadcast_when_counted(
-    df: DataFrame,
-    sf_dir: str,
-    name: str,
-    max_rows: int | None = None,
-    probe_cap_bytes: int = COUNT_PROBE_CAP_BYTES,
+    df: DataFrame, sf_dir: str, name: str, max_rows: int | None = None
 ) -> DataFrame | None:
     """Runtime-statistics broadcast gate for a FILTERED build side in
     the band where static file stats say "too big": pay ONE
@@ -641,127 +601,40 @@ def broadcast_when_counted(
     the probe is a real job inside the timed region on every
     execution — never cached across runs.
 
-    Precondition: ``df`` holds at most one row per row of table
-    ``name`` — ``name`` read through filters, projections and inner
-    joins on a UNIQUE key of the other side (the callers pass filtered
-    orders, or orders joined to customer on c_custkey), never a join
-    on a non-unique key, an explode or a union, which could add rows.
-    The footer shortcut below relies on it: it bounds ``df`` by
-    ``name``'s unfiltered row count.
-
-    ``max_rows`` defaults to the driver-heap-derived cap, resolved per
-    call from the live ``SPARK_GRAFT_DRIVER_MEM``.
+    ``max_rows`` defaults to the cap derived from the heap of ``df``'s
+    live session (``spark.driver.memory``).
 
     The caller reaches this only when ``fits_broadcast`` already said
     no, so the regimes are:
-    - file < ``probe_cap_bytes`` (the band): run the probe; broadcast
-      on a true count ≤ ``max_rows`` AND an estimated built size
-      (count × schema row width) within the driver byte budget
-      (r21 ADVICE: the row gate alone would admit wide-columned
-      frames).
-    - file ≥ ``probe_cap_bytes`` (cluster scale): skip the probe —
-      scanning a cluster-sized table just to ask is itself the cost
+    - file < ``COUNT_PROBE_CAP_BYTES`` (the band): run the probe;
+      broadcast on a true count ≤ ``max_rows`` AND an estimated built
+      size (count × schema row width) within the driver byte budget
+      (the row gate alone would admit wide-columned frames).
+    - file ≥ ``COUNT_PROBE_CAP_BYTES`` (cluster scale): skip the probe
+      — scanning a cluster-sized table just to ask is itself the cost
       the fallback shape avoids, and at that volume the filtered side
       almost never fits the driver. Return ``None``.
-
-    Probe cost controls (r21 ADVICE):
-    - ``SPARK_GRAFT_NO_COUNT_PROBE=1`` answers ``None`` without
-      running any job — plan-capture tooling (plans/r*/ artifact
-      scripts, explain-only callers) can stay side-effect-free while
-      exercising the fallback shape. The bench never sets it.
-    - When the gate table's parquet FOOTER already proves the
-      unfiltered row count ≤ ``max_rows``, the filtered frame can
-      only be smaller (the precondition above) — broadcast without
-      paying the count job (footer reads are metadata-only; a failed
-      read falls through to the probe).
     """
-    if max_rows is None:
-        max_rows = _derived_counted_broadcast_max_rows()
     try:
         size = _file_size(sf_dir, name)
     except OSError:
         return None
-    if size >= probe_cap_bytes:
+    if size >= COUNT_PROBE_CAP_BYTES:
         return None
-    if os.environ.get("SPARK_GRAFT_NO_COUNT_PROBE", "") == "1":
-        return None
-    from pyspark.sql import functions as F
-
-    row_bytes = _est_row_bytes(df)
-    byte_budget = _counted_broadcast_max_bytes()
-    try:
-        import pyarrow.parquet as pq
-
-        total_rows = pq.ParquetFile(
-            os.path.join(sf_dir, f"{name}.parquet")
-        ).metadata.num_rows
-    except Exception:
-        total_rows = None
-    if (
-        total_rows is not None
-        and total_rows <= max_rows
-        and total_rows * row_bytes <= byte_budget
-    ):
-        return F.broadcast(df)
+    spark = df.sparkSession
+    if max_rows is None:
+        max_rows = _counted_broadcast_max_rows(spark)
     # A plain count: fully parallel, column-pruned (Catalyst prunes to
     # the filter columns), one row per task over the wire. A LIMIT-ed
     # count would funnel up to max_rows per partition through a
     # single-partition exchange — strictly worse here.
     n = df.count()
-    if n > max_rows or n * row_bytes > byte_budget:
+    byte_budget = _counted_broadcast_max_bytes(spark)
+    if n > max_rows or n * _est_row_bytes(df) > byte_budget:
         return None
+    from pyspark.sql import functions as F
+
     return F.broadcast(df)
-
-
-def merge_join_above(
-    df: DataFrame,
-    sf_dir: str,
-    name: str,
-    threshold: int | None = None,
-) -> DataFrame:
-    """Cost-based SORT_MERGE hint for a join whose PROBE side is already
-    hash-partitioned on the join key (a preceding per-key aggregation):
-    hint merge iff table ``name``'s on-disk parquet is >= ``threshold``.
-
-    The mid-band problem (r21, measured at the 10× sf1-equivalent): the
-    planner's size estimate for a pruned scan is file bytes × column
-    ratio, so an orders side in the ~5-30 MB file range still estimates
-    under the 10 MB auto-broadcast threshold — and a broadcast of a
-    ~1.5 M-row build side pays a DRIVER-SERIAL collect + hash-relation
-    build that a distributed exchange avoids. Interleaved A/B (min/med
-    of 6): q18 1.34/1.50 s broadcast → 0.82/0.99 s merge, q10
-    1.33/1.60 → 0.87/0.97, q3 0.99/1.17 → 0.69/0.78. Below the
-    threshold (sf0.1 orders = 2.7 MB) the broadcast build is tens of
-    ms and wins — the r21 join re-audit measured removing blanket merge
-    hints improved exactly these queries at test scale — so the gate
-    stays off and plans are unchanged there.
-
-    Merge (not shuffle-hash) because the hinted region is unbounded
-    above: sort-merge is the memory-safe strategy at any volume — at
-    cluster scale the hint simply confirms what the planner's own
-    estimate would pick, overriding it only in the mid-band. Apply to
-    joins whose other side already carries the join-key partitioning
-    (the hint then adds exactly one narrow exchange + sorts, never a
-    fact-stream shuffle — q3/q10/q18), or whose probe stream is
-    FILTERED well below the build side (q12: ~430 k surviving lines vs
-    a 1.5 M-row orders build at 10×, merge 0.64 s vs broadcast 0.98 s;
-    q9: probe pre-filtered by the part join, merge 0.73 s vs 1.03 s).
-    For joins that probe a large un-keyed, un-filtered fact stream
-    (q5/q7) the broadcast avoids a full fact exchange and stays the
-    measured winner — keep those on the planner / maybe_broadcast.
-
-    ``threshold`` defaults to the core-count-derived crossover,
-    resolved per call from the live ``SPARK_GRAFT_CPUS``.
-    """
-    if threshold is None:
-        threshold = merge_over_bcast_bytes()
-    try:
-        size = _file_size(sf_dir, name)
-    except OSError:
-        return df
-    if size >= threshold:
-        return df.hint("merge")
-    return df
 
 
 def gather_sort(df: DataFrame, *cols) -> DataFrame:
@@ -872,40 +745,4 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         # numbers at _TABLE_KEYS).
         df = fan_out(df, key=part_key, force_layout=True)
     _insert_cache_row(_TABLE_CACHE, key, df)
-    return df
-
-
-def table_keyed(
-    spark: SparkSession, sf_dir: str, name: str, key: str
-) -> DataFrame:
-    """A SECONDARY keyed layout of ``name``: hash-partitioned and
-    partition-sorted on ``key`` instead of the table's primary join key.
-
-    This is the multi-layout bucketing real warehouses use (a second
-    bucketed projection / sort order of the same table): a query whose
-    join or aggregation key differs from the primary layout (q13 needs
-    orders BY CUSTKEY; the primary orders layout is by orderkey for the
-    lineitem joins) reads this layout; partition count comes from the
-    same volume formula, so joins against other keyed tables stay
-    co-partitioned. At cluster scale this corresponds to maintaining
-    the table bucketed by both keys on storage.
-
-    r21 measurement fix: the returned frame is a PLAN only — earlier
-    rounds ``.cache()``d it (and the bench pre-warmed it), so q13's
-    timed runs read a persisted intermediate instead of computing from
-    parquet. Under the optimization-round ground rules that is result
-    caching; the plan-level memo below is kept (a prepared statement,
-    no data), the data materialization is gone — every execution pays
-    its own scan + repartition.
-    """
-    ckey = (_session_key(spark), os.path.abspath(sf_dir), f"{name}@{key}")
-    cached = _TABLE_CACHE.get(ckey)
-    if cached is not None:
-        return cached
-    df = (
-        spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
-        .repartition(_keyed_parts(spark, sf_dir), key)
-        .sortWithinPartitions(key)
-    )
-    _insert_cache_row(_TABLE_CACHE, ckey, df)
     return df

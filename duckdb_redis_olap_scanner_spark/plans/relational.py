@@ -27,8 +27,6 @@ from .catalog import (
     fits_broadcast,
     gather_sort,
     maybe_broadcast,
-    merge_join_above,
-    merge_over_bcast_bytes,
     register,
     table,
 )
@@ -326,16 +324,8 @@ def q3_shipping_priority(spark: SparkSession, sf: str):
     per_order = l.groupBy("l_orderkey").agg(
         F.sum(_cents(disc)).alias("revenue_cents")
     )
-    # per_order is already hash-partitioned on the join key by its
-    # aggregation exchange, so the orders join takes the cost-based
-    # merge_join_above gate: planner broadcast below the threshold
-    # (test scale), merge above it — the mid-band broadcast paid a
-    # driver-serial 1.5 M-row hash-relation build (10×: 0.99→0.69 s).
     return (
-        per_order.join(
-            merge_join_above(o, sf, "orders"),
-            F.col("l_orderkey") == F.col("o_orderkey"),
-        )
+        per_order.join(o, F.col("l_orderkey") == F.col("o_orderkey"))
         .join(c, c.c_custkey == o.o_custkey)
         .select(
             "o_orderkey",
@@ -510,15 +500,8 @@ def q10_returned_items(spark: SparkSession, sf: str):
     per_order = l.groupBy("l_orderkey").agg(
         F.sum(_cents(disc)).alias("order_rev_cents")
     )
-    # per_order⋈o: cost-based merge_join_above gate (r21) — the pruned
-    # orders projection broadcasts at test scale; above the threshold
-    # the merge hint overrides the planner's mid-band broadcast, whose
-    # driver-serial 1.5 M-row build measured 1.33/1.60 s vs 0.87/0.97 s
-    # merge at the 10× sf1-equivalent (per_order already carries the
-    # orderkey partitioning, so the hint adds one narrow exchange).
     per_order_cust = per_order.join(
-        merge_join_above(o, sf, "orders"),
-        F.col("l_orderkey") == F.col("o_orderkey"),
+        o, F.col("l_orderkey") == F.col("o_orderkey")
     )
     width = keyed_agg_width(sf, "orders", spark.sparkContext.defaultParallelism)
     if width == 1:
@@ -2325,24 +2308,10 @@ def q12_shipmode(spark: SparkSession, sf: str):
     # (the q14 is_promo trick): the join side carries (o_orderkey,
     # high:boolean) — int+bool per order instead of the priority
     # string — and the IN-list evaluates once per order, off the
-    # per-lineitem probe path. Join strategy: cost-based
-    # merge_join_above gate on orders (r21 second pass). Below the
-    # threshold (sf0.1) the gate is off and the planner broadcasts the
-    # pruned orders — the audited test-scale winner. In the mid-band
-    # (10×: orders 27 MB source, 1.5 M-row build) the broadcast pays a
-    # driver-serial collect + hash-relation build that dwarfs
-    # exchanging the FILTERED lineitem probe (~430 k rows survive the
-    # returnflag+shipdate pushdown): interleaved min/med of 6 at 10×,
-    # merge 0.64/0.69 s vs broadcast 0.98/1.07 s; pre-aggregating per
-    # orderkey first measured worse than both. At cluster volume the
-    # hint confirms what the planner's own estimates pick anyway.
-    o = merge_join_above(
-        table(spark, sf, "orders").select(
-            "o_orderkey",
-            F.col("o_orderpriority").isin("1-URGENT", "2-HIGH").alias("high"),
-        ),
-        sf,
-        "orders",
+    # per-lineitem probe path. The join strategy is the planner's.
+    o = table(spark, sf, "orders").select(
+        "o_orderkey",
+        F.col("o_orderpriority").isin("1-URGENT", "2-HIGH").alias("high"),
     )
     high = F.col("high")
     return (
@@ -2387,20 +2356,9 @@ def q14_promo_effect(spark: SparkSession, sf: str):
         "p_partkey", F.col("p_type").like("PROMO%").alias("is_promo")
     )
     disc_cents = _cents(F.col("l_extendedprice") * (F.lit(1.0) - F.col("l_discount")))
-    # part scales with SF → strategy split at merge_over_bcast_bytes()
-    # (r21, 100× sf10-equivalent): below it the (partkey, bool)
-    # projection broadcast-builds in tens of ms (sf0.1/10× plans
-    # unchanged); above it the probe stream is FILTERED far below the
-    # build side (one shipdate month ≈ 1/84 of lineitem vs all of
-    # part — the q12/q9 criterion) and the merge's two narrow
-    # exchanges beat the driver-serial multi-M-row broadcast build,
-    # 0.66 s vs 1.12 s min-of-5. Merge stays memory-safe at cluster
-    # volume, where part outgrows any driver.
-    if fits_broadcast(sf, "part", merge_over_bcast_bytes()):
-        p = maybe_broadcast(p, sf, "part")
-    else:
-        p = p.hint("merge")
-    return l.join(p, l.l_partkey == p.p_partkey).agg(
+    return l.join(
+        maybe_broadcast(p, sf, "part"), l.l_partkey == p.p_partkey
+    ).agg(
         F.sum(F.when(F.col("is_promo"), disc_cents).otherwise(0))
         .cast("long")
         .alias("promo_cents"),
@@ -2441,16 +2399,8 @@ def q18_large_orders(spark: SparkSession, sf: str):
         F.sum(_cents("l_quantity")).alias("qty_cents")
     )
     big = per_order.filter(F.col("qty_cents") > 21200)
-    # big is already hash-partitioned on the join key by the HAVING
-    # aggregation's exchange → cost-based merge_join_above on orders:
-    # broadcast at test scale, merge above the threshold (the mid-band
-    # broadcast's driver-serial build measured 1.34/1.50 s vs
-    # 0.82/0.99 s merge at the 10× sf1-equivalent).
     return (
-        big.join(
-            merge_join_above(o, sf, "orders"),
-            F.col("l_orderkey") == F.col("o_orderkey"),
-        )
+        big.join(o, F.col("l_orderkey") == F.col("o_orderkey"))
         .join(c, F.col("o_custkey") == F.col("c_custkey"))
         .select("c_custkey", "o_orderkey", "qty_cents")
         .orderBy(F.desc("qty_cents"), F.asc("o_orderkey"))
@@ -2499,27 +2449,13 @@ def q13_customer_distribution(spark: SparkSession, sf: str):
     # (custkey, count) pairs, and the aggregate's row count is bounded
     # by customer cardinality — broadcastable at test scale.
     per_cust = o.groupBy("o_custkey").agg(F.count(F.lit(1)).alias("c_count"))
-    # Strategy split at merge_over_bcast_bytes() of customer (r21, 100×
-    # sf10-equivalent measurement): below it the per-cust count table
-    # is a tens-of-ms broadcast build (sf0.1/10× plans unchanged);
-    # above it the driver-serial build of a million-plus-row relation
-    # costs more than the distributed narrow exchange + sorts the
-    # merge takes (1.67 s broadcast vs 1.00 s merge min-of-5) — and
-    # merge stays the memory-safe shape at cluster volume, where
-    # per_cust (bounded by customer cardinality) outgrows any driver.
-    # per_cust is already hash-partitioned by its agg exchange, so the
-    # merge adds exactly one narrow customer exchange + sorts — the
-    # q3/q10/q18 criterion. (A join-elimination variant computing the
-    # zero bucket as |customer| − |per_cust| measured WORSE at 100×,
-    # 1.53 s: the reused-exchange second aggregation pass costs more
-    # than the join it saves — negative result, kept the join.)
-    if fits_broadcast(sf, "customer", merge_over_bcast_bytes()):
-        per_cust = maybe_broadcast(per_cust, sf, "customer")
-    else:
-        per_cust = per_cust.hint("merge")
+    # (A join-elimination variant computing the zero bucket as
+    # |customer| − |per_cust| measured WORSE at 100×, 1.53 s: the
+    # reused-exchange second aggregation pass costs more than the join
+    # it saves — negative result, kept the join.)
     dist = (
         c.join(
-            per_cust,
+            maybe_broadcast(per_cust, sf, "customer"),
             c.c_custkey == F.col("o_custkey"),
             "left_outer",
         )

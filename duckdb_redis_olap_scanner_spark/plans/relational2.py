@@ -30,7 +30,6 @@ from pyspark.sql import functions as F
 from .catalog import (
     gather_sort,
     maybe_broadcast,
-    merge_join_above,
     register,
     table,
 )
@@ -309,12 +308,7 @@ def q9_product_type_profit(spark: SparkSession, sf: str):
         "p_retailprice"
     ) * F.col("l_quantity")
     # part/supplier scale with SF → cost-based broadcast from real file
-    # sizes. l⋈o takes the cost-based merge_join_above gate (r21 third
-    # pass): off at sf0.1 (planner broadcasts the pruned orders — the
-    # audited test-scale winner), sort-merge in the mid-band where the
-    # probe is pre-filtered by the part join (p_name LIKE 'red%') well
-    # below the 1.5 M-row driver-serial broadcast build — interleaved
-    # min/med of 6 at 10×: merge 0.73/0.93 s vs broadcast 1.03/1.11 s.
+    # sizes; the l⋈o strategy is the planner's.
     # A (l_orderkey, nation) pre-agg before the join measured WORSE at
     # 10× (1.13/1.19 merge, 1.45/1.51 bcast: the wide-key hashmap on
     # the probe stream costs more than it saves — same negative result
@@ -325,7 +319,7 @@ def q9_product_type_profit(spark: SparkSession, sf: str):
             l.l_partkey == F.col("p_partkey"),
         )
         .join(maybe_broadcast(sn, sf, "supplier"), l.l_suppkey == sn.s_suppkey)
-        .join(merge_join_above(o, sf, "orders"), l.l_orderkey == o.o_orderkey)
+        .join(o, l.l_orderkey == o.o_orderkey)
         .select(
             "nation",
             F.year("o_orderdate").alias("o_year"),

@@ -141,6 +141,17 @@ def _parse(reader: _SocketReader) -> Any:
     raise RespProtocolError(f"unknown RESP tag {tag!r}")
 
 
+def _canonical_port(port: str) -> int | None:
+    """The TCP port ``port`` spells, or None unless it is canonical:
+    ASCII decimal digits in 1..65535 (what Redis emits). int() alone
+    would also accept '+2', ' 2', '1_0' and Unicode digits, and the
+    socket layer rejects 0 or out-of-range ports only at dial time."""
+    if not (port.isascii() and port.isdigit()):
+        return None
+    n = int(port)
+    return n if 1 <= n <= 65535 else None
+
+
 def _redirect_of(exc: RespError) -> tuple[str, str, int] | None:
     """(kind, host, port) from a cluster redirect error — ``MOVED
     <slot> <host>:<port>`` / ``ASK <slot> <host>:<port>`` — else
@@ -153,11 +164,10 @@ def _redirect_of(exc: RespError) -> tuple[str, str, int] | None:
     if len(parts) != 2 or ":" not in parts[1]:
         return None
     host, _, port = parts[1].rpartition(":")
-    # Canonical ASCII-decimal ports only (what Redis emits): int()
-    # alone would also accept '+2' / '1_0' / Unicode digits.
-    if not (port.isascii() and port.isdigit()):
+    port = _canonical_port(port)
+    if port is None:
         return None
-    return kind, host, int(port)
+    return kind, host, port
 
 
 def _is_wrongtype(exc: RespError) -> bool:
@@ -612,6 +622,7 @@ def parse_host_port(address: str) -> tuple[str, int]:
     if address is None:
         raise ValueError("address must not be NULL")
     host, sep, port = address.rpartition(":")
-    if not sep or not host or not port:
+    port = _canonical_port(port)
+    if not sep or not host or port is None:
         raise ValueError(f"expected 'HOST:PORT', got {address!r}")
-    return host, int(port)
+    return host, port

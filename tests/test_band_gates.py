@@ -42,12 +42,15 @@ def _oracle_rows(name: str):
 
 def _force_band(monkeypatch, *, small: tuple[str, ...] = ()):
     """Make the static gates treat every table as above-threshold
-    (band regime) except the ones listed in ``small``."""
+    (band regime) except the ones listed in ``small``: both the
+    shape switches in the query functions and the ``maybe_broadcast``
+    hints, which then leave the join strategy to the planner."""
 
-    def fake_fits(sf_dir, name, cap_bytes=C.BROADCAST_CAP_BYTES):
+    def fake_fits(sf_dir, name):
         return name in small
 
     monkeypatch.setattr(R, "fits_broadcast", fake_fits)
+    monkeypatch.setattr(C, "fits_broadcast", fake_fits)
 
 
 @pytest.mark.parametrize(
@@ -57,6 +60,7 @@ def _force_band(monkeypatch, *, small: tuple[str, ...] = ()):
         # q5's band branch additionally requires customer to stay
         # statically broadcastable.
         ("q5_local_supplier_volume", ("customer",)),
+        # q13/q14 have no band branch: their joins run unhinted.
         ("q13_customer_distribution", ()),
         ("q14_promo_effect", ()),
         # r22: q3's qualified-orders band branch (join-first + counted
@@ -80,17 +84,6 @@ def test_band_branch_q4_uses_broadcast_inner(spark, monkeypatch):
     )
     assert "BroadcastHashJoin" in plan
     assert "SortMergeJoin" not in plan
-
-
-def test_band_branch_q13_q14_use_merge(spark, monkeypatch):
-    _force_band(monkeypatch)
-    for q in ("q13_customer_distribution", "q14_promo_effect"):
-        plan = (
-            C.registry()[q].fn(spark, SF_DIR)
-            ._jdf.queryExecution().executedPlan().toString()
-        )
-        assert "SortMergeJoin" in plan, q
-        assert "BroadcastHashJoin" not in plan, q
 
 
 def test_broadcast_when_counted_contract(spark, monkeypatch):
@@ -128,87 +121,65 @@ def test_broadcast_when_counted_byte_budget(spark, monkeypatch):
     budget."""
     df = spark.range(10)
     monkeypatch.setattr(C, "_file_size", lambda d, n: 1 << 20)
-    monkeypatch.setattr(C, "_counted_broadcast_max_bytes", lambda: 16)
+    monkeypatch.setattr(C, "_counted_broadcast_max_bytes", lambda spark: 16)
     # 10 rows x 8 B = 80 B > 16 B budget -> refused despite row cap.
     assert (
         C.broadcast_when_counted(df, SF_DIR, "orders", max_rows=100) is None
     )
 
 
-def test_broadcast_when_counted_footer_short_circuit(spark, monkeypatch):
-    """When the gate table's parquet footer already proves the
-    unfiltered row count fits, the count job is skipped (the filtered
-    frame can only be smaller)."""
-    df = spark.range(10)
-    monkeypatch.setattr(C, "_file_size", lambda d, n: 1 << 20)
-    rows = int(
-        __import__("pyarrow.parquet", fromlist=["ParquetFile"])
-        .ParquetFile(os.path.join(SF_DIR, "orders.parquet"))
-        .metadata.num_rows
-    )
-    group = "bwc-footer-test"
-    spark.sparkContext.setJobGroup(group, "footer short-circuit probe")
-    out = C.broadcast_when_counted(
-        df, SF_DIR, "orders", max_rows=rows + 1
-    )
-    spark.sparkContext.setJobGroup(None, None)
-    assert out is not None
-    jobs = spark.sparkContext.statusTracker().getJobIdsForGroup(group)
-    assert len(jobs) == 0, "footer-provable fit must not run a count job"
-
-
-def test_broadcast_when_counted_probe_opt_out(spark, monkeypatch):
-    """SPARK_GRAFT_NO_COUNT_PROBE=1 keeps plan capture side-effect
-    free: the band gate answers None without running any job."""
-    df = spark.range(10)
-    monkeypatch.setattr(C, "_file_size", lambda d, n: 1 << 20)
-    monkeypatch.setenv("SPARK_GRAFT_NO_COUNT_PROBE", "1")
-    assert (
-        C.broadcast_when_counted(df, SF_DIR, "orders", max_rows=100) is None
-    )
-
-
 def test_derived_band_thresholds_match_measured_anchors():
-    """VERDICT item 6: the band thresholds derive from session facts
-    (cores, driver heap) and reproduce the measured anchors exactly at
-    this sandbox's default config — so every committed plan artifact
-    re-diffs byte-identical."""
-    assert C._MERGE_ANCHOR_BYTES == 8 << 20
-    # at the default 32 cores the derived value IS the anchor
-    assert (C._MERGE_ANCHOR_BYTES * C._MERGE_ANCHOR_CPUS) // 32 == 8 << 20
-    # fewer cores -> exchange slower -> broadcast pays longer
-    assert (C._MERGE_ANCHOR_BYTES * C._MERGE_ANCHOR_CPUS) // 8 == 32 << 20
-    # default 8 GiB driver reproduces the r21 4 M-row cap
+    """The counted-broadcast row cap derives from the driver heap and
+    reproduces the measured 4 M-row anchor at the default 8 GiB."""
     assert int(8.0 * C._COUNTED_ROWS_PER_DRIVER_GIB) == 4_000_000
 
 
 def test_band_thresholds_follow_live_session_facts(spark, monkeypatch):
-    """Both derived thresholds resolve per call, so a changed
-    SPARK_GRAFT_CPUS / SPARK_GRAFT_DRIVER_MEM takes effect within one
-    process instead of staying frozen at import time."""
-
-    class FakeDF:
-        def __init__(self):
-            self.hints = []
-
-        def hint(self, h):
-            self.hints.append(h)
-            return self
-
-    # 16 MiB of orders: above the 8 MiB crossover at 32 cores, below
-    # the 64 MiB one at 4 cores.
-    monkeypatch.setattr(C, "_file_size", lambda d, n: 16 << 20)
-    monkeypatch.setenv("SPARK_GRAFT_CPUS", "32")
-    assert C.merge_join_above(FakeDF(), SF_DIR, "orders").hints == ["merge"]
-    monkeypatch.setenv("SPARK_GRAFT_CPUS", "4")
-    assert C.merge_join_above(FakeDF(), SF_DIR, "orders").hints == []
-
-    # 1 M rows: under the 4 M-row cap of an 8 GiB driver, over the
-    # 500 k-row cap of a 1 GiB one. The gate table has no parquet
-    # footer, so both calls run the count probe.
-    df = spark.range(1_000_000)
-    monkeypatch.setattr(C, "_file_size", lambda d, n: 1 << 20)
-    monkeypatch.setenv("SPARK_GRAFT_DRIVER_MEM", "8g")
-    assert C.broadcast_when_counted(df, SF_DIR, "no_footer") is not None
+    """The count probe's budgets come from the live session's
+    ``spark.driver.memory``: an environment variable set after the
+    session started does not move them."""
+    heap = spark.sparkContext._jsc.sc().conf().getSizeAsBytes(
+        "spark.driver.memory", "1g"
+    )
     monkeypatch.setenv("SPARK_GRAFT_DRIVER_MEM", "1g")
-    assert C.broadcast_when_counted(df, SF_DIR, "no_footer") is None
+    cap = C._counted_broadcast_max_rows(spark)
+    assert cap == int(heap / (1 << 30) * 500_000)
+    monkeypatch.setenv("SPARK_GRAFT_DRIVER_MEM", "64g")
+    assert C._counted_broadcast_max_rows(spark) == cap
+
+    # The probe admits exactly ``cap`` rows.
+    monkeypatch.setattr(C, "_file_size", lambda d, n: 1 << 20)
+    assert C.broadcast_when_counted(spark.range(cap), SF_DIR, "orders")
+    assert C.broadcast_when_counted(
+        spark.range(cap + 1), SF_DIR, "orders"
+    ) is None
+
+
+def test_catalog_reads_only_the_session_cap_env_var():
+    """Cost gates read session facts, not the environment: the only
+    environment key ``plans/catalog.py`` reads is the cached-session
+    cap."""
+    import ast
+    import pathlib
+
+    tree = ast.parse(pathlib.Path(C.__file__).read_text())
+    env_refs = [
+        n for n in ast.walk(tree)
+        if isinstance(n, ast.Attribute) and n.attr in ("environ", "getenv")
+    ]
+    # os.getenv(KEY, ...) / os.environ.get(KEY, ...) with a literal KEY
+    keys = [
+        n.args[0].value
+        for n in ast.walk(tree)
+        if isinstance(n, ast.Call)
+        and isinstance(n.func, ast.Attribute)
+        and (
+            n.func.attr == "getenv"
+            or (n.func.attr == "get" and n.func.value in env_refs)
+        )
+        and isinstance(n.args[0], ast.Constant)
+    ]
+    assert keys == ["SPARK_GRAFT_MAX_CACHED_SESSIONS"]
+    # every environment reference is one of those reads (no subscript,
+    # alias or non-literal key)
+    assert len(env_refs) == len(keys)

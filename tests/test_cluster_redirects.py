@@ -35,6 +35,7 @@ def test_redirect_of_parses_moved_and_ask():
     )
     assert _redirect_of(RespError("ERR unknown command")) is None
     assert _redirect_of(RespError("MOVED gibberish")) is None
+    assert _redirect_of(RespError("MOVED 3999 10.0.0.7:65536")) is None
     # IPv6-ish host:port (rpartition on the last colon)
     assert _redirect_of(RespError("MOVED 1 ::1:6400")) == ("MOVED", "::1", 6400)
 

@@ -22,7 +22,11 @@ def test_encode_command():
 def test_parse_host_port():
     assert parse_host_port("127.0.0.1:6379") == ("127.0.0.1", 6379)
     assert parse_host_port("myhost:10") == ("myhost", 10)
-    for bad in ["127.0.0.1", ":6379", "host:", None]:
+    for bad in [
+        "127.0.0.1", ":6379", "host:", None,
+        "h:+6379", "h: 6379", "h:6_379", "h:\uff16\uff13\uff17\uff19",
+        "h:0", "h:-1", "h:99999",
+    ]:
         with pytest.raises(ValueError):
             parse_host_port(bad)
 
