@@ -15,13 +15,17 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
-from .sources.redis_source import ALL_DATASOURCES
+from .sources.redis_source import ALL_DATASOURCES, cluster_slots_enabled
 from .functions.redis_fns import (
     make_redis_get,
     make_redis_hgetall,
     make_redis_ttl,
 )
 from .transport.resp import RedisClient, parse_host_port
+
+# Loaded reader DataFrames one Engine keeps (see Engine._reader); the
+# oldest is dropped beyond this.
+MAX_SHARED_READS = 64
 
 TABLES = [
     "region",
@@ -69,9 +73,6 @@ def get_spark(
             str(shuffle_partitions or int(cpus)),
         )
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        # Enables pushFilters on Python DataSources (LIKE→glob pushdown
-        # into the Redis SCAN; off by default in Spark 4.1).
-        .config("spark.sql.python.filterPushdown.enabled", "true")
         # The generated-class cache defaults to 100 entries; a workload
         # that cycles through a full query catalog (19+ plans × several
         # codegen stages each) overflows it and recompiles ~1 s of Java
@@ -150,11 +151,6 @@ def ship_package(spark: SparkSession) -> None:
 
 
 def register_datasources(spark: SparkSession) -> None:
-    # Runtime-settable; required because RedisScanReader implements
-    # pushFilters — Spark refuses ANY read through such a reader while
-    # the conf is off, so foreign sessions (e.g. the test driver's) must
-    # have it flipped here, not only in get_spark().
-    spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
     # Registration must consult THIS session's DataSourceManager, not the
     # thread's active one: the JVM-side existence probe
     # (DataSourceRegistration.checkDataSourceExists → lookupDataSource)
@@ -246,6 +242,7 @@ class Engine:
         self.spark = spark
         self.host: str | None = None
         self.port: int | None = None
+        self._reads: dict[tuple, DataFrame] = {}
         register_datasources(spark)
 
     # -- connection ------------------------------------------------------------
@@ -260,6 +257,7 @@ class Engine:
         with RedisClient(host, port):
             pass  # context manager connects (PING inside) and closes
         self.host, self.port = host, port
+        self._reads.clear()
         return f"Redis Target Set: {host}:{port}"
 
     def _require_conn(self) -> tuple[str, int]:
@@ -273,13 +271,35 @@ class Engine:
     ) -> DataFrame:
         """Shared reader plumbing for every redis source: connection
         wiring + option pass-through, one place instead of six
-        copies (r14 review)."""
+        copies (r14 review).
+
+        A batch read returns the same DataFrame for the same format and
+        options until the next ``connect()``. Spark keeps the loaded
+        source and its partition plan on that DataFrame, so running it
+        again skips two of the three Python worker calls a fresh
+        ``load()`` costs (create the source, plan the read); only the
+        read task runs. Data is still read on every execution: a
+        second ``count()`` sees keys added since the first. Caching
+        one returned DataFrame (``.cache()``) therefore serves every
+        identical later read from the cache until ``unpersist()`` —
+        as ``spark.read.parquet`` on one path does. Streams, and
+        ``cluster_slots`` reads whose partitions come from the live
+        topology rather than the options, load afresh on every call."""
         host, port = self._require_conn()
+        shared = not streaming and not cluster_slots_enabled(options)
+        key = (fmt, tuple(sorted(options.items())))
+        if shared and key in self._reads:
+            return self._reads[key]
         src = self.spark.readStream if streaming else self.spark.read
         reader = src.format(fmt).option("host", host).option("port", port)
         for k, v in options.items():
             reader = reader.option(k, v)
-        return reader.load()
+        df = reader.load()
+        if shared:
+            if len(self._reads) >= MAX_SHARED_READS:
+                del self._reads[next(iter(self._reads))]
+            self._reads[key] = df
+        return df
 
     def redis_scan(self, pattern: str = "*", **options) -> DataFrame:
         return self._reader("redis_scan", pattern=pattern, **options)

@@ -33,7 +33,10 @@ ONE input partition (matching the reference's ``MaxThreads()==1``,
   snapshot owner's partition (r14 — previously double-reported, the
   redis-cli --scan contract). With ``shard_patterns`` too,
   partitions = nodes x patterns. :func:`key_slot` (CRC16-XMODEM +
-  hashtag rule) is the shared slot mapping.
+  hashtag rule) is the shared slot mapping. Spark re-executes a
+  DataFrame with the partitions it planned first, so every task
+  re-reads CLUSTER SLOTS on its node and raises
+  :class:`RedisTopologyChanged` if the snapshot no longer holds.
 
   Residual SCAN contract: a key whose slot's ownership CHANGES
   between the snapshot and the moment its node's cursor passes it can
@@ -58,19 +61,14 @@ Python-object row conversion.
 
 from __future__ import annotations
 
-from typing import Iterable, Iterator
+from typing import Iterator
 
 import pyarrow as pa
 from pyspark.sql.datasource import (
     DataSource,
     DataSourceReader,
     DataSourceWriter,
-    EqualTo,
-    Filter,
     InputPartition,
-    StringContains,
-    StringEndsWith,
-    StringStartsWith,
     WriterCommitMessage,
 )
 from pyspark.sql.types import (
@@ -85,27 +83,6 @@ from pyspark.sql.types import (
 from ..transport.resp import DEFAULT_SCAN_COUNT, RedisClient, _as_str
 
 
-def glob_escape(literal: str) -> str:
-    """Escape Redis-glob metacharacters in a literal using the [c]
-    single-char-class trick (portable: Redis globs and fnmatch agree on
-    it, unlike backslash escapes).
-
-    Only sound for literals :func:`glob_safe` accepts: ``]`` and ``\\``
-    cannot be portably class-escaped (real Redis ``stringmatchlen``
-    reads ``[]]`` as an empty class that never matches and ``[\\]`` as a
-    class containing ``]`` — unlike fnmatch), so pushdown must be
-    declined for them rather than risking silently missing rows."""
-    out = []
-    for ch in literal:
-        out.append(f"[{ch}]" if ch in "*?[" else ch)
-    return "".join(out)
-
-
-def glob_safe(literal: str) -> bool:
-    """True when a literal can be soundly embedded in a Redis glob."""
-    return "]" not in literal and "\\" not in literal
-
-
 class RedisShard(InputPartition):
     def __init__(
         self,
@@ -114,6 +91,7 @@ class RedisShard(InputPartition):
         pattern: str,
         count: int,
         slot_ranges: tuple[tuple[int, int], ...] | None = None,
+        topology: list | None = None,
     ) -> None:
         self.host = host
         self.port = port
@@ -126,6 +104,18 @@ class RedisShard(InputPartition):
         # mid-migration key physically present on BOTH source and
         # target is kept only by the snapshot owner's partition.
         self.slot_ranges = slot_ranges
+        # The whole snapshot (every master with its ranges, as
+        # _cluster_nodes returns it). Spark re-executes a DataFrame
+        # with the partitions it planned first, so each task checks
+        # that its node still serves this topology (_scan_owned).
+        self.topology = topology
+
+
+class RedisTopologyChanged(RuntimeError):
+    """A ``cluster_slots`` read ran against a cluster whose CLUSTER
+    SLOTS differ from the snapshot its partitions were planned from.
+    Scanning on would silently drop the keys of every moved slot; a
+    fresh read plans from the new topology."""
 
 
 def _crc16_xmodem(data: bytes) -> int:
@@ -158,34 +148,47 @@ def key_slot(key: str | bytes) -> int:
     return _crc16_xmodem(k) % 16384
 
 
-def _cluster_nodes(
-    host: str, port: int
+def _cluster_masters(
+    client: RedisClient, host: str
 ) -> list[tuple[str, int, tuple[tuple[int, int], ...]]]:
-    """Masters from ``CLUSTER SLOTS`` on the seed node, each with ALL
+    """Masters in ``CLUSTER SLOTS`` on ``client``'s node, each with ALL
     the slot ranges it owns, in first-appearance order. A master
     owning several ranges appears ONCE (SCAN on a node covers every
-    slot it owns), with its ranges aggregated — the reader filters
-    scanned keys to those ranges, so coverage is exactly-once per
-    topology snapshot even while keys are migrating."""
-    with RedisClient(host, port) as client:
-        entries = client.command("CLUSTER", "SLOTS")
+    slot it owns). An empty ip means the address queried, ``host``."""
     ranges: dict[tuple[str, int], list[tuple[int, int]]] = {}
-    for e in entries or []:
-        lo, hi = int(e[0]), int(e[1])
+    for e in client.command("CLUSTER", "SLOTS") or []:
         node = e[2]  # [ip, port, id, ...] of the range's master
-        ip = node[0].decode() if isinstance(node[0], bytes) else str(node[0])
-        nport = int(node[1])
-        if not ip:  # empty ip = "same address you connected to"
-            ip = host
-        ranges.setdefault((ip, nport), []).append((lo, hi))
-    if not ranges:
-        raise ValueError(
-            f"cluster_slots=true but CLUSTER SLOTS on {host}:{port} "
-            "returned no slot ranges"
+        ip = _as_str(node[0]) or host
+        ranges.setdefault((ip, int(node[1])), []).append(
+            (int(e[0]), int(e[1]))
         )
     return [
         (ip, nport, tuple(rs)) for (ip, nport), rs in ranges.items()
     ]
+
+
+def _cluster_nodes(
+    host: str, port: int
+) -> list[tuple[str, int, tuple[tuple[int, int], ...]]]:
+    """:func:`_cluster_masters` of the seed node. The reader filters
+    scanned keys to each master's ranges, so coverage is exactly-once
+    per topology snapshot even while keys are migrating."""
+    with RedisClient(host, port) as client:
+        masters = _cluster_masters(client, host)
+    if not masters:
+        raise ValueError(
+            f"cluster_slots=true but CLUSTER SLOTS on {host}:{port} "
+            "returned no slot ranges"
+        )
+    return masters
+
+
+def cluster_slots_enabled(options: dict) -> bool:
+    """True when a read's options select the ``cluster_slots`` path,
+    whose partitions come from the live topology, not the options."""
+    return str(options.get("cluster_slots", "")).lower() in (
+        "1", "true", "yes",
+    )
 
 
 def _shards(options: dict) -> list[RedisShard]:
@@ -197,7 +200,7 @@ def _shards(options: dict) -> list[RedisShard]:
         patterns = [p for p in shard_patterns.split(";") if p]
     else:
         patterns = [options.get("pattern", "*")]
-    if str(options.get("cluster_slots", "")).lower() in ("1", "true", "yes"):
+    if cluster_slots_enabled(options):
         # Production scale path (SURVEY §4.1): one InputPartition per
         # cluster MASTER discovered via CLUSTER SLOTS on the seed node
         # (driver side, once per read). Each task scans its own node
@@ -205,9 +208,10 @@ def _shards(options: dict) -> list[RedisShard]:
         # snapshot (_scan_owned) — exactly-once per snapshot even
         # under a concurrent reshard. Composes with shard_patterns:
         # nodes x patterns partitions.
+        masters = _cluster_nodes(host, port)
         return [
-            RedisShard(ip, nport, p, count, slot_ranges=rs)
-            for ip, nport, rs in _cluster_nodes(host, port)
+            RedisShard(ip, nport, p, count, slot_ranges=rs, topology=masters)
+            for ip, nport, rs in masters
             for p in patterns
         ]
     return [RedisShard(host, port, p, count) for p in patterns]
@@ -225,6 +229,15 @@ def _scan_owned(client: RedisClient, part: RedisShard) -> Iterator[list[str]]:
     if part.slot_ranges is None:
         yield from client.scan_iter(match=part.pattern, count=part.count)
         return
+    if (
+        part.topology is not None
+        and _cluster_masters(client, part.host) != part.topology
+    ):
+        raise RedisTopologyChanged(
+            f"CLUSTER SLOTS on {part.host}:{part.port} changed since "
+            "this read was planned; read again to plan from the new "
+            "topology"
+        )
     for raw in client.scan_iter(
         match=part.pattern, count=part.count, raw=True
     ):
@@ -240,47 +253,6 @@ def _scan_owned(client: RedisClient, part: RedisShard) -> Iterator[list[str]]:
 class RedisScanReader(DataSourceReader):
     def __init__(self, options: dict) -> None:
         self.options = options
-
-    def pushFilters(self, filters: list[Filter]) -> Iterable[Filter]:
-        """LIKE→glob pushdown (SURVEY.md §4.2's optional nicety): a
-        prefix/suffix/contains/equality predicate on key_name becomes the
-        server-side SCAN MATCH pattern, so non-matching keys never cross
-        the network. Applies only when the user left pattern='*' (the
-        glob can't soundly be intersected with another glob).
-
-        Soundness: the pattern is treated as a SUPERSET optimization —
-        every filter (including the one turned into the MATCH pattern)
-        is returned to Spark for re-verification, so a server whose glob
-        semantics over-match never yields wrong rows. Literals that
-        can't be portably escaped (see :func:`glob_safe`) are not pushed
-        at all, since an UNDER-matching pattern would silently drop rows
-        no re-check can restore."""
-        if self.options.get("pattern", "*") != "*" or self.options.get(
-            "shard_patterns"
-        ):
-            return filters
-        consumed = False
-        for f in filters:
-            pattern = None
-            if (
-                not consumed
-                and getattr(f, "attribute", None) == ("key_name",)
-                and isinstance(getattr(f, "value", None), str)
-                and glob_safe(f.value)
-            ):
-                if isinstance(f, StringStartsWith):
-                    pattern = glob_escape(f.value) + "*"
-                elif isinstance(f, StringEndsWith):
-                    pattern = "*" + glob_escape(f.value)
-                elif isinstance(f, StringContains):
-                    pattern = "*" + glob_escape(f.value) + "*"
-                elif isinstance(f, EqualTo):
-                    pattern = glob_escape(f.value)
-            if pattern is not None:
-                self.options["pattern"] = pattern
-                consumed = True
-        # ALL filters go back to Spark — the MATCH pattern only prunes.
-        return filters
 
     def partitions(self) -> list[InputPartition]:
         return _shards(self.options)

@@ -91,8 +91,20 @@ class _SocketReader:
     def read_exact(self, n: int) -> bytes:
         while len(self._buf) < n + 2:  # payload + trailing CRLF
             self._fill()
+        if not self._buf.startswith(CRLF, n):
+            raise RespProtocolError(f"no CRLF after {n}-byte payload")
         data, self._buf = self._buf[:n], self._buf[n + 2 :]
         return data
+
+
+def _length(rest: bytes, null_ok: bool = True) -> int:
+    """A RESP length prefix: ASCII digits, or ``-1`` (null) where the
+    type has a null form. Anything else would desync the stream."""
+    if rest.isdigit():
+        return int(rest)
+    if null_ok and rest == b"-1":
+        return -1
+    raise RespProtocolError(f"bad RESP length {rest!r}")
 
 
 def _parse(reader: _SocketReader) -> Any:
@@ -115,25 +127,25 @@ def _parse(reader: _SocketReader) -> Any:
     if tag == b"_":  # RESP3 null
         return None
     if tag == b"$":
-        n = int(rest)
+        n = _length(rest)
         if n == -1:
             return None
         return reader.read_exact(n)
     if tag == b"=":  # RESP3 verbatim string: "txt:" / "mkd:" prefix
-        n = int(rest)
+        n = _length(rest)
         if n == -1:
             return None
         return reader.read_exact(n)[4:]
     if tag in (b"*", b"~", b">"):  # array / set / push
-        n = int(rest)
+        n = _length(rest)
         if n == -1:
             return None
         return [_parse(reader) for _ in range(n)]
     if tag == b"%":  # RESP3 map
-        n = int(rest)
+        n = _length(rest, null_ok=False)
         return {_as_key(_parse(reader)): _parse(reader) for _ in range(n)}
     if tag == b"|":  # RESP3 attribute: metadata map PRECEDING the reply
-        n = int(rest)
+        n = _length(rest, null_ok=False)
         for _ in range(n):  # consume and discard key/value pairs
             _parse(reader)
             _parse(reader)
@@ -279,24 +291,40 @@ class RedisClient:
 
     # -- core ----------------------------------------------------------------
     def command(self, *args: Any) -> Any:
-        reader = self._ensure()
-        assert self._sock is not None
-        self._sock.sendall(encode_command(*args))
-        return _parse(reader)
+        reply = self._exchange(encode_command(*args), 1)[0]
+        if isinstance(reply, RespError):
+            raise reply
+        return reply
 
     def pipeline(self, commands: list[tuple]) -> list[Any]:
-        """Send all commands in one write, then read all replies."""
+        """Send all commands in one write, then read all replies. An
+        error reply comes back in its slot as the :class:`RespError`;
+        ``command`` raises it."""
         if not commands:
             return []
+        return self._exchange(
+            b"".join(encode_command(*c) for c in commands), len(commands)
+        )
+
+    def _exchange(self, wire: bytes, n: int) -> list[Any]:
+        """Send ``wire`` and read ``n`` replies. A complete error reply
+        keeps the connection. Anything else that stops the exchange
+        (a malformed frame, a timeout, a socket error) can leave unread
+        bytes on it, so the client is closed before the error
+        propagates and the next call reconnects."""
         reader = self._ensure()
         assert self._sock is not None
-        self._sock.sendall(b"".join(encode_command(*c) for c in commands))
-        out = []
-        for _ in commands:
-            try:
-                out.append(_parse(reader))
-            except RespError as e:
-                out.append(e)
+        out: list[Any] = []
+        try:
+            self._sock.sendall(wire)
+            for _ in range(n):
+                try:
+                    out.append(_parse(reader))
+                except RespError as e:
+                    out.append(e)
+        except BaseException:
+            self.close()
+            raise
         return out
 
     def pipeline_checked(self, commands: list[tuple]) -> list[Any]:

@@ -521,7 +521,8 @@ def test_cluster_scan_exactly_once_during_migration(spark):
             (lo, hi, n.host, n.port)
             for (lo, hi), n in zip(ranges, nodes)
         ]
-        nodes[0].set_cluster_slots(topo)
+        for n in nodes:  # every node of a cluster serves CLUSTER SLOTS
+            n.set_cluster_slots(topo)
         df = (
             spark.read.format("redis_scan")
             .option("host", nodes[0].host)

@@ -1,17 +1,13 @@
-"""Property-based tests (hypothesis) for the wire protocol and glob
-escaping — coverage the reference lacks entirely (SURVEY.md §5: no
-parser/client unit tests, single-recv fragmentation bug at
-redis_client.cpp:127-143).
+"""Property-based tests (hypothesis) for the wire protocol — coverage
+the reference lacks entirely (SURVEY.md §5: no parser/client unit
+tests, single-recv fragmentation bug at redis_client.cpp:127-143).
 """
 
 from __future__ import annotations
 
-import fnmatch
-
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
-from duckdb_redis_olap_scanner_spark.sources.redis_source import glob_escape
 from duckdb_redis_olap_scanner_spark.testing import _encode
 from duckdb_redis_olap_scanner_spark.transport.resp import (
     _parse,
@@ -86,37 +82,6 @@ def test_encode_command_parses_back(args):
         a if isinstance(a, bytes) else str(a).encode("utf-8") for a in args
     ]
     assert got == want
-
-
-key_text = st.text(
-    alphabet=st.characters(blacklist_categories=("Cs",)), min_size=0, max_size=40
-)
-
-
-@given(key=key_text)
-@settings(max_examples=300, deadline=None)
-def test_glob_escape_matches_itself(key):
-    assert fnmatch.fnmatchcase(key, glob_escape(key))
-
-
-@given(key=key_text, other=key_text)
-@settings(max_examples=300, deadline=None)
-def test_glob_escape_matches_only_itself(key, other):
-    if other != key:
-        assert not fnmatch.fnmatchcase(other, glob_escape(key))
-
-
-@given(prefix=key_text, suffix=key_text)
-@settings(max_examples=200, deadline=None)
-def test_glob_escape_prefix_pattern(prefix, suffix):
-    """The pushdown's startswith translation: '<escaped prefix>*' must
-    match exactly the keys with that literal prefix."""
-    pattern = glob_escape(prefix) + "*"
-    assert fnmatch.fnmatchcase(prefix + suffix, pattern)
-    if not (prefix + "X" + suffix).startswith(prefix * 2) and prefix:
-        not_prefixed = "\x01" + prefix[1:] + suffix
-        if not not_prefixed.startswith(prefix):
-            assert not fnmatch.fnmatchcase(not_prefixed, pattern)
 
 
 def test_md5_hash64_matches_duckdb_on_random_strings(spark):

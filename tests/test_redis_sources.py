@@ -4,7 +4,11 @@ unimplemented surface (redis_kv, redis_hgetall)."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
+
+from duckdb_redis_olap_scanner_spark import Engine
+from duckdb_redis_olap_scanner_spark.testing import FakeRedisServer
 
 
 def test_scan_count_golden(engine):
@@ -85,74 +89,126 @@ def test_connect_errors(engine):
 
 
 class TestFilterPushdown:
-    def test_pushfilters_translates_like_prefix(self):
-        from duckdb_redis_olap_scanner_spark.sources.redis_source import (
-            RedisScanReader,
-        )
-        from pyspark.sql.datasource import (
-            EqualTo,
-            GreaterThan,
-            StringStartsWith,
-        )
-
-        r = RedisScanReader({"pattern": "*"})
-        remaining = list(
-            r.pushFilters(
-                [
-                    StringStartsWith(("key_name",), "testkey:"),
-                    GreaterThan(("key_name",), "a"),
-                ]
-            )
-        )
-        assert r.options["pattern"] == "testkey:*"
-        # ALL filters return to Spark: the MATCH pattern is a superset
-        # optimization, re-verified engine-side (sound against server
-        # glob-semantics differences).
-        assert len(remaining) == 2
-
-    def test_pushfilters_escapes_glob_metachars(self):
-        from duckdb_redis_olap_scanner_spark.sources.redis_source import (
-            RedisScanReader,
-        )
-        from pyspark.sql.datasource import EqualTo
-
-        r = RedisScanReader({"pattern": "*"})
-        r.pushFilters([EqualTo(("key_name",), "weird*key?")])
-        assert r.options["pattern"] == "weird[*]key[?]"
-
-    def test_pushfilters_declines_unescapable_literals(self):
-        # ']' and '\' can't be portably escaped in a Redis glob (real
-        # stringmatchlen reads '[]]' as an empty class) — such literals
-        # must not be pushed at all; Spark filters them engine-side.
-        from duckdb_redis_olap_scanner_spark.sources.redis_source import (
-            RedisScanReader,
-        )
-        from pyspark.sql.datasource import StringStartsWith
-
-        for bad in ("a]b", "a\\b"):
-            r = RedisScanReader({"pattern": "*"})
-            remaining = list(r.pushFilters([StringStartsWith(("key_name",), bad)]))
-            assert r.options["pattern"] == "*"
-            assert len(remaining) == 1
-
-    def test_pushfilters_keeps_user_pattern(self):
-        from duckdb_redis_olap_scanner_spark.sources.redis_source import (
-            RedisScanReader,
-        )
-        from pyspark.sql.datasource import StringStartsWith
-
-        r = RedisScanReader({"pattern": "user:*"})
-        remaining = list(r.pushFilters([StringStartsWith(("key_name",), "t")]))
-        assert r.options["pattern"] == "user:*"
-        assert len(remaining) == 1  # nothing consumed
-
     def test_like_pushdown_end_to_end(self, engine):
-        # LIKE 'testkey:%' becomes the SCAN MATCH glob server-side; the
-        # result must equal the explicit-pattern scan (10 golden keys),
-        # with non-matching 'other:*' keys excluded at the source.
+        # The source pushes no filter: Spark applies LIKE 'testkey:%'
+        # to the full scan, and the result must equal the
+        # explicit-pattern scan (the 10 golden keys).
         df = engine.redis_scan("*").filter(F.col("key_name").like("testkey:%"))
         keys = sorted(r.key_name for r in df.collect())
         assert keys == [f"testkey:{i:04d}" for i in range(1, 11)]
+
+
+# ---------------------------------------------------------------------------
+# Shared reads: Engine returns one DataFrame per (format, options)
+# ---------------------------------------------------------------------------
+
+
+@pytest.fixture
+def fresh(spark):
+    """A private server (5 ``a:`` keys, 7 ``b:`` keys) and Engine, so
+    the counts below do not depend on what other tests wrote."""
+    with FakeRedisServer() as srv:
+        srv.seed_strings({f"a:{i}": "v" for i in range(5)})
+        srv.seed_strings({f"b:{i}": "v" for i in range(7)})
+        eng = Engine(spark)
+        eng.connect(srv.address)
+        yield srv, eng
+
+
+def test_like_then_unfiltered_on_one_dataframe(fresh):
+    _, eng = fresh
+    df = eng.redis_scan()
+    assert df.filter(F.col("key_name").like("a:%")).count() == 5
+    assert df.count() == 12
+
+
+def test_like_then_unfiltered_on_temp_view(fresh, spark):
+    _, eng = fresh
+    eng.redis_scan().createOrReplaceTempView("shared_scan")
+    like = "SELECT COUNT(*) AS n FROM shared_scan WHERE key_name LIKE 'a:%'"
+    assert spark.sql(like).collect()[0].n == 5
+    assert spark.sql("SELECT COUNT(*) AS n FROM shared_scan").collect()[0].n == 12
+
+
+def test_reads_are_shared_per_format_and_options(fresh):
+    srv, eng = fresh
+    df = eng.redis_kv("a:*")
+    assert eng.redis_kv("a:*") is df
+    assert eng.redis_kv("b:*") is not df
+    assert eng.redis_kv("a:*", count=3) is not df
+    assert eng.redis_scan("a:*") is not df
+    eng.connect(srv.address)
+    assert eng.redis_kv("a:*") is not df
+
+
+def test_shared_reads_drop_the_oldest_beyond_the_cap(fresh, monkeypatch):
+    from duckdb_redis_olap_scanner_spark import engine as engine_mod
+
+    _, eng = fresh
+    monkeypatch.setattr(engine_mod, "MAX_SHARED_READS", 2)
+    a, b, c = (eng.redis_kv(p) for p in ("a:*", "b:*", "c:*"))
+    assert eng.redis_kv("b:*") is b and eng.redis_kv("c:*") is c
+    assert eng.redis_kv("a:*") is not a
+
+
+def test_shared_read_sees_new_keys(fresh):
+    srv, eng = fresh
+    assert eng.redis_kv("a:*").count() == 5
+    srv.seed_strings({"a:new": "v"})
+    assert eng.redis_kv("a:*").count() == 6
+
+
+def test_cached_shared_read_serves_until_unpersist(fresh):
+    srv, eng = fresh
+    df = eng.redis_scan("a:*").cache()
+    assert df.count() == 5
+    srv.seed_strings({"a:new": "v"})
+    assert eng.redis_scan("a:*").count() == 5  # served by the cache
+    df.unpersist(blocking=True)
+    assert eng.redis_scan("a:*").count() == 6
+
+
+def test_cluster_and_stream_reads_are_not_shared(fresh):
+    srv, eng = fresh
+    srv.set_cluster_slots([(0, 16383, srv.host, srv.port)])
+    df = eng.redis_scan("a:*", cluster_slots="true")
+    assert eng.redis_scan("a:*", cluster_slots="true") is not df
+    assert df.count() == 5
+    assert eng.redis_stream("events") is not eng.redis_stream("events")
+
+
+def test_reused_cluster_read_fails_after_reshard(spark):
+    """Spark re-executes a DataFrame with the partitions it planned
+    first. After a reshard those partitions filter keys by the old
+    slot ownership, so a reused cluster read must fail, not return
+    the keys of the slots that did not move; a fresh read plans from
+    the new topology."""
+    from duckdb_redis_olap_scanner_spark.sources.redis_source import key_slot
+
+    with FakeRedisServer() as a, FakeRedisServer() as b:
+        keys = [f"rs:{i:04d}" for i in range(40)]
+        for k in keys:
+            (a if key_slot(k) <= 8191 else b).seed_strings({k: "v"})
+        for n in (a, b):
+            n.set_cluster_slots(
+                [(0, 8191, a.host, a.port), (8192, 16383, b.host, b.port)]
+            )
+        eng = Engine(spark)
+        eng.connect(a.address)
+        df = eng.redis_scan("rs:*", cluster_slots="true")
+        assert df.count() == 40
+
+        # reshard: every slot moves to a, with b's keys
+        with b.store.lock:
+            moved = dict(b.store.strings)
+            b.store.strings.clear()
+        a.seed_strings(moved)
+        for n in (a, b):
+            n.set_cluster_slots([(0, 16383, a.host, a.port)])
+
+        with pytest.raises(Exception, match="RedisTopologyChanged"):
+            df.count()
+        assert eng.redis_scan("rs:*", cluster_slots="true").count() == 40
 
 
 def test_kv_writer_roundtrip(spark, engine, redis_server):
@@ -333,7 +389,8 @@ def test_cluster_slots_scan_covers_nodes_disjointly(spark):
             (lo, hi, n.host, n.port)
             for (lo, hi), n in zip(ranges, nodes)
         ]
-        nodes[0].set_cluster_slots(topo)
+        for n in nodes:  # every node of a cluster serves CLUSTER SLOTS
+            n.set_cluster_slots(topo)
         df = (
             spark.read.format("redis_scan")
             .option("host", nodes[0].host)

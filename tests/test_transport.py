@@ -2,11 +2,17 @@
 
 from __future__ import annotations
 
+import socketserver
+import threading
+
 import pytest
 
 from duckdb_redis_olap_scanner_spark.transport.resp import (
     RedisClient,
     RespError,
+    RespProtocolError,
+    _parse,
+    _SocketReader,
     encode_command,
     parse_host_port,
 )
@@ -179,3 +185,112 @@ def test_resp3_parse_branches():
     assert parse(b"|0\r\n:7\r\n") == 7
     assert parse(b"$-1\r\n") is None
     assert parse(b"*-1\r\n") is None
+
+
+class _OneShot:
+    """A socket whose whole byte stream arrives in one recv()."""
+
+    def __init__(self, data: bytes) -> None:
+        self.data = data
+
+    def recv(self, _n: int) -> bytes:
+        d, self.data = self.data, b""
+        return d
+
+
+@pytest.mark.parametrize(
+    "wire",
+    [
+        b"$-5\r\nhello\r\n",  # negative bulk length other than -1
+        b"*-2\r\n:1\r\n",  # negative array length other than -1
+        b"=-3\r\n",
+        b"%-1\r\n",  # maps have no null form
+        b"$abc\r\n",  # non-digit length
+        b"*+1\r\n:1\r\n",
+        b"$ 5\r\nhello\r\n",
+        b"$5\r\nhelloXY",  # payload not followed by CRLF
+        b"*1\r\n$2\r\nabc\r\n",
+    ],
+    ids=[
+        "negative_bulk", "negative_array", "negative_verbatim", "null_map",
+        "non_digit", "plus_sign", "space", "no_crlf", "length_short_of_payload",
+    ],
+)
+def test_parse_rejects_bad_length_prefixes(wire):
+    with pytest.raises(RespProtocolError):
+        _parse(_SocketReader(_OneShot(wire)))
+
+
+class _FaultyServer(socketserver.ThreadingTCPServer):
+    """Answers PING with PONG, GET with ``get_reply(conn)`` (``conn``
+    numbers the connections from 0) and anything else with a complete
+    ``-ERR`` reply, so a test can cut off or garble one connection's
+    replies."""
+
+    allow_reuse_address = True
+    daemon_threads = True
+
+    def __init__(self, get_reply) -> None:
+        self.get_reply = get_reply
+        self.connections = 0
+        super().__init__(("127.0.0.1", 0), _FaultyHandler)
+        threading.Thread(target=self.serve_forever, daemon=True).start()
+
+    def __enter__(self) -> "_FaultyServer":
+        return self
+
+    def __exit__(self, *exc) -> None:
+        self.shutdown()
+        self.server_close()
+
+
+class _FaultyHandler(socketserver.BaseRequestHandler):
+    def handle(self) -> None:
+        conn = self.server.connections
+        self.server.connections += 1
+        reader = _SocketReader(self.request)
+        while True:
+            try:
+                args = _parse(reader)
+            except (RespProtocolError, OSError):
+                return
+            name = args[0].upper()
+            if name == b"PING":
+                reply = b"+PONG\r\n"
+            elif name == b"GET":
+                reply = self.server.get_reply(conn)
+            else:
+                reply = b"-ERR unknown command\r\n"
+            self.request.sendall(reply)
+
+
+@pytest.mark.parametrize(
+    "cut",
+    [b"$5\r\nhel", b"$-5\r\nhello\r\n"],
+    ids=["stalled_mid_payload", "malformed_length"],
+)
+def test_cut_off_reply_closes_the_client(cut):
+    """A reply cut off mid-way leaves unread bytes on the connection;
+    the client must drop it, so the next call reconnects instead of
+    parsing the stale bytes as its reply."""
+    ok = b"$5\r\nvalue\r\n"
+    with _FaultyServer(lambda conn: cut if conn == 0 else ok) as srv:
+        host, port = srv.server_address
+        with RedisClient(host, port, timeout=0.3) as c:
+            with pytest.raises((RespProtocolError, OSError)):
+                c.get("k")
+            assert c.get("k") == "value"
+            assert c.pipeline([("GET", "k")]) == [b"value"]
+        assert srv.connections == 2
+
+
+def test_error_reply_keeps_the_connection():
+    with _FaultyServer(lambda conn: b"$5\r\nvalue\r\n") as srv:
+        host, port = srv.server_address
+        with RedisClient(host, port) as c:
+            with pytest.raises(RespError):
+                c.command("NOSUCHCOMMAND")
+            err, val = c.pipeline([("NOSUCHCOMMAND",), ("GET", "k")])
+            assert isinstance(err, RespError) and val == b"value"
+            assert c.get("k") == "value"
+        assert srv.connections == 1
