@@ -13,6 +13,7 @@ from __future__ import annotations
 
 import os
 
+from pyspark import SparkContext
 from pyspark.sql import DataFrame, SparkSession
 
 from .sources.redis_source import ALL_DATASOURCES, cluster_slots_enabled
@@ -62,9 +63,10 @@ def get_spark(
         os.environ["PYTHONPATH"] = (
             pkg_root + (os.pathsep + existing if existing else "")
         )
+    master = master or f"local[{cpus}]"
     builder = (
         SparkSession.builder.appName(app_name)
-        .master(master or f"local[{cpus}]")
+        .master(master)
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
@@ -84,6 +86,12 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
     )
+    if _starts_local_workers(master, pkg_root):
+        # Workers import pyspark from its installed directory instead
+        # of Spark's zips, which cuts ~0.2 s off every Python task.
+        builder = builder.config(
+            "spark.python.daemon.module", f"{__package__}.worker_daemon"
+        )
     spark = builder.getOrCreate()
     register_datasources(spark)
     # The PYTHONPATH export above only reaches workers when THIS call
@@ -95,6 +103,22 @@ def get_spark(
     # content-hash named) — r14 review.
     ship_package(spark)
     return spark
+
+
+def _starts_local_workers(master: str, pkg_root: str) -> bool:
+    """True when the session about to be built starts a new local
+    SparkContext whose Python workers will have ``pkg_root`` on their
+    path: they inherit PYTHONPATH from the JVM, which is launched now
+    with the export above, or was launched earlier by a context since
+    stopped. Only then can the daemon start from ``worker_daemon``."""
+    if SparkContext._active_spark_context is not None or not (
+        master == "local" or master.startswith("local[")
+    ):
+        return False
+    if SparkContext._jvm is None:
+        return True
+    inherited = SparkContext._jvm.java.lang.System.getenv("PYTHONPATH")
+    return pkg_root in (inherited or "").split(os.pathsep)
 
 
 def ship_package(spark: SparkSession) -> None:

@@ -329,13 +329,16 @@ def brute_force_topk(
       scan → narrow map → k·Q rows out.
 
     Default (``use_arrow=None``): Arrow, at every corpus size. Measured
-    best-of-4 on warm caches (local[32]): 100 rows 0.50 vs 1.33 s,
-    1k rows 0.41 vs 1.33 s, 10k rows 0.47 vs 1.21 s — the JVM path's
-    64-term unrolled expression tree costs ~1.2 s of codegen per fresh
-    plan, dwarfing the Arrow worker's fixed ~0.3 s, and at large N the
-    single int64 matmul per batch wins on throughput anyway. The JVM
-    path stays available (and oracle-tested) as the zero-Python-worker
-    fallback.
+    best-of-4 on warm caches, Arrow vs JVM, fresh plan per call
+    (local[4], sf0.1 embeddings): 100 rows 0.96 vs 1.07 s, 1k rows
+    0.77 vs 1.23 s, 2k rows 0.75 vs 0.95 s. The JVM path compiles its
+    64-term unrolled expression tree for every fresh plan, which costs
+    more than the Arrow worker's fixed cost: a 1-task ``mapInArrow``
+    collect takes 0.14 s with workers started from ``worker_daemon``
+    (0.32 s when they import pyspark from Spark's zip;
+    ``scripts/worker_floor.py``). At large N the single int64 matmul
+    per batch wins on throughput anyway. The JVM path stays available
+    (and oracle-tested) as the zero-Python-worker fallback.
 
     Bit-determinism vs the DuckDB oracle: quantization is
     ``floor(float64(x)*1000)`` per element, dot/norms are exact int64,

@@ -80,7 +80,12 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from ..transport.resp import DEFAULT_SCAN_COUNT, RedisClient, _as_str
+from ..transport.resp import (
+    DEFAULT_SCAN_COUNT,
+    RedisClient,
+    _as_str,
+    raise_nested,
+)
 
 
 class RedisShard(InputPartition):
@@ -156,7 +161,7 @@ def _cluster_masters(
     owning several ranges appears ONCE (SCAN on a node covers every
     slot it owns). An empty ip means the address queried, ``host``."""
     ranges: dict[tuple[str, int], list[tuple[int, int]]] = {}
-    for e in client.command("CLUSTER", "SLOTS") or []:
+    for e in raise_nested(client.command("CLUSTER", "SLOTS")) or []:
         node = e[2]  # [ip, port, id, ...] of the range's master
         ip = _as_str(node[0]) or host
         ranges.setdefault((ip, int(node[1])), []).append(
@@ -526,9 +531,9 @@ class RedisZSetReader(DataSourceReader):
             rank = 0
             while True:
                 stop = str(rank + page - 1) if not single_shot else "-1"
-                flat = client.command(
+                flat = raise_nested(client.command(
                     "ZRANGE", part.key, str(rank), stop, "WITHSCORES",
-                )
+                ))
                 if not flat:
                     return
                 if isinstance(flat[0], (list, tuple)):  # RESP3 pairs
@@ -659,7 +664,9 @@ class RedisListReader(DataSourceReader):
             pos = 0
             while True:
                 stop = str(pos + page - 1) if not single_shot else "-1"
-                vals = client.command("LRANGE", part.key, str(pos), stop)
+                vals = raise_nested(
+                    client.command("LRANGE", part.key, str(pos), stop)
+                )
                 if not vals:
                     return
                 elems = [

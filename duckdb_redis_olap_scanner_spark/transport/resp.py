@@ -108,6 +108,18 @@ def _length(rest: bytes, null_ok: bool = True) -> int:
 
 
 def _parse(reader: _SocketReader) -> Any:
+    """One reply; an error reply raises :class:`RespError`."""
+    reply = _read_reply(reader)
+    if isinstance(reply, RespError):
+        raise reply
+    return reply
+
+
+def _read_reply(reader: _SocketReader) -> Any:
+    """One whole reply, errors included as :class:`RespError` values.
+    An error element inside an array, set, push or map stays in its
+    slot, so the rest of the container is still read off the socket
+    and the next reply starts where it should."""
     line = reader.read_line()
     if not line:
         raise RespProtocolError("empty reply line")
@@ -115,7 +127,7 @@ def _parse(reader: _SocketReader) -> Any:
     if tag == b"+":
         return rest.decode("utf-8", "replace")
     if tag == b"-":
-        raise RespError(rest.decode("utf-8", "replace"))
+        return RespError(rest.decode("utf-8", "replace"))
     if tag == b":":
         return int(rest)
     if tag == b",":  # RESP3 double
@@ -140,16 +152,19 @@ def _parse(reader: _SocketReader) -> Any:
         n = _length(rest)
         if n == -1:
             return None
-        return [_parse(reader) for _ in range(n)]
+        return [_read_reply(reader) for _ in range(n)]
     if tag == b"%":  # RESP3 map
         n = _length(rest, null_ok=False)
-        return {_as_key(_parse(reader)): _parse(reader) for _ in range(n)}
+        return {
+            _as_key(_read_reply(reader)): _read_reply(reader)
+            for _ in range(n)
+        }
     if tag == b"|":  # RESP3 attribute: metadata map PRECEDING the reply
         n = _length(rest, null_ok=False)
         for _ in range(n):  # consume and discard key/value pairs
-            _parse(reader)
-            _parse(reader)
-        return _parse(reader)  # the actual reply follows
+            _read_reply(reader)
+            _read_reply(reader)
+        return _read_reply(reader)  # the actual reply follows
     raise RespProtocolError(f"unknown RESP tag {tag!r}")
 
 
@@ -203,9 +218,24 @@ def _as_key(v: Any) -> Any:
     return v.decode("utf-8", "replace") if isinstance(v, bytes) else v
 
 
+def raise_nested(reply: Any) -> Any:
+    """``reply``, unless an error element sits anywhere inside it: then
+    that :class:`RespError` is raised. For callers that read every
+    element of a container reply as data."""
+    if isinstance(reply, RespError):
+        raise reply
+    if isinstance(reply, (list, dict)):
+        for v in reply.values() if isinstance(reply, dict) else reply:
+            if isinstance(v, (list, dict, RespError)):
+                raise_nested(v)
+    return reply
+
+
 def _as_str(v: Any) -> str | None:
     if v is None:
         return None
+    if isinstance(v, RespError):  # an error element of a container
+        raise v
     if isinstance(v, bytes):
         return v.decode("utf-8", "replace")
     return str(v)
@@ -318,10 +348,7 @@ class RedisClient:
         try:
             self._sock.sendall(wire)
             for _ in range(n):
-                try:
-                    out.append(_parse(reader))
-                except RespError as e:
-                    out.append(e)
+                out.append(_read_reply(reader))
         except BaseException:
             self.close()
             raise
@@ -632,7 +659,9 @@ class RedisClient:
         """
         cursor = "0"
         while True:
-            reply = self.command("SCAN", cursor, "MATCH", match, "COUNT", count)
+            reply = raise_nested(
+                self.command("SCAN", cursor, "MATCH", match, "COUNT", count)
+            )
             cursor = _as_str(reply[0])
             keys = list(reply[1]) if raw else [_as_str(k) for k in reply[1]]
             if keys:

@@ -15,6 +15,7 @@ from duckdb_redis_olap_scanner_spark.transport.resp import (
     _SocketReader,
     encode_command,
     parse_host_port,
+    raise_nested,
 )
 
 
@@ -294,3 +295,69 @@ def test_error_reply_keeps_the_connection():
             assert isinstance(err, RespError) and val == b"value"
             assert c.get("k") == "value"
         assert srv.connections == 1
+
+
+def test_nested_error_keeps_the_stream_in_step():
+    """An error element inside an array is one element of the reply:
+    the rest of the array is read with it, so the next command gets
+    its own reply, not the array's tail."""
+    nested = b"*3\r\n:1\r\n-ERR boom\r\n:3\r\n"
+    with _FaultyServer(lambda conn: nested) as srv:
+        host, port = srv.server_address
+        with RedisClient(host, port) as c:
+            (reply,) = c.pipeline([("GET", "k")])
+            assert c.command("PING") == "PONG"
+            one, err, three = reply
+            assert (one, three) == (1, 3)
+            assert isinstance(err, RespError) and str(err) == "ERR boom"
+            # Only a top-level error raises from command().
+            assert c.command("GET", "k")[2] == 3
+            assert c.command("PING") == "PONG"
+            with pytest.raises(RespError, match="boom"):
+                raise_nested(c.command("GET", "k"))
+            assert c.command("PING") == "PONG"
+        assert srv.connections == 1
+
+
+def test_parse_keeps_nested_errors_in_their_slots():
+    def parse(wire: bytes):
+        return _parse(_SocketReader(_OneShot(wire)))
+
+    with pytest.raises(RespError, match="top"):
+        parse(b"-ERR top\r\n")
+    got = parse(b"*2\r\n*2\r\n-ERR deep\r\n:1\r\n:2\r\n")
+    assert isinstance(got[0][0], RespError) and got[0][1:] == [1]
+    assert got[1] == 2
+    got = parse(b"%1\r\n$1\r\nf\r\n-ERR v\r\n")
+    assert isinstance(got["f"], RespError)
+    with pytest.raises(RespError, match="deep"):
+        raise_nested([1, [2, {"f": RespError("ERR deep")}]])
+    assert raise_nested([1, [b"a"], {"f": b"v"}]) == [1, [b"a"], {"f": b"v"}]
+    assert raise_nested(b"x") == b"x" and raise_nested(None) is None
+
+
+def test_readers_refuse_nested_errors(monkeypatch):
+    """Callers that read a container reply as data raise its error
+    element instead of returning it as a key, field or value."""
+    from duckdb_redis_olap_scanner_spark.sources.redis_source import (
+        _cluster_masters,
+    )
+
+    err = RespError("ERR boom")
+    c = RedisClient("127.0.0.1", 1)  # never connects: replies are scripted
+    monkeypatch.setattr(c, "pipeline", lambda cmds: [[b"f", err]])
+    with pytest.raises(RespError, match="boom"):
+        c.hgetall_pipelined(["h"])
+    monkeypatch.setattr(c, "command", lambda *a: [b"0", [b"k", err]])
+    with pytest.raises(RespError, match="boom"):
+        list(c.scan_iter())
+    with pytest.raises(RespError, match="boom"):
+        list(c.scan_iter(raw=True))
+    monkeypatch.setattr(c, "command", lambda *a: [b"f", err])
+    with pytest.raises(RespError, match="boom"):
+        c.hgetall("h")
+    monkeypatch.setattr(
+        c, "command", lambda *a: [[0, 16383, [b"10.0.0.1", err, b"id"]]]
+    )
+    with pytest.raises(RespError, match="boom"):
+        _cluster_masters(c, "10.0.0.1")
