@@ -215,8 +215,7 @@ def _task_counts(spark, entries, bench_names, sf_dir) -> dict[str, int]:
     the timed region, to record how many tasks each query actually
     executes (r21 verdict: the driver's 8-vs-32-core ratios at sf0.1
     are ~1 and the payload gave no way to see why — single-row-group
-    scans are 1 task at any core count, and the volume-proportional
-    shuffle width clamps to ~6 at this SF; the task counts make that
+    scans are 1 task at any core count; the task counts make that
     regime visible in the payload instead of looking like a harness
     that ignores $SPARK_GRAFT_CPUS)."""
     out: dict[str, int] = {}
@@ -257,22 +256,6 @@ def _plan_exchanges(df) -> int:
         - plan.count("BroadcastExchange")
         - plan.count("ReusedExchange")
     )
-
-
-def _shuffle_partitions(sf_dir: str) -> int:
-    """Volume-proportional shuffle sizing, using THE SAME formula as the
-    keyed table loads (catalog.suggested_shuffle_partitions): when the
-    two counts diverge, every join between an aggregation output and a
-    co-partitioned scan pays an alignment Exchange. Map-side shuffle
-    cost scales with mappers × shuffle partitions, so a fixed
-    partitions=cores setting over-pays at small SF while the
-    volume-proportional one converges to full width as data grows."""
-    from duckdb_redis_olap_scanner_spark.plans.catalog import (
-        suggested_shuffle_partitions,
-    )
-
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    return suggested_shuffle_partitions(sf_dir, cpus)
 
 
 _10X_OFF = 1_000_000_000  # id offset per replica — far above any sf0.1 key
@@ -368,9 +351,7 @@ def scale10x_main() -> None:
         print(f"building 10x dir {dst} from {src} ...", file=sys.stderr)
         build_scale10x_dir(src, dst)
 
-    spark = get_spark(
-        app_name="bench10x", shuffle_partitions=_shuffle_partitions(dst)
-    )
+    spark = get_spark(app_name="bench10x")
     spark.sparkContext.setLogLevel("ERROR")
     from duckdb_redis_olap_scanner_spark.plans.catalog import (
         runtime_replan_worth_it,
@@ -472,9 +453,7 @@ def scale100x_main() -> None:
         print(f"building 100x dir {dst} from {src} ...", file=sys.stderr)
         build_scale10x_dir(src, dst, factor=100, tables=_RELATIONAL_TABLES)
 
-    spark = get_spark(
-        app_name="bench100x", shuffle_partitions=_shuffle_partitions(dst)
-    )
+    spark = get_spark(app_name="bench100x")
     spark.sparkContext.setLogLevel("ERROR")
     from duckdb_redis_olap_scanner_spark.plans.catalog import (
         runtime_replan_worth_it,
@@ -563,8 +542,7 @@ def scaling10x_main(factor: int = 10) -> None:
     """Core-scaling evidence at the 10×/100× dirs (r21 verdict item
     1). The driver's 8-vs-32-core ratios at sf0.1 are ~1 BY
     CONSTRUCTION: every sf0.1 table is a single-row-group parquet file
-    (scans are 1 task at any core count) and the volume-proportional
-    shuffle width clamps to ~6 at that SF — so the flat ratios say
+    (scans are 1 task at any core count) — so the flat ratios say
     "this SF can't use more cores", not "the harness ignores
     $SPARK_GRAFT_CPUS". At the 10× dir the scans split ~32+ ways and
     core count becomes observable for the CPU-bound operators; at the
@@ -622,10 +600,7 @@ def scaling10x_main(factor: int = 10) -> None:
             # formula from this env var — identical to a driver run at
             # that core count (no hard-coded master anywhere).
             os.environ["SPARK_GRAFT_CPUS"] = str(cpus)
-            spark = get_spark(
-                app_name=f"scaling10x-{cpus}",
-                shuffle_partitions=_shuffle_partitions(dst),
-            )
+            spark = get_spark(app_name=f"scaling10x-{cpus}")
             spark.sparkContext.setLogLevel("ERROR")
             spark.conf.set(
                 "spark.sql.adaptive.enabled",
@@ -723,10 +698,7 @@ def streaming_main() -> None:
     )
     repo = os.path.dirname(os.path.abspath(__file__))
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    spark = get_spark(
-        app_name="bench-streaming",
-        shuffle_partitions=_shuffle_partitions(sf_dir),
-    )
+    spark = get_spark(app_name="bench-streaming")
     spark.sparkContext.setLogLevel("ERROR")
 
     OPS = {
@@ -801,9 +773,7 @@ def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = float(os.path.basename(sf_dir.rstrip("/")).replace("sf", "") or "0.1")
 
-    spark = get_spark(
-        app_name="bench", shuffle_partitions=_shuffle_partitions(sf_dir)
-    )
+    spark = get_spark(app_name="bench")
     spark.sparkContext.setLogLevel("ERROR")
 
     # Volume-adaptive AQE (runtime conf, per-core-bytes threshold —
@@ -891,8 +861,8 @@ def main() -> None:
     # Scaling evidence (r21 verdict item 1): per-query executed task
     # counts + the session's actual parallelism, recorded OUTSIDE the
     # timed region, so the payload itself shows whether more cores
-    # CAN help at this SF (a 1-task scan or a 6-wide shuffle is
-    # core-count-invariant by construction, not by a harness bug).
+    # CAN help at this SF (a 1-task scan is core-count-invariant by
+    # construction, not by a harness bug).
     task_counts = _task_counts(spark, entries, bench_names, sf_dir)
 
     # Regression guard on stderr — stdout stays the single JSON line
@@ -1030,8 +1000,7 @@ def main() -> None:
                     "forced run outside the timed region, "
                     "statusTracker). At sf0.1 every table is a "
                     "single-row-group parquet file (scans = 1 task "
-                    "at ANY core count) and the volume-proportional "
-                    "shuffle width clamps to ~6, so 8-vs-32-core "
+                    "at ANY core count), so 8-vs-32-core "
                     "ratios CANNOT separate here by construction — "
                     "core scaling is observable at the 10x dir "
                     "(bench.py --scaling10x, SCALING_10X.json), "

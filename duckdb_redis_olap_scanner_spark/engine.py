@@ -86,7 +86,8 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
     )
-    if _starts_local_workers(master, pkg_root):
+    local_workers = _starts_local_workers(master, pkg_root)
+    if local_workers:
         # Workers import pyspark from its installed directory instead
         # of Spark's zips, which cuts ~0.2 s off every Python task.
         builder = builder.config(
@@ -94,14 +95,18 @@ def get_spark(
         )
     spark = builder.getOrCreate()
     register_datasources(spark)
-    # The PYTHONPATH export above only reaches workers when THIS call
-    # launched the JVM; if a session already existed in the process
-    # (getOrCreate returned it), or on a real cluster where executor
-    # hosts never see the driver's env, workers would fail to unpickle
-    # our DataSource classes by module reference. ship_package is the
-    # transport that always works (addPyFile, idempotent per session,
-    # content-hash named) — r14 review.
-    ship_package(spark)
+    if local_workers:
+        # Workers import this package from pkg_root, as the daemon
+        # itself does, so a shipped zip would go unused: mark the
+        # context so every ship_package call skips it.
+        spark.sparkContext._pkg_on_worker_path = True
+    else:
+        # The PYTHONPATH export above does not reach workers of a
+        # context that already existed (getOrCreate returned it) or of
+        # a real cluster, whose executor hosts never see the driver's
+        # env; without the zip they could not unpickle our DataSource
+        # classes by module reference.
+        ship_package(spark)
     return spark
 
 
@@ -124,8 +129,12 @@ def _starts_local_workers(master: str, pkg_root: str) -> bool:
 def ship_package(spark: SparkSession) -> None:
     """Make this package importable in Spark's Python workers even when the
     driver session was created by someone else (e.g. the test driver):
-    zip the package and addPyFile it (idempotent per session)."""
-    if getattr(spark, "_pkg_shipped", False):
+    zip the package and addPyFile it (idempotent per session). A no-op
+    on a context ``get_spark`` started with workers that import the
+    package from its directory."""
+    if getattr(spark, "_pkg_shipped", False) or getattr(
+        spark.sparkContext, "_pkg_on_worker_path", False
+    ):
         return
     import hashlib
     import tempfile

@@ -37,7 +37,7 @@ BAND_ROWS = 2  # 4 bands of 2 rows
 SIMHASH_BITS = 16
 
 
-def exact_dedup(docs: DataFrame, width: int | None = None) -> DataFrame:
+def exact_dedup(docs: DataFrame) -> DataFrame:
     """Group by SHA-256 of the canonical text; keep the smallest doc_id.
 
     Returns (content_fp, keep_id, dup_cnt). At scale this is one hash
@@ -50,20 +50,9 @@ def exact_dedup(docs: DataFrame, width: int | None = None) -> DataFrame:
     hash cost the fingerprint is SHA-256 (collision-resistant); the
     non-adversarial 64-bit md5-fold stays confined to the MinHash /
     split-bucket paths where a collision only perturbs a sketch.
-
-    ``width``: optional volume-proportional task count (see
-    ``catalog.agg_width``). The r11 perf audit measured ~75% of this
-    query's sf0.1 runtime as per-task dispatch over the session-wide
-    cached layout (5 000 rows / 32 tasks); a caller that knows the
-    input volume coalesces to ``width`` instead of fanning out —
-    exchange-free, and a no-op once the volume saturates the
-    parallelism. Default keeps the fan-out (callers composing this
-    after CPU-heavy stages still want the full width).
     """
-    docs = fan_out(docs, key="doc_id") if width is None \
-        else docs.coalesce(width)
     return (
-        docs
+        fan_out(docs, key="doc_id")
         .select("doc_id", F.sha2(canonical_text(), 256).alias("content_fp"))
         .groupBy("content_fp")
         .agg(

@@ -304,24 +304,12 @@ _TABLE_CACHE: dict[tuple[str, str, str], DataFrame] = {}
 # sink): sf0.1 suite 7.2→5.95 s, 10× suite 19.5→16.5 s; q1 0.93→0.17 s
 # and q6 0.45→0.11 s at 10× (where the parquet splits wide naturally,
 # so the forced repartition was pure cost). Per-operator width fixes
-# (operators.util.fan_out's non-forced path, agg_width/scorer_width)
-# keep narrow scans parallel where the per-row work warrants it.
+# (operators.util.fan_out's non-forced path, scorer_width) keep narrow
+# scans parallel where the per-row work warrants it.
 _TABLE_KEYS: dict[str, str] = {
     "documents": "doc_id",
     "embeddings": "vec_id",
 }
-
-
-# Shuffle-partition sizing: one reduce partition per this many bytes
-# of the LARGEST table (lineitem), so partition count tracks data
-# volume instead of being a fixed constant (clamped to [4, cpus] in
-# suggested_shuffle_partitions; saturates to full parallelism at
-# cluster volume, where AQE coalescing takes over). r21: 1 MiB → 2 MiB
-# per partition — with raw-scan loads the exchanges carry partially
-# aggregated rows, and per-reducer dispatch dominates below ~2 MiB of
-# source bytes per partition (interleaved A/B at sf0.1: width 6 beats
-# width 11 by ~6% across the exchange-heavy queries, width 4 ties).
-_PART_BYTES = 2 << 20
 
 
 def _file_size(sf_dir: str, name: str) -> int:
@@ -334,54 +322,6 @@ def _file_size(sf_dir: str, name: str) -> int:
     return os.path.getsize(os.path.join(sf_dir, f"{name}.parquet"))
 
 
-def suggested_shuffle_partitions(sf_dir: str, cpus: int) -> int:
-    """Volume-proportional ``spark.sql.shuffle.partitions``.
-
-    Sized from lineitem (the largest table) at ``_PART_BYTES`` of
-    source parquet per reduce partition, clamped to [4, cpus]: at test
-    scale this keeps stages a few tasks wide (per-reducer dispatch
-    dominates tiny stages), at cluster scale the cap is the full
-    parallelism and AQE coalescing owns the final width.
-    """
-    import math
-
-    try:
-        size = _file_size(sf_dir, "lineitem")
-    except OSError:
-        return cpus
-    return max(4, min(math.ceil(size / _PART_BYTES), cpus))
-
-
-def _keyed_parts(spark: SparkSession, sf_dir: str) -> int:
-    return suggested_shuffle_partitions(
-        sf_dir, spark.sparkContext.defaultParallelism
-    )
-
-
-def _volume_width(
-    sf_dir: str, name: str, cpus: int, bytes_per_task: int
-) -> int | None:
-    """ONE volume-proportional task-width formula behind the three
-    calibrated front doors (:func:`scorer_width`, :func:`agg_width`,
-    :func:`keyed_agg_width` — same shape, different bytes-per-task
-    budgets; unified r15 after they drifted into three near-copies).
-
-    ``ceil(on-disk parquet bytes / bytes_per_task)`` while that is
-    below ``cpus``; ``None`` once the volume saturates the parallelism
-    (or stats are unavailable), telling the caller NOT to narrow — a
-    coalesce/repartition that "converges" to ``cpus`` at volume would
-    invert from an optimization into lost load balancing (ADVICE r13),
-    so past saturation the session's own width must win untouched."""
-    import math
-
-    try:
-        size = _file_size(sf_dir, name)
-    except OSError:
-        return None
-    width = math.ceil(size / bytes_per_task)
-    return max(1, width) if width < cpus else None
-
-
 _SCORER_BYTES_PER_TASK = 4 << 20
 
 
@@ -389,78 +329,21 @@ def scorer_width(sf_dir: str, name: str, cpus: int) -> int:
     """Task count for a vectorized (Arrow) scorer over table ``name``:
     one task per ~4 MiB of on-disk parquet, clamped to [1, cpus].
 
-    Each Arrow task pays a fixed worker round-trip (serialization +
-    Python dispatch, ~10-20 ms); spreading a small corpus over the full
-    cache width multiplies that fixed cost for no throughput (measured
-    at sf0.1, 10k vectors: 32 tasks 0.60 s → 1 task 0.27 s). Volume-
-    proportional sizing converges to the full scan width as data grows,
-    so the coalesce it feeds becomes a no-op at cluster scale. The
-    ``coalesce`` target must be a real int, so saturation maps to
-    ``cpus`` here rather than :func:`_volume_width`'s ``None``."""
-    width = _volume_width(sf_dir, name, cpus, _SCORER_BYTES_PER_TASK)
-    return cpus if width is None else width
+    Each Arrow task pays a fixed cost (worker hand-off, Arrow
+    serialization, per-task scorer setup), so spreading a small corpus
+    over the table's full layout multiplies that cost for no
+    throughput. Measured at sf0.1 on a 4-core host (10k vectors, one
+    task here vs the 4-wide layout): ann_cosine_topk 0.16 s vs 0.26 s,
+    random_projection 0.12 s vs 0.16 s. The width converges to
+    ``cpus`` as data grows (or when stats are missing), where the
+    coalesce it feeds is a no-op on an already-wide scan."""
+    import math
 
-
-# ~1.5 MiB of source parquet per hash-aggregation task: a JVM
-# hash+project pipeline processes that in a few ms, comparable to the
-# per-task dispatch cost, so narrower would serialize CPU work and
-# wider would pay pure scheduling. Smaller than the Arrow scorers'
-# 4 MiB because a JVM task skips the Python round-trip.
-_AGG_BYTES_PER_TASK = 3 << 19
-
-
-def agg_width(sf_dir: str, name: str, cpus: int) -> int | None:
-    """Task count for a whole-table hash aggregation over ``name`` —
-    the JVM twin of :func:`scorer_width` — or ``None`` when the
-    volume already saturates the parallelism.
-
-    The r11 bench audit left ``dedup_exact`` as the one over-floor
-    weak query (3× same-box DuckDB at sf0.1); profiling (SCALE.md
-    "dedup_exact width" note) showed ~75% of its runtime was per-task
-    dispatch — 5 000 rows spread over the session's 32-wide cached
-    layout is ~156 rows/task — and that the expression cost
-    (canonicalization + SHA-256) was irrelevant to the gap. Sizing
-    the aggregation's width by data volume (min 0.40 s → 0.13 s at
-    sf0.1, 0.61 s → 0.27 s at 10×) removes the overhead.
-
-    ``None`` (volume ≥ ``cpus`` tasks' worth, or no stats) tells the
-    caller NOT to coalesce and keep its default fan-out — which is a
-    no-op on an already-wide scan (``fan_out``'s partition-count
-    shortcut). Returning ``cpus`` and coalescing would NOT be a no-op
-    at volume: ``coalesce(cpus)`` on a scan with more partitions than
-    cores merges them into one giant task per core, losing dynamic
-    load balancing and straggler mitigation (ADVICE r13). So the
-    narrowing applies exactly where it pays — dispatch-bound small
-    inputs — and vanishes, rather than inverting, as volume grows."""
-    return _volume_width(sf_dir, name, cpus, _AGG_BYTES_PER_TASK)
-
-
-# Per-task budget for a NARROW keyed re-shuffle (a handful of fixed-width
-# columns — e.g. q10's (custkey, cents) pairs, ~16-24 B in flight per row
-# of the proxy table).  A JVM sum-aggregation over such rows costs almost
-# nothing per byte, so reducer-count dispatch dominates far longer than
-# for the expression-heavy scan aggs _AGG_BYTES_PER_TASK was calibrated
-# on (sha256 over text).  Measured on the r14 q10 audit (SCALE.md "q10
-# exchange-width audit"): at the 10x sf1-equivalent the same 1.4 M-row
-# custkey exchange costs 0.60 s at 32 reducers vs 0.31 s at 4.
-_KEYED_AGG_BYTES_PER_TASK = 4 << 20  # ~2.7x _AGG_BYTES_PER_TASK (measured)
-
-
-def keyed_agg_width(sf_dir: str, name: str, cpus: int) -> int | None:
-    """Reducer count for a narrow re-keying aggregation whose input row
-    count scales with table ``name`` — or ``None`` when the volume
-    saturates the parallelism (keep the session default and let the
-    shuffle run full-width).
-
-    The sibling of :func:`agg_width` for aggregations fed by a SHUFFLE
-    rather than a scan: the payload is a few fixed-width columns, so
-    the bytes-per-task budget is ~2.7x the scan-agg one (4 MiB vs
-    1.5 MiB — measured on the r14 q10 audit, not re-derived) before
-    per-reducer dispatch stops dominating.  Same contract: ``None``
-    means "don't touch the width" (cluster volume), small ints only
-    where the input is dispatch-bound.
-    """
-    return _volume_width(sf_dir, name, cpus, _KEYED_AGG_BYTES_PER_TASK)
+    try:
+        size = _file_size(sf_dir, name)
+    except OSError:
+        return cpus
+    return max(1, min(math.ceil(size / _SCORER_BYTES_PER_TASK), cpus))
 
 
 BROADCAST_CAP_BYTES = 64 << 20

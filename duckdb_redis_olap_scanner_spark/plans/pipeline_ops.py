@@ -187,18 +187,10 @@ def text_fingerprints(spark: SparkSession, sf: str):
     GROUP BY sha256({_SQL_CANON})
     """,
     tags=("dedup", "bench"),
-    doc="Exact dedup: one hash-aggregate on the content fingerprint, "
-    "volume-width-sized (catalog.agg_width — the r11 over-floor perf "
-    "audit fix; converges to full parallelism at volume).",
+    doc="Exact dedup: one hash-aggregate on the content fingerprint.",
 )
 def dedup_exact(spark: SparkSession, sf: str):
-    from .catalog import agg_width
-
-    cpus = spark.sparkContext.defaultParallelism
-    return D.exact_dedup(
-        table(spark, sf, "documents"),
-        width=agg_width(sf, "documents", cpus),
-    )
+    return D.exact_dedup(table(spark, sf, "documents"))
 
 
 @register(

@@ -40,7 +40,7 @@ from ..operators import dedup as D
 from ..operators import similarity as S
 from ..operators import text as T
 from ..operators.text import sql_md5_hash64
-from .catalog import _keyed_parts, register, table
+from .catalog import register, table
 from .pipeline_ops import _SQL_IVF_PQ, _SQL_QUANT_EMB, _SQL_TOKS
 
 _SQL_STOPS = ", ".join(f"'{w}'" for w in T.STOPWORDS)
@@ -2984,7 +2984,7 @@ def parts_pareto(spark: SparkSession, sf: str):
     # frame and the probe side it broadcast-joins back to) must read
     # the SAME materialized assignment rather than rely on exchange
     # reuse firing. It also caches the one table two branches scan.
-    nparts = _keyed_parts(spark, sf)
+    nparts = spark.sparkContext.defaultParallelism
     ranged = (
         r.repartitionByRange(nparts, F.desc("rev_cents"), F.asc("l_partkey"))
         .withColumn("pid", F.spark_partition_id())

@@ -481,8 +481,6 @@ def q6_forecast_revenue(spark: SparkSession, sf: str):
     doc="TPC-H Q10: returned-item revenue ranking.",
 )
 def q10_returned_items(spark: SparkSession, sf: str):
-    from .catalog import keyed_agg_width
-
     c = table(spark, sf, "customer")
     o = table(spark, sf, "orders")
     l = table(spark, sf, "lineitem").filter(F.col("l_returnflag") == "R")
@@ -500,41 +498,18 @@ def q10_returned_items(spark: SparkSession, sf: str):
     per_order = l.groupBy("l_orderkey").agg(
         F.sum(_cents(disc)).alias("order_rev_cents")
     )
-    per_order_cust = per_order.join(
-        o, F.col("l_orderkey") == F.col("o_orderkey")
-    )
-    width = keyed_agg_width(sf, "orders", spark.sparkContext.defaultParallelism)
-    if width == 1:
-        # Dispatch-floor volume (sub-one-task narrow shuffle): the
-        # single-wide-stage plan wins — joins + partial agg in one
-        # codegen span, one session-width exchange, TakeOrdered.  An
-        # explicit repartition here only adds a stage (r14 audit:
-        # 0.201 s vs 0.25-0.28 s for every re-keyed variant at sf0.1).
-        return (
-            per_order_cust.join(
-                maybe_broadcast(c, sf, "customer"),
-                F.col("o_custkey") == F.col("c_custkey"),
-            )
-            .join(F.broadcast(n), F.col("c_nationkey") == F.col("n_nationkey"))
-            .groupBy("c_custkey", "c_name", "n_name")
-            .agg(F.sum("order_rev_cents").alias("revenue_cents"))
-            .orderBy(F.desc("revenue_cents"), F.asc("c_custkey"))
-            .limit(20)
-        )
-    # Volume path: aggregate BY CUSTKEY on narrow (custkey, cents) rows
-    # BEFORE attaching names — c_name/n_name strings never ride the
-    # shuffle, and the customer join probes one row per customer instead
-    # of one per returned order.  The one re-keying exchange is
-    # reducer-dispatch-bound at mid volume, so it runs at the
-    # volume-sized width (r14 audit: 32 reducers 0.60 s vs 4-6 reducers
-    # 0.31-0.44 s at the 10x sf1-equivalent); at cluster volume
-    # keyed_agg_width returns None and the shuffle keeps the session's
-    # full-width default.
-    per_cust_in = per_order_cust.select("o_custkey", "order_rev_cents")
-    if width is not None:
-        per_cust_in = per_cust_in.repartition(width, "o_custkey")
-    per_cust = per_cust_in.groupBy("o_custkey").agg(
-        F.sum("order_rev_cents").alias("revenue_cents")
+    # Aggregate BY CUSTKEY on narrow (custkey, cents) rows BEFORE
+    # attaching names: c_name/n_name strings never ride the shuffle,
+    # and the customer join probes one row per customer instead of one
+    # per returned order.  The re-keying exchange runs at the session
+    # width.  Measured at sf0.1 on 4 cores against grouping on the name
+    # columns after the joins: 0.53-0.62 s vs 0.64-0.69 s (three
+    # sessions).
+    per_cust = (
+        per_order.join(o, F.col("l_orderkey") == F.col("o_orderkey"))
+        .select("o_custkey", "order_rev_cents")
+        .groupBy("o_custkey")
+        .agg(F.sum("order_rev_cents").alias("revenue_cents"))
     )
     return (
         per_cust.join(

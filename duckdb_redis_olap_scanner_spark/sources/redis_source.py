@@ -310,7 +310,6 @@ class RedisKVWriter(DataSourceWriter):
         self.batch_size = int(options.get("batch_size", DEFAULT_SCAN_COUNT))
 
     def write(self, rows) -> WriterCommitMessage:
-        n = 0
         with RedisClient(self.host, self.port) as client:
             batch: list[tuple] = []
             for row in rows:
@@ -327,11 +326,9 @@ class RedisKVWriter(DataSourceWriter):
                 batch.append(("SET", row.key, row.value))
                 if len(batch) >= self.batch_size:
                     client.pipeline_checked(batch)
-                    n += len(batch)
                     batch = []
             if batch:
                 client.pipeline_checked(batch)
-                n += len(batch)
         return WriterCommitMessage()
 
 

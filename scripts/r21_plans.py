@@ -1,9 +1,19 @@
 #!/usr/bin/env python
 """Capture .explain('formatted') for every bench-tagged query into
-plans/r21/<query>_<tag>.txt (tag = before/after), plus a one-line
-summary of exchange / python-stage counts per query on stdout.
+OUT_DIR/<query>.txt, plus a one-line summary of exchange / python-stage
+counts per query on stdout.
 
-Usage: python scripts/r21_plans.py before|after [sf_dir]
+Expression ids (``#123``) and exchange ids (``plan_id=45``) are
+normalised to ``#<id>`` and ``plan_id=<id>``: they count up across the
+session, so without this two runs of the same code differ. Plans of two
+checkouts then compare with a plain ``diff -r OUT_A OUT_B``.
+
+An entry that fails to build (say, a table the dir does not hold)
+gets a one-line ``error: <exception type>`` file instead.
+
+Usage: python scripts/r21_plans.py OUT_DIR [SF_DIR]
+(SF_DIR defaults to $SPARK_GRAFT_SF_DIR or /root/testdata/sf0.1; the
+session is ``get_spark``'s, local[$SPARK_GRAFT_CPUS].)
 """
 
 from __future__ import annotations
@@ -11,33 +21,38 @@ from __future__ import annotations
 import contextlib
 import io
 import os
+import re
 import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from duckdb_redis_olap_scanner_spark.engine import get_spark  # noqa: E402
-from duckdb_redis_olap_scanner_spark.plans.catalog import registry  # noqa: E402
-import bench  # noqa: E402
+from duckdb_redis_olap_scanner_spark.plans.catalog import (  # noqa: E402
+    registry,
+    runtime_replan_worth_it,
+)
+
+_EXPR_ID = re.compile(r"#\d+")
+_PLAN_ID = re.compile(r"plan_id=\d+")
+_PYTHON_OPS = ("MapInArrow", "MapInPandas", "ArrowEvalPython",
+               "BatchEvalPython", "FlatMapGroupsInPandas")
+
+
+def normalise(plan: str) -> str:
+    return _PLAN_ID.sub("plan_id=<id>", _EXPR_ID.sub("#<id>", plan))
 
 
 def main() -> None:
-    tag = sys.argv[1] if len(sys.argv) > 1 else "before"
+    if len(sys.argv) < 2:
+        sys.exit(__doc__)
+    out_dir = sys.argv[1]
     sf_dir = sys.argv[2] if len(sys.argv) > 2 else os.environ.get(
         "SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"
     )
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    out_dir = os.path.join(repo, "plans", "r21")
     os.makedirs(out_dir, exist_ok=True)
 
-    spark = get_spark(
-        app_name="r21plans",
-        shuffle_partitions=bench._shuffle_partitions(sf_dir),
-    )
+    spark = get_spark(app_name="r21plans")
     spark.sparkContext.setLogLevel("ERROR")
-    from duckdb_redis_olap_scanner_spark.plans.catalog import (
-        runtime_replan_worth_it,
-    )
-
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     spark.conf.set(
         "spark.sql.adaptive.enabled",
@@ -46,28 +61,27 @@ def main() -> None:
     entries = registry()
     names = sorted(n for n, e in entries.items() if "bench" in e.tags)
     for name in names:
-        df = (entries[name].raw_fn or entries[name].fn)(spark, sf_dir)
         buf = io.StringIO()
-        with contextlib.redirect_stdout(buf):
-            df.explain("formatted")
-        plan = buf.getvalue()
-        with open(os.path.join(out_dir, f"{name}_{tag}.txt"), "w") as f:
+        try:
+            df = (entries[name].raw_fn or entries[name].fn)(spark, sf_dir)
+            with contextlib.redirect_stdout(buf):
+                df.explain("formatted")
+        except Exception as exc:  # e.g. a table the dir does not hold
+            error = f"error: {type(exc).__name__}"
+            print(f"{name}: {error}")
+            with open(os.path.join(out_dir, f"{name}.txt"), "w") as f:
+                f.write(error + "\n")
+            continue
+        plan = normalise(buf.getvalue())
+        with open(os.path.join(out_dir, f"{name}.txt"), "w") as f:
             f.write(plan)
-        ex = (
-            plan.count(" Exchange")
-            - plan.count("BroadcastExchange")
-            - plan.count("ReusedExchange")
-        )
-        bx = plan.count("BroadcastExchange") - plan.count(
-            "ReusedExchange [Reuses operator id"
-        ) * 0
-        py = sum(
-            plan.count(t)
-            for t in ("MapInArrow", "MapInPandas", "EvalPython",
-                      "FlatMapGroupsInPandas")
-        )
-        smj = plan.count("SortMergeJoin")
-        bhj = plan.count("BroadcastHashJoin")
+        # one "(N) Operator" header per node in the details section
+        ops = re.findall(r"^\(\d+\) (\w+)", plan, re.M)
+        ex = ops.count("Exchange")
+        bx = ops.count("BroadcastExchange")
+        py = sum(ops.count(t) for t in _PYTHON_OPS)
+        smj = ops.count("SortMergeJoin")
+        bhj = ops.count("BroadcastHashJoin")
         print(
             f"{name}: shuffle_ex={ex} bcast_ex={bx} py_stages={py} "
             f"smj={smj} bhj={bhj}"

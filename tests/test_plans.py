@@ -353,45 +353,6 @@ def test_round7_window_plans_are_clean(spark):
     assert "Join" not in plan and "BatchEvalPython" not in plan
 
 
-def test_agg_width_volume_proportional(tmp_path):
-    """catalog.agg_width: ~1.5 MiB of parquet per task, floor 1, and
-    None once the volume saturates cpus or stats are missing — the
-    caller must then keep its default fan-out (a no-op on wide scans)
-    instead of coalescing a >cpus-partition cluster-scale scan into
-    one giant task per core (ADVICE r13)."""
-    from duckdb_redis_olap_scanner_spark.plans.catalog import (
-        _AGG_BYTES_PER_TASK,
-        agg_width,
-    )
-
-    p = tmp_path / "documents.parquet"
-    p.write_bytes(b"x" * 100)  # tiny -> 1 task
-    assert agg_width(str(tmp_path), "documents", 32) == 1
-    p.write_bytes(b"x" * (6 * _AGG_BYTES_PER_TASK))
-    assert agg_width(str(tmp_path), "documents", 32) == 6
-    p.write_bytes(b"x" * (100 * _AGG_BYTES_PER_TASK))
-    assert agg_width(str(tmp_path), "documents", 32) is None  # saturated
-    assert agg_width(str(tmp_path), "documents", 128) == 100  # under cpus
-    assert agg_width(str(tmp_path), "missing", 32) is None  # no stats
-
-
-def test_dedup_exact_entry_narrows_to_volume_width(spark):
-    """The dedup_exact entry's aggregation runs at agg_width tasks,
-    not the session-wide cached layout (the r11 over-floor fix): the
-    coalesce is visible in the plan and results are unchanged."""
-    from duckdb_redis_olap_scanner_spark.operators.dedup import exact_dedup
-    from duckdb_redis_olap_scanner_spark.plans.catalog import registry, table
-
-    from .conftest import SF_DIR
-
-    entry = registry()["dedup_exact"]
-    df = entry.fn(spark, SF_DIR)
-    assert "Coalesce" in df._jdf.queryExecution().executedPlan().toString()
-    got = sorted(map(tuple, df.collect()))
-    want = sorted(map(tuple, exact_dedup(table(spark, SF_DIR, "documents")).collect()))
-    assert got == want and got
-
-
 def test_coverage_counts_script_matches_registry():
     """scripts/coverage_counts.py is the COVERAGE.md source of truth
     (the r11 hand-count drift fix): it must run, emit valid JSON, and
@@ -472,68 +433,39 @@ def test_registry_is_declaration_order(monkeypatch, tmp_path):
     assert json.loads(out.stdout) == got
 
 
-def test_keyed_agg_width_volume_proportional(tmp_path):
-    """catalog.keyed_agg_width: the narrow-shuffle sibling of agg_width
-    (~4 MiB of proxy parquet per reducer — sum-aggs over fixed-width
-    rows are reducer-dispatch-bound far longer than expression-heavy
-    scan aggs), floor 1, None at saturation or missing stats."""
-    from duckdb_redis_olap_scanner_spark.plans.catalog import (
-        _KEYED_AGG_BYTES_PER_TASK,
-        keyed_agg_width,
+def test_q10_aggregates_by_custkey_before_names(spark):
+    """q10 has one shape: the revenue aggregation is keyed on o_custkey
+    ALONE, and the name columns attach after it, so c_name/n_name never
+    ride the re-keying exchange. Its top-20 rows at sf0.01 equal those
+    of the shape it replaced (aggregating on the name columns after the
+    joins)."""
+    from pyspark.sql import functions as F
+
+    from duckdb_redis_olap_scanner_spark.plans.catalog import table
+    from duckdb_redis_olap_scanner_spark.plans.relational import _cents
+
+    from .conftest import SF_DIR_ORACLE as sf
+
+    df = ENTRIES["q10_returned_items"].raw_fn(spark, sf)
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "TakeOrderedAndProject" in plan
+    assert "keys=[o_custkey" in plan, "agg must precede the names"
+    assert "keys=[c_custkey" not in plan, "no aggregation on name columns"
+
+    l = table(spark, sf, "lineitem").filter(F.col("l_returnflag") == "R")
+    cents = _cents(F.col("l_extendedprice") * (F.lit(1.0) - F.col("l_discount")))
+    names_last = (
+        l.join(table(spark, sf, "orders"), F.col("l_orderkey") == F.col("o_orderkey"))
+        .join(table(spark, sf, "customer"), F.col("o_custkey") == F.col("c_custkey"))
+        .join(table(spark, sf, "nation"), F.col("c_nationkey") == F.col("n_nationkey"))
+        .groupBy("c_custkey", "c_name", "n_name")
+        .agg(F.sum(cents).alias("revenue_cents"))
+        .orderBy(F.desc("revenue_cents"), F.asc("c_custkey"))
+        .limit(20)
     )
-
-    import os
-
-    p = tmp_path / "orders.parquet"
-    p.write_bytes(b"x" * 100)  # tiny -> 1 reducer
-    assert keyed_agg_width(str(tmp_path), "orders", 32) == 1
-    # only getsize matters — sparse-truncate instead of writing 400 MB
-    os.truncate(p, 5 * _KEYED_AGG_BYTES_PER_TASK)
-    assert keyed_agg_width(str(tmp_path), "orders", 32) == 5
-    os.truncate(p, 100 * _KEYED_AGG_BYTES_PER_TASK)
-    assert keyed_agg_width(str(tmp_path), "orders", 32) is None  # saturated
-    assert keyed_agg_width(str(tmp_path), "orders", 128) == 100
-    assert keyed_agg_width(str(tmp_path), "missing", 32) is None
-
-
-def test_q10_volume_branch_matches_floor_branch(spark, monkeypatch):
-    """q10's two physical shapes (single-wide-stage at dispatch-floor
-    volume vs narrow agg-before-names at width w / full width) must
-    return identical top-20 rows.  sf0.01 naturally takes the
-    width==1 floor branch; force the other two via keyed_agg_width."""
-    from duckdb_redis_olap_scanner_spark.plans import catalog as C
-
-    entry = ENTRIES["q10_returned_items"]
-    ref = [tuple(r) for r in entry.fn(spark, SF_DIR).collect()]
-    assert ref  # non-empty at sf0.01
-
-    for forced in (2, None):
-        monkeypatch.setattr(
-            C, "keyed_agg_width", lambda sf, name, cpus: forced
-        )
-        # raw_fn, NOT entry.fn: the registered callable memoizes the
-        # built DataFrame per (session, sf_dir), so it would re-serve
-        # the floor-branch plan and make every assertion below vacuous
-        got_df = entry.raw_fn(spark, SF_DIR)
-        got = [tuple(r) for r in got_df.collect()]
-        assert got == ref, f"width={forced} diverged"
-        # the volume branch keeps name strings out of the re-keying
-        # exchange: the revenue agg groups on o_custkey ALONE (names
-        # attach after it), and at a forced width the exchange runs
-        # at exactly that many partitions
-        plan = got_df._jdf.queryExecution().executedPlan().toString()
-        assert "TakeOrderedAndProject" in plan
-        assert "keys=[o_custkey" in plan, "agg must precede the names"
-        # the floor branch's signature — an aggregation keyed on the
-        # name columns — must be absent: names attach AFTER the agg
-        assert "keys=[c_custkey" not in plan, (
-            "volume branch must not aggregate on name columns"
-        )
-        if forced == 2:
-            assert "hashpartitioning(o_custkey#" in plan
-            assert ", 2), REPARTITION_BY_NUM" in plan, (
-                "the re-keying exchange must run at the forced width"
-            )
+    got = [tuple(r) for r in df.collect()]
+    assert len(got) == 20
+    assert got == [tuple(r) for r in names_last.collect()]
 
 
 def test_preaggregated_order_joins_merge_above_gate(spark):

@@ -56,6 +56,31 @@ def test_workers_import_pyspark_from_its_directory(spark):
     assert row.invalidate_s < 0.010
 
 
+def _package_facts(batches):
+    import fnmatch
+
+    import pyarrow as pa
+
+    import duckdb_redis_olap_scanner_spark as pkg
+
+    for _ in batches:
+        pass
+    yield pa.RecordBatch.from_pydict({
+        "shipped": ["\n".join(fnmatch.filter(sys.path, "*-pyfiles-*.zip"))],
+        "package_file": [pkg.__file__],
+    })
+
+
+def test_daemon_workers_import_the_package_without_a_shipped_zip(spark):
+    engine.ship_package(spark)  # a no-op here, as at every call site
+    row = spark.range(1, numPartitions=1).mapInArrow(
+        _package_facts, "shipped string, package_file string",
+    ).collect()[0]
+    assert row.shipped == ""
+    assert row.package_file == os.path.join(
+        REPO, "duckdb_redis_olap_scanner_spark", "__init__.py")
+
+
 def _spark_lib(tmp_path, version: bytes):
     """A ``$SPARK_HOME/python/lib``-like dir and the sys.path a worker
     would start with: Spark's zips and jar, then a user zip elsewhere."""
@@ -159,6 +184,10 @@ def _daemon_module(monkeypatch, spark, master, active, jvm=_OWN_JVM):
     """The daemon module ``get_spark(master=master)`` asks for when
     ``active`` is the active context and ``jvm`` the running JVM (None:
     none yet; by default the test session's own)."""
+    sc = spark.sparkContext
+    # restored after the test, whatever get_spark marks on the context
+    monkeypatch.setattr(sc, "_pkg_on_worker_path",
+                        getattr(sc, "_pkg_on_worker_path", False), raising=False)
     builder = _RecordingBuilder(spark)
     monkeypatch.setattr(engine, "SparkSession", SimpleNamespace(builder=builder))
     monkeypatch.setattr(SparkContext, "_active_spark_context", active)
@@ -215,3 +244,26 @@ def test_package_import_leaves_pyspark_unimported(tmp_path):
         capture_output=True, text=True, timeout=120,
     )
     assert out.returncode == 0, out.stderr
+
+
+class _FakeSession:
+    def __init__(self) -> None:
+        self.shipped: list[str] = []
+        self.sparkContext = SimpleNamespace(addPyFile=self.shipped.append)
+
+
+def test_package_ships_only_without_the_daemon(monkeypatch):
+    monkeypatch.setattr(engine, "register_datasources", lambda spark: None)
+    # An existing context: its workers never saw the PYTHONPATH export.
+    existing = _FakeSession()
+    assert _daemon_module(monkeypatch, existing, "local[2]", object()) is None
+    assert existing._pkg_shipped is True
+    (zip_path,) = existing.shipped
+    with zipfile.ZipFile(zip_path) as zf:
+        assert "duckdb_redis_olap_scanner_spark/engine.py" in zf.namelist()
+    # A context started now: its workers import the package directly.
+    fresh = _FakeSession()
+    assert _daemon_module(monkeypatch, fresh, "local[2]", None) == SHIM
+    assert fresh.shipped == [] and not hasattr(fresh, "_pkg_shipped")
+    engine.ship_package(fresh)  # later call sites skip it too
+    assert fresh.shipped == []
