@@ -21,7 +21,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from duckdb_redis_olap_scanner_spark.engine import get_spark  # noqa: E402
+from duckdb_redis_olap_scanner_spark.engine import get_spark, local_cores  # noqa: E402
 from duckdb_redis_olap_scanner_spark.plans.catalog import registry  # noqa: E402
 
 
@@ -358,7 +358,7 @@ def scale10x_main() -> None:
         table,
     )
 
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = local_cores()
     spark.conf.set(
         "spark.sql.adaptive.enabled",
         str(runtime_replan_worth_it(dst, cpus)).lower(),
@@ -460,7 +460,7 @@ def scale100x_main() -> None:
         table,
     )
 
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = local_cores()
     spark.conf.set(
         "spark.sql.adaptive.enabled",
         str(runtime_replan_worth_it(dst, cpus)).lower(),
@@ -548,11 +548,11 @@ def scaling10x_main(factor: int = 10) -> None:
     core count becomes observable for the CPU-bound operators; at the
     100× dir (TPC-H subset, multi-second queries) it separates for
     the relational plans too. This mode runs the suite at
-    $SPARK_GRAFT_CPUS (default 32) and at a low core count (default
-    8), one Spark session each — the SAME get_spark construction the
-    driver uses, master local[N] from the env var — and records
-    SCALING_10X.json / SCALING_100X.json with per-query ratios and
-    executed task counts."""
+    $SPARK_GRAFT_CPUS (default: the usable CPUs) and at a low core
+    count (default 8), one Spark session each — the SAME get_spark
+    construction the driver uses, master local[N] from the env var —
+    and records SCALING_10X.json / SCALING_100X.json with per-query
+    ratios and executed task counts."""
     src = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     if factor >= 100:
         dst = os.environ.get("SPARK_GRAFT_100X_DIR", "/tmp/spark_graft_sf10eq")
@@ -573,7 +573,7 @@ def scaling10x_main(factor: int = 10) -> None:
         table,
     )
 
-    cpus_main = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus_main = local_cores()
     cpus_low = int(os.environ.get("SPARK_GRAFT_CPUS_LOW", "8"))
     passes = int(os.environ.get("SPARK_GRAFT_BENCH_PASSES", "2"))
     entries = registry()
@@ -697,7 +697,7 @@ def streaming_main() -> None:
         os.path.basename(sf_dir.rstrip("/")).replace("sf", "") or "0.1"
     )
     repo = os.path.dirname(os.path.abspath(__file__))
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = local_cores()
     spark = get_spark(app_name="bench-streaming")
     spark.sparkContext.setLogLevel("ERROR")
 
@@ -787,7 +787,7 @@ def main() -> None:
         runtime_replan_worth_it,
     )
 
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = local_cores()
     spark.conf.set(
         "spark.sql.adaptive.enabled",
         str(runtime_replan_worth_it(sf_dir, cpus)).lower(),

@@ -334,8 +334,8 @@ def brute_force_topk(
     0.77 vs 1.23 s, 2k rows 0.75 vs 0.95 s. The JVM path compiles its
     64-term unrolled expression tree for every fresh plan, which costs
     more than the Arrow worker's fixed cost: a 1-task ``mapInArrow``
-    collect takes 0.14 s with workers started from ``worker_daemon``
-    (0.32 s when they import pyspark from Spark's zip;
+    collect takes 0.14 s with workers started with the ``worker_site``
+    hook (0.32 s when they import pyspark from Spark's zip;
     ``scripts/worker_floor.py``). At large N the single int64 matmul
     per batch wins on throughput anyway. The JVM path stays available
     (and oracle-tested) as the zero-Python-worker fallback.

@@ -26,7 +26,7 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from duckdb_redis_olap_scanner_spark.engine import get_spark  # noqa: E402
+from duckdb_redis_olap_scanner_spark.engine import get_spark, local_cores  # noqa: E402
 from duckdb_redis_olap_scanner_spark.plans.catalog import (  # noqa: E402
     registry,
     runtime_replan_worth_it,
@@ -53,7 +53,7 @@ def main() -> None:
 
     spark = get_spark(app_name="r21plans")
     spark.sparkContext.setLogLevel("ERROR")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = local_cores()
     spark.conf.set(
         "spark.sql.adaptive.enabled",
         str(runtime_replan_worth_it(sf_dir, cpus)).lower(),

@@ -1,8 +1,11 @@
-"""The Python-worker daemon shim (``worker_daemon``), the session
-setting that selects it, and the lazy package import it relies on."""
+"""How the Python daemons of a ``get_spark()`` context start: the
+``worker_site`` startup hook, the session setting that puts it on their
+path, the package shipping it makes unnecessary, and the lazy package
+import that keeps those processes from importing ``engine``."""
 
 from __future__ import annotations
 
+import json
 import os
 import subprocess
 import sys
@@ -12,10 +15,12 @@ from types import SimpleNamespace
 from pyspark import SparkContext
 
 from duckdb_redis_olap_scanner_spark import engine
-from duckdb_redis_olap_scanner_spark.worker_daemon import strip_spark_archives
+from duckdb_redis_olap_scanner_spark.worker_site.sitecustomize import (
+    strip_spark_archives,
+)
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-SHIM = "duckdb_redis_olap_scanner_spark.worker_daemon"
+HOOK = engine.WORKER_SITE
 
 
 def _worker_facts(batches):
@@ -46,7 +51,7 @@ def _worker_facts(batches):
 
 
 def test_workers_import_pyspark_from_its_directory(spark):
-    assert spark.sparkContext.getConf().get("spark.python.daemon.module") == SHIM
+    assert spark.sparkContext.getConf().get("spark.executorEnv.PYTHONPATH") == HOOK
     row = spark.range(1, numPartitions=1).mapInArrow(
         _worker_facts,
         "spark_archives string, pyspark_file string, invalidate_s double",
@@ -54,6 +59,95 @@ def test_workers_import_pyspark_from_its_directory(spark):
     assert row.spark_archives == ""
     assert ".zip" not in row.pyspark_file
     assert row.invalidate_s < 0.010
+
+
+def test_planners_import_pyspark_from_its_directory(spark):
+    from pyspark.sql.datasource import (
+        DataSource,
+        DataSourceReader,
+        InputPartition,
+    )
+
+    class PlannerFactsReader(DataSourceReader):
+        def partitions(self):
+            # Runs in the plan_data_source_read planner process.
+            import zipimport
+
+            import pyspark
+
+            zips = sum(isinstance(v, zipimport.zipimporter)
+                       for v in sys.path_importer_cache.values())
+            return [InputPartition((zips, pyspark.__file__))]
+
+        def read(self, partition):
+            yield partition.value
+
+    class PlannerFacts(DataSource):
+        @classmethod
+        def name(cls):
+            return "planner_facts"
+
+        def schema(self):
+            return "zipimporters long, pyspark_file string"
+
+        def reader(self, schema):
+            return PlannerFactsReader()
+
+    spark.dataSource.register(PlannerFacts)
+    row = spark.read.format("planner_facts").load().collect()[0]
+    assert row.zipimporters == 0
+    assert ".zip" not in row.pyspark_file
+
+
+def _run_python(tmp_path, pythonpath: list[str], code: str) -> str:
+    env = dict(os.environ, PYTHONPATH=os.pathsep.join(pythonpath))
+    out = subprocess.run(
+        [sys.executable, "-c", code], cwd=tmp_path, env=env,
+        capture_output=True, text=True, timeout=120,
+    )
+    assert out.returncode == 0, out.stderr
+    assert out.stderr == ""
+    return out.stdout
+
+
+def test_hook_runs_the_sitecustomize_it_shadows(tmp_path):
+    shadowed = tmp_path / "shadowed"
+    shadowed.mkdir()
+    marker = tmp_path / "marker"
+    (shadowed / "sitecustomize.py").write_text(
+        f"open({str(marker)!r}, 'w').write(__name__)\n")
+    out = _run_python(tmp_path, [HOOK, str(shadowed)], (
+        "import sys\n"
+        "print(sys.modules['sitecustomize'].__file__)\n"
+        "print('pyspark' in sys.modules)\n"
+    ))
+    assert out.splitlines() == [os.path.join(HOOK, "sitecustomize.py"), "False"]
+    assert marker.read_text() == "sitecustomize"
+
+
+def test_hook_changes_nothing_without_pyspark_zip(tmp_path):
+    # Spark's py4j zip and a jar on the path, but no pyspark.zip.
+    lib = tmp_path / "lib"
+    lib.mkdir()
+    archives = [str(lib / "py4j-0.10.9.9-src.zip"), str(lib / "user.jar")]
+    for archive in archives:
+        with zipfile.ZipFile(archive, "w") as zf:
+            zf.writestr("placeholder.txt", "")
+    code = (
+        "import json, sys, zipimport\n"
+        "print(json.dumps([sys.path, sorted(\n"
+        "    k for k, v in sys.path_importer_cache.items()\n"
+        "    if isinstance(v, zipimport.zipimporter)),\n"
+        "    getattr(sys.modules.get('sitecustomize'), '__file__', None)]))\n"
+    )
+    empty = tmp_path / "empty"
+    empty.mkdir()
+    with_hook = json.loads(_run_python(tmp_path, [*archives, HOOK], code))
+    without = json.loads(_run_python(tmp_path, [*archives, str(empty)], code))
+    assert with_hook[0] == [HOOK if p == str(empty) else p for p in without[0]]
+    assert with_hook[1] == without[1] == archives
+    assert with_hook[2] == os.path.join(HOOK, "sitecustomize.py")
+    assert without[2] is None
 
 
 def _package_facts(batches):
@@ -180,8 +274,8 @@ class _RecordingBuilder:
 _OWN_JVM = object()
 
 
-def _daemon_module(monkeypatch, spark, master, active, jvm=_OWN_JVM):
-    """The daemon module ``get_spark(master=master)`` asks for when
+def _built_conf(monkeypatch, spark, master, active, jvm=_OWN_JVM):
+    """The settings ``get_spark(master=master)`` gives its builder when
     ``active`` is the active context and ``jvm`` the running JVM (None:
     none yet; by default the test session's own)."""
     sc = spark.sparkContext
@@ -194,7 +288,13 @@ def _daemon_module(monkeypatch, spark, master, active, jvm=_OWN_JVM):
     if jvm is not _OWN_JVM:
         monkeypatch.setattr(SparkContext, "_jvm", jvm)
     engine.get_spark(master=master)
-    return builder.conf.get("spark.python.daemon.module")
+    return builder.conf
+
+
+def _hook_path(monkeypatch, spark, master, active, jvm=_OWN_JVM):
+    """The workers' extra path ``get_spark`` asks for in that case."""
+    conf = _built_conf(monkeypatch, spark, master, active, jvm)
+    return conf.get("spark.executorEnv.PYTHONPATH")
 
 
 def _jvm_with_pythonpath(value):
@@ -202,27 +302,27 @@ def _jvm_with_pythonpath(value):
     return SimpleNamespace(java=SimpleNamespace(lang=SimpleNamespace(System=system)))
 
 
-def test_daemon_module_only_when_starting_a_local_context(spark, monkeypatch):
+def test_worker_site_only_when_starting_a_local_context(spark, monkeypatch):
     sc = spark.sparkContext
-    assert _daemon_module(monkeypatch, spark, "local[2]", None) == SHIM
-    assert _daemon_module(monkeypatch, spark, "local", None) == SHIM
+    assert _hook_path(monkeypatch, spark, "local[2]", None) == HOOK
+    assert _hook_path(monkeypatch, spark, "local", None) == HOOK
     # No JVM yet: the one launched now inherits the PYTHONPATH export.
-    assert _daemon_module(monkeypatch, spark, "local[2]", None, jvm=None) == SHIM
-    assert _daemon_module(monkeypatch, spark, "local[2]", sc) is None
-    assert _daemon_module(monkeypatch, spark, "spark://h:7077", None) is None
-    assert _daemon_module(monkeypatch, spark, "yarn", None) is None
-    assert _daemon_module(monkeypatch, spark, "local-cluster[2,1,1024]", None) is None
+    assert _hook_path(monkeypatch, spark, "local[2]", None, jvm=None) == HOOK
+    assert _hook_path(monkeypatch, spark, "local[2]", sc) is None
+    assert _hook_path(monkeypatch, spark, "spark://h:7077", None) is None
+    assert _hook_path(monkeypatch, spark, "yarn", None) is None
+    assert _hook_path(monkeypatch, spark, "local-cluster[2,1,1024]", None) is None
     # A JVM left from a stopped context keeps the PYTHONPATH it was
-    # launched with; its workers could not import the shim.
-    assert _daemon_module(
+    # launched with; its workers could not import the package.
+    assert _hook_path(
         monkeypatch, spark, "local[2]", None, jvm=_jvm_with_pythonpath(None)
     ) is None
-    assert _daemon_module(
+    assert _hook_path(
         monkeypatch, spark, "local[2]", None, jvm=_jvm_with_pythonpath("/elsewhere")
     ) is None
-    assert _daemon_module(
+    assert _hook_path(
         monkeypatch, spark, "local[2]", None, jvm=_jvm_with_pythonpath(REPO)
-    ) == SHIM
+    ) == HOOK
 
 
 def test_package_import_leaves_pyspark_unimported(tmp_path):
@@ -230,6 +330,9 @@ def test_package_import_leaves_pyspark_unimported(tmp_path):
         "import sys\n"
         "import duckdb_redis_olap_scanner_spark\n"
         "assert 'pyspark' not in sys.modules, 'package import loaded pyspark'\n"
+        "import duckdb_redis_olap_scanner_spark.sources.redis_source\n"
+        "for name in ('duckdb_redis_olap_scanner_spark.engine', 'pandas'):\n"
+        "    assert name not in sys.modules, 'source import loaded ' + name\n"
         "from duckdb_redis_olap_scanner_spark import testing\n"
         "from duckdb_redis_olap_scanner_spark import (\n"
         "    Engine, get_spark, load_tables, register_datasources)\n"
@@ -252,18 +355,29 @@ class _FakeSession:
         self.sparkContext = SimpleNamespace(addPyFile=self.shipped.append)
 
 
-def test_package_ships_only_without_the_daemon(monkeypatch):
+def test_package_ships_only_without_the_hook(monkeypatch):
     monkeypatch.setattr(engine, "register_datasources", lambda spark: None)
     # An existing context: its workers never saw the PYTHONPATH export.
     existing = _FakeSession()
-    assert _daemon_module(monkeypatch, existing, "local[2]", object()) is None
+    assert _hook_path(monkeypatch, existing, "local[2]", object()) is None
     assert existing._pkg_shipped is True
     (zip_path,) = existing.shipped
     with zipfile.ZipFile(zip_path) as zf:
         assert "duckdb_redis_olap_scanner_spark/engine.py" in zf.namelist()
     # A context started now: its workers import the package directly.
     fresh = _FakeSession()
-    assert _daemon_module(monkeypatch, fresh, "local[2]", None) == SHIM
+    assert _hook_path(monkeypatch, fresh, "local[2]", None) == HOOK
     assert fresh.shipped == [] and not hasattr(fresh, "_pkg_shipped")
     engine.ship_package(fresh)  # later call sites skip it too
     assert fresh.shipped == []
+
+
+def test_local_cores_default_to_the_affinity_count(spark, monkeypatch):
+    monkeypatch.delenv("SPARK_GRAFT_CPUS", raising=False)
+    n = len(os.sched_getaffinity(0))
+    assert engine.local_cores() == n
+    conf = _built_conf(monkeypatch, spark, None, None)
+    assert conf["spark.master"] == f"local[{n}]"
+    assert conf["spark.sql.shuffle.partitions"] == str(n)
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "3")
+    assert _built_conf(monkeypatch, spark, None, None)["spark.master"] == "local[3]"
