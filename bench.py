@@ -353,16 +353,9 @@ def scale10x_main() -> None:
 
     spark = get_spark(app_name="bench10x")
     spark.sparkContext.setLogLevel("ERROR")
-    from duckdb_redis_olap_scanner_spark.plans.catalog import (
-        runtime_replan_worth_it,
-        table,
-    )
+    from duckdb_redis_olap_scanner_spark.plans.catalog import table
 
     cpus = local_cores()
-    spark.conf.set(
-        "spark.sql.adaptive.enabled",
-        str(runtime_replan_worth_it(dst, cpus)).lower(),
-    )
     entries = registry()
     bench_names = sorted(n for n, e in entries.items() if "bench" in e.tags)
     # Warmup without .cache(): same measurement fix as main() — every
@@ -455,16 +448,9 @@ def scale100x_main() -> None:
 
     spark = get_spark(app_name="bench100x")
     spark.sparkContext.setLogLevel("ERROR")
-    from duckdb_redis_olap_scanner_spark.plans.catalog import (
-        runtime_replan_worth_it,
-        table,
-    )
+    from duckdb_redis_olap_scanner_spark.plans.catalog import table
 
     cpus = local_cores()
-    spark.conf.set(
-        "spark.sql.adaptive.enabled",
-        str(runtime_replan_worth_it(dst, cpus)).lower(),
-    )
     entries = registry()
     bench_names = sorted(
         n for n, e in entries.items()
@@ -568,10 +554,7 @@ def scaling10x_main(factor: int = 10) -> None:
             tables=_RELATIONAL_TABLES if factor >= 100 else _ALL_TABLES,
         )
 
-    from duckdb_redis_olap_scanner_spark.plans.catalog import (
-        runtime_replan_worth_it,
-        table,
-    )
+    from duckdb_redis_olap_scanner_spark.plans.catalog import table
 
     cpus_main = local_cores()
     cpus_low = int(os.environ.get("SPARK_GRAFT_CPUS_LOW", "8"))
@@ -602,10 +585,6 @@ def scaling10x_main(factor: int = 10) -> None:
             os.environ["SPARK_GRAFT_CPUS"] = str(cpus)
             spark = get_spark(app_name=f"scaling10x-{cpus}")
             spark.sparkContext.setLogLevel("ERROR")
-            spark.conf.set(
-                "spark.sql.adaptive.enabled",
-                str(runtime_replan_worth_it(dst, cpus)).lower(),
-            )
             for t in tables_here:
                 table(spark, dst, t).count()
             _force(entries["q1_pricing_summary"].fn(spark, dst))
@@ -775,23 +754,7 @@ def main() -> None:
 
     spark = get_spark(app_name="bench")
     spark.sparkContext.setLogLevel("ERROR")
-
-    # Volume-adaptive AQE (runtime conf, per-core-bytes threshold —
-    # see catalog.runtime_replan_worth_it): while stages are
-    # sub-second, AQE's per-stage driver round-trips cost more than
-    # runtime re-planning saves — measured ~15-20% of suite wall at
-    # sf0.1 and 15-40% per query at a 10× sf1-equivalent; at
-    # cluster-scale per-core volume, skew-join splitting and
-    # coalescing must be on.
-    from duckdb_redis_olap_scanner_spark.plans.catalog import (
-        runtime_replan_worth_it,
-    )
-
     cpus = local_cores()
-    spark.conf.set(
-        "spark.sql.adaptive.enabled",
-        str(runtime_replan_worth_it(sf_dir, cpus)).lower(),
-    )
 
     entries = registry()
     bench_names = sorted(n for n, e in entries.items() if "bench" in e.tags)

@@ -103,26 +103,11 @@ def _session_key(spark: SparkSession) -> str:
 # SparkSession wrapper (r17 review). A weak-keyed map can't work here
 # — the cached DataFrames hold their session strongly, so the cycle
 # never collects. Instead: bounded per-session LRU. The cap covers
-# any realistic number of CONCURRENT sessions (tunable for drivers
-# that genuinely serve more — exceeding it with LIVE sessions turns
-# the prepared-plan cache into thrash, so each evicted session key
-# warns once with the knob's name); a long-lived driver cycling
-# newSession() per request evicts the dead ones as it goes.
-def _session_cap() -> int:
-    raw = os.environ.get("SPARK_GRAFT_MAX_CACHED_SESSIONS", "8")
-    try:
-        v = int(raw)
-    except ValueError:
-        raise ValueError(
-            f"SPARK_GRAFT_MAX_CACHED_SESSIONS={raw!r} is not an "
-            "integer"
-        ) from None
-    # 0/negative would evict the CURRENT session on every call
-    # (permanent thrash + unsweepable inserts); clamp to >= 1.
-    return max(1, v)
-
-
-_MAX_CACHED_SESSIONS = _session_cap()
+# any realistic number of CONCURRENT sessions (exceeding it with LIVE
+# sessions turns the prepared-plan cache into thrash, so each evicted
+# session key warns once); a long-lived driver cycling newSession()
+# per request evicts the dead ones as it goes.
+_MAX_CACHED_SESSIONS = 8
 _SESSION_LRU: dict[str, None] = {}
 # every register() memo enrolls here so eviction can sweep it; keys
 # of both _TABLE_CACHE and the memos start with the session key
@@ -133,8 +118,8 @@ _ALL_MEMOS: list[dict] = []
 # "dictionary changed size during iteration" (r17 review pass 2).
 _CACHE_LOCK = threading.RLock()
 # Session keys whose eviction was already logged: each evicted key
-# warns once, so a driver that raised the cap and still thrashes keeps
-# hearing about it, while re-evicting the same key stays quiet.
+# warns once, so a driver that keeps thrashing keeps hearing about
+# it, while re-evicting the same key stays quiet.
 _WARNED_EVICTION: set[str] = set()
 
 
@@ -157,8 +142,7 @@ def _evict_locked(key: str) -> list:
                 "evicting cached plans of session %s (more than "
                 "%d session keys seen). Benign for discarded "
                 "newSession()s; if this many sessions are LIVE, "
-                "raise SPARK_GRAFT_MAX_CACHED_SESSIONS to avoid "
-                "prepared-plan cache thrash.",
+                "their prepared plans thrash.",
                 dead,
                 _MAX_CACHED_SESSIONS,
             )
@@ -534,41 +518,6 @@ def gather_sort(df: DataFrame, *cols) -> DataFrame:
     provably small — for volume-sized outputs keep ``orderBy`` so the
     sort distributes."""
     return df.coalesce(1).sortWithinPartitions(*cols)
-
-
-# AQE pays once each core chews this many bytes per stage — the regime
-# where stages run multiple seconds and one saved skew/shuffle re-plan
-# dwarfs the per-stage materialization + driver round-trip cost.
-# Calibrated r21 from the two nearest measured anchors: at the 10×
-# sf1-equivalent (4.3 MiB/core) AQE costs 15-40% per query (r6, re-
-# confirmed r21); at the 100× sf10-equivalent (43 MiB/core) AQE-on
-# wins the 13-query suite 27.05 s vs 29.54 s (−8%, min-of-3
-# interleaved; q10 −35% from runtime coalescing of its 9 M-row
-# narrow exchanges). 16 MiB/core is the geometric midpoint of the
-# two anchors; both measured regimes keep their winning setting.
-_AQE_BYTES_PER_CORE = 16 << 20
-
-
-def runtime_replan_worth_it(sf_dir: str, cpus: int) -> bool:
-    """Cost-based AQE switch: adaptive execution materializes every
-    shuffle stage and round-trips the driver (~20-50 ms each) before
-    re-planning — pure overhead while stages are sub-second. Measured
-    at sf0.1 the 19-query bench drops ~15-20% wall with AQE off, and
-    at a 10× sf1-equivalent (140 MB lineitem, 32 cores) AQE STILL
-    costs 15-40% (q7 0.583 s off vs 0.829 s on, q5 0.771 vs 0.866,
-    q9 0.671 vs 0.814 — r6 measurement), so partition-count
-    saturation is the wrong trigger: the switch is PER-CORE VOLUME.
-    Once each core's share of the largest table reaches hundreds of
-    MiB — multi-second stages, the cluster-scale regime — runtime
-    re-planning (skew-join splitting, partition coalescing, broadcast
-    conversion) pays for itself many times over and must be on; when
-    the volume is unknown, default on (the safe cluster assumption).
-    """
-    try:
-        size = _file_size(sf_dir, "lineitem")
-    except OSError:
-        return True
-    return size >= cpus * _AQE_BYTES_PER_CORE
 
 
 def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:

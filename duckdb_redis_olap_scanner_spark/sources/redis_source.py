@@ -57,6 +57,14 @@ norm for OLAP keyspaces) or a future BinaryType schema variant.
 
 Arrow RecordBatches are yielded so rows never pass through
 Python-object row conversion.
+
+One code path per job: the three scan-family readers share
+``_ScanFamilyReader`` (partitions, connection, the ``_scan_owned`` page
+loop) and each builds one batch from one key page; the zset and list
+readers share ``_KeyPageReader``'s pager; every sink sends its
+commands through :meth:`RedisClient.pipeline_batched`. The hash and
+zset readers negotiate RESP3 (their replies change shape under it) and
+fall back to RESP2 on pre-6.0 servers; the other readers speak RESP2.
 """
 
 from __future__ import annotations
@@ -84,6 +92,7 @@ from ..transport.resp import (
     DEFAULT_SCAN_COUNT,
     RedisClient,
     _as_str,
+    host_port_of,
     raise_nested,
 )
 
@@ -197,8 +206,7 @@ def cluster_slots_enabled(options: dict) -> bool:
 
 
 def _shards(options: dict) -> list[RedisShard]:
-    host = options.get("host", "127.0.0.1")
-    port = int(options.get("port", 6379))
+    host, port = host_port_of(options)
     count = int(options.get("count", DEFAULT_SCAN_COUNT))
     shard_patterns = options.get("shard_patterns")
     if shard_patterns:
@@ -255,7 +263,14 @@ def _scan_owned(client: RedisClient, part: RedisShard) -> Iterator[list[str]]:
             yield keys
 
 
-class RedisScanReader(DataSourceReader):
+class _ScanFamilyReader(DataSourceReader):
+    """The scan family's one read path: a partition per shard
+    (:func:`_shards`), one connection per partition, and one
+    RecordBatch per slot-filtered SCAN page, which the subclass builds
+    in ``_batch``."""
+
+    PROTOCOL = 2  # the RESP version each partition's connection asks for
+
     def __init__(self, options: dict) -> None:
         self.options = options
 
@@ -263,9 +278,14 @@ class RedisScanReader(DataSourceReader):
         return _shards(self.options)
 
     def read(self, part: RedisShard) -> Iterator[pa.RecordBatch]:
-        with RedisClient(part.host, part.port) as client:
+        with RedisClient(part.host, part.port, protocol=self.PROTOCOL) as client:
             for keys in _scan_owned(client, part):
-                yield pa.RecordBatch.from_pydict({"key_name": keys})
+                yield self._batch(client, keys)
+
+
+class RedisScanReader(_ScanFamilyReader):
+    def _batch(self, client: RedisClient, keys: list[str]) -> pa.RecordBatch:
+        return pa.RecordBatch.from_pydict({"key_name": keys})
 
 
 class RedisScanDataSource(DataSource):
@@ -284,52 +304,46 @@ class RedisScanDataSource(DataSource):
         return RedisScanReader(self.options)
 
 
-class RedisKVReader(DataSourceReader):
-    def __init__(self, options: dict) -> None:
-        self.options = options
-
-    def partitions(self) -> list[InputPartition]:
-        return _shards(self.options)
-
-    def read(self, part: RedisShard) -> Iterator[pa.RecordBatch]:
-        with RedisClient(part.host, part.port) as client:
-            for keys in _scan_owned(client, part):
-                values = client.mget(keys)  # one round trip per SCAN batch
-                yield pa.RecordBatch.from_pydict({"key": keys, "value": values})
+class RedisKVReader(_ScanFamilyReader):
+    def _batch(self, client: RedisClient, keys: list[str]) -> pa.RecordBatch:
+        values = client.mget(keys)  # one round trip per SCAN page
+        return pa.RecordBatch.from_pydict({"key": keys, "value": values})
 
 
-class RedisKVWriter(DataSourceWriter):
-    """Batch writer: each partition pipelines SET commands (one round
-    trip per ``batch_size`` rows) — the write-side mirror of the MGET
-    batching on the read path. The reference is read-only
-    (``README.md:49``); this completes the source/sink symmetry."""
+class _PipelinedWriter(DataSourceWriter):
+    """The batch sinks' one write path: each row becomes one command
+    (``_commands``, which also rejects NULLs), pipelined ``batch_size``
+    commands per round trip on one connection per partition — the
+    write-side mirror of the MGET batching on the read path. The
+    reference is read-only (``README.md:49``); this completes the
+    source/sink symmetry."""
 
     def __init__(self, options: dict) -> None:
-        self.host = options.get("host", "127.0.0.1")
-        self.port = int(options.get("port", 6379))
+        self.host, self.port = host_port_of(options)
         self.batch_size = int(options.get("batch_size", DEFAULT_SCAN_COUNT))
 
     def write(self, rows) -> WriterCommitMessage:
         with RedisClient(self.host, self.port) as client:
-            batch: list[tuple] = []
-            for row in rows:
-                if row.key is None or row.value is None:
-                    # Redis has no NULL string; str() fallback would
-                    # store the literal "None" (r14 bug-hunt). Fail
-                    # the task with actionable wording instead.
-                    raise ValueError(
-                        "redis_kv write: NULL "
-                        + ("key" if row.key is None else
-                           f"value for key {row.key!r}")
-                        + " — filter or fill NULLs before writing"
-                    )
-                batch.append(("SET", row.key, row.value))
-                if len(batch) >= self.batch_size:
-                    client.pipeline_checked(batch)
-                    batch = []
-            if batch:
-                client.pipeline_checked(batch)
+            client.pipeline_batched(self._commands(rows), self.batch_size)
         return WriterCommitMessage()
+
+
+class RedisKVWriter(_PipelinedWriter):
+    """One SET per (key, value) row."""
+
+    def _commands(self, rows) -> Iterator[tuple]:
+        for row in rows:
+            if row.key is None or row.value is None:
+                # Redis has no NULL string; str() fallback would
+                # store the literal "None" (r14 bug-hunt). Fail
+                # the task with actionable wording instead.
+                raise ValueError(
+                    "redis_kv write: NULL "
+                    + ("key" if row.key is None else
+                       f"value for key {row.key!r}")
+                    + " — filter or fill NULLs before writing"
+                )
+            yield ("SET", row.key, row.value)
 
 
 class RedisKVDataSource(DataSource):
@@ -363,31 +377,19 @@ _HASH_ARROW_SCHEMA = pa.schema(
 )
 
 
-class RedisHashReader(DataSourceReader):
-    def __init__(self, options: dict) -> None:
-        self.options = options
-        # HGETALL is the one reply this engine consumes whose shape
-        # changed in RESP3 (flat array -> % map), so the hash source
-        # negotiates RESP3 by default and falls back to RESP2 against
-        # pre-6.0 servers (SURVEY §1.2's reserved map-type row). Set
-        # protocol=2 to pin the legacy wire form.
-        self.protocol = int(options.get("protocol", 3))
+class RedisHashReader(_ScanFamilyReader):
+    # HGETALL is the one reply this engine consumes whose shape
+    # changed in RESP3 (flat array -> % map), so the hash source
+    # negotiates RESP3 and falls back to RESP2 against pre-6.0 servers
+    # (SURVEY §1.2's reserved map-type row).
+    PROTOCOL = 3
 
-    def partitions(self) -> list[InputPartition]:
-        return _shards(self.options)
-
-    def read(self, part: RedisShard) -> Iterator[pa.RecordBatch]:
-        with RedisClient(part.host, part.port, protocol=self.protocol) as client:
-            for keys in _scan_owned(client, part):
-                maps = client.hgetall_pipelined(keys)  # one RTT per batch
-                rows = [list(m.items()) for m in maps]
-                yield pa.RecordBatch.from_arrays(
-                    [
-                        pa.array(keys, type=pa.string()),
-                        pa.array(rows, type=pa.map_(pa.string(), pa.string())),
-                    ],
-                    schema=_HASH_ARROW_SCHEMA,
-                )
+    def _batch(self, client: RedisClient, keys: list[str]) -> pa.RecordBatch:
+        maps = client.hgetall_pipelined(keys)  # one round trip per page
+        return pa.RecordBatch.from_pydict(
+            {"key": keys, "value": [list(m.items()) for m in maps]},
+            schema=_HASH_ARROW_SCHEMA,
+        )
 
 
 class RedisHashDataSource(DataSource):
@@ -412,48 +414,34 @@ class RedisHashDataSource(DataSource):
         return RedisHashWriter(self.options)
 
 
-class RedisHashWriter(DataSourceWriter):
-    """Batch writer for (key, value map<string,string>) rows: each
-    partition pipelines one HSET per row (fields flattened), batched
-    like the KV writer."""
+class RedisHashWriter(_PipelinedWriter):
+    """One HSET per (key, value map<string,string>) row, fields
+    flattened; an empty map sends nothing."""
 
-    def __init__(self, options: dict) -> None:
-        self.host = options.get("host", "127.0.0.1")
-        self.port = int(options.get("port", 6379))
-        self.batch_size = int(options.get("batch_size", DEFAULT_SCAN_COUNT))
-
-    def write(self, rows) -> WriterCommitMessage:
-        with RedisClient(self.host, self.port) as client:
-            batch: list[tuple] = []
-            for row in rows:
-                if row.key is None:
-                    # checked per row, not per non-empty map: a NULL
-                    # key with an empty map is the same upstream
-                    # corruption and must fail just as loudly as in
-                    # the kv writer (review r14)
+    def _commands(self, rows) -> Iterator[tuple]:
+        for row in rows:
+            if row.key is None:
+                # checked per row, not per non-empty map: a NULL
+                # key with an empty map is the same upstream
+                # corruption and must fail just as loudly as in
+                # the kv writer (review r14)
+                raise ValueError(
+                    "redis_hash write: NULL key — filter or "
+                    "fill NULLs before writing"
+                )
+            flat: list = []
+            for f, v in (row.value or {}).items():
+                if f is None or v is None:
                     raise ValueError(
-                        "redis_hash write: NULL key — filter or "
-                        "fill NULLs before writing"
+                        "redis_hash write: NULL "
+                        + ("field" if f is None else
+                           f"value for field {f!r}")
+                        + f" in key {row.key!r} — Redis hashes "
+                        "have no NULL; filter or fill first"
                     )
-                flat: list = []
-                for f, v in (row.value or {}).items():
-                    if f is None or v is None:
-                        raise ValueError(
-                            "redis_hash write: NULL "
-                            + ("field" if f is None else
-                               f"value for field {f!r}")
-                            + f" in key {row.key!r} — Redis hashes "
-                            "have no NULL; filter or fill first"
-                        )
-                    flat += [f, v]
-                if flat:
-                    batch.append(("HSET", row.key, *flat))
-                if len(batch) >= self.batch_size:
-                    client.pipeline_checked(batch)
-                    batch = []
-            if batch:
-                client.pipeline_checked(batch)
-        return WriterCommitMessage()
+                flat += [f, v]
+            if flat:
+                yield ("HSET", row.key, *flat)
 
 
 # ---------------------------------------------------------------------------
@@ -467,14 +455,49 @@ class _SingleKeyPartition(InputPartition):
         self.host, self.port, self.key = host, port, key
 
 
-def _single_key_partition(options: dict) -> list[_SingleKeyPartition]:
-    return [
-        _SingleKeyPartition(
-            options.get("host", "127.0.0.1"),
-            int(options.get("port", 6379)),
-            options["key"],
-        )
-    ]
+def _text(v) -> str:
+    return v.decode() if isinstance(v, bytes) else str(v)
+
+
+class _KeyPageReader(DataSourceReader):
+    """The container readers' one pager: one partition for the ``key``
+    option (a container lives on one shard in any real deployment;
+    multi-key reads union several loads), read in index slices of
+    ``page_size`` (default ``DEFAULT_SCAN_COUNT``), one RecordBatch per
+    slice built by the subclass's ``_page``, so a multi-GB container
+    never materializes as one Python list in the worker. A container
+    within one page by its size (``SIZE_COMMAND``) reads in one
+    command, keeping the exact snapshot (round-9 ADVICE); larger ones
+    trade the snapshot for bounded memory: elements added or removed
+    mid-read may be missed or shifted — the same contract as SCAN
+    itself."""
+
+    PROTOCOL = 2  # the RESP version each partition's connection asks for
+    SIZE_COMMAND = ""
+
+    def __init__(self, options: dict) -> None:
+        self.options = options
+        self.page_size = int(options.get("page_size", DEFAULT_SCAN_COUNT))
+
+    def partitions(self) -> list[_SingleKeyPartition]:
+        host, port = host_port_of(self.options)
+        return [_SingleKeyPartition(host, port, self.options["key"])]
+
+    def read(self, part: _SingleKeyPartition) -> Iterator[pa.RecordBatch]:
+        page = max(1, self.page_size)
+        with RedisClient(part.host, part.port, protocol=self.PROTOCOL) as client:
+            size = int(client.command(self.SIZE_COMMAND, part.key) or 0)
+            single_shot = size <= page
+            start = 0
+            while True:
+                stop = "-1" if single_shot else str(start + page - 1)
+                batch = self._page(client, part.key, start, stop)
+                if not batch.num_rows:
+                    return
+                yield batch
+                start += batch.num_rows
+                if single_shot or batch.num_rows < page:
+                    return
 
 
 _ZSET_ARROW_SCHEMA = pa.schema(
@@ -486,114 +509,59 @@ _ZSET_ARROW_SCHEMA = pa.schema(
 )
 
 
-class RedisZSetReader(DataSourceReader):
+class RedisZSetReader(_KeyPageReader):
     """Paged ZRANGE WITHSCORES — the full sorted set in ascending
-    (score, member) order, rank attached. One partition per key (a
-    sorted set lives on one shard in any real deployment; multi-key
-    reads union several loads), but the read streams
-    ``DEFAULT_SCAN_COUNT``-sized index slices and yields one
-    RecordBatch per slice, so a multi-GB leaderboard never
-    materializes as one Python list in the worker (mirrors the
-    writers' pipelined batching). Like every SCAN-family reader here,
-    paging trades the single-command snapshot for bounded memory:
-    elements added/removed mid-read may be missed or shifted — the
-    same contract as SCAN itself."""
+    (score, member) order, rank attached."""
 
-    def __init__(self, options: dict) -> None:
-        self.options = options
-        self.page_size = int(options.get("page_size", DEFAULT_SCAN_COUNT))
-        # ZRANGE ... WITHSCORES is the second reply this engine
-        # consumes whose shape changed in RESP3: the RESP2 flat
-        # [member, score, member, score, ...] bulk-string array
-        # becomes an array of [member, double] PAIRS after HELLO 3.
-        # Like the hash source, negotiate RESP3 by default (falling
-        # back to RESP2 against pre-6.0 servers) and parse both
-        # shapes; set protocol=2 to pin the legacy wire form.
-        self.protocol = int(options.get("protocol", 3))
+    # ZRANGE ... WITHSCORES is the second reply this engine consumes
+    # whose shape changed in RESP3: the RESP2 flat [member, score,
+    # member, score, ...] bulk-string array becomes an array of
+    # [member, double] PAIRS after HELLO 3. Like the hash source,
+    # negotiate RESP3 (falling back to RESP2 against pre-6.0 servers)
+    # and parse both shapes.
+    PROTOCOL = 3
+    SIZE_COMMAND = "ZCARD"
 
-    def partitions(self) -> list[_SingleKeyPartition]:
-        return _single_key_partition(self.options)
-
-    def read(self, part: _SingleKeyPartition) -> Iterator[pa.RecordBatch]:
-        page = max(1, self.page_size)
-        with RedisClient(
-            part.host, part.port, protocol=self.protocol
-        ) as client:
-            # Small keys (≤ one page by ZCARD) read in a single
-            # ZRANGE, keeping the old exact-snapshot semantics; only
-            # keys that genuinely need bounded-memory paging pay the
-            # non-snapshot trade-off (round-9 ADVICE).
-            card = int(client.command("ZCARD", part.key) or 0)
-            single_shot = card <= page
-            rank = 0
-            while True:
-                stop = str(rank + page - 1) if not single_shot else "-1"
-                flat = raise_nested(client.command(
-                    "ZRANGE", part.key, str(rank), stop, "WITHSCORES",
-                ))
-                if not flat:
-                    return
-                if isinstance(flat[0], (list, tuple)):  # RESP3 pairs
-                    members = [
-                        m.decode() if isinstance(m, bytes) else str(m)
-                        for m, _s in flat
-                    ]
-                    scores = [float(s) for _m, s in flat]
-                else:  # RESP2 flat member/score alternation
-                    members = [
-                        v.decode() if isinstance(v, bytes) else str(v)
-                        for v in flat[0::2]
-                    ]
-                    scores = [
-                        float(v.decode() if isinstance(v, bytes) else v)
-                        for v in flat[1::2]
-                    ]
-                yield pa.RecordBatch.from_arrays(
-                    [
-                        pa.array(members, type=pa.string()),
-                        pa.array(scores, type=pa.float64()),
-                        pa.array(
-                            range(rank, rank + len(members)), type=pa.int32()
-                        ),
-                    ],
-                    schema=_ZSET_ARROW_SCHEMA,
-                )
-                rank += len(members)
-                if single_shot or len(members) < page:
-                    return
+    def _page(
+        self, client: RedisClient, key: str, start: int, stop: str
+    ) -> pa.RecordBatch:
+        pairs = raise_nested(
+            client.command("ZRANGE", key, str(start), stop, "WITHSCORES")
+        ) or []
+        if pairs and not isinstance(pairs[0], (list, tuple)):
+            # RESP2: two reply elements per member
+            pairs = list(zip(pairs[0::2], pairs[1::2]))
+        return pa.RecordBatch.from_pydict(
+            {
+                "member": [_text(m) for m, _s in pairs],
+                "score": [float(s) for _m, s in pairs],
+                "rank": range(start, start + len(pairs)),
+            },
+            schema=_ZSET_ARROW_SCHEMA,
+        )
 
 
-class RedisZSetWriter(DataSourceWriter):
-    """Batch writer for (member, score) rows: pipelined ZADD. Scores
+class RedisZSetWriter(_PipelinedWriter):
+    """One ZADD to the ``key`` option per (member, score) row. Scores
     are last-writer-wins per member and set insertion is commutative,
     so partition-parallel writes are deterministic for distinct
     members — the container whose write semantics suit a distributed
     sink best."""
 
     def __init__(self, options: dict) -> None:
-        self.host = options.get("host", "127.0.0.1")
-        self.port = int(options.get("port", 6379))
+        super().__init__(options)
         self.key = options["key"]
-        self.batch_size = int(options.get("batch_size", DEFAULT_SCAN_COUNT))
 
-    def write(self, rows) -> WriterCommitMessage:
-        with RedisClient(self.host, self.port) as client:
-            batch: list[tuple] = []
-            for row in rows:
-                if row.member is None or row.score is None:
-                    raise ValueError(
-                        "redis_zset write: NULL "
-                        + ("member" if row.member is None else
-                           f"score for member {row.member!r}")
-                        + " — filter or fill NULLs before writing"
-                    )
-                batch.append(("ZADD", self.key, repr(float(row.score)), row.member))
-                if len(batch) >= self.batch_size:
-                    client.pipeline_checked(batch)
-                    batch = []
-            if batch:
-                client.pipeline_checked(batch)
-        return WriterCommitMessage()
+    def _commands(self, rows) -> Iterator[tuple]:
+        for row in rows:
+            if row.member is None or row.score is None:
+                raise ValueError(
+                    "redis_zset write: NULL "
+                    + ("member" if row.member is None else
+                       f"score for member {row.member!r}")
+                    + " — filter or fill NULLs before writing"
+                )
+            yield ("ZADD", self.key, repr(float(row.score)), row.member)
 
 
 class RedisZSetDataSource(DataSource):
@@ -627,59 +595,29 @@ _LIST_ARROW_SCHEMA = pa.schema(
 )
 
 
-class RedisListReader(DataSourceReader):
-    """Paged LRANGE — the full list in insertion order with positions,
-    streamed as one RecordBatch per ``DEFAULT_SCAN_COUNT``-sized index
-    slice so a huge list never buffers whole in the worker (same
-    bounded-memory/non-snapshot contract as the zset reader).
-    Read-only source: a distributed RPUSH writer would interleave
-    partitions nondeterministically, so list APPEND is deliberately
-    not offered as a batch sink (use the stream sink for append
-    semantics)."""
+class RedisListReader(_KeyPageReader):
+    """Paged LRANGE — the full list in insertion order with positions.
+    LRANGE's reply is the same under RESP2 and RESP3, so the reader
+    speaks RESP2 and sends no HELLO. Read-only source: a distributed
+    RPUSH writer would interleave partitions nondeterministically, so
+    list APPEND is deliberately not offered as a batch sink (use the
+    stream sink for append semantics)."""
 
-    def __init__(self, options: dict) -> None:
-        self.options = options
-        self.page_size = int(options.get("page_size", DEFAULT_SCAN_COUNT))
-        # LRANGE's reply shape is identical under RESP2 and RESP3 (a
-        # plain array of bulk strings), but the source still accepts
-        # the same protocol option as its zset/hash siblings so the
-        # negotiation path is exercised/testable under both protocols.
-        self.protocol = int(options.get("protocol", 3))
+    SIZE_COMMAND = "LLEN"
 
-    def partitions(self) -> list[_SingleKeyPartition]:
-        return _single_key_partition(self.options)
-
-    def read(self, part: _SingleKeyPartition) -> Iterator[pa.RecordBatch]:
-        page = max(1, self.page_size)
-        with RedisClient(
-            part.host, part.port, protocol=self.protocol
-        ) as client:
-            # Same small-key single-shot fallback as the zset reader:
-            # a list within one page (by LLEN) reads atomically.
-            llen = int(client.command("LLEN", part.key) or 0)
-            single_shot = llen <= page
-            pos = 0
-            while True:
-                stop = str(pos + page - 1) if not single_shot else "-1"
-                vals = raise_nested(
-                    client.command("LRANGE", part.key, str(pos), stop)
-                )
-                if not vals:
-                    return
-                elems = [
-                    v.decode() if isinstance(v, bytes) else str(v)
-                    for v in vals
-                ]
-                yield pa.RecordBatch.from_arrays(
-                    [
-                        pa.array(range(pos, pos + len(elems)), type=pa.int32()),
-                        pa.array(elems, type=pa.string()),
-                    ],
-                    schema=_LIST_ARROW_SCHEMA,
-                )
-                pos += len(elems)
-                if single_shot or len(elems) < page:
-                    return
+    def _page(
+        self, client: RedisClient, key: str, start: int, stop: str
+    ) -> pa.RecordBatch:
+        elems = raise_nested(
+            client.command("LRANGE", key, str(start), stop)
+        ) or []
+        return pa.RecordBatch.from_pydict(
+            {
+                "pos": range(start, start + len(elems)),
+                "element": [_text(v) for v in elems],
+            },
+            schema=_LIST_ARROW_SCHEMA,
+        )
 
 
 class RedisListDataSource(DataSource):

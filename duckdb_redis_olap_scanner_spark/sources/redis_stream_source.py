@@ -50,6 +50,7 @@ sequential by design.
 
 from __future__ import annotations
 
+import logging
 from typing import Iterator
 
 from pyspark.sql.datasource import (
@@ -66,11 +67,9 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from ..transport.resp import RedisClient
+from ..transport.resp import RedisClient, RespError, _as_str, host_port_of
 
 BATCH_COUNT = 2048  # XRANGE COUNT page size, parity with SCAN COUNT
-
-import logging
 
 _log = logging.getLogger(__name__)
 
@@ -108,8 +107,6 @@ def _check_no_trim_loss(
     stream was deleted out from under the query); only a genuine
     pre-XINFO server ('unknown command') skips detection — the
     documented weaker contract."""
-    from ..transport.resp import RespError, _as_str
-
     floor = _id_key(floor_id) if floor_id else _id_key(part.start_id)
     floor = max(floor, _id_key(part.start_id))
     try:
@@ -141,8 +138,7 @@ def _check_no_trim_loss(
 
 class RedisStreamReader(DataSourceStreamReader):
     def __init__(self, options: dict) -> None:
-        self.host = options.get("host", "127.0.0.1")
-        self.port = int(options.get("port", 6379))
+        self.host, self.port = host_port_of(options)
         self.key = options.get("key", "events")
 
     def initialOffset(self) -> dict:
@@ -160,8 +156,6 @@ class RedisStreamReader(DataSourceStreamReader):
         # as it should — undelivered entries may be gone); a
         # pre-XINFO server falls back to the newest surviving entry
         # (the documented weaker contract).
-        from ..transport.resp import RespError, _as_str
-
         with RedisClient(self.host, self.port) as c:
             try:
                 info = c.xinfo_stream(self.key)
@@ -290,35 +284,31 @@ class RedisStreamWriter(DataSourceStreamWriter):
     engine's own ``dropDuplicatesWithinWatermark`` operator."""
 
     def __init__(self, options: dict) -> None:
-        self.host = options.get("host", "127.0.0.1")
-        self.port = int(options.get("port", 6379))
+        self.host, self.port = host_port_of(options)
         self.key = options.get("key", "events")
         self.batch_size = int(options.get("batch_size", BATCH_COUNT))
 
     def write(self, rows) -> WriterCommitMessage:
         with RedisClient(self.host, self.port) as client:
-            batch: list[tuple] = []
-            for row in rows:
-                flat: list[str] = []
-                for col, val in row.asDict().items():
-                    if val is not None:
-                        flat += [col, str(val)]
-                if not flat:
-                    # XADD cannot represent a fieldless entry; skipping
-                    # would silently break the one-entry-per-row
-                    # contract (r14 review) — fail the task instead.
-                    raise ValueError(
-                        "redis_stream write: row with all-NULL fields "
-                        "cannot become an XADD entry — filter or fill "
-                        "NULLs before writing"
-                    )
-                batch.append(("XADD", self.key, "*", *flat))
-                if len(batch) >= self.batch_size:
-                    client.pipeline_checked(batch)
-                    batch = []
-            if batch:
-                client.pipeline_checked(batch)
+            client.pipeline_batched(self._commands(rows), self.batch_size)
         return WriterCommitMessage()
+
+    def _commands(self, rows) -> Iterator[tuple]:
+        for row in rows:
+            flat: list[str] = []
+            for col, val in row.asDict().items():
+                if val is not None:
+                    flat += [col, str(val)]
+            if not flat:
+                # XADD cannot represent a fieldless entry; skipping
+                # would silently break the one-entry-per-row contract
+                # (r14 review) — fail the task instead.
+                raise ValueError(
+                    "redis_stream write: row with all-NULL fields "
+                    "cannot become an XADD entry — filter or fill "
+                    "NULLs before writing"
+                )
+            yield ("XADD", self.key, "*", *flat)
 
 
 class RedisStreamDataSource(DataSource):

@@ -22,7 +22,7 @@ runtime; the protocol is simple and public.
 from __future__ import annotations
 
 import socket
-from typing import Any, Iterator
+from typing import Any, Iterable, Iterator
 
 CRLF = b"\r\n"
 DEFAULT_SCAN_COUNT = 2048  # parity with the reference's COUNT 2048
@@ -241,6 +241,23 @@ def _as_str(v: Any) -> str | None:
     return str(v)
 
 
+def _pairs(reply: Any) -> Iterable[tuple[Any, Any]]:
+    """The (field, value) pairs of a field/value reply in either wire
+    shape: a RESP3 map, or a RESP2 flat field/value array. Nil has
+    none."""
+    if isinstance(reply, dict):
+        return reply.items()
+    it = iter(reply or [])
+    return zip(it, it)
+
+
+def _field_map(reply: Any) -> dict[str, str]:
+    """A field/value reply (HGETALL, a stream entry) as str→str."""
+    if isinstance(reply, dict):  # RESP3 map: _read_reply decoded the keys
+        return {k: _as_str(v) for k, v in reply.items()}
+    return {_as_str(k): _as_str(v) for k, v in _pairs(reply)}
+
+
 class RedisClient:
     """Minimal synchronous Redis client with pipelining.
 
@@ -412,6 +429,21 @@ class RedisClient:
                 out[i] = r
         return out
 
+    def pipeline_batched(
+        self, commands: Iterable[tuple], batch_size: int
+    ) -> None:
+        """The sinks' write loop: :meth:`pipeline_checked` per
+        ``batch_size`` commands, the tail included. ``commands`` is
+        consumed lazily, so a bad row raises before its batch is sent."""
+        batch: list[tuple] = []
+        for cmd in commands:
+            batch.append(cmd)
+            if len(batch) >= batch_size:
+                self.pipeline_checked(batch)
+                batch = []
+        if batch:
+            self.pipeline_checked(batch)
+
     # -- convenience wrappers --------------------------------------------------
     def ping(self) -> bool:
         return self.command("PING") == "PONG"
@@ -532,11 +564,7 @@ class RedisClient:
             return out
 
     def hgetall(self, key: str) -> dict[str, str]:
-        reply = self.command("HGETALL", key)
-        if isinstance(reply, dict):  # RESP3 map reply
-            return {k: _as_str(v) for k, v in reply.items()}
-        it = iter(reply or [])
-        return {_as_str(k): _as_str(v) for k, v in zip(it, it)}
+        return _field_map(self.command("HGETALL", key))
 
     def hgetall_pipelined(self, keys: list[str]) -> list[dict[str, str]]:
         replies = self.pipeline([("HGETALL", k) for k in keys])
@@ -550,23 +578,15 @@ class RedisClient:
                 # target (a key recreated as a string on its new owner
                 # must map to {} exactly as it would have locally).
                 red = _redirect_of(reply)
+                reply = None
                 if red is not None:
                     try:
                         reply = self.command_redirected(
                             "HGETALL", key, seed=red
                         )
                     except RespError:
-                        # same error→{} contract on the new owner
-                        reply = None
-                else:
-                    reply = None
-            if reply is None:
-                out.append({})
-            elif isinstance(reply, dict):
-                out.append({k: _as_str(v) for k, v in reply.items()})
-            else:
-                it = iter(reply)
-                out.append({_as_str(k): _as_str(v) for k, v in zip(it, it)})
+                        pass  # same error→{} contract on the new owner
+            out.append(_field_map(reply))
         return out
 
     def type_of(self, key: str) -> str:
@@ -591,16 +611,7 @@ class RedisClient:
     ) -> list[tuple[str, dict[str, str]]]:
         """Entries in [start, end] (start may carry a '(' prefix for the
         exclusive form) as (id, fields) pairs."""
-        args: list[Any] = ["XRANGE", key, start, end]
-        if count is not None:
-            args += ["COUNT", count]
-        out = []
-        for sid, flat in self.command(*args) or []:
-            it = iter(flat)
-            out.append(
-                (_as_str(sid), {_as_str(f): _as_str(v) for f, v in zip(it, it)})
-            )
-        return out
+        return self._entries(count, "XRANGE", key, start, end)
 
     def xrevrange(
         self,
@@ -611,16 +622,15 @@ class RedisClient:
     ) -> list[tuple[str, dict[str, str]]]:
         """Entries in [start, end], HIGHEST id first. ``count=1`` reads
         just the newest entry — O(1) instead of an O(stream) XRANGE."""
-        args: list[Any] = ["XREVRANGE", key, end, start]
+        return self._entries(count, "XREVRANGE", key, end, start)
+
+    def _entries(self, count: int | None, *args: Any) -> list[tuple]:
         if count is not None:
-            args += ["COUNT", count]
-        out = []
-        for sid, flat in self.command(*args) or []:
-            it = iter(flat)
-            out.append(
-                (_as_str(sid), {_as_str(f): _as_str(v) for f, v in zip(it, it)})
-            )
-        return out
+            args += ("COUNT", count)
+        return [
+            (_as_str(sid), _field_map(flat))
+            for sid, flat in self.command(*args) or []
+        ]
 
     def xinfo_stream(self, key: str) -> dict[str, Any]:
         """``XINFO STREAM`` as a str→value dict. Handles BOTH wire
@@ -630,13 +640,9 @@ class RedisClient:
         broke under RESP3). Raises :class:`RespError` verbatim for a
         missing key ('no such key') or a pre-XINFO server ('unknown
         command'); callers distinguish the two by message."""
-        reply = self.command("XINFO", "STREAM", key)
-        if isinstance(reply, dict):
-            return {_as_str(k): v for k, v in reply.items()}
-        flat = list(reply or [])
         return {
-            _as_str(flat[i]): flat[i + 1]
-            for i in range(0, len(flat) - 1, 2)
+            _as_str(k): v
+            for k, v in _pairs(self.command("XINFO", "STREAM", key))
         }
 
     def scan_iter(
@@ -668,6 +674,12 @@ class RedisClient:
                 yield keys
             if cursor == "0":
                 return
+
+
+def host_port_of(options: dict) -> tuple[str, int]:
+    """The server a source or sink talks to: its ``host`` and ``port``
+    options, default ``127.0.0.1:6379``."""
+    return options.get("host", "127.0.0.1"), int(options.get("port", 6379))
 
 
 def parse_host_port(address: str) -> tuple[str, int]:

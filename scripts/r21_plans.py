@@ -26,11 +26,8 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from duckdb_redis_olap_scanner_spark.engine import get_spark, local_cores  # noqa: E402
-from duckdb_redis_olap_scanner_spark.plans.catalog import (  # noqa: E402
-    registry,
-    runtime_replan_worth_it,
-)
+from duckdb_redis_olap_scanner_spark.engine import get_spark  # noqa: E402
+from duckdb_redis_olap_scanner_spark.plans.catalog import registry  # noqa: E402
 
 _EXPR_ID = re.compile(r"#\d+")
 _PLAN_ID = re.compile(r"plan_id=\d+")
@@ -53,11 +50,6 @@ def main() -> None:
 
     spark = get_spark(app_name="r21plans")
     spark.sparkContext.setLogLevel("ERROR")
-    cpus = local_cores()
-    spark.conf.set(
-        "spark.sql.adaptive.enabled",
-        str(runtime_replan_worth_it(sf_dir, cpus)).lower(),
-    )
     entries = registry()
     names = sorted(n for n, e in entries.items() if "bench" in e.tags)
     for name in names:

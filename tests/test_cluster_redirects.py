@@ -192,21 +192,41 @@ def test_zrange_withscores_shape_switches_with_protocol():
             )
 
 
+def _sent_wire(monkeypatch) -> list[bytes]:
+    """Every request the in-process clients send, as raw RESP bytes."""
+    sent: list[bytes] = []
+    exchange = RedisClient._exchange
+
+    def recording(self, wire, n):
+        sent.append(wire)
+        return exchange(self, wire, n)
+
+    monkeypatch.setattr(RedisClient, "_exchange", recording)
+    return sent
+
+
 @pytest.mark.parametrize("protocol", [2, 3])
-def test_zset_reader_identical_under_both_protocols(protocol):
+def test_zset_reader_identical_under_both_protocols(protocol, monkeypatch):
     """The paged zset read (including the multi-batch path) returns
     identical rows whether the server speaks RESP2 flat pairs or
-    RESP3 [member, double] pairs."""
+    RESP3 [member, double] pairs. The reader negotiates RESP3; the
+    RESP2 read pins the class-level protocol, as a pre-6.0 server
+    would (two reply elements per member, so paging must count
+    pairs, not reply elements)."""
     from duckdb_redis_olap_scanner_spark.sources.redis_source import (
         RedisZSetReader,
         _SingleKeyPartition,
     )
 
+    assert RedisZSetReader.PROTOCOL == 3
+    monkeypatch.setattr(RedisZSetReader, "PROTOCOL", protocol)
+    sent = _sent_wire(monkeypatch)
     with FakeRedisServer() as srv:
         _seed_zset(srv, "z3:page", n=25)
+        sent.clear()
         reader = RedisZSetReader(
             {"host": srv.host, "port": str(srv.port), "key": "z3:page",
-             "page_size": "10", "protocol": str(protocol)}
+             "page_size": "10"}
         )
         part = _SingleKeyPartition(srv.host, srv.port, "z3:page")
         batches = list(reader.read(part))
@@ -217,27 +237,37 @@ def test_zset_reader_identical_under_both_protocols(protocol):
         assert members == [f"zm:{i:03d}" for i in range(25)]
         assert scores == [i + 0.5 for i in range(25)]
         assert ranks == list(range(25))
+    assert any(w.startswith(b"*2\r\n$5\r\nHELLO") for w in sent) == (
+        protocol == 3
+    )
 
 
-@pytest.mark.parametrize("protocol", [2, 3])
-def test_list_reader_identical_under_both_protocols(protocol):
+def test_list_reader_pages_without_hello(monkeypatch):
+    """LRANGE's reply has one shape under both protocols, so the list
+    reader speaks the client default (RESP2): it pages 25 elements in
+    slices of 10 and sends no HELLO."""
     from duckdb_redis_olap_scanner_spark.sources.redis_source import (
         RedisListReader,
         _SingleKeyPartition,
     )
 
+    sent = _sent_wire(monkeypatch)
     with FakeRedisServer() as srv:
         with RedisClient(srv.host, srv.port) as c:
             c.command("RPUSH", "l3:page", *[f"el:{i:03d}" for i in range(25)])
+        sent.clear()
         reader = RedisListReader(
             {"host": srv.host, "port": str(srv.port), "key": "l3:page",
-             "page_size": "10", "protocol": str(protocol)}
+             "page_size": "10"}
         )
         part = _SingleKeyPartition(srv.host, srv.port, "l3:page")
         batches = list(reader.read(part))
         assert [b.num_rows for b in batches] == [10, 10, 5]
         elems = [e for b in batches for e in b.column("element").to_pylist()]
         assert elems == [f"el:{i:03d}" for i in range(25)]
+        pos = [p for b in batches for p in b.column("pos").to_pylist()]
+        assert pos == list(range(25))
+    assert sent and not any(b"HELLO" in w for w in sent)
 
 
 def test_redis_get_udf_survives_reshard(spark):

@@ -220,12 +220,30 @@ def test_kv_writer_roundtrip(real_engine, spark, tracked_keys):
     assert back == sorted(rows)
 
 
+def _read_pinned(reader_cls, options, protocol, monkeypatch) -> list[dict]:
+    """Rows of an in-process read with the reader's class-level RESP
+    version pinned (the hash and zset readers negotiate RESP3; 2 is
+    what a pre-6.0 server leaves them on)."""
+    monkeypatch.setattr(reader_cls, "PROTOCOL", protocol)
+    reader = reader_cls(options)
+    return [
+        row
+        for part in reader.partitions()
+        for batch in reader.read(part)
+        for row in batch.to_pylist()
+    ]
+
+
 @pytest.mark.parametrize("protocol", [2, 3])
 def test_hash_roundtrip_both_protocols(
-    real_engine, spark, tracked_keys, protocol
+    real_engine, spark, tracked_keys, protocol, monkeypatch
 ):
-    """HGETALL container read under pinned RESP2 AND negotiated RESP3
-    (map replies change wire shape between the two)."""
+    """HGETALL container read under RESP2 AND negotiated RESP3 (map
+    replies change wire shape between the two)."""
+    from duckdb_redis_olap_scanner_spark.sources.redis_source import (
+        RedisHashReader,
+    )
+
     rows = [
         (f"{NS}:h:001", {"name": "a", "size": "1"}),
         (f"{NS}:h:002", {"name": "b"}),
@@ -239,22 +257,26 @@ def test_hash_roundtrip_both_protocols(
         .save()
     )
     tracked_keys.update(k for k, _ in rows)
+    opts = {"host": real_engine.host, "port": str(real_engine.port),
+            "pattern": f"{NS}:h:*"}
     back = {
-        r.key: dict(r.value)
-        for r in real_engine.redis_hash(
-            f"{NS}:h:*", protocol=protocol
-        ).collect()
+        r["key"]: dict(r["value"])
+        for r in _read_pinned(RedisHashReader, opts, protocol, monkeypatch)
     }
     assert back == dict(rows)
 
 
 @pytest.mark.parametrize("protocol", [2, 3])
 def test_zset_roundtrip_both_protocols(
-    real_engine, spark, tracked_keys, protocol
+    real_engine, spark, tracked_keys, protocol, monkeypatch
 ):
     """ZADD writer + paged ZRANGE WITHSCORES reader: ascending
     (score, member) with ranks, under both wire protocols (RESP3
     returns [member, double] pairs)."""
+    from duckdb_redis_olap_scanner_spark.sources.redis_source import (
+        RedisZSetReader,
+    )
+
     key = f"{NS}:z:board"
     rows = [(f"m{i:02d}", float(i * 10)) for i in range(1, 8)]
     df = spark.createDataFrame(rows, "member string, score double")
@@ -267,8 +289,10 @@ def test_zset_roundtrip_both_protocols(
         .save()
     )
     tracked_keys.add(key)
-    back = real_engine.redis_zset(key, protocol=protocol).collect()
-    assert [(r.member, r.score, r.rank) for r in back] == [
+    opts = {"host": real_engine.host, "port": str(real_engine.port),
+            "key": key, "page_size": "3"}
+    back = _read_pinned(RedisZSetReader, opts, protocol, monkeypatch)
+    assert [(r["member"], r["score"], r["rank"]) for r in back] == [
         (f"m{i:02d}", float(i * 10), i - 1) for i in range(1, 8)
     ]
 

@@ -126,3 +126,73 @@ def test_udfs_null_key_in_null_out(engine, spark, redis_server):
 
     with RedisClient(redis_server.host, redis_server.port) as c:
         c.command("DEL", "")
+
+
+def test_per_key_chunking_is_pinned(monkeypatch):
+    """The per-key UDFs fetch once per ``MGET_CHUNK`` rows over that
+    chunk's non-NULL keys (an all-NULL chunk sends nothing), scatter
+    the replies back with NULL at each NULL key, and
+    ``missing="empty"`` fills only missing keys."""
+    import pandas as pd
+
+    from duckdb_redis_olap_scanner_spark.functions import redis_fns
+    from duckdb_redis_olap_scanner_spark.testing import FakeRedisServer
+    from duckdb_redis_olap_scanner_spark.transport.resp import RedisClient
+
+    monkeypatch.setattr(redis_fns, "MGET_CHUNK", 4)
+    calls: list[list] = []
+    mget, hgetall, checked = (
+        RedisClient.mget,
+        RedisClient.hgetall_pipelined,
+        RedisClient.pipeline_checked,
+    )
+    monkeypatch.setattr(
+        RedisClient, "mget", lambda c, ks: calls.append(ks) or mget(c, ks)
+    )
+    monkeypatch.setattr(
+        RedisClient, "hgetall_pipelined",
+        lambda c, ks: calls.append(ks) or hgetall(c, ks),
+    )
+    monkeypatch.setattr(
+        RedisClient, "pipeline_checked",
+        lambda c, cmds: calls.append([k for _, k in cmds]) or checked(c, cmds),
+    )
+    # NULLs on both sides of the 3|4 chunk boundary; batch 2's first
+    # chunk is all NULL
+    layout = [
+        ["k0", "k1", "k2", None, None, "k5", "nokey", "k7", None, "k9"],
+        [None, None, None, None, "k1"],
+    ]
+    want_calls = [["k0", "k1", "k2"], ["k5", "nokey", "k7"], ["k9"], ["k1"]]
+    present = {"k0", "k1", "k2", "k5", "k7", "k9"}
+
+    def run(udf, prefix):
+        calls.clear()
+        batches = [
+            pd.Series([k and prefix + k for k in b], dtype="object")
+            for b in layout
+        ]
+        out = [
+            [None if v is None or v is pd.NA else v for v in s.tolist()]
+            for s in udf.func(iter(batches))
+        ]
+        assert calls == [[prefix + k for k in c] for c in want_calls]
+        return out
+
+    def expect(hit, miss):
+        return [[None if k is None else hit(k) if k in present else miss
+                 for k in b] for b in layout]
+
+    with FakeRedisServer() as srv:
+        srv.seed_strings({f"s:{k}": f"v:{k}" for k in present})
+        srv.seed_ttls({"s:k5": 50})
+        srv.seed_hashes({f"h:{k}": {"f": k} for k in present})
+        args = (srv.host, srv.port)
+        assert run(redis_fns.make_redis_get(*args), "s:") == expect(
+            lambda k: f"v:{k}", None)
+        assert run(redis_fns.make_redis_get(*args, missing="empty"),
+                   "s:") == expect(lambda k: f"v:{k}", "")
+        assert run(redis_fns.make_redis_ttl(*args), "s:") == expect(
+            lambda k: 50 if k == "k5" else -1, -2)
+        assert run(redis_fns.make_redis_hgetall(*args), "h:") == expect(
+            lambda k: {"f": k}, {})

@@ -564,3 +564,105 @@ def test_hash_writer_rejects_null_key_even_with_empty_map(spark, redis_server):
              .option("host", redis_server.host)
              .option("port", redis_server.port)
              .mode("append").save())
+
+
+def _sink_cases():
+    from duckdb_redis_olap_scanner_spark.sources.redis_source import (
+        RedisHashWriter,
+        RedisKVWriter,
+        RedisZSetWriter,
+    )
+    from duckdb_redis_olap_scanner_spark.sources.redis_stream_source import (
+        RedisStreamWriter,
+    )
+    from pyspark.sql import Row
+
+    kv = [Row(key=f"k{i}", value=f"v{i}") for i in range(5)]
+    # the empty map in the middle sends no HSET and takes no batch slot
+    hashes = [Row(key=f"h{i}", value={"f": f"v{i}"}) for i in range(5)]
+    hashes.insert(2, Row(key="h-empty", value={}))
+    members = [Row(member=f"m{i}", score=float(i)) for i in range(5)]
+    events = [Row(a=f"x{i}", b=None) for i in range(5)]
+    return [
+        pytest.param(
+            RedisKVWriter, {}, kv,
+            [("SET", r.key, r.value) for r in kv],
+            [
+                (Row(key=None, value="v"), "redis_kv write: NULL key — "
+                 "filter or fill NULLs before writing"),
+                (Row(key="k", value=None), "redis_kv write: NULL value for "
+                 "key 'k' — filter or fill NULLs before writing"),
+            ],
+            id="kv",
+        ),
+        pytest.param(
+            RedisHashWriter, {}, hashes,
+            [("HSET", r.key, "f", r.value["f"]) for r in hashes if r.value],
+            [
+                (Row(key=None, value={}), "redis_hash write: NULL key — "
+                 "filter or fill NULLs before writing"),
+                (Row(key="k", value={None: "v"}), "redis_hash write: NULL "
+                 "field in key 'k' — Redis hashes have no NULL; filter or "
+                 "fill first"),
+                (Row(key="k", value={"f": None}), "redis_hash write: NULL "
+                 "value for field 'f' in key 'k' — Redis hashes have no "
+                 "NULL; filter or fill first"),
+            ],
+            id="hash",
+        ),
+        pytest.param(
+            RedisZSetWriter, {"key": "board"}, members,
+            [("ZADD", "board", repr(r.score), r.member) for r in members],
+            [
+                (Row(member=None, score=1.0), "redis_zset write: NULL "
+                 "member — filter or fill NULLs before writing"),
+                (Row(member="m", score=None), "redis_zset write: NULL score "
+                 "for member 'm' — filter or fill NULLs before writing"),
+            ],
+            id="zset",
+        ),
+        pytest.param(
+            RedisStreamWriter, {"key": "ev"}, events,
+            [("XADD", "ev", "*", "a", r.a) for r in events],
+            [
+                (Row(a=None, b=None), "redis_stream write: row with "
+                 "all-NULL fields cannot become an XADD entry — filter or "
+                 "fill NULLs before writing"),
+            ],
+            id="stream",
+        ),
+    ]
+
+
+@pytest.mark.parametrize("writer_cls, options, rows, commands, bad_rows",
+                         _sink_cases())
+def test_sink_batching_is_pinned(
+    monkeypatch, writer_cls, options, rows, commands, bad_rows
+):
+    """Every Redis sink pipelines ``batch_size`` commands per round
+    trip and flushes the tail, sends nothing for a row that maps to no
+    command, and fails a NULL row with its own message before that
+    row's batch reaches the wire."""
+    from duckdb_redis_olap_scanner_spark.transport.resp import RedisClient
+
+    sent: list[list[tuple]] = []
+    checked = RedisClient.pipeline_checked
+
+    def recording(self, batch):
+        sent.append([tuple(c) for c in batch])
+        return checked(self, batch)
+
+    monkeypatch.setattr(RedisClient, "pipeline_checked", recording)
+    with FakeRedisServer() as srv:
+        opts = {"host": srv.host, "port": str(srv.port), "batch_size": "2",
+                **options}
+        writer_cls(opts).write(iter(rows))
+        assert sent == [commands[0:2], commands[2:4], commands[4:]]
+        for bad, message in bad_rows:
+            sent.clear()
+            with pytest.raises(ValueError) as err:
+                writer_cls(opts).write(iter(rows[:3] + [bad] + rows[3:]))
+            assert str(err.value) == message
+            # the first full batch went out; the one holding the bad
+            # row never did
+            assert sent == [commands[0:2]]
