@@ -242,15 +242,18 @@ def test_zset_reader_identical_under_both_protocols(protocol, monkeypatch):
     )
 
 
-def test_list_reader_pages_without_hello(monkeypatch):
+@pytest.mark.parametrize("protocol", [2, 3])
+def test_list_reader_identical_under_both_protocols(protocol, monkeypatch):
     """LRANGE's reply has one shape under both protocols, so the list
-    reader speaks the client default (RESP2): it pages 25 elements in
-    slices of 10 and sends no HELLO."""
+    reader speaks the client default (RESP2) and sends no HELLO. Pinned
+    to either protocol, it pages 25 elements in identical slices of 10."""
     from duckdb_redis_olap_scanner_spark.sources.redis_source import (
         RedisListReader,
         _SingleKeyPartition,
     )
 
+    assert RedisListReader.PROTOCOL == 2
+    monkeypatch.setattr(RedisListReader, "PROTOCOL", protocol)
     sent = _sent_wire(monkeypatch)
     with FakeRedisServer() as srv:
         with RedisClient(srv.host, srv.port) as c:
@@ -267,7 +270,10 @@ def test_list_reader_pages_without_hello(monkeypatch):
         assert elems == [f"el:{i:03d}" for i in range(25)]
         pos = [p for b in batches for p in b.column("pos").to_pylist()]
         assert pos == list(range(25))
-    assert sent and not any(b"HELLO" in w for w in sent)
+    assert sent
+    assert any(w.startswith(b"*2\r\n$5\r\nHELLO") for w in sent) == (
+        protocol == 3
+    )
 
 
 def test_redis_get_udf_survives_reshard(spark):
