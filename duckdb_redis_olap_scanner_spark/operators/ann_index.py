@@ -179,7 +179,6 @@ def append_to_ivf_index(
     avoid."""
     spark = new_vectors.sparkSession
     _check_centroid_generation(spark, name, cent_ids, cent_vecs)
-    buckets = DI._index_buckets(spark, name)
     raw = _assigned(new_vectors, cent_ids, cent_vecs)
     assigned = (
         raw.groupBy("vec_id")
@@ -203,14 +202,8 @@ def append_to_ivf_index(
         .filter(F.col("cell").isin(batch_cells))
         .select("vec_id")
     )
-    (
-        assigned.join(existing, "vec_id", "left_anti")
-        .repartition(buckets, F.col("cell"))
-        .write.format("parquet")
-        .mode("append")
-        .bucketBy(buckets, "cell")
-        .sortBy("cell")
-        .saveAsTable(name)
+    DI._append_bucketed(
+        assigned.join(existing, "vec_id", "left_anti"), name, ["cell"]
     )
 
 
@@ -836,7 +829,6 @@ def append_to_ivf_pq_index(
     :func:`verify_ivf_pq_index`'s duplicate audit, not here)."""
     spark = new_vectors.sparkSession
     _check_pq_generation(spark, name, coarse, cent, sd)
-    buckets = DI._index_buckets(spark, name)
     raw = _pq_coded(new_vectors, coarse, cent, sd)
     deduped = (
         raw.groupBy("vec_id")
@@ -852,14 +844,8 @@ def append_to_ivf_pq_index(
         .filter(F.col("cell").isin(batch_cells))
         .select("vec_id")
     )
-    (
-        deduped.join(existing, "vec_id", "left_anti")
-        .repartition(buckets, F.col("cell"))
-        .write.format("parquet")
-        .mode("append")
-        .bucketBy(buckets, "cell")
-        .sortBy("cell")
-        .saveAsTable(name)
+    DI._append_bucketed(
+        deduped.join(existing, "vec_id", "left_anti"), name, ["cell"]
     )
 
 

@@ -137,32 +137,44 @@ def shingles(docs: DataFrame, n: int = 3) -> DataFrame:
     return tk.select("doc_id", F.explode(_shingle_expr(n)).alias("shingle"))
 
 
-def minhash_signatures(sh: DataFrame) -> DataFrame:
-    """(doc_id, m0..m7): K min-hashes over the shingle set.
+def minhash_signatures(docs: DataFrame) -> DataFrame:
+    """(doc_id, m0..m7, sh_arr): K min-hashes plus the doc's set of
+    64-bit shingle hashes, from ONE aggregation over the exploded
+    shingles — the signature build of every MinHash operator here and
+    in ``dedup_index`` (same constants, so the DuckDB oracles transfer).
 
     The shingle hash is projected ONCE per row before aggregation —
     inlining it in each of the 8 min() expressions would evaluate it 8×
     per row (Spark does not CSE across aggregates) — and is the
     codegen'd ``md5_hash64`` (DuckDB twin: ``md5_number_lower % p``),
-    not the interpreted per-character fold.
+    not the interpreted per-character fold. It runs on EXPLODED rows,
+    not inside an array-HOF lambda: HOF lambdas are interpreted
+    expression trees (and CollapseProject re-inlines them into every
+    consumer), while the exploded form is whole-stage-codegen'd — ~4×
+    faster end-to-end measured at sf0.1. Callers that never read
+    ``sh_arr`` pay nothing for it: Catalyst prunes the unused
+    ``collect_set`` from the aggregate.
     """
-    hashed = sh.select("doc_id", md5_hash64(F.col("shingle")).alias("h"))
-    aggs = [
+    ex = shingles(fan_out(docs, key="doc_id"))
+    hashed = ex.select("doc_id", md5_hash64(F.col("shingle")).alias("h"))
+    mins = [
         F.min((F.lit(a) * F.col("h") + F.lit(b)) % F.lit(HASH_P)).alias(f"m{k}")
         for k, (a, b) in enumerate(zip(MINHASH_A, MINHASH_B))
     ]
-    return hashed.groupBy("doc_id").agg(*aggs)
+    return hashed.groupBy("doc_id").agg(
+        *mins, F.collect_set("h").alias("sh_arr")
+    )
 
 
-def lsh_candidate_pairs(sig: DataFrame) -> DataFrame:
-    """Band the signatures (bands of BAND_ROWS) and emit candidate pairs
-    sharing any band bucket. The self-join is on (band, value) — only
-    docs in the same bucket ever meet, which is the 100 TB guarantee.
+def lsh_bands(sig: DataFrame, *carry) -> DataFrame:
+    """(doc_id, *carry, band, band_val): the signature cut into
+    N_MINHASH // BAND_ROWS bands of BAND_ROWS min-hashes, one row per
+    band. ``carry`` names (or aliased columns) of ``sig`` ride along
+    on every band row.
 
     Bands come from ONE explode over the signature row (a union of
     per-band projections would re-run the whole shingle→minhash
     aggregation once per band)."""
-    n_bands = N_MINHASH // BAND_ROWS
     band_structs = F.array(
         *[
             F.struct(
@@ -172,12 +184,22 @@ def lsh_candidate_pairs(sig: DataFrame) -> DataFrame:
                     + F.col(f"m{BAND_ROWS * j + 1}")
                 ).alias("band_val"),
             )
-            for j in range(n_bands)
+            for j in range(N_MINHASH // BAND_ROWS)
         ]
     )
-    bands = sig.select("doc_id", F.explode(band_structs).alias("bv")).select(
-        "doc_id", F.col("bv.band").alias("band"), F.col("bv.band_val").alias("band_val")
+    exploded = sig.select("doc_id", *carry, F.explode(band_structs).alias("bv"))
+    return exploded.select(
+        *[c for c in exploded.columns if c != "bv"],
+        F.col("bv.band").alias("band"),
+        F.col("bv.band_val").alias("band_val"),
     )
+
+
+def lsh_candidate_pairs(sig: DataFrame) -> DataFrame:
+    """Candidate pairs (doc_a < doc_b) sharing any band bucket. The
+    self-join is on (band, value) — only docs in the same bucket ever
+    meet, which is the 100 TB guarantee."""
+    bands = lsh_bands(sig)
     x = bands.alias("x")
     y = bands.alias("y")
     return (
@@ -193,6 +215,32 @@ def lsh_candidate_pairs(sig: DataFrame) -> DataFrame:
         )
         .distinct()
     )
+
+
+def _jaccard_tail(
+    cand: DataFrame, a: str, b: str, threshold: float, nb=None
+) -> DataFrame:
+    """(a, b, common, jaccard) for candidate rows carrying both docs'
+    hash sets ``sa`` and ``sb``, kept where jaccard ≥ threshold.
+    ``common`` is one ``array_intersect`` per pair; jaccard is an
+    int/int division, engine-stable. ``nb`` overrides the size of b's
+    set (the indexed probe reads it, checked, from the sets table)."""
+    stats = cand.select(
+        a,
+        b,
+        F.size(F.array_intersect("sa", "sb")).cast("long").alias("common"),
+        F.size("sa").alias("na"),
+        (F.size("sb") if nb is None else nb).alias("nb"),
+    )
+    return stats.select(
+        a,
+        b,
+        "common",
+        (
+            F.col("common").cast("double")
+            / (F.col("na") + F.col("nb") - F.col("common"))
+        ).alias("jaccard"),
+    ).filter(F.col("jaccard") >= threshold)
 
 
 def verify_jaccard(pairs: DataFrame, sh: DataFrame) -> DataFrame:
@@ -233,48 +281,14 @@ def minhash_lsh_dedup(docs: DataFrame, threshold: float = 0.2) -> DataFrame:
 
     Jaccard is computed over the per-doc set of 64-bit shingle hashes
     (md5-based, bit-identical in DuckDB — see ``text.md5_hash64``), so
-    the verify step is one ``array_intersect`` per candidate pair. The
-    shingle hash runs on EXPLODED rows, not inside an array-HOF lambda:
-    HOF lambdas are interpreted expression trees (and CollapseProject
-    re-inlines them into every consumer), while the exploded form is
-    whole-stage-codegen'd — ~4× faster end-to-end measured at sf0.1.
-    One aggregation then produces the K min-hashes AND the hash set
-    together (map-side partial agg), the hash set rides through the
-    band self-join, and the pipeline totals 3 shuffles versus ~8 for
-    the naive formulation. At 100 TB the dominant cost is the band
-    shuffle, whose keys (band, band_val) are uniformly distributed by
-    construction."""
-    ex = shingles(fan_out(docs, key="doc_id"))
-    hashed = ex.select("doc_id", md5_hash64(F.col("shingle")).alias("h"))
-    mins = [
-        F.min((F.lit(a) * F.col("h") + F.lit(b)) % F.lit(HASH_P)).alias(f"m{k}")
-        for k, (a, b) in enumerate(zip(MINHASH_A, MINHASH_B))
-    ]
-    sig = hashed.groupBy("doc_id").agg(
-        *mins, F.collect_set("h").alias("sh_arr")
-    )
-
-    n_bands = N_MINHASH // BAND_ROWS
-    band_structs = F.array(
-        *[
-            F.struct(
-                F.lit(j).alias("band"),
-                (
-                    F.col(f"m{BAND_ROWS * j}") * F.lit(HASH_P)
-                    + F.col(f"m{BAND_ROWS * j + 1}")
-                ).alias("band_val"),
-            )
-            for j in range(n_bands)
-        ]
-    )
-    bands = sig.select(
-        "doc_id", "sh_arr", F.explode(band_structs).alias("bv")
-    ).select(
-        "doc_id",
-        "sh_arr",
-        F.col("bv.band").alias("band"),
-        F.col("bv.band_val").alias("band_val"),
-    )
+    the verify step is one ``array_intersect`` per candidate pair. One
+    aggregation produces the K min-hashes AND the hash set together
+    (map-side partial agg, :func:`minhash_signatures`), the hash set
+    rides through the band self-join, and the pipeline totals 3
+    shuffles versus ~8 for the naive formulation. At 100 TB the
+    dominant cost is the band shuffle, whose keys (band, band_val) are
+    uniformly distributed by construction."""
+    bands = lsh_bands(minhash_signatures(docs), "sh_arr")
     x = bands.alias("x")
     y = bands.alias("y")
     cand = (
@@ -295,22 +309,7 @@ def minhash_lsh_dedup(docs: DataFrame, threshold: float = 0.2) -> DataFrame:
         .groupBy("doc_a", "doc_b")
         .agg(F.first("sa").alias("sa"), F.first("sb").alias("sb"))
     )
-    stats = cand.select(
-        "doc_a",
-        "doc_b",
-        F.size(F.array_intersect("sa", "sb")).cast("long").alias("common"),
-        F.size("sa").alias("na"),
-        F.size("sb").alias("nb"),
-    )
-    return stats.select(
-        "doc_a",
-        "doc_b",
-        "common",
-        (
-            F.col("common").cast("double")
-            / (F.col("na") + F.col("nb") - F.col("common"))
-        ).alias("jaccard"),
-    ).filter(F.col("jaccard") >= threshold)
+    return _jaccard_tail(cand, "doc_a", "doc_b", threshold)
 
 
 def incremental_minhash_dedup(
@@ -341,42 +340,8 @@ def incremental_minhash_dedup(
     :func:`dedup_index.incremental_minhash_indexed` — plan-asserted
     exchange-free on the history side in tests/test_dedup_index.py.
     """
-
-    def _bands(docs: DataFrame) -> DataFrame:
-        ex = shingles(fan_out(docs, key="doc_id"))
-        hashed = ex.select("doc_id", md5_hash64(F.col("shingle")).alias("h"))
-        mins = [
-            F.min(
-                (F.lit(a) * F.col("h") + F.lit(b)) % F.lit(HASH_P)
-            ).alias(f"m{k}")
-            for k, (a, b) in enumerate(zip(MINHASH_A, MINHASH_B))
-        ]
-        sig = hashed.groupBy("doc_id").agg(
-            *mins, F.collect_set("h").alias("sh_arr")
-        )
-        band_structs = F.array(
-            *[
-                F.struct(
-                    F.lit(j).alias("band"),
-                    (
-                        F.col(f"m{BAND_ROWS * j}") * F.lit(HASH_P)
-                        + F.col(f"m{BAND_ROWS * j + 1}")
-                    ).alias("band_val"),
-                )
-                for j in range(N_MINHASH // BAND_ROWS)
-            ]
-        )
-        return sig.select(
-            "doc_id", "sh_arr", F.explode(band_structs).alias("bv")
-        ).select(
-            "doc_id",
-            "sh_arr",
-            F.col("bv.band").alias("band"),
-            F.col("bv.band_val").alias("band_val"),
-        )
-
-    hb = _bands(history).alias("h")
-    ib = _bands(incoming).alias("i")
+    hb = lsh_bands(minhash_signatures(history), "sh_arr").alias("h")
+    ib = lsh_bands(minhash_signatures(incoming), "sh_arr").alias("i")
     cand = (
         ib.join(
             hb,
@@ -393,22 +358,7 @@ def incremental_minhash_dedup(
         .groupBy("doc_id", "match_id")
         .agg(F.first("sa").alias("sa"), F.first("sb").alias("sb"))
     )
-    stats = cand.select(
-        "doc_id",
-        "match_id",
-        F.size(F.array_intersect("sa", "sb")).cast("long").alias("common"),
-        F.size("sa").alias("na"),
-        F.size("sb").alias("nb"),
-    )
-    return stats.select(
-        "doc_id",
-        "match_id",
-        "common",
-        (
-            F.col("common").cast("double")
-            / (F.col("na") + F.col("nb") - F.col("common"))
-        ).alias("jaccard"),
-    ).filter(F.col("jaccard") >= threshold)
+    return _jaccard_tail(cand, "doc_id", "match_id", threshold)
 
 
 def simhash_signatures(docs: DataFrame) -> DataFrame:
@@ -802,7 +752,7 @@ def edit_distance_dedup(
     bound)`` form to early-exit rows already past ``max_dist``.
     """
     docs = fan_out(docs, key="doc_id")
-    cand = lsh_candidate_pairs(minhash_signatures(shingles(docs)))
+    cand = lsh_candidate_pairs(minhash_signatures(docs))
     canon = docs.select("doc_id", canonical_text().alias("ct"))
     j = (
         cand.join(

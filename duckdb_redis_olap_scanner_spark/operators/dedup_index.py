@@ -13,7 +13,7 @@ shuffle). This module is the deployment shape those docstrings promise:
   fingerprint, bucketed AND sorted on ``content_fp`` — makes the
   incremental anti join co-partitioned: the history side is read
   straight from its buckets with no Exchange (a LOCAL per-bucket sort
-  remains — see ``_save_bucketed``); only the (small) batch shuffles.
+  remains — see ``_bucketed_writer``); only the (small) batch shuffles.
   Cost scales with the batch, never the corpus.
 * the **band index** — two tables written together:
   ``{prefix}_bands`` (doc_id, band, band_val) bucketed+sorted on
@@ -52,8 +52,8 @@ import shutil
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .dedup import BAND_ROWS, MINHASH_A, MINHASH_B, N_MINHASH, shingles
-from .text import HASH_P, canonical_text, md5_hash64
+from .dedup import _jaccard_tail, lsh_bands, minhash_signatures
+from .text import canonical_text
 from .util import fan_out
 
 # Bucket count for the test/gate scale. At volume this is sized from
@@ -177,23 +177,7 @@ def _save_bucketed(
     if path is not None:
         _clear_location(spark, path)
         _LOCATION_CACHE[(spark.sparkContext.applicationId, name)] = path
-    # One writer task per bucket (the repartition hash matches the
-    # bucket hash): each bucket lands in exactly ONE file instead of
-    # one file per (task, bucket) pair — a small-file explosion at
-    # volume. Note the probe join still plans a LOCAL per-bucket Sort
-    # above the scan: since Spark 3.0 a bucketed scan does not claim
-    # its sortBy order unless the one-file-per-bucket legacy flag
-    # (spark.sql.legacy.bucketedTableScan.outputOrdering) is on; the
-    # sort is a near-linear in-memory pass over already-sorted runs,
-    # and the claim that matters at 100 TB — no history-side
-    # EXCHANGE — holds and is plan-asserted in tests.
-    writer = (
-        df.repartition(buckets, *[F.col(c) for c in bucket_cols])
-        .write.format("parquet")
-        .mode("overwrite")
-        .bucketBy(buckets, *bucket_cols)
-        .sortBy(*bucket_cols)
-    )
+    writer = _bucketed_writer(df, bucket_cols, buckets, "overwrite")
     if path is not None:
         writer = writer.option("path", path)
     writer.saveAsTable(name)
@@ -234,6 +218,37 @@ def _save_bucketed(
                 )
             meta.update(extra_meta)
         _write_sidecar(spark, loc, meta)
+
+
+def _bucketed_writer(df: DataFrame, cols: list[str], buckets: int, mode: str):
+    """The one bucketed parquet writer: ``df`` repartitioned onto the
+    bucket hash, bucketed and sorted on ``cols``."""
+    # One writer task per bucket (the repartition hash matches the
+    # bucket hash): each bucket lands in exactly ONE file instead of
+    # one file per (task, bucket) pair — a small-file explosion at
+    # volume. Note the probe join still plans a LOCAL per-bucket Sort
+    # above the scan: since Spark 3.0 a bucketed scan does not claim
+    # its sortBy order unless the one-file-per-bucket legacy flag
+    # (spark.sql.legacy.bucketedTableScan.outputOrdering) is on; the
+    # sort is a near-linear in-memory pass over already-sorted runs,
+    # and the claim that matters at 100 TB — no history-side
+    # EXCHANGE — holds and is plan-asserted in tests.
+    return (
+        df.repartition(buckets, *[F.col(c) for c in cols])
+        .write.format("parquet")
+        .mode(mode)
+        .bucketBy(buckets, *cols)
+        .sortBy(*cols)
+    )
+
+
+def _append_bucketed(df: DataFrame, name: str, cols: list[str]) -> None:
+    """Append ``df`` into the existing bucketed table ``name`` under
+    the table's own bucket spec: each append adds per-bucket files,
+    one batch-sized shuffle onto the bucket hash, and leaves every
+    probe plan over the table unchanged."""
+    buckets = _index_buckets(df.sparkSession, name)
+    _bucketed_writer(df, cols, buckets, "append").saveAsTable(name)
 
 
 _SIDECAR = "_spark_graft_index.json"
@@ -390,7 +405,7 @@ def incremental_dedup_indexed(
     index: batch hash-aggregate + LEFT ANTI join where the history
     side comes straight out of its buckets with no Exchange
     (plan-asserted in tests/test_dedup_index.py; a local per-bucket
-    sort remains — see ``_save_bucketed``). Output contract is
+    sort remains — see ``_bucketed_writer``). Output contract is
     identical: (content_fp, keep_id, batch_dup_cnt). The anti join
     uses plain equality, NOT null-safe ``<=>``: a NULL-text doc's
     NULL fingerprint never matches the index, so such docs survive
@@ -432,16 +447,11 @@ def append_fingerprints(batch_survivors: DataFrame, name: str) -> None:
     rows would therefore be pure dead weight (one more NULL row per
     maintenance cycle that can never reject anything), so they are
     filtered here rather than persisted (ADVICE r13)."""
-    buckets = _index_buckets(batch_survivors.sparkSession, name)
-    (
+    _append_bucketed(
         batch_survivors.filter(F.col("content_fp").isNotNull())
-        .select("content_fp")
-        .repartition(buckets, F.col("content_fp"))
-        .write.format("parquet")
-        .mode("append")
-        .bucketBy(buckets, "content_fp")
-        .sortBy("content_fp")
-        .saveAsTable(name)
+        .select("content_fp"),
+        name,
+        ["content_fp"],
     )
 
 
@@ -469,32 +479,15 @@ def append_to_band_index(
     double-inserts set rows and multiplies probe matches — appends are
     at-most-once per accepted batch, and :func:`verify_band_index` is
     the offline audit for both failure shapes."""
-    spark = accepted_docs.sparkSession
-    sig = _signatures_with_sets(accepted_docs).persist()
+    sig = minhash_signatures(accepted_docs).persist()
     try:
-        bands = sig.select(
-            "doc_id", F.explode(_band_structs()).alias("bv")
-        ).select(
-            "doc_id",
-            F.col("bv.band").alias("band"),
-            F.col("bv.band_val").alias("band_val"),
+        _append_bucketed(
+            lsh_bands(sig), f"{prefix}_bands", ["band", "band_val"]
         )
-        nb = _index_buckets(spark, f"{prefix}_bands")
-        (
-            bands.repartition(nb, F.col("band"), F.col("band_val"))
-            .write.format("parquet").mode("append")
-            .bucketBy(nb, "band", "band_val").sortBy("band", "band_val")
-            .saveAsTable(f"{prefix}_bands")
-        )
-        sets_ = sig.select(
-            "doc_id", "sh_arr", F.size("sh_arr").alias("n_sh")
-        )
-        ns = _index_buckets(spark, f"{prefix}_sets")
-        (
-            sets_.repartition(ns, F.col("doc_id"))
-            .write.format("parquet").mode("append")
-            .bucketBy(ns, "doc_id").sortBy("doc_id")
-            .saveAsTable(f"{prefix}_sets")
+        _append_bucketed(
+            sig.select("doc_id", "sh_arr", F.size("sh_arr").alias("n_sh")),
+            f"{prefix}_sets",
+            ["doc_id"],
         )
     finally:
         sig.unpersist()
@@ -562,37 +555,6 @@ def _index_buckets(spark: SparkSession, name: str) -> int:
     return int(row[0].data_type)
 
 
-def _signatures_with_sets(docs: DataFrame) -> DataFrame:
-    """(doc_id, m0..m7, sh_arr): K min-hashes plus the 64-bit
-    shingle-hash set, one aggregation — the same signature build as
-    :func:`dedup.minhash_lsh_dedup` (same constants, so the DuckDB
-    oracles transfer)."""
-    ex = shingles(fan_out(docs, key="doc_id"))
-    hashed = ex.select("doc_id", md5_hash64(F.col("shingle")).alias("h"))
-    mins = [
-        F.min((F.lit(a) * F.col("h") + F.lit(b)) % F.lit(HASH_P)).alias(f"m{k}")
-        for k, (a, b) in enumerate(zip(MINHASH_A, MINHASH_B))
-    ]
-    return hashed.groupBy("doc_id").agg(
-        *mins, F.collect_set("h").alias("sh_arr")
-    )
-
-
-def _band_structs():
-    return F.array(
-        *[
-            F.struct(
-                F.lit(j).alias("band"),
-                (
-                    F.col(f"m{BAND_ROWS * j}") * F.lit(HASH_P)
-                    + F.col(f"m{BAND_ROWS * j + 1}")
-                ).alias("band_val"),
-            )
-            for j in range(N_MINHASH // BAND_ROWS)
-        ]
-    )
-
-
 def write_band_index(
     history: DataFrame,
     prefix: str,
@@ -612,27 +574,17 @@ def write_band_index(
     build is the ingest run's one-time cost, amortized over every
     later batch probe.
     """
-    sig = _signatures_with_sets(history).persist()
+    sig = minhash_signatures(history).persist()
     try:
-        bands = sig.select(
-            "doc_id", F.explode(_band_structs()).alias("bv")
-        ).select(
-            "doc_id",
-            F.col("bv.band").alias("band"),
-            F.col("bv.band_val").alias("band_val"),
-        )
         _save_bucketed(
-            bands,
+            lsh_bands(sig),
             f"{prefix}_bands",
             ["band", "band_val"],
             buckets,
             f"{path_prefix}_bands" if path_prefix else None,
         )
-        sets_ = sig.select(
-            "doc_id", "sh_arr", F.size("sh_arr").alias("n_sh")
-        )
         _save_bucketed(
-            sets_,
+            sig.select("doc_id", "sh_arr", F.size("sh_arr").alias("n_sh")),
             f"{prefix}_sets",
             ["doc_id"],
             buckets,
@@ -673,14 +625,8 @@ def incremental_minhash_indexed(
         F.col("sh_arr").alias("sb"),
         F.col("n_sh").alias("nb"),
     )
-    sig = _signatures_with_sets(incoming)
-    batch_bands = sig.select(
-        "doc_id", F.col("sh_arr").alias("sa"),
-        F.explode(_band_structs()).alias("bv"),
-    ).select(
-        "doc_id", "sa",
-        F.col("bv.band").alias("band"),
-        F.col("bv.band_val").alias("band_val"),
+    batch_bands = lsh_bands(
+        minhash_signatures(incoming), F.col("sh_arr").alias("sa")
     )
     cand = (
         batch_bands.join(bands_idx, ["band", "band_val"])
@@ -717,23 +663,10 @@ def incremental_minhash_indexed(
             ),
         )).cast("long"),
     ).otherwise(F.col("nb"))
-    stats = (
-        cand.join(sets_idx, "match_id", "left")
-        .select(
-            "doc_id",
-            "match_id",
-            F.size(F.array_intersect("sa", "sb")).cast("long")
-            .alias("common"),
-            F.size("sa").alias("na"),
-            nb_checked.alias("nb"),
-        )
-    )
-    return stats.select(
+    return _jaccard_tail(
+        cand.join(sets_idx, "match_id", "left"),
         "doc_id",
         "match_id",
-        "common",
-        (
-            F.col("common").cast("double")
-            / (F.col("na") + F.col("nb") - F.col("common"))
-        ).alias("jaccard"),
-    ).filter(F.col("jaccard") >= threshold)
+        threshold,
+        nb=nb_checked,
+    )

@@ -586,7 +586,6 @@ _SQL_BUCKET = (
     "per-stage 100 TB arguments.",
 )
 def pipeline_full_curation(spark: SparkSession, sf: str):
-    from pyspark import StorageLevel
     from pyspark.sql import functions as F
 
     from ..operators.dedup import shingles
@@ -602,14 +601,13 @@ def pipeline_full_curation(spark: SparkSession, sf: str):
     # Now ONE narrow per-doc decision frame carries everything except
     # the shingle sets: rep stats (which already include n_tok), the
     # exact-dedup fingerprint (sha2(canonical, 256) — the identical
-    # exact_dedup expression), and the split bucket, computed in one
-    # pass over the text and PERSISTED for the duration of this plan's
-    # execution. It feeds four consumers (dedup keep set, train
-    # gating, val split, final projection); same within-one-execution
-    # rationale and storage level as pipeline_curation_v2's persist —
-    # a production run would checkpoint it to storage instead. Raw
-    # text is touched again ONLY by the two shingle passes, each over
-    # an id-pruned semi-join of the corpus.
+    # exact_dedup expression), and the split bucket, computed together
+    # from the text. It feeds four consumers (dedup keep set, train
+    # gating, val split, final projection), each of which re-derives
+    # it: persisting it measured no faster at sf0.1 in interleaved
+    # pairs, and a persist nobody releases pins the frame in the
+    # session's cache. Beyond it, raw text is touched ONLY by the two
+    # shingle passes, each over an id-pruned semi-join of the corpus.
     c = T.canonical_text()
     per_doc = (
         T.with_repetition_stats(docs)
@@ -624,7 +622,6 @@ def pipeline_full_curation(spark: SparkSession, sf: str):
         )
         .select("doc_id", "lang", "n_tok", "rep_ok", "content_fp",
                 "bucket")
-        .persist(StorageLevel.MEMORY_AND_DISK)
     )
     # 1) repetition quality gate + 2) exact-dedup survivors (keep_id =
     #    min doc per fingerprint among gated docs — exact_dedup's

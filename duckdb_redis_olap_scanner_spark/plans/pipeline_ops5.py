@@ -2198,18 +2198,16 @@ V2_BUDGET = 40  # per-source token budget for the post-filter selection
     "source key), so the composition adds no new scale hazard.",
 )
 def pipeline_curation_v2(spark: SparkSession, sf: str):
-    from pyspark import StorageLevel
-
     docs = table(spark, sf, "documents")
     g = T.margin_features(docs).where(F.col("margin") > 0).select(
         "doc_id", "margin"
     )
     # The gated corpus feeds THREE consumers (segment explode, the
-    # doc-level reassembly join, and the budget projection); without a
-    # persist each re-derives the classifier features + join — eight
-    # documents scans measured. Same rationale as the minhash shingle
-    # persist; a production run would checkpoint to storage instead.
-    kd = docs.join(g, "doc_id").persist(StorageLevel.MEMORY_AND_DISK)
+    # doc-level reassembly join, and the budget projection), each of
+    # which re-derives it: persisting it measured no faster at sf0.1
+    # in interleaved pairs, and a persist nobody releases pins the
+    # frame in the session's cache.
+    kd = docs.join(g, "doc_id")
     seg = D.segment_dedup(kd)
     sv = seg.where(2 * F.col("n_kept") >= F.col("n_segs")).select(
         "doc_id", "n_segs", "n_kept"

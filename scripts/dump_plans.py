@@ -1,17 +1,22 @@
 #!/usr/bin/env python
-"""Capture .explain('formatted') for every bench-tagged query into
-OUT_DIR/<query>.txt, plus a one-line summary of exchange / python-stage
-counts per query on stdout.
+"""Capture .explain('formatted') for catalog entries into
+OUT_DIR/<entry>.txt, plus a one-line summary of exchange / python-stage
+counts per entry on stdout. The entries are the ENTRY names given, or
+every bench-tagged entry when none are.
 
-Expression ids (``#123``) and exchange ids (``plan_id=45``) are
-normalised to ``#<id>`` and ``plan_id=<id>``: they count up across the
-session, so without this two runs of the same code differ. Plans of two
-checkouts then compare with a plain ``diff -r OUT_A OUT_B``.
+Expression ids (``#123``), exchange ids (``plan_id=45``), RDD ids
+(``RDD[67]``) and lambda variable counters (``lambda x_12#``) are
+normalised to ``#<id>``, ``plan_id=<id>``, ``RDD[<id>]`` and
+``lambda x_<n>#``: they count up across the session, so without this
+two runs of the same code differ. The application id (which names the
+index tables some entries build) becomes ``<app>`` and the warehouse
+directory ``<warehouse>``. Plans of two checkouts then compare with a
+plain ``diff -r OUT_A OUT_B``.
 
 An entry that fails to build (say, a table the dir does not hold)
 gets a one-line ``error: <exception type>`` file instead.
 
-Usage: python scripts/r21_plans.py OUT_DIR [SF_DIR]
+Usage: python scripts/dump_plans.py OUT_DIR [SF_DIR [ENTRY ...]]
 (SF_DIR defaults to $SPARK_GRAFT_SF_DIR or /root/testdata/sf0.1; the
 session is ``get_spark``'s, local[$SPARK_GRAFT_CPUS].)
 """
@@ -31,11 +36,17 @@ from duckdb_redis_olap_scanner_spark.plans.catalog import registry  # noqa: E402
 
 _EXPR_ID = re.compile(r"#\d+")
 _PLAN_ID = re.compile(r"plan_id=\d+")
+_RDD_ID = re.compile(r"RDD\[\d+\]")
+_LAMBDA_VAR = re.compile(r"(lambda \w+?_)\d+#")
+_APP_ID = re.compile(r"local[-_]\d{10,}")
 _PYTHON_OPS = ("MapInArrow", "MapInPandas", "ArrowEvalPython",
                "BatchEvalPython", "FlatMapGroupsInPandas")
 
 
-def normalise(plan: str) -> str:
+def normalise(plan: str, warehouse: str) -> str:
+    plan = plan.replace(warehouse, "<warehouse>")
+    plan = _APP_ID.sub("<app>", _LAMBDA_VAR.sub(r"\1<n>#", plan))
+    plan = _RDD_ID.sub("RDD[<id>]", plan)
     return _PLAN_ID.sub("plan_id=<id>", _EXPR_ID.sub("#<id>", plan))
 
 
@@ -48,10 +59,13 @@ def main() -> None:
     )
     os.makedirs(out_dir, exist_ok=True)
 
-    spark = get_spark(app_name="r21plans")
+    spark = get_spark(app_name="dump_plans")
     spark.sparkContext.setLogLevel("ERROR")
+    warehouse = spark.conf.get("spark.sql.warehouse.dir").removeprefix("file:")
     entries = registry()
-    names = sorted(n for n, e in entries.items() if "bench" in e.tags)
+    names = sys.argv[3:] or sorted(
+        n for n, e in entries.items() if "bench" in e.tags
+    )
     for name in names:
         buf = io.StringIO()
         try:
@@ -64,7 +78,7 @@ def main() -> None:
             with open(os.path.join(out_dir, f"{name}.txt"), "w") as f:
                 f.write(error + "\n")
             continue
-        plan = normalise(buf.getvalue())
+        plan = normalise(buf.getvalue(), warehouse)
         with open(os.path.join(out_dir, f"{name}.txt"), "w") as f:
             f.write(plan)
         # one "(N) Operator" header per node in the details section

@@ -260,7 +260,7 @@ def test_band_index_append_maintenance(spark, split_docs, tmp_path):
         }
         shingled = {
             r.doc_id
-            for r in DI._signatures_with_sets(accepted)
+            for r in D.minhash_signatures(accepted)
             .select("doc_id").collect()
         }
         assert self_hits == shingled  # every shingle-bearing doc self-matches
@@ -532,20 +532,10 @@ def test_torn_band_append_raises_loudly(spark, split_docs, tmp_path):
         accepted = inc.limit(20)
         # Simulate the torn state: replay ONLY the bands half of the
         # append (same math as append_to_band_index's first write).
-        sig = DI._signatures_with_sets(accepted)
-        bands = sig.select(
-            "doc_id", F.explode(DI._band_structs()).alias("bv")
-        ).select(
-            "doc_id",
-            F.col("bv.band").alias("band"),
-            F.col("bv.band_val").alias("band_val"),
-        )
-        nb = DI._index_buckets(spark, "test_band_torn_bands")
-        (
-            bands.repartition(nb, F.col("band"), F.col("band_val"))
-            .write.format("parquet").mode("append")
-            .bucketBy(nb, "band", "band_val").sortBy("band", "band_val")
-            .saveAsTable("test_band_torn_bands")
+        DI._append_bucketed(
+            D.lsh_bands(D.minhash_signatures(accepted)),
+            "test_band_torn_bands",
+            ["band", "band_val"],
         )
         with pytest.raises(Exception, match="band index is torn"):
             DI.incremental_minhash_indexed(
@@ -568,20 +558,10 @@ def test_verify_band_index_audit(spark, split_docs, tmp_path):
         DI.verify_band_index(spark, "test_band_audit")  # healthy
 
         accepted = inc.limit(10)
-        sig = DI._signatures_with_sets(accepted)
-        bands = sig.select(
-            "doc_id", F.explode(DI._band_structs()).alias("bv")
-        ).select(
-            "doc_id",
-            F.col("bv.band").alias("band"),
-            F.col("bv.band_val").alias("band_val"),
-        )
-        nb = DI._index_buckets(spark, "test_band_audit_bands")
-        (
-            bands.repartition(nb, F.col("band"), F.col("band_val"))
-            .write.format("parquet").mode("append")
-            .bucketBy(nb, "band", "band_val").sortBy("band", "band_val")
-            .saveAsTable("test_band_audit_bands")
+        DI._append_bucketed(
+            D.lsh_bands(D.minhash_signatures(accepted)),
+            "test_band_audit_bands",
+            ["band", "band_val"],
         )
         with pytest.raises(RuntimeError, match="torn"):
             DI.verify_band_index(spark, "test_band_audit")

@@ -482,3 +482,29 @@ def test_preaggregated_order_joins_merge_above_gate(spark):
         plan = df._jdf.queryExecution().executedPlan().toString()
         assert "SortMergeJoin" not in plan, (name, "test scale broadcasts")
         assert df.collect(), name
+
+
+def test_edit_distance_plan_prunes_unused_hash_set(spark):
+    """``minhash_signatures`` always aggregates the shingle-hash set
+    (``sh_arr``); ``edit_distance_dedup`` never reads it, and Catalyst
+    must prune its ``collect_set`` out of the executed aggregate. The
+    Jaccard entry, which reads the set, keeps it — so the string check
+    cannot pass vacuously."""
+    df = ENTRIES["dedup_edit_distance"].raw_fn(spark, SF_DIR)
+    df.collect()
+    assert "collect_set" not in (
+        df._jdf.queryExecution().executedPlan().toString()
+    )
+    assert "collect_set" in plan_of(spark, "dedup_minhash_lsh")
+
+
+@pytest.mark.parametrize(
+    "name", ["pipeline_full_curation", "pipeline_curation_v2"]
+)
+def test_entry_action_leaves_cache_empty(spark, name):
+    """A frame persisted inside an entry and never released stays
+    pinned in the session's cache until eviction. After the entry's
+    action the JVM cache manager must be as empty as before it."""
+    spark.catalog.clearCache()
+    ENTRIES[name].raw_fn(spark, SF_DIR).count()
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
