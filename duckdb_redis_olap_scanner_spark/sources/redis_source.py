@@ -47,16 +47,19 @@ ONE input partition (matching the reference's ``MaxThreads()==1``,
   ``transport.resp``, so rows the scan surfaces carry the value from
   the key's CURRENT owner.
 
-Binary-key contract: the scan-family schemas are StringType, so a key
-that is not valid UTF-8 surfaces with replacement characters (and its
-per-key value fetch may then miss). Slot-ownership filtering is
-computed on the RAW bytes (``_scan_owned``), so such keys are counted
-exactly once like any other — only their rendering is lossy. Pipelines
-that need byte-faithful keys should use binary-safe key design (the
-norm for OLAP keyspaces) or a future BinaryType schema variant.
+Binary-key contract: SCAN's key bytes go back to the server as they
+came, for the MGET/HGETALL value fetch and for the cluster slot filter
+(``_scan_owned``), so a key that is not valid UTF-8 keeps its value,
+its fields and its exactly-once count like any other key. Only its
+rendering is lossy: the schemas are StringType, so the key column (and
+any value, field, list element or zset member that is not valid UTF-8)
+shows U+FFFD replacement characters. Pipelines that need byte-faithful
+keys should use binary-safe key design (the norm for OLAP keyspaces)
+or a future BinaryType schema variant.
 
-Arrow RecordBatches are yielded so rows never pass through
-Python-object row conversion.
+Every string column is built by :func:`_utf8_column` straight from the
+reply's bytes into Arrow, so rows never pass through Python ``str``
+objects or Python-object row conversion.
 
 One code path per job: the three scan-family readers share
 ``_ScanFamilyReader`` (partitions, connection, the ``_scan_owned`` page
@@ -95,6 +98,18 @@ from ..transport.resp import (
     host_port_of,
     raise_nested,
 )
+
+
+def _utf8_column(values: list) -> pa.Array:
+    """An Arrow string column from reply elements (bytes, str or None):
+    one copy into a binary array, then Arrow's UTF-8 validation. Only
+    a batch that fails it is rebuilt through :func:`_as_str`, which
+    gives the documented ``decode("utf-8", "replace")`` rendering and
+    raises an error element's :class:`RespError`."""
+    try:
+        return pa.array(values, pa.binary()).cast(pa.string())
+    except (pa.ArrowInvalid, pa.ArrowTypeError):
+        return pa.array([_as_str(v) for v in values], pa.string())
 
 
 class RedisShard(InputPartition):
@@ -230,17 +245,19 @@ def _shards(options: dict) -> list[RedisShard]:
     return [RedisShard(host, port, p, count) for p in patterns]
 
 
-def _scan_owned(client: RedisClient, part: RedisShard) -> Iterator[list[str]]:
-    """SCAN batches for one partition, slot-filtered to the ranges the
-    node owned in the topology snapshot. Standalone / shard_patterns
-    partitions carry no ranges and pass straight through (zero per-key
-    cost). On the cluster path the slot is computed from the RAW key
-    bytes BEFORE decoding — a lossy UTF-8 decode of a binary key
-    re-encodes the replacement characters and would mis-slot it,
-    silently dropping the row (review r14) — and computed once per
-    key, not once per owned range."""
+def _scan_owned(client: RedisClient, part: RedisShard) -> Iterator[list[bytes]]:
+    """SCAN batches of raw key bytes for one partition, slot-filtered
+    to the ranges the node owned in the topology snapshot. Standalone /
+    shard_patterns partitions carry no ranges and pass straight through
+    (zero per-key cost). On the cluster path the slot is computed from
+    the raw bytes — a lossy UTF-8 decode of a binary key re-encodes the
+    replacement characters and would mis-slot it, silently dropping the
+    row (review r14) — and computed once per key, not once per owned
+    range."""
     if part.slot_ranges is None:
-        yield from client.scan_iter(match=part.pattern, count=part.count)
+        yield from client.scan_iter(
+            match=part.pattern, count=part.count, raw=True
+        )
         return
     if (
         part.topology is not None
@@ -258,7 +275,7 @@ def _scan_owned(client: RedisClient, part: RedisShard) -> Iterator[list[str]]:
         for k in raw:
             s = key_slot(k)
             if any(lo <= s <= hi for lo, hi in part.slot_ranges):
-                keys.append(_as_str(k))
+                keys.append(k)
         if keys:
             yield keys
 
@@ -284,8 +301,8 @@ class _ScanFamilyReader(DataSourceReader):
 
 
 class RedisScanReader(_ScanFamilyReader):
-    def _batch(self, client: RedisClient, keys: list[str]) -> pa.RecordBatch:
-        return pa.RecordBatch.from_pydict({"key_name": keys})
+    def _batch(self, client: RedisClient, keys: list[bytes]) -> pa.RecordBatch:
+        return pa.RecordBatch.from_arrays([_utf8_column(keys)], ["key_name"])
 
 
 class RedisScanDataSource(DataSource):
@@ -305,9 +322,11 @@ class RedisScanDataSource(DataSource):
 
 
 class RedisKVReader(_ScanFamilyReader):
-    def _batch(self, client: RedisClient, keys: list[str]) -> pa.RecordBatch:
-        values = client.mget(keys)  # one round trip per SCAN page
-        return pa.RecordBatch.from_pydict({"key": keys, "value": values})
+    def _batch(self, client: RedisClient, keys: list[bytes]) -> pa.RecordBatch:
+        values = client.mget_raw(keys)  # one round trip per SCAN page
+        return pa.RecordBatch.from_arrays(
+            [_utf8_column(keys), _utf8_column(values)], ["key", "value"]
+        )
 
 
 class _PipelinedWriter(DataSourceWriter):
@@ -384,11 +403,26 @@ class RedisHashReader(_ScanFamilyReader):
     # (SURVEY §1.2's reserved map-type row).
     PROTOCOL = 3
 
-    def _batch(self, client: RedisClient, keys: list[str]) -> pa.RecordBatch:
-        maps = client.hgetall_pipelined(keys)  # one round trip per page
-        return pa.RecordBatch.from_pydict(
-            {"key": keys, "value": [list(m.items()) for m in maps]},
-            schema=_HASH_ARROW_SCHEMA,
+    def _batch(self, client: RedisClient, keys: list[bytes]) -> pa.RecordBatch:
+        fields: list = []
+        values: list = []
+        offsets = [0]
+        # one round trip per page; a missing or wrong-type key is {}
+        for reply in client.hgetall_pipelined_raw(keys):
+            if isinstance(reply, dict):  # RESP3 map
+                fields.extend(reply)
+                values.extend(reply.values())
+            elif reply:  # RESP2 flat field/value list
+                fields.extend(reply[0::2])
+                values.extend(reply[1::2])
+            offsets.append(len(fields))
+        maps = pa.MapArray.from_arrays(
+            pa.array(offsets, pa.int32()),
+            _utf8_column(fields),
+            _utf8_column(values),
+        )
+        return pa.RecordBatch.from_arrays(
+            [_utf8_column(keys), maps], schema=_HASH_ARROW_SCHEMA
         )
 
 
@@ -453,10 +487,6 @@ class RedisHashWriter(_PipelinedWriter):
 class _SingleKeyPartition(InputPartition):
     def __init__(self, host: str, port: int, key: str) -> None:
         self.host, self.port, self.key = host, port, key
-
-
-def _text(v) -> str:
-    return v.decode() if isinstance(v, bytes) else str(v)
 
 
 class _KeyPageReader(DataSourceReader):
@@ -525,18 +555,20 @@ class RedisZSetReader(_KeyPageReader):
     def _page(
         self, client: RedisClient, key: str, start: int, stop: str
     ) -> pa.RecordBatch:
-        pairs = raise_nested(
+        reply = raise_nested(
             client.command("ZRANGE", key, str(start), stop, "WITHSCORES")
         ) or []
-        if pairs and not isinstance(pairs[0], (list, tuple)):
-            # RESP2: two reply elements per member
-            pairs = list(zip(pairs[0::2], pairs[1::2]))
-        return pa.RecordBatch.from_pydict(
-            {
-                "member": [_text(m) for m, _s in pairs],
-                "score": [float(s) for _m, s in pairs],
-                "rank": range(start, start + len(pairs)),
-            },
+        if reply and isinstance(reply[0], list):  # RESP3 [member, score]
+            members = [m for m, _s in reply]
+            scores = [s for _m, s in reply]
+        else:  # RESP2: two reply elements per member
+            members, scores = reply[0::2], reply[1::2]
+        return pa.RecordBatch.from_arrays(
+            [
+                _utf8_column(members),
+                pa.array([float(s) for s in scores], pa.float64()),
+                pa.array(range(start, start + len(members)), pa.int32()),
+            ],
             schema=_ZSET_ARROW_SCHEMA,
         )
 
@@ -611,11 +643,11 @@ class RedisListReader(_KeyPageReader):
         elems = raise_nested(
             client.command("LRANGE", key, str(start), stop)
         ) or []
-        return pa.RecordBatch.from_pydict(
-            {
-                "pos": range(start, start + len(elems)),
-                "element": [_text(v) for v in elems],
-            },
+        return pa.RecordBatch.from_arrays(
+            [
+                pa.array(range(start, start + len(elems)), pa.int32()),
+                _utf8_column(elems),
+            ],
             schema=_LIST_ARROW_SCHEMA,
         )
 

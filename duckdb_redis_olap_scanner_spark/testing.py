@@ -23,6 +23,10 @@ wall-clock decay), deterministic XADD '*' ids (last+1, not server
 time), stand-in slot numbers in -MOVED/-ASK redirects (clients parse
 but never interpret the slot), and inline-command rejection.
 
+Binary safety: command arguments decode with ``surrogateescape`` and
+every reply encodes them back the same way, so keys, fields and values
+that are not UTF-8 store and return byte for byte, as in real Redis.
+
 Protocol: connections start RESP2; HELLO 3 switches the connection to
 RESP3, flipping the two reply shapes that changed (HGETALL → ``%`` map,
 ZRANGE WITHSCORES → [member, double] pairs), as real Redis does.
@@ -56,6 +60,13 @@ _REDIS_ERROR_CODES = frozenset({
 })
 
 
+def _wire(s: str) -> bytes:
+    """``s`` back as the bytes it was read from: command arguments are
+    decoded with ``surrogateescape``, so a byte that is not UTF-8
+    round-trips to the exact byte the client sent."""
+    return s.encode("utf-8", "surrogateescape")
+
+
 def _encode(obj: Any, proto: int = 2) -> bytes:
     """Encode a Python value as a RESP reply. ``proto`` only affects
     the null shape: RESP3 connections get the ``_`` null, RESP2 the
@@ -69,7 +80,7 @@ def _encode(obj: Any, proto: int = 2) -> bytes:
     if isinstance(obj, int):
         return b":%d\r\n" % obj
     if isinstance(obj, str):
-        obj = obj.encode("utf-8")
+        obj = _wire(obj)
     if isinstance(obj, bytes):
         return b"$%d\r\n" % len(obj) + obj + CRLF
     if isinstance(obj, (list, tuple)):
@@ -89,12 +100,12 @@ def _encode(obj: Any, proto: int = 2) -> bytes:
         first = msg.split(" ", 1)[0]
         if first not in _REDIS_ERROR_CODES:
             msg = "ERR " + msg
-        return b"-" + msg.encode("utf-8") + CRLF
+        return b"-" + _wire(msg) + CRLF
     raise TypeError(f"cannot encode {type(obj)}")
 
 
 def _simple(s: str) -> bytes:
-    return b"+" + s.encode("utf-8") + CRLF
+    return b"+" + _wire(s) + CRLF
 
 
 def _encode_double(x: float) -> bytes:
@@ -107,7 +118,7 @@ def _encode_double(x: float) -> bytes:
 
 def _error(msg: str) -> bytes:
     """A verbatim RESP error line (no ERR prefix prepended)."""
-    return b"-" + msg.encode("utf-8") + CRLF
+    return b"-" + _wire(msg) + CRLF
 
 
 # The exact real-server wording; clients match on the WRONGTYPE code.
@@ -120,7 +131,7 @@ def _fake_slot(key: str) -> int:
     """A deterministic slot number for redirect errors. Clients parse
     but never interpret the slot, so a stand-in hash (not real
     CRC16-XMODEM of the hash tag) serves the wire contract."""
-    return sum(key.encode("utf-8")) % 16384
+    return sum(_wire(key)) % 16384
 
 
 def _encode_map(d: dict, proto: int) -> bytes:
@@ -260,6 +271,10 @@ class _Handler(socketserver.BaseRequestHandler):
                 return
 
     def _read_command(self, reader: _SocketReader) -> list[str] | None:
+        """One command's arguments as str, binary-safe: bytes that are
+        not UTF-8 decode to surrogate escapes, and every reply encodes
+        them back (:func:`_wire`), so keys, fields and values of any
+        bytes store and return exactly as real Redis does."""
         line = reader.read_line()
         if not line.startswith(b"*"):
             raise RespProtocolError("inline commands unsupported")
@@ -269,7 +284,11 @@ class _Handler(socketserver.BaseRequestHandler):
             hdr = reader.read_line()
             if not hdr.startswith(b"$"):
                 raise RespProtocolError("expected bulk string")
-            args.append(reader.read_exact(int(hdr[1:])).decode("utf-8"))
+            args.append(
+                reader.read_exact(int(hdr[1:])).decode(
+                    "utf-8", "surrogateescape"
+                )
+            )
         return args
 
     @staticmethod

@@ -15,6 +15,20 @@ protocol specification.  Unlike the reference we:
   reference's empty-string quirk (``redis_client.cpp:232-236``); callers
   that want bug-compatibility can coalesce.
 
+Reply buffer: :class:`_SocketReader` keeps one ``bytes`` buffer and an
+offset into it. Reading a line or a payload slices it out once and
+moves the offset; nothing is re-copied per element. Only when a read
+needs more bytes than the buffer holds does ``_fill`` join the unread
+tail with as many ``recv`` chunks as that read needs, in one join, so
+a reply of any size costs linear time. Container replies are framed by
+``read_elements``, which slices every bulk string already whole in the
+buffer in one step and hands anything else to the general parser. The
+scan-family sources take these slices as they are: SCAN keys go back
+to the server undecoded (``scan_iter(raw=True)``, :meth:`mget_raw`,
+:meth:`hgetall_pipelined_raw`) and become Arrow columns without a
+Python ``str`` in between (the reference parses its replies zero-copy
+into DuckDB vectors, ``resp_parser.cpp:41-130``).
+
 No third-party client library is used because none is available in the
 runtime; the protocol is simple and public.
 """
@@ -67,34 +81,84 @@ def encode_command(*args: Any) -> bytes:
 
 
 class _SocketReader:
-    """Buffered reader that reassembles replies across recv() calls."""
+    """Buffered reader that reassembles replies across recv() calls.
+
+    One bytes buffer and an offset into it: ``read_line`` and
+    ``read_exact`` slice out one element and advance the offset, so
+    each element is copied once and nothing before the offset is
+    copied again. Only ``_fill`` builds a new buffer."""
 
     def __init__(self, sock: socket.socket, bufsize: int = 65536) -> None:
         self._sock = sock
         self._buf = b""
+        self._pos = 0
         self._bufsize = bufsize
 
-    def _fill(self) -> None:
-        chunk = self._sock.recv(self._bufsize)
-        if not chunk:
-            raise RespProtocolError("connection closed by peer")
-        self._buf += chunk
+    def _fill(self, need: int) -> None:
+        """Make the unread bytes at least ``need`` long: the unread
+        tail and as many recv chunks as that takes, joined once."""
+        parts = [self._buf[self._pos :]]
+        have = len(parts[0])
+        while have < need:
+            # recv allocates its whole size argument up front: ask for
+            # what the read still needs, but at most 4 MiB per call
+            chunk = self._sock.recv(max(self._bufsize, min(need - have, 1 << 22)))
+            if not chunk:
+                raise RespProtocolError("connection closed by peer")
+            parts.append(chunk)
+            have += len(chunk)
+        self._buf = b"".join(parts)
+        self._pos = 0
 
     def read_line(self) -> bytes:
-        while True:
-            idx = self._buf.find(CRLF)
-            if idx >= 0:
-                line, self._buf = self._buf[:idx], self._buf[idx + 2 :]
-                return line
-            self._fill()
+        idx = self._buf.find(CRLF, self._pos)
+        while idx < 0:
+            seen = len(self._buf) - self._pos
+            self._fill(seen + 1)
+            # the tail's last byte may be the CR of a split CRLF
+            idx = self._buf.find(CRLF, max(seen - 1, 0))
+        line = self._buf[self._pos : idx]
+        self._pos = idx + 2
+        return line
 
     def read_exact(self, n: int) -> bytes:
-        while len(self._buf) < n + 2:  # payload + trailing CRLF
-            self._fill()
-        if not self._buf.startswith(CRLF, n):
+        end = self._pos + n
+        if end + 2 > len(self._buf):  # payload + trailing CRLF
+            self._fill(n + 2)
+            end = n
+        if not self._buf.startswith(CRLF, end):
             raise RespProtocolError(f"no CRLF after {n}-byte payload")
-        data, self._buf = self._buf[:n], self._buf[n + 2 :]
+        data = self._buf[self._pos : end]
+        self._pos = end + 2
         return data
+
+    def read_elements(self, n: int) -> list[Any]:
+        """The ``n`` elements of a container reply. A bulk string whose
+        frame is already whole in the buffer (nearly every element of
+        a SCAN, MGET, HGETALL or LRANGE reply) is sliced out here in
+        one step; any other element, including a bulk string that
+        needs another recv or fails the checks, goes through
+        :func:`_read_reply`, which validates it as usual."""
+        out: list[Any] = []
+        append = out.append
+        buf, pos = self._buf, self._pos
+        for _ in range(n):
+            if buf.startswith(b"$", pos):
+                idx = buf.find(CRLF, pos)
+                if idx > pos + 1:
+                    head = buf[pos + 1 : idx]
+                    if head.isdigit():
+                        start = idx + 2
+                        end = start + int(head)
+                        if buf.startswith(CRLF, end):
+                            append(buf[start:end])
+                            pos = end + 2
+                            continue
+            self._pos = pos
+            append(_read_reply(self))
+            buf, pos = self._buf, self._pos
+        self._pos = pos
+        return out
 
 
 def _length(rest: bytes, null_ok: bool = True) -> int:
@@ -152,13 +216,11 @@ def _read_reply(reader: _SocketReader) -> Any:
         n = _length(rest)
         if n == -1:
             return None
-        return [_read_reply(reader) for _ in range(n)]
+        return reader.read_elements(n)
     if tag == b"%":  # RESP3 map
         n = _length(rest, null_ok=False)
-        return {
-            _as_key(_read_reply(reader)): _read_reply(reader)
-            for _ in range(n)
-        }
+        it = iter(reader.read_elements(2 * n))
+        return {_as_key(k): v for k, v in zip(it, it)}
     if tag == b"|":  # RESP3 attribute: metadata map PRECEDING the reply
         n = _length(rest, null_ok=False)
         for _ in range(n):  # consume and discard key/value pairs
@@ -517,6 +579,10 @@ class RedisClient:
         return _as_str(self.command_redirected("GET", key))
 
     def mget(self, keys: list[str]) -> list[str | None]:
+        return [_as_str(v) for v in self.mget_raw(keys)]
+
+    def mget_raw(self, keys: list) -> list[bytes | None]:
+        """MGET of ``keys`` (str or raw bytes), the values undecoded."""
         if not keys:
             return []
         try:
@@ -527,7 +593,7 @@ class RedisClient:
                 # fail the same way — skip the guaranteed-failed round
                 # trip and go straight to the per-key path below.
                 raise RespError("CROSSSLOT memoized")
-            return [_as_str(v) for v in self.command("MGET", *keys)]
+            return self.command("MGET", *keys)
         except RespError as e:
             if not _is_cluster_multikey_error(e):
                 raise
@@ -542,7 +608,7 @@ class RedisClient:
             # split real cluster clients perform, specialized to the
             # fetch path.
             replies = self.pipeline([("GET", k) for k in keys])
-            out: list[str | None] = []
+            out: list[bytes | None] = []
             for k, r in zip(keys, replies):
                 if isinstance(r, RespError):
                     red = _redirect_of(r)
@@ -560,13 +626,19 @@ class RedisClient:
                         r = None
                     else:
                         raise r
-                out.append(_as_str(r))
+                out.append(r)
             return out
 
     def hgetall(self, key: str) -> dict[str, str]:
         return _field_map(self.command("HGETALL", key))
 
     def hgetall_pipelined(self, keys: list[str]) -> list[dict[str, str]]:
+        return [_field_map(r) for r in self.hgetall_pipelined_raw(keys)]
+
+    def hgetall_pipelined_raw(self, keys: list) -> list[Any]:
+        """One pipelined HGETALL per key (str or raw bytes), each reply
+        undecoded: a RESP2 flat field/value list, a RESP3 map, or None
+        for a missing or wrong-type key."""
         replies = self.pipeline([("HGETALL", k) for k in keys])
         out = []
         for key, reply in zip(keys, replies):
@@ -586,7 +658,7 @@ class RedisClient:
                         )
                     except RespError:
                         pass  # same error→{} contract on the new owner
-            out.append(_field_map(reply))
+            out.append(reply)
         return out
 
     def type_of(self, key: str) -> str:
@@ -669,7 +741,7 @@ class RedisClient:
                 self.command("SCAN", cursor, "MATCH", match, "COUNT", count)
             )
             cursor = _as_str(reply[0])
-            keys = list(reply[1]) if raw else [_as_str(k) for k in reply[1]]
+            keys = reply[1] if raw else [_as_str(k) for k in reply[1]]
             if keys:
                 yield keys
             if cursor == "0":

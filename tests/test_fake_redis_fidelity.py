@@ -260,3 +260,19 @@ def test_container_write_arity_creates_no_phantom_key(srv, cli):
     for k in ("pz", "pl", "px"):
         assert _s(cli.command("TYPE", k)) == "none"
     assert cli.command("DBSIZE") == 0
+
+
+def test_binary_keys_fields_and_values_round_trip(cli):
+    """A key, field or value that is not UTF-8 is stored and returned
+    byte for byte, as by real Redis: the fake no longer drops the
+    connection on such a command argument."""
+    key = b"k:\xff\xfe"
+    assert cli.command("SET", key, b"v\xff\x00") == "OK"
+    assert cli.command("GET", key) == b"v\xff\x00"
+    assert cli.command("MGET", key, b"k:none") == [b"v\xff\x00", None]
+    scanned = [k for page in cli.scan_iter("k:*", raw=True) for k in page]
+    assert scanned == [key]
+    assert cli.command("DEL", key) == 1
+    assert cli.command("HSET", key, b"f\x80", b"\xfe", "g", "w") == 2
+    assert cli.command("HGETALL", key) == [b"f\x80", b"\xfe", b"g", b"w"]
+    assert cli.command("TYPE", key) == "hash"

@@ -10,6 +10,7 @@ from hypothesis import strategies as st
 
 from duckdb_redis_olap_scanner_spark.testing import _encode
 from duckdb_redis_olap_scanner_spark.transport.resp import (
+    RespError,
     _parse,
     _SocketReader,
     encode_command,
@@ -62,6 +63,50 @@ def test_resp_roundtrip_survives_fragmentation(value, cuts):
     reader = _SocketReader(ChunkedFakeSocket(wire, cuts))
     got = _parse(reader)
     assert got == value
+
+
+# Elements of pipelined replies: bulk strings up to several times a
+# recv chunk, nils, integers and error elements nested in their slots.
+reply_elements = st.one_of(
+    st.binary(max_size=300),
+    st.none(),
+    st.integers(min_value=-(2**62), max_value=2**62),
+    st.text(alphabet="abc xyz019", max_size=12).map(
+        lambda m: RespError("ERR " + m)
+    ),
+)
+pipelined_replies = st.one_of(
+    st.binary(max_size=600),
+    st.lists(reply_elements, max_size=8),
+    st.lists(st.lists(reply_elements, max_size=3), max_size=3),
+)
+
+
+def _comparable(v):
+    """A parsed reply with its error elements as (tag, message)."""
+    if isinstance(v, RespError):
+        return ("error", str(v))
+    if isinstance(v, list):
+        return [_comparable(x) for x in v]
+    return v
+
+
+@given(replies=st.lists(pipelined_replies, min_size=1, max_size=6), data=st.data())
+@settings(max_examples=300, deadline=None)
+def test_pipelined_replies_survive_any_cuts(replies, data):
+    """N replies sent back to back and cut at random points, CRLFs and
+    payloads included: N parses on one reader return each reply in
+    order and leave nothing unread."""
+    wire = b"".join(_encode(r) for r in replies)
+    cuts = data.draw(st.lists(st.integers(1, len(wire)), max_size=24))
+    crlf_middles = [i + 1 for i in range(len(wire)) if wire.startswith(b"\r\n", i)]
+    cuts += data.draw(st.lists(st.sampled_from(crlf_middles), max_size=8))
+    sock = ChunkedFakeSocket(wire, cuts)
+    reader = _SocketReader(sock)
+    got = [_parse(reader) for _ in replies]
+    assert _comparable(got) == _comparable(replies)
+    assert reader._buf[reader._pos :] == b""
+    assert sock.recv(1) == b""
 
 
 @given(

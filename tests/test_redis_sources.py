@@ -524,8 +524,13 @@ def test_scan_owned_slots_binary_keys_on_raw_bytes():
     """Cluster slot filtering must hash the RAW key bytes: a lossy
     UTF-8 decode of a binary key re-encodes the replacement chars and
     lands on a different slot than the server used, silently dropping
-    the row (review r14)."""
+    the row (review r14). The raw bytes are also what ``_scan_owned``
+    yields, so the value fetch asks for the key the server holds; only
+    the key column renders U+FFFD."""
+    import pyarrow as pa
+
     from duckdb_redis_olap_scanner_spark.sources.redis_source import (
+        RedisScanReader,
         RedisShard,
         _scan_owned,
         key_slot,
@@ -538,16 +543,67 @@ def test_scan_owned_slots_binary_keys_on_raw_bytes():
 
     class StubClient:
         def scan_iter(self, match="*", count=0, raw=False):
-            assert raw, "cluster path must request raw key bytes"
+            assert raw, "scan-family reads must request raw key bytes"
             yield [raw_key, b"other"]
 
     part = RedisShard("h", 1, "*", 10, slot_ranges=((s_raw, s_raw),))
     got = [k for batch in _scan_owned(StubClient(), part) for k in batch]
-    # the binary key survives (owner by raw-bytes slot), decoded for
-    # the string schema; 'other' is filtered unless it collides
-    assert raw_key.decode("utf-8", "replace") in got
+    # the binary key survives (owner by raw-bytes slot) as its raw
+    # bytes; 'other' is filtered unless it collides
+    assert raw_key in got
     if key_slot(b"other") != s_raw:
-        assert got == [raw_key.decode("utf-8", "replace")]
+        assert got == [raw_key]
+    batch = RedisScanReader({})._batch(StubClient(), got)
+    assert batch.schema.field("key_name").type == pa.string()
+    assert "\ufffdabc" in batch.column("key_name").to_pylist()
+
+
+@pytest.fixture
+def binary_keyspace(spark):
+    """A private server holding keys, a list element and a zset member
+    that are not UTF-8, and an Engine connected to it."""
+    from duckdb_redis_olap_scanner_spark.transport.resp import RedisClient
+
+    with FakeRedisServer() as srv:
+        with RedisClient(srv.host, srv.port) as c:
+            c.command("SET", b"bk:\xff\xfe", "v1")
+            c.command("SET", "bk:ok", "v2")
+            c.command("HSET", b"bh:\xff\xfe", "f", "x", "g", b"y\xff")
+            c.command("HSET", "bh:ok", "f", "z")
+            c.command("RPUSH", "bl", "a", b"\xffb")
+            c.command("ZADD", "bz", "1", b"m\xff", "2", "n")
+        eng = Engine(spark)
+        eng.connect(srv.address)
+        yield eng
+
+
+def test_kv_reads_the_value_of_a_binary_key(binary_keyspace):
+    """The MGET asks for the key bytes SCAN returned, so a key that is
+    not UTF-8 keeps its value; only the key column renders U+FFFD."""
+    rows = {r.key: r.value for r in binary_keyspace.redis_kv("bk:*").collect()}
+    assert rows == {"bk:\ufffd\ufffd": "v1", "bk:ok": "v2"}
+    keys = {r.key_name for r in binary_keyspace.redis_scan("bk:*").collect()}
+    assert keys == {"bk:\ufffd\ufffd", "bk:ok"}
+
+
+def test_hash_reads_the_fields_of_a_binary_key(binary_keyspace):
+    rows = {r.key: r.value for r in binary_keyspace.redis_hash("bh:*").collect()}
+    assert rows == {
+        "bh:\ufffd\ufffd": {"f": "x", "g": "y\ufffd"},
+        "bh:ok": {"f": "z"},
+    }
+
+
+def test_container_readers_render_non_utf8_elements(binary_keyspace):
+    """A list element or zset member that is not UTF-8 renders with
+    U+FFFD instead of failing the task."""
+    rows = binary_keyspace.redis_list("bl").collect()
+    assert [(r.pos, r.element) for r in rows] == [(0, "a"), (1, "\ufffdb")]
+    rows = binary_keyspace.redis_zset("bz").collect()
+    assert [(r.member, r.score, r.rank) for r in rows] == [
+        ("m\ufffd", 1.0, 0),
+        ("n", 2.0, 1),
+    ]
 
 
 def test_hash_writer_rejects_null_key_even_with_empty_map(spark, redis_server):

@@ -222,6 +222,40 @@ def test_parse_rejects_bad_length_prefixes(wire):
         _parse(_SocketReader(_OneShot(wire)))
 
 
+class _ChunkedSocket:
+    """A socket that returns at most ``step`` bytes per recv()."""
+
+    def __init__(self, data: bytes, step: int) -> None:
+        self.data = memoryview(data)
+        self.pos = 0
+        self.step = step
+
+    def recv(self, n: int) -> bytes:
+        chunk = bytes(self.data[self.pos : self.pos + min(n, self.step)])
+        self.pos += len(chunk)
+        return chunk
+
+
+def test_large_bulk_reply_parses_in_linear_time():
+    """A 64 MiB value arriving in 64 KiB recv chunks is joined once,
+    not re-copied per chunk: it parses in well under 3 s (a buffer
+    that re-concatenates per chunk takes about 20 s), and the reply
+    after it still parses from the same reader."""
+    import time
+
+    n = 64 << 20
+    payload = bytes(range(256)) * (n // 256)
+    sock = _ChunkedSocket(b"$%d\r\n%b\r\n:7\r\n" % (n, payload), 65536)
+    reader = _SocketReader(sock)
+    t0 = time.perf_counter()
+    got = _parse(reader)
+    elapsed = time.perf_counter() - t0
+    assert got == payload
+    assert _parse(reader) == 7
+    assert sock.pos == len(sock.data)
+    assert elapsed < 3.0, f"64 MiB bulk reply took {elapsed:.1f} s"
+
+
 class _FaultyServer(socketserver.ThreadingTCPServer):
     """Answers PING with PONG, GET with ``get_reply(conn)`` (``conn``
     numbers the connections from 0) and anything else with a complete
@@ -340,6 +374,8 @@ def test_readers_refuse_nested_errors(monkeypatch):
     """Callers that read a container reply as data raise its error
     element instead of returning it as a key, field or value."""
     from duckdb_redis_olap_scanner_spark.sources.redis_source import (
+        RedisHashReader,
+        RedisKVReader,
         _cluster_masters,
     )
 
@@ -361,3 +397,9 @@ def test_readers_refuse_nested_errors(monkeypatch):
     )
     with pytest.raises(RespError, match="boom"):
         _cluster_masters(c, "10.0.0.1")
+    monkeypatch.setattr(c, "hgetall_pipelined_raw", lambda keys: [[b"f", err]])
+    with pytest.raises(RespError, match="boom"):
+        RedisHashReader({})._batch(c, [b"h"])
+    monkeypatch.setattr(c, "mget_raw", lambda keys: [err])
+    with pytest.raises(RespError, match="boom"):
+        RedisKVReader({})._batch(c, [b"k"])
