@@ -5,7 +5,7 @@ The reference's entire mechanism is DuckDB's scalar/table-function
 registration API (``redduck_extension.cpp:348-362``); the Spark-native
 equivalents are:
 
-* scalar      — Arrow-vectorized ``pandas_udf``   (functions/redis_fns.py)
+* scalar      — iterator ``arrow_udf``            (functions/redis_fns.py)
 * aggregate   — GROUPED_AGG ``pandas_udf``        (here: ``second_max_cents``)
 * table       — Python UDTF (Spark ≥ 3.5)         (here: ``WordExpand``)
 * source      — Python DataSource                 (sources/redis_source.py)

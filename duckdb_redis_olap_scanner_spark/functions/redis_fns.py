@@ -4,12 +4,15 @@ Reference registrations (``src/redduck_extension.cpp:348-362``):
 
 * ``redis_get(key) -> VARCHAR`` — per-row GET, one TCP round trip per row
   under a mutex (``redduck_extension.cpp:327-342``).  Here: an
-  iterator-of-Series ``pandas_udf`` holding ONE connection per executor
+  iterator-of-Arrays ``arrow_udf`` holding ONE connection per executor
   partition and issuing pipelined ``MGET`` per ``MGET_CHUNK`` rows —
   identical semantics, O(rows/chunk) round trips instead of O(rows).
   ``redis_ttl`` and ``redis_hgetall`` run the same per-key body
   (``_per_key``) with their own fetch, and every NULL key maps to NULL
-  without reaching the wire.
+  without reaching the wire. Each output column is built from buffers
+  by the Redis readers' column builders (``sources.redis_source``)
+  straight from the raw replies, so a UDF worker never imports
+  pandas.
 * ``redduck(name) -> VARCHAR`` — template demo returning
   ``"Redduck <name> 🐥"`` (``redduck_extension.cpp:17-22``).
 * ``set_name(name) -> VARCHAR`` — template demo returning the constant
@@ -25,12 +28,19 @@ from __future__ import annotations
 
 from typing import Callable, Iterator
 
-import pandas as pd
+import numpy as np
+import pyarrow as pa
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
+from pyspark.sql.functions import arrow_udf
 from pyspark.sql.types import LongType, MapType, StringType
 
+from ..sources.redis_source import (
+    _hgetalls,
+    _map_column,
+    _numeric_column,
+    _utf8_column,
+)
 from ..transport.resp import RedisClient
 
 # Rows per MGET pipeline call; Arrow batches are typically 10k rows, and a
@@ -41,10 +51,10 @@ MGET_CHUNK = 2048
 def _per_key(
     host: str,
     port: int,
-    batches: Iterator[pd.Series],
+    batches: Iterator,
     fetch: Callable[[RedisClient, list], list],
-    dtype: str,
-) -> Iterator[pd.Series]:
+    build: Callable[[list], pa.Array],
+) -> Iterator[pa.Array]:
     """The per-key UDFs' one body: one connection per executor
     partition (opened inside the iterator — sockets never pickle), and
     ``fetch(client, keys)`` once per ``MGET_CHUNK`` rows over that
@@ -52,7 +62,9 @@ def _per_key(
     null-out: a NULL key is NOT the legal Redis key "" (substituting ""
     returned that key's value and conflated NULL with missing — r14
     review), so NULL positions never reach the wire and come back
-    None."""
+    None, which ``build`` makes a null of the output column. A batch is
+    read with ``.tolist()``, which a ``pa.Array`` and a pandas Series
+    both have."""
     with RedisClient(host, port) as client:
         for keys in batches:
             kl = keys.tolist()
@@ -65,7 +77,7 @@ def _per_key(
                 if idx:
                     for j, v in zip(idx, fetch(client, [kl[j] for j in idx])):
                         out[j] = v
-            yield pd.Series(out, dtype=dtype)
+            yield build(out)
 
 
 def make_redis_get(host: str, port: int, missing: str = "null"):
@@ -74,13 +86,13 @@ def make_redis_get(host: str, port: int, missing: str = "null"):
     ones) to ``""``."""
     if missing == "empty":
         def fetch(client, keys):
-            return ["" if v is None else v for v in client.mget(keys)]
+            return [b"" if v is None else v for v in client.mget_raw(keys)]
     else:
-        fetch = RedisClient.mget
+        fetch = RedisClient.mget_raw
 
-    @pandas_udf(StringType())
-    def redis_get(batches: Iterator[pd.Series]) -> Iterator[pd.Series]:
-        return _per_key(host, port, batches, fetch, "object")
+    @arrow_udf(StringType())
+    def redis_get(batches: Iterator[pa.Array]) -> Iterator[pa.Array]:
+        return _per_key(host, port, batches, fetch, _utf8_column)
 
     return redis_get
 
@@ -100,10 +112,11 @@ def make_redis_ttl(host: str, port: int):
     for a key with no expiry, ``-2`` for a missing key (TTL(NULL) is
     NULL). One pipelined round trip per chunk."""
 
-    @pandas_udf(LongType())
-    def redis_ttl(batches: Iterator[pd.Series]) -> Iterator[pd.Series]:
-        # pandas nullable Int64 → Arrow int64 with nulls
-        return _per_key(host, port, batches, _ttls, "Int64")
+    @arrow_udf(LongType())
+    def redis_ttl(batches: Iterator[pa.Array]) -> Iterator[pa.Array]:
+        return _per_key(
+            host, port, batches, _ttls, lambda v: _numeric_column(v, np.int64)
+        )
 
     return redis_ttl
 
@@ -116,11 +129,9 @@ def make_redis_hgetall(host: str, port: int):
     but never implements it; MapType is the schema-free Spark analogue.
     """
 
-    @pandas_udf(MapType(StringType(), StringType()))
-    def redis_hgetall(batches: Iterator[pd.Series]) -> Iterator[pd.Series]:
-        return _per_key(
-            host, port, batches, RedisClient.hgetall_pipelined, "object"
-        )
+    @arrow_udf(MapType(StringType(), StringType()))
+    def redis_hgetall(batches: Iterator[pa.Array]) -> Iterator[pa.Array]:
+        return _per_key(host, port, batches, _hgetalls, _map_column)
 
     return redis_hgetall
 

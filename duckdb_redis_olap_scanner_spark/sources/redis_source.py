@@ -57,9 +57,15 @@ shows U+FFFD replacement characters. Pipelines that need byte-faithful
 keys should use binary-safe key design (the norm for OLAP keyspaces)
 or a future BinaryType schema variant.
 
-Every string column is built by :func:`_utf8_column` straight from the
-reply's bytes into Arrow, so rows never pass through Python ``str``
-objects or Python-object row conversion.
+Every column is built from Arrow buffers: a string column by
+:func:`_utf8_column` straight from the reply's bytes (offsets from the
+element lengths, one join of the data, a validity bitmap only when a
+NULL is present), a numeric one over a numpy buffer and the hash map by
+:func:`_map_column`. Rows never pass through Python ``str`` objects or
+Python-object row conversion, and ``pa.array`` is never called on a
+Python list: it asks pandas whether the list is a pandas object, which
+imports pandas (0.3-0.4 s) in every fresh worker. The per-key UDFs
+(``functions.redis_fns``) build their output with the same builders.
 
 One code path per job: the three scan-family readers share
 ``_ScanFamilyReader`` (partitions, connection, the ``_scan_owned`` page
@@ -74,6 +80,7 @@ from __future__ import annotations
 
 from typing import Iterator
 
+import numpy as np
 import pyarrow as pa
 from pyspark.sql.datasource import (
     DataSource,
@@ -100,16 +107,129 @@ from ..transport.resp import (
 )
 
 
+# An Arrow string column's int32 offsets address at most this many bytes.
+_MAX_BINARY_BYTES = 2**31 - 1
+
+
+def _validity(values: list) -> tuple[pa.Buffer | None, int]:
+    """The validity bitmap and null count of ``values``, whose ``None``
+    elements are the nulls; no bitmap when there is no ``None``."""
+    if None not in values:
+        return None, 0
+    valid = np.fromiter(
+        (v is not None for v in values), np.bool_, len(values)
+    )
+    bitmap = np.packbits(valid, bitorder="little")
+    return pa.py_buffer(bitmap), len(values) - int(valid.sum())
+
+
+def _binary_column(values: list) -> pa.Array:
+    """An Arrow binary column from bytes, str or None elements, built
+    from three buffers: a validity bitmap (only when a ``None`` is
+    present), the offsets from the element lengths, and one join of
+    the elements. Any other element raises ``TypeError``."""
+    bitmap, nulls = None, 0
+    try:
+        data = b"".join(values)  # refuses anything but bytes elements
+    except TypeError:
+        bitmap, nulls = _validity(values)
+        values = [
+            b"" if v is None
+            else v.encode() if v.__class__ is str  # RESP3 map keys (_as_key)
+            else v
+            for v in values
+        ]
+        data = b"".join(values)
+    if len(data) > _MAX_BINARY_BYTES:
+        raise ValueError(
+            f"{len(data)} bytes in one batch exceed the "
+            f"{_MAX_BINARY_BYTES} an Arrow string column can hold"
+        )
+    offsets = np.zeros(len(values) + 1, np.int32)
+    lengths = np.fromiter(map(len, values), np.int32, len(values))
+    np.cumsum(lengths, out=offsets[1:])
+    return pa.Array.from_buffers(
+        pa.binary(),
+        len(values),
+        [bitmap, pa.py_buffer(offsets), pa.py_buffer(data)],
+        nulls,
+    )
+
+
 def _utf8_column(values: list) -> pa.Array:
     """An Arrow string column from reply elements (bytes, str or None):
-    one copy into a binary array, then Arrow's UTF-8 validation. Only
-    a batch that fails it is rebuilt through :func:`_as_str`, which
-    gives the documented ``decode("utf-8", "replace")`` rendering and
-    raises an error element's :class:`RespError`."""
+    one copy into a binary array (:func:`_binary_column`), then Arrow's
+    UTF-8 validation. Only a batch that fails it, or holds an element
+    of another type, is rebuilt through :func:`_as_str`, which gives
+    the documented ``decode("utf-8", "replace")`` rendering and raises
+    an error element's :class:`RespError`."""
     try:
-        return pa.array(values, pa.binary()).cast(pa.string())
-    except (pa.ArrowInvalid, pa.ArrowTypeError):
-        return pa.array([_as_str(v) for v in values], pa.string())
+        return _binary_column(values).cast(pa.string())
+    except (pa.ArrowInvalid, TypeError):
+        return _binary_column([_as_str(v) for v in values]).cast(pa.string())
+
+
+def _numpy_column(
+    data: np.ndarray, bitmap: pa.Buffer | None = None, nulls: int = 0
+) -> pa.Array:
+    """An Arrow column over the buffer of a one-dimensional numpy
+    int32, int64 or float64 array, nulls marked by ``bitmap``."""
+    return pa.Array.from_buffers(
+        pa.from_numpy_dtype(data.dtype),
+        len(data),
+        [bitmap, pa.py_buffer(data)],
+        nulls,
+    )
+
+
+def _numeric_column(values: list, dtype: type) -> pa.Array:
+    """An Arrow column of numpy ``dtype`` from a list of numbers, each
+    ``None`` a null."""
+    bitmap, nulls = _validity(values)
+    data = np.fromiter(
+        (0 if v is None else v for v in values) if nulls else values,
+        dtype,
+        len(values),
+    )
+    return _numpy_column(data, bitmap, nulls)
+
+
+_STRING_MAP = pa.map_(pa.string(), pa.string())
+
+
+def _map_column(replies: list) -> pa.Array:
+    """An Arrow map<string,string> column from HGETALL replies in
+    either wire shape (a RESP3 map or a RESP2 flat field/value list);
+    an empty reply is ``{}`` and ``None`` a NULL map."""
+    fields: list = []
+    values: list = []
+    offsets = np.zeros(len(replies) + 1, np.int32)
+    for i, reply in enumerate(replies, 1):
+        if isinstance(reply, dict):  # RESP3 map
+            fields.extend(reply)
+            values.extend(reply.values())
+        elif reply:  # RESP2 flat field/value list
+            fields.extend(reply[0::2])
+            values.extend(reply[1::2])
+        offsets[i] = len(fields)
+    entries = pa.StructArray.from_arrays(
+        [_utf8_column(fields), _utf8_column(values)],
+        fields=[_STRING_MAP.key_field, _STRING_MAP.item_field],
+    )
+    bitmap, nulls = _validity(replies)
+    return pa.Array.from_buffers(
+        _STRING_MAP,
+        len(replies),
+        [bitmap, pa.py_buffer(offsets)],
+        nulls,
+        children=[entries],
+    )
+
+
+def _hgetalls(client: RedisClient, keys: list) -> list:
+    """One pipelined HGETALL of ``keys``, a missing or wrong-type
+    key's reply as ``{}``."""
+    return [r or {} for r in client.hgetall_pipelined_raw(keys)]
 
 
 class RedisShard(InputPartition):
@@ -391,7 +511,7 @@ class RedisKVDataSource(DataSource):
 _HASH_ARROW_SCHEMA = pa.schema(
     [
         pa.field("key", pa.string(), nullable=False),
-        pa.field("value", pa.map_(pa.string(), pa.string()), nullable=True),
+        pa.field("value", _STRING_MAP, nullable=True),
     ]
 )
 
@@ -404,25 +524,10 @@ class RedisHashReader(_ScanFamilyReader):
     PROTOCOL = 3
 
     def _batch(self, client: RedisClient, keys: list[bytes]) -> pa.RecordBatch:
-        fields: list = []
-        values: list = []
-        offsets = [0]
         # one round trip per page; a missing or wrong-type key is {}
-        for reply in client.hgetall_pipelined_raw(keys):
-            if isinstance(reply, dict):  # RESP3 map
-                fields.extend(reply)
-                values.extend(reply.values())
-            elif reply:  # RESP2 flat field/value list
-                fields.extend(reply[0::2])
-                values.extend(reply[1::2])
-            offsets.append(len(fields))
-        maps = pa.MapArray.from_arrays(
-            pa.array(offsets, pa.int32()),
-            _utf8_column(fields),
-            _utf8_column(values),
-        )
         return pa.RecordBatch.from_arrays(
-            [_utf8_column(keys), maps], schema=_HASH_ARROW_SCHEMA
+            [_utf8_column(keys), _map_column(_hgetalls(client, keys))],
+            schema=_HASH_ARROW_SCHEMA,
         )
 
 
@@ -566,8 +671,12 @@ class RedisZSetReader(_KeyPageReader):
         return pa.RecordBatch.from_arrays(
             [
                 _utf8_column(members),
-                pa.array([float(s) for s in scores], pa.float64()),
-                pa.array(range(start, start + len(members)), pa.int32()),
+                _numpy_column(
+                    np.fromiter(map(float, scores), np.float64, len(scores))
+                ),
+                _numpy_column(
+                    np.arange(start, start + len(members), dtype=np.int32)
+                ),
             ],
             schema=_ZSET_ARROW_SCHEMA,
         )
@@ -645,7 +754,9 @@ class RedisListReader(_KeyPageReader):
         ) or []
         return pa.RecordBatch.from_arrays(
             [
-                pa.array(range(start, start + len(elems)), pa.int32()),
+                _numpy_column(
+                    np.arange(start, start + len(elems), dtype=np.int32)
+                ),
                 _utf8_column(elems),
             ],
             schema=_LIST_ARROW_SCHEMA,

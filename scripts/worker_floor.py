@@ -17,7 +17,15 @@ Against a ``FakeRedisServer`` it prints those facts, the median of a
 fresh ``format("redis_scan").load()``, and the median of a 300-row,
 3-partition ``redis_kv`` write with the planner calls one write makes.
 
-Usage: python scripts/worker_floor.py [reps]   (default 15 reps)
+Last it measures the first Redis read of a fresh context: it stops the
+SparkContext and ``getOrCreate``s it again on the same JVM (as a
+benchmark set-up does) ``fresh`` times, and prints the median of each
+context's first ``redis_scan(...).count()``, the Python processes that
+read ran in, and whether its task worker imported pandas (the same hook
+logs ``pyspark.worker``'s ``main``).
+
+Usage: python scripts/worker_floor.py [reps [fresh]]
+       (default 15 reps, 6 fresh contexts)
 """
 
 from __future__ import annotations
@@ -42,9 +50,10 @@ import zipimport
 LOG = {log!r}
 
 
-class _LogPlannerCalls:
+class _LogMainCalls:
     def find_spec(self, name, path=None, target=None):
-        if not name.startswith("pyspark.sql.worker."):
+        if not (name == "pyspark.worker"
+                or name.startswith("pyspark.sql.worker.")):
             return None
         spec = importlib.machinery.PathFinder.find_spec(name, path)
         if spec is None:
@@ -65,7 +74,8 @@ class _LogPlannerCalls:
                     zips = sum(isinstance(v, zipimport.zipimporter)
                                for v in sys.path_importer_cache.values())
                     with open(LOG, "a") as f:
-                        f.write(f"{{name}}\\t{{zips}}\\t{{pyspark.__file__}}\\n")
+                        f.write(f"{{name}}\\t{{zips}}\\t{{pyspark.__file__}}"
+                                f"\\t{{'pandas' in sys.modules}}\\n")
 
             module.main = logged
 
@@ -73,7 +83,7 @@ class _LogPlannerCalls:
         return spec
 
 
-sys.meta_path.insert(0, _LogPlannerCalls())
+sys.meta_path.insert(0, _LogMainCalls())
 '''
 
 
@@ -115,10 +125,17 @@ def median_s(fn, reps: int) -> float:
     return statistics.median(times)
 
 
-def planner_calls(log: str) -> list[tuple[str, int, str]]:
+def logged_calls(log: str) -> list[tuple[str, int, str, bool]]:
+    """(module, zipimporters, pyspark file, pandas imported) per logged
+    ``main`` call: ``worker`` for a task, else the planner's name."""
     with open(log) as f:
         rows = [line.rstrip("\n").split("\t") for line in f]
-    return [(m.rsplit(".", 1)[-1], int(z), p) for m, z, p in rows]
+    return [(m.rsplit(".", 1)[-1], int(z), p, pd == "True")
+            for m, z, p, pd in rows]
+
+
+def planner_calls(log: str) -> list[tuple[str, int, str, bool]]:
+    return [c for c in logged_calls(log) if c[0] != "worker"]
 
 
 def report_workers(spark, reps: int) -> None:
@@ -167,17 +184,49 @@ def report_planners(spark, reps: int, log: str) -> None:
         write()
         time.sleep(1)  # the commit call logs just after it replies
         per_write = collections.Counter(
-            m for m, _, _ in planner_calls(log)[before:])
+            m for m, _, _, _ in planner_calls(log)[before:])
     calls = planner_calls(log)
     print(f"planner_calls_per_write {sum(per_write.values())}  "
           + " ".join(f"{m}={n}" for m, n in sorted(per_write.items())))
-    for module in sorted({m for m, _, _ in calls}):
-        zips, pyspark_file = next((z, p) for m, z, p in reversed(calls) if m == module)
-        print(f"planner {module:26s} zipimporters {zips:2d}  pyspark {pyspark_file}")
+    for module in sorted({m for m, _, _, _ in calls}):
+        zips, pyspark_file, pandas = next(
+            (z, p, pd) for m, z, p, pd in reversed(calls) if m == module)
+        print(f"planner {module:26s} zipimporters {zips:2d}  "
+              f"pandas {pandas!s:5s}  pyspark {pyspark_file}")
+
+
+def report_fresh_reads(spark, fresh: int, log: str):
+    """The first ``redis_scan(...).count()`` of ``fresh`` new contexts on
+    this JVM; returns the last session."""
+    from duckdb_redis_olap_scanner_spark.engine import Engine
+
+    times = []
+    with FakeRedisServer() as srv:
+        srv.seed_strings({f"k:{i:04d}": f"v:{i:04d}" for i in range(300)})
+        for _ in range(fresh):
+            spark.stop()
+            spark = get_spark(app_name="worker_floor")
+            spark.sparkContext.setLogLevel("ERROR")
+            eng = Engine(spark)
+            eng.connect(srv.address)
+            before = len(logged_calls(log))
+            t0 = time.perf_counter()
+            assert eng.redis_scan("k:*").count() == 300
+            times.append(time.perf_counter() - t0)
+            time.sleep(1)  # a worker logs just after it replies
+            calls = logged_calls(log)[before:]
+            procs = " ".join(m for m, _, _, _ in calls)
+            pandas = [pd for m, _, _, pd in calls if m == "worker"]
+            print(f"fresh_first_read_s     {times[-1]:.3f}  processes: {procs}"
+                  f"  read_worker_pandas {pandas}")
+    print(f"fresh_first_read_s     {statistics.median(times):.3f}"
+          f"  (median of {fresh} fresh contexts)")
+    return spark
 
 
 def main() -> None:
     reps = int(sys.argv[1]) if len(sys.argv) > 1 else 15
+    fresh = int(sys.argv[2]) if len(sys.argv) > 2 else 6
     with tempfile.TemporaryDirectory(prefix="worker_floor-") as site_dir:
         log = os.path.join(site_dir, "planner_calls")
         open(log, "w").close()
@@ -193,6 +242,7 @@ def main() -> None:
         try:
             report_workers(spark, reps)
             report_planners(spark, reps, log)
+            spark = report_fresh_reads(spark, fresh, log)
         finally:
             spark.stop()
 

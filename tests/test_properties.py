@@ -129,6 +129,132 @@ def test_encode_command_parses_back(args):
     assert got == want
 
 
+# Reply elements the column builders take: bytes (non-UTF-8 among
+# them), str (RESP3 map keys, decoded by _read_reply) and None, plus a
+# few values larger than 64 KiB.
+column_elements = st.one_of(
+    st.none(),
+    st.binary(max_size=12),
+    st.sampled_from([b"\xff\xfe", "caf\u00e9".encode(), b"ok\x80"]),
+    st.text(alphabet=st.characters(exclude_categories=["Cs"]), max_size=8),
+    st.sampled_from([b"v" * 65_537, b"\xff" * 70_000, "\u00e9" * 40_000]),
+)
+
+
+def _rendered(v):
+    """A reply element as the string column shows it."""
+    if isinstance(v, bytes):
+        return v.decode("utf-8", "replace")
+    return v
+
+
+def _assert_built_like(got, want):
+    got.validate(full=True)
+    assert got.type == want.type
+    assert got.null_count == want.null_count
+    assert got.equals(want)
+    # a validity bitmap only where a null needs one
+    assert (got.buffers()[0] is None) == (want.null_count == 0)
+
+
+@given(
+    values=st.one_of(
+        st.just([]),
+        st.lists(st.none(), min_size=1, max_size=4),
+        st.lists(column_elements, max_size=40),
+    )
+)
+@settings(max_examples=300, deadline=None)
+def test_column_builders_match_pa_array(values):
+    """The buffer-built Arrow columns of the Redis readers and per-key
+    UDFs equal what ``pa.array`` builds from the same elements: type,
+    validity and values, non-UTF-8 bytes rendered with U+FFFD."""
+    import numpy as np
+    import pyarrow as pa
+
+    from duckdb_redis_olap_scanner_spark.sources import redis_source as rs
+
+    _assert_built_like(
+        rs._utf8_column(values),
+        pa.array([_rendered(v) for v in values], pa.string()),
+    )
+    _assert_built_like(
+        rs._binary_column(values),
+        pa.array([v.encode() if isinstance(v, str) else v for v in values],
+                 pa.binary()),
+    )
+    ints = [None if v is None else len(v) - 3 for v in values]
+    _assert_built_like(
+        rs._numeric_column(ints, np.int64), pa.array(ints, pa.int64())
+    )
+    floats = [None if v is None else len(v) / 7 for v in values]
+    _assert_built_like(
+        rs._numeric_column(floats, np.float64), pa.array(floats, pa.float64())
+    )
+    _assert_built_like(
+        rs._numpy_column(np.arange(5, 5 + len(values), dtype=np.int32)),
+        pa.array(range(5, 5 + len(values)), pa.int32()),
+    )
+
+
+@given(
+    replies=st.lists(
+        st.one_of(
+            st.none(),
+            st.dictionaries(
+                st.text(alphabet=st.characters(exclude_categories=["Cs"]),
+                        max_size=6),
+                st.binary(max_size=8),
+                max_size=4,
+            ),
+            st.lists(st.binary(max_size=8), max_size=4).map(
+                lambda fs: [x for f in fs for x in (f, f[::-1])]
+            ),
+        ),
+        max_size=12,
+    )
+)
+@settings(max_examples=300, deadline=None)
+def test_map_column_matches_pa_array(replies):
+    """HGETALL replies in either wire shape (RESP3 map, RESP2 flat
+    field/value list) build the map column ``pa.array`` builds; an
+    empty reply is ``{}`` and ``None`` a NULL map."""
+    import pyarrow as pa
+
+    from duckdb_redis_olap_scanner_spark.sources import redis_source as rs
+
+    def pairs(reply):
+        if reply is None:
+            return None
+        items = reply.items() if isinstance(reply, dict) else zip(
+            reply[0::2], reply[1::2])
+        return [(_rendered(f), _rendered(v)) for f, v in items]
+
+    _assert_built_like(
+        rs._map_column(replies),
+        pa.array([pairs(r) for r in replies], rs._STRING_MAP),
+    )
+
+
+def test_column_builders_raise_an_error_element():
+    """An error element in a reply raises its RespError from every
+    string column build, the map's fields and values included."""
+    import pytest
+
+    from duckdb_redis_olap_scanner_spark.sources import redis_source as rs
+
+    err = RespError("WRONGTYPE nested")
+    for build, values in [
+        (rs._utf8_column, [b"a", None, err]),
+        (rs._utf8_column, ["k", err]),
+        (rs._map_column, [[b"f", err]]),
+        (rs._map_column, [{"f": b"v"}, {"g": err}]),
+    ]:
+        with pytest.raises(RespError) as raised:
+            build(values)
+        assert raised.value is err
+
+
 def test_md5_hash64_matches_duckdb_on_random_strings(spark):
     """The codegen'd md5-based 64-bit hash (text.md5_hash64) must equal
     DuckDB's md5_number_lower(s) % p for arbitrary strings — the

@@ -132,8 +132,9 @@ def test_per_key_chunking_is_pinned(monkeypatch):
     """The per-key UDFs fetch once per ``MGET_CHUNK`` rows over that
     chunk's non-NULL keys (an all-NULL chunk sends nothing), scatter
     the replies back with NULL at each NULL key, and
-    ``missing="empty"`` fills only missing keys."""
-    import pandas as pd
+    ``missing="empty"`` fills only missing keys. Batches arrive as
+    Arrow arrays, as Spark hands them to an ``arrow_udf``."""
+    import pyarrow as pa
 
     from duckdb_redis_olap_scanner_spark.functions import redis_fns
     from duckdb_redis_olap_scanner_spark.testing import FakeRedisServer
@@ -142,15 +143,15 @@ def test_per_key_chunking_is_pinned(monkeypatch):
     monkeypatch.setattr(redis_fns, "MGET_CHUNK", 4)
     calls: list[list] = []
     mget, hgetall, checked = (
-        RedisClient.mget,
-        RedisClient.hgetall_pipelined,
+        RedisClient.mget_raw,
+        RedisClient.hgetall_pipelined_raw,
         RedisClient.pipeline_checked,
     )
     monkeypatch.setattr(
-        RedisClient, "mget", lambda c, ks: calls.append(ks) or mget(c, ks)
+        RedisClient, "mget_raw", lambda c, ks: calls.append(ks) or mget(c, ks)
     )
     monkeypatch.setattr(
-        RedisClient, "hgetall_pipelined",
+        RedisClient, "hgetall_pipelined_raw",
         lambda c, ks: calls.append(ks) or hgetall(c, ks),
     )
     monkeypatch.setattr(
@@ -169,13 +170,16 @@ def test_per_key_chunking_is_pinned(monkeypatch):
     def run(udf, prefix):
         calls.clear()
         batches = [
-            pd.Series([k and prefix + k for k in b], dtype="object")
+            pa.array([k and prefix + k for k in b], pa.string())
             for b in layout
         ]
-        out = [
-            [None if v is None or v is pd.NA else v for v in s.tolist()]
-            for s in udf.func(iter(batches))
-        ]
+        out = []
+        for arr in udf.func(iter(batches)):
+            assert isinstance(arr, pa.Array)
+            rows = arr.to_pylist()
+            if pa.types.is_map(arr.type):  # a map row is (field, value) pairs
+                rows = [None if r is None else dict(r) for r in rows]
+            out.append(rows)
         assert calls == [[prefix + k for k in c] for c in want_calls]
         return out
 

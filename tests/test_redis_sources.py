@@ -177,6 +177,37 @@ def test_cluster_and_stream_reads_are_not_shared(fresh):
     assert eng.redis_stream("events") is not eng.redis_stream("events")
 
 
+def test_udfs_are_shared_per_kind_and_options(fresh):
+    srv, eng = fresh
+    get, ttl, hgetall = (
+        eng.redis_get_udf(), eng.redis_ttl_udf(), eng.redis_hgetall_udf()
+    )
+    assert eng.redis_get_udf() is get and eng.redis_get_udf("null") is get
+    assert eng.redis_ttl_udf() is ttl
+    assert eng.redis_hgetall_udf() is hgetall
+    empty = eng.redis_get_udf(missing="empty")
+    assert empty is not get and eng.redis_get_udf(missing="empty") is empty
+    eng.connect(srv.address)
+    assert eng.redis_get_udf() is not get
+    assert eng.redis_get_udf(missing="empty") is not empty
+    assert eng.redis_ttl_udf() is not ttl
+    assert eng.redis_hgetall_udf() is not hgetall
+
+
+def test_shared_udf_sees_new_keys(fresh, spark):
+    srv, eng = fresh
+    df = spark.createDataFrame([("a:0",), ("a:new",)], ["k"])
+    get = eng.redis_get_udf()
+
+    def values():
+        return [r.v for r in df.select("k", get("k").alias("v")).collect()]
+
+    assert values() == ["v", None]
+    srv.seed_strings({"a:new": "w"})
+    assert eng.redis_get_udf() is get
+    assert values() == ["v", "w"]
+
+
 def test_reused_cluster_read_fails_after_reshard(spark):
     """Spark re-executes a DataFrame with the partitions it planned
     first. After a reshard those partitions filter keys by the old
@@ -722,3 +753,82 @@ def test_sink_batching_is_pinned(
             # the first full batch went out; the one holding the bad
             # row never did
             assert sent == [commands[0:2]]
+
+
+_NO_PANDAS_PROBE = """
+import json, sys
+sys.path.insert(0, sys.argv[1])
+from duckdb_redis_olap_scanner_spark.functions import redis_fns
+from duckdb_redis_olap_scanner_spark.sources import redis_source as rs
+from duckdb_redis_olap_scanner_spark.testing import FakeRedisServer
+
+out = {}
+with FakeRedisServer() as srv:
+    srv.seed_strings({"s:1": "v1", "s:2": "v2"})
+    srv.seed_ttls({"s:1": 50})
+    srv.seed_hashes({"h:1": {"f": "x", "g": "y"}})
+    srv.seed_list("l", ["a", "b", "c"])
+    srv.seed_zset("z", {"m": 1.5, "n": 2.0})
+    opts = {"host": srv.host, "port": str(srv.port)}
+    for name, cls, extra in [
+        ("scan", rs.RedisScanReader, {"pattern": "s:*"}),
+        ("kv", rs.RedisKVReader, {"pattern": "s:*"}),
+        ("hash", rs.RedisHashReader, {"pattern": "h:*"}),
+        ("list", rs.RedisListReader, {"key": "l"}),
+        ("zset", rs.RedisZSetReader, {"key": "z"}),
+    ]:
+        reader = cls({**opts, **extra})
+        out[name] = [
+            b.to_pylist() for p in reader.partitions() for b in reader.read(p)
+        ]
+    pandas = {"readers": "pandas" in sys.modules}
+    for name, udf in [
+        ("get", redis_fns.make_redis_get(srv.host, srv.port)),
+        ("get_empty", redis_fns.make_redis_get(srv.host, srv.port, "empty")),
+        ("ttl", redis_fns.make_redis_ttl(srv.host, srv.port)),
+        ("hgetall", redis_fns.make_redis_hgetall(srv.host, srv.port)),
+    ]:
+        prefix = "h:" if name == "hgetall" else "s:"
+        # built from buffers too: pa.array on a list imports pandas
+        batches = [rs._utf8_column([prefix + "1", None, "nokey"]),
+                   rs._utf8_column([None])]
+        out[name] = [a.tolist() for a in udf.func(iter(batches))]
+    pandas["udfs"] = "pandas" in sys.modules
+out["pandas"] = pandas
+print(json.dumps(out, default=str))
+"""
+
+
+def test_readers_and_udfs_never_import_pandas(tmp_path):
+    """Every Redis reader and per-key UDF builds its Arrow columns from
+    buffers: in a fresh interpreter, draining the scan, kv, hash
+    (RESP3), list and zset readers and running each UDF over Arrow
+    batches with NULLs leaves pandas unimported (``pa.array`` on a
+    Python list imports it, 0.3-0.4 s in a fresh worker)."""
+    import json
+    import os
+    import subprocess
+    import sys
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    proc = subprocess.run(
+        [sys.executable, "-c", _NO_PANDAS_PROBE, repo],
+        cwd=tmp_path, capture_output=True, text=True, timeout=120,
+    )
+    assert proc.returncode == 0, proc.stderr
+    out = json.loads(proc.stdout.splitlines()[-1])
+    assert out["pandas"] == {"readers": False, "udfs": False}
+    assert sorted(out["scan"][0], key=str) == [
+        {"key_name": "s:1"}, {"key_name": "s:2"}]
+    assert sorted(r["value"] for r in out["kv"][0]) == ["v1", "v2"]
+    assert [sorted(r["value"]) for r in out["hash"][0]] == [
+        [["f", "x"], ["g", "y"]]]
+    assert out["list"] == [[{"pos": i, "element": e}
+                            for i, e in enumerate("abc")]]
+    assert out["zset"] == [[{"member": "m", "score": 1.5, "rank": 0},
+                            {"member": "n", "score": 2.0, "rank": 1}]]
+    assert out["get"] == [["v1", None, None], [None]]
+    assert out["get_empty"] == [["v1", None, ""], [None]]
+    assert out["ttl"] == [[50, None, -2], [None]]
+    assert [[r and sorted(r) for r in b] for b in out["hgetall"]] == [
+        [[["f", "x"], ["g", "y"]], None, []], [None]]
