@@ -285,7 +285,6 @@ class Engine:
         self.host: str | None = None
         self.port: int | None = None
         self._reads: dict[tuple, DataFrame] = {}
-        self._udfs: dict[tuple, object] = {}
         register_datasources(spark)
 
     # -- connection ------------------------------------------------------------
@@ -301,7 +300,6 @@ class Engine:
             pass  # context manager connects (PING inside) and closes
         self.host, self.port = host, port
         self._reads.clear()
-        self._udfs.clear()
         return f"Redis Target Set: {host}:{port}"
 
     def _require_conn(self) -> tuple[str, int]:
@@ -361,30 +359,20 @@ class Engine:
         return self._reader("redis_list", key=key, **options)
 
     # -- scalar UDFs -----------------------------------------------------------
-    def _udf(self, make, **options):
-        """The per-key UDF ``make(host, port, **options)`` builds, one
-        object per (UDF, host, port, options) until the next
-        ``connect()``, as ``_reader`` keeps reads: a caller that asks
-        for the UDF on every query gets the same function. The UDF
-        opens its connection when a task runs it, so every execution
-        reads the keys as they are then."""
-        host, port = self._require_conn()
-        key = (make, host, port, tuple(sorted(options.items())))
-        if key not in self._udfs:
-            self._udfs[key] = make(host, port, **options)
-        return self._udfs[key]
-
     def redis_get_udf(self, missing: str = "null"):
-        return self._udf(make_redis_get, missing=missing)
+        host, port = self._require_conn()
+        return make_redis_get(host, port, missing=missing)
 
     def redis_hgetall_udf(self):
-        return self._udf(make_redis_hgetall)
+        host, port = self._require_conn()
+        return make_redis_hgetall(host, port)
 
     def redis_ttl_udf(self):
         """``redis_ttl(key) -> long`` (seconds; -1 no expiry, -2
         missing) — the RESP integer type surfaced to SQL (SURVEY §3's
         reserved LongType mapping)."""
-        return self._udf(make_redis_ttl)
+        host, port = self._require_conn()
+        return make_redis_ttl(host, port)
 
     # -- streaming -------------------------------------------------------------
     def redis_stream(self, key: str = "events", **options) -> DataFrame:

@@ -177,37 +177,6 @@ def test_cluster_and_stream_reads_are_not_shared(fresh):
     assert eng.redis_stream("events") is not eng.redis_stream("events")
 
 
-def test_udfs_are_shared_per_kind_and_options(fresh):
-    srv, eng = fresh
-    get, ttl, hgetall = (
-        eng.redis_get_udf(), eng.redis_ttl_udf(), eng.redis_hgetall_udf()
-    )
-    assert eng.redis_get_udf() is get and eng.redis_get_udf("null") is get
-    assert eng.redis_ttl_udf() is ttl
-    assert eng.redis_hgetall_udf() is hgetall
-    empty = eng.redis_get_udf(missing="empty")
-    assert empty is not get and eng.redis_get_udf(missing="empty") is empty
-    eng.connect(srv.address)
-    assert eng.redis_get_udf() is not get
-    assert eng.redis_get_udf(missing="empty") is not empty
-    assert eng.redis_ttl_udf() is not ttl
-    assert eng.redis_hgetall_udf() is not hgetall
-
-
-def test_shared_udf_sees_new_keys(fresh, spark):
-    srv, eng = fresh
-    df = spark.createDataFrame([("a:0",), ("a:new",)], ["k"])
-    get = eng.redis_get_udf()
-
-    def values():
-        return [r.v for r in df.select("k", get("k").alias("v")).collect()]
-
-    assert values() == ["v", None]
-    srv.seed_strings({"a:new": "w"})
-    assert eng.redis_get_udf() is get
-    assert values() == ["v", "w"]
-
-
 def test_reused_cluster_read_fails_after_reshard(spark):
     """Spark re-executes a DataFrame with the partitions it planned
     first. After a reshard those partitions filter keys by the old
