@@ -1,9 +1,8 @@
 """Driver contract for the spark-graft builder (PySpark target).
 
-The driver's verify runs ``entry(spark)`` as a smoke check, runs
-each ``queries()[name]`` at sf=0.01 and compares it against the
-matching ``oracle_sql()[name]`` via DuckDB (row-count + schema +
-order-insensitive value-hash → CORRECTNESS_r{N}.json).
+``entry(spark)`` is a smoke check. Each ``queries()[name]`` is run at
+sf=0.01 and compared with the matching ``oracle_sql()[name]`` run in
+DuckDB: row count, schema and an order-insensitive value hash.
 
 All entries are defined in the engine's query catalog
 (``duckdb_redis_olap_scanner_spark/plans/``) — this module is thin glue.

@@ -4,72 +4,72 @@
 
 Prints ONE JSON line:
   {"metric": "...", "value": <total sec>, "unit": "sec",
-   "queries": {"q1_pricing_summary": sec, ...}, "sf": 0.1}
+   "queries": {"q1_pricing_summary": sec, ...}, "sf": 0.1, "cpus": N, ...}
 
 Each query is forced end-to-end with the `noop` sink (full computation,
 no driver-side collect — the number measures the engine, not result
 transfer). A warmup run of the flagship query absorbs one-time JVM/
 codegen startup so per-query numbers reflect steady state.
+
+Modes:
+  (none)             the sf suite; REGRESSION lines on stderr
+  --record-baseline  also write this run as BENCH_BASELINE_LOCAL.json
+  --duck-local       also pair it with same-box DuckDB (BENCH_DUCK_LOCAL.json)
+  --scale10x / --scale100x      the suite at a 10×/100× replication,
+                                paired with DuckDB (BENCH_10X/100X.json)
+  --scaling10x / --scaling100x  the same dirs at main and main/4 cores
+                                (SCALING_10X/100X.json)
+  --streaming        the stream operators' micro-batches (STREAM_BENCH.json)
 """
 
 from __future__ import annotations
 
 import json
 import os
+import socket
 import sys
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from duckdb_redis_olap_scanner_spark.engine import get_spark, local_cores  # noqa: E402
-from duckdb_redis_olap_scanner_spark.plans.catalog import registry  # noqa: E402
+from duckdb_redis_olap_scanner_spark.plans.catalog import registry, table  # noqa: E402
+
+_REPO = os.path.dirname(os.path.abspath(__file__))
+_BASELINE = "BENCH_BASELINE_LOCAL.json"
+
+# Sampling shape of main(): PASSES over the suite × consecutive REPS per
+# query, best across all samples. Consecutive reps of one query run
+# against a warm codegen cache (round-robin over the suite overflows the
+# bounded generated-class cache, and every sample pays recompilation —
+# measured ~2× inflation), while bursty neighbour noise can poison all
+# consecutive samples of one query; separate passes give the min
+# independent time windows. The scale, scaling and streaming loops take
+# one sample per pass.
+_MAIN_PASSES, _MAIN_REPS = 3, 2
+_PASSES = 2
 
 
-def load_recorded_bench(path: str) -> dict | None:
-    """Parse a recorded BENCH_r*.json: either the raw one-line object
-    this script prints, or the driver's wrapper with that line embedded
-    in its ``tail`` field."""
-    import re
-
+def resolve_baseline(
+    repo_root: str, sf: float | None = None, cpus: int | None = None
+) -> dict | None:
+    """The record ``regression_report`` compares against:
+    ``BENCH_BASELINE_LOCAL.json`` when it holds per-query times and its
+    ``sf`` and ``cpus`` match the run's (``None`` skips that gate).
+    Times from another scale factor or core count are not comparable,
+    so a mismatch gives no baseline rather than a wrong one."""
     try:
-        with open(path) as f:
-            data = json.load(f)
+        with open(os.path.join(repo_root, _BASELINE)) as f:
+            rec = json.load(f)
     except (OSError, ValueError):
         return None
-    if isinstance(data, dict) and "queries" in data:
-        return data
-    m = re.search(r'\{"metric".*\}', data.get("tail", "") if isinstance(data, dict) else "")
-    if not m:
+    if not isinstance(rec, dict) or not rec.get("queries"):
         return None
-    try:
-        return json.loads(m.group(0))
-    except ValueError:
+    if sf is not None and rec.get("sf") != sf:
         return None
-
-
-def resolve_baseline(repo_root: str, sf: float | None = None) -> dict | None:
-    """The record ``regression_report`` compares against, exposed so
-    callers (tests, scripts/round_preflight.py) share the exact same
-    resolution order instead of re-deriving it: the quiet-host
-    ``BENCH_BASELINE_LOCAL.json`` when present and sf-compatible, else
-    the NEWEST recorded ``BENCH_r*.json``. Driver-written wrapper
-    records (the ones with a ``tail`` field) parse the same as raw
-    ones, so they are eligible fallbacks — which is exactly why a
-    committed quiet-host baseline should always exist."""
-    import glob
-
-    local = load_recorded_bench(os.path.join(repo_root, "BENCH_BASELINE_LOCAL.json"))
-    if local and local.get("queries") and (sf is None or local.get("sf") == sf):
-        return local
-    for path in sorted(
-        glob.glob(os.path.join(repo_root, "BENCH_r*.json")), reverse=True
-    ):
-        rec = load_recorded_bench(path)
-        # Only compare like-for-like scale factors: a local sf0.01 run
-        # against recorded sf0.1 numbers would flag everything.
-        if rec and rec.get("queries") and (sf is None or rec.get("sf") == sf):
-            return rec
-    return None
+    if cpus is not None and rec.get("cpus") != cpus:
+        return None
+    return rec
 
 
 def regression_report(
@@ -77,26 +77,15 @@ def regression_report(
     repo_root: str,
     tolerance: float = 1.5,
     sf: float | None = None,
-    floor_sec: dict[str, float] | None = None,
+    cpus: int | None = None,
 ) -> list[str]:
-    """Per-query guard against silent slowdowns: compare this run's
-    timings to the recorded baseline (``resolve_baseline``) and report
-    every query slower than ``tolerance``× it. The per-query
-    threshold is ``tolerance × max(recorded, floor_sec)``: floors are
-    measured live on THIS host in THIS run, so a noisy-neighbor window
-    that inflates dispatch cost raises the bar with it instead of
-    crying wolf on sub-floor queries (r10's two false flags). The
-    tolerance stays generous because this host's noisy neighbors
-    inflate any single run ±25%; a genuine regression (like round 2's
-    8 s suite) still trips it in-round instead of surfacing in the
-    judge's verdict."""
-    prev = resolve_baseline(repo_root, sf=sf)
+    """Per-query guard against silent slowdowns: every query of this
+    run slower than ``tolerance`` × its time in the local baseline
+    (``resolve_baseline``) plus an absolute slack. The tolerance is
+    generous because neighbour noise inflates a single run by ±25%."""
+    prev = resolve_baseline(repo_root, sf=sf, cpus=cpus)
     if not prev:
         return []
-    # None = "not provided, use recorded floors"; an explicit {} means
-    # the caller is forcing a no-floors comparison (r19 ADVICE — the
-    # old `floor_sec or ...` made {} indistinguishable from None).
-    floors = (prev.get("floor_sec") or {}) if floor_sec is None else floor_sec
     # Absolute slack on top of the ratio: host scheduling jitter is
     # additive (~0.1 s observed on back-to-back identical runs), so a
     # pure ratio guard flaps on sub-0.25 s queries where 1.5× is under
@@ -108,37 +97,11 @@ def regression_report(
         p = prev["queries"].get(name)
         if not p:
             continue
-        bar = max(p, floors.get(name, 0.0))
-        if t > tolerance * bar + slack:
+        if t > tolerance * p + slack:
             out.append(
-                f"{name}: {t:.3f}s vs {bar:.3f}s baseline ({t / bar:.2f}x > {tolerance}x)"
+                f"{name}: {t:.3f}s vs {p:.3f}s baseline ({t / p:.2f}x > {tolerance}x)"
             )
     return out
-
-
-def merge_baseline(
-    old: dict | None,
-    timings: dict[str, float],
-    sf: float,
-    fresh: bool = False,
-) -> dict[str, float]:
-    """What ``--record-baseline`` writes as the per-query map.
-
-    Default: per-query min with the existing same-sf baseline — each
-    recording adds an independent time window to the min-of-N, the
-    right accumulation WITHIN one environment. ``fresh`` REPLACES
-    instead: a min carried across round containers only ever
-    decreases, so environment drift (r18: identical dedup code
-    measuring ~1.6× the r17-container min in every run) turns the
-    1.5× guard into a coin-flip — re-record fresh at each round HEAD.
-    A different-sf old record never merges (the numbers aren't
-    comparable), and queries newly absent from this run keep their old
-    entry only via the min path, never fabricated on fresh."""
-    rec = dict(timings)
-    if not fresh and old and old.get("sf") == sf:
-        for k, v in (old.get("queries") or {}).items():
-            rec[k] = min(v, rec.get(k, v))
-    return rec
 
 
 def _force(df) -> None:
@@ -146,49 +109,64 @@ def _force(df) -> None:
     df.write.format("noop").mode("overwrite").save()
 
 
-def _dispatch_floor_model(
-    spark, samples: int = 6
-) -> tuple[float, float, float]:
-    """Measured (job_floor, per_exchange_floor, arrow_stage_floor) on
-    THIS host: best time of a trivial 0-exchange noop job, the
-    marginal cost per exchange fitted from a 4-exchange groupBy chain,
-    and the marginal cost of one Arrow Python-worker stage (a
-    passthrough mapInArrow over the same tiny input — serialization +
-    worker dispatch, not compute). Local-mode query latency has an
-    additive floor of roughly job_floor + exchanges × per_exchange +
-    arrow_stages × arrow_floor — which is why sub-0.2 s queries can't
-    approach DuckDB's ~20 ms numbers regardless of plan quality."""
-    from pyspark.sql import functions as F
+def _time_suite(
+    spark, entries, names, data_dir, tables, passes: int, reps: int = 1
+) -> dict[str, float]:
+    """Warm up, then time each query ``passes`` × ``reps`` times and
+    keep its best. The warmup counts the base tables without
+    ``.cache()``: every timed run computes from the parquet inputs, so
+    it measures the engine and not Spark's in-memory columnar cache."""
+    for t in tables:
+        table(spark, data_dir, t).count()
+    _force(entries["q1_pricing_summary"].fn(spark, data_dir))
+    best: dict[str, float] = {n: float("inf") for n in names}
+    for _ in range(passes):
+        for name in names:
+            spark.sparkContext.setJobDescription(f"bench: {name}")
+            for _ in range(reps):
+                t0 = time.perf_counter()
+                _force(entries[name].fn(spark, data_dir))
+                best[name] = min(best[name], time.perf_counter() - t0)
+    spark.sparkContext.setJobDescription(None)
+    return {name: round(v, 3) for name, v in best.items()}
 
-    base = spark.range(10_000, numPartitions=8).select(
-        F.col("id").alias("k0"), F.lit(1).alias("v")
-    )
-    chain = base
-    for i in range(4):
-        chain = chain.groupBy(
-            (F.col(chain.columns[0]) % (97 - i)).alias(f"k{i + 1}")
-        ).agg(F.sum("v").alias("v"))
 
-    def _passthrough(batches):
-        yield from batches
+def _duck_pairing(
+    entries, timings: dict[str, float], data_dir: str, tables, cpus: int,
+    reps: int,
+) -> dict:
+    """Same-box DuckDB on each query's oracle SQL over the same parquet,
+    ``cpus`` threads, warm best-of-``reps``, and the Spark/DuckDB ratio
+    per query and in total."""
+    import duckdb
 
-    arrow = base.mapInArrow(_passthrough, "k0 long, v int")
-    best0 = best4 = besta = float("inf")
-    for _ in range(samples):
-        t0 = time.perf_counter()
-        _force(base)
-        best0 = min(best0, time.perf_counter() - t0)
-        t0 = time.perf_counter()
-        _force(chain)
-        best4 = min(best4, time.perf_counter() - t0)
-        t0 = time.perf_counter()
-        _force(arrow)
-        besta = min(besta, time.perf_counter() - t0)
-    return (
-        best0,
-        max(best4 - best0, 0.0) / 4,
-        max(besta - best0, 0.0),
-    )
+    con = duckdb.connect()
+    con.execute(f"SET threads={cpus}")
+    for t in tables:
+        con.execute(
+            f"CREATE VIEW {t} AS SELECT * FROM "
+            f"read_parquet('{os.path.join(data_dir, t + '.parquet')}')"
+        )
+    duck: dict[str, float] = {}
+    for name in timings:
+        sql = entries[name].oracle
+        if not sql:
+            continue
+        tbest = float("inf")
+        for _ in range(reps):
+            t0 = time.perf_counter()
+            con.execute(sql).fetchall()
+            tbest = min(tbest, time.perf_counter() - t0)
+        duck[name] = round(tbest, 3)
+    duck_total = round(sum(duck.values()), 3)
+    return {
+        "duck": duck,
+        "duck_total": duck_total,
+        "ratios": {n: round(timings[n] / d, 2) for n, d in duck.items() if d},
+        "ratio_total": round(sum(timings.values()) / duck_total, 3)
+        if duck_total
+        else None,
+    }
 
 
 def _group_task_count(spark, group: str) -> int:
@@ -213,11 +191,9 @@ def _group_task_count(spark, group: str) -> int:
 def _task_counts(spark, entries, bench_names, sf_dir) -> dict[str, int]:
     """One forced run per query under a dedicated job group, OUTSIDE
     the timed region, to record how many tasks each query actually
-    executes (r21 verdict: the driver's 8-vs-32-core ratios at sf0.1
-    are ~1 and the payload gave no way to see why — single-row-group
-    scans are 1 task at any core count; the task counts make that
-    regime visible in the payload instead of looking like a harness
-    that ignores $SPARK_GRAFT_CPUS)."""
+    executes. Single-row-group scans are 1 task at any core count, so
+    without the counts a flat core-scaling ratio could not be told
+    apart from a harness that ignores $SPARK_GRAFT_CPUS."""
     out: dict[str, int] = {}
     for name in bench_names:
         group = f"tasks:{name}"
@@ -228,34 +204,15 @@ def _task_counts(spark, entries, bench_names, sf_dir) -> dict[str, int]:
     return out
 
 
-def _plan_arrow_stages(df) -> int:
-    """Python-worker stage count (mapInArrow / mapInPandas / pandas
-    UDF eval) in the executed plan — each pays a fixed Arrow
-    serialization + worker round-trip on top of the job floor."""
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    return sum(
-        plan.count(tag)
-        for tag in ("MapInArrow", "MapInPandas", "EvalPython",
-                    "FlatMapGroupsInPandas")
-    )
+def _sf_of(sf_dir: str) -> float:
+    """The scale factor a data dir's name gives (``.../sf0.1`` → 0.1)."""
+    return float(os.path.basename(sf_dir.rstrip("/")).replace("sf", "") or "0.1")
 
 
-def _plan_exchanges(df) -> int:
-    """SHUFFLE exchange count (hash/range/single-partition, minus
-    reused) from the executed physical plan — each one is a hard stage
-    boundary at roughly the probe's per-exchange cost. Broadcast
-    exchanges are excluded: they move dim-sized data on side jobs that
-    overlap the main stages, so charging them the full shuffle rate
-    pushed the floor ABOVE measured time on broadcast-heavy queries.
-    An estimate, not an exact scheduler count — good enough to
-    separate floor-bound queries (floor ≈ measured time) from real
-    regressions."""
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    return (
-        plan.count("Exchange")
-        - plan.count("BroadcastExchange")
-        - plan.count("ReusedExchange")
-    )
+def _write_json(name: str, payload: dict) -> None:
+    with open(os.path.join(_REPO, name), "w") as f:
+        json.dump(payload, f, indent=1, sort_keys=True)
+        f.write("\n")
 
 
 _10X_OFF = 1_000_000_000  # id offset per replica — far above any sf0.1 key
@@ -336,241 +293,84 @@ def build_scale10x_dir(
         f.write("ok\n")
 
 
-def scale10x_main() -> None:
-    """The second scale loop: the same headline queries at an
-    sf1-equivalent (10×) synthetic dir, Spark AND DuckDB (same oracle
-    SQL, 32 threads, warm best-of-2), recorded as BENCH_10X.json so
-    scale regressions trip mechanically like the sf0.1 guard — the
-    recorded form of SCALE.md's empirical scale checks."""
-    import duckdb
-
+def _scale_setup(
+    factor: int, entries
+) -> tuple[str, tuple[str, ...], list[str], float]:
+    """The ``factor``× dir (built on first use), the tables it holds,
+    the bench queries over them and its scale factor. The 100× dir
+    replicates only the relational tables, so at 100× only the TPC-H
+    ``q*`` queries run."""
     src = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    dst = os.environ.get("SPARK_GRAFT_10X_DIR", "/tmp/spark_graft_sf1eq")
-    repo = os.path.dirname(os.path.abspath(__file__))
+    relational = factor >= 100
+    if relational:
+        dst = os.environ.get("SPARK_GRAFT_100X_DIR", "/tmp/spark_graft_sf10eq")
+        tables = _RELATIONAL_TABLES
+    else:
+        dst = os.environ.get("SPARK_GRAFT_10X_DIR", "/tmp/spark_graft_sf1eq")
+        tables = _ALL_TABLES
     if not os.path.exists(os.path.join(dst, ".complete")):
-        print(f"building 10x dir {dst} from {src} ...", file=sys.stderr)
-        build_scale10x_dir(src, dst)
+        print(f"building {factor}x dir {dst} from {src} ...", file=sys.stderr)
+        build_scale10x_dir(src, dst, factor=factor, tables=tables)
+    names = sorted(
+        n for n, e in entries.items()
+        if "bench" in e.tags and (n.startswith("q") or not relational)
+    )
+    return dst, tables, names, round(_sf_of(src) * factor, 6)
 
-    spark = get_spark(app_name="bench10x")
-    spark.sparkContext.setLogLevel("ERROR")
-    from duckdb_redis_olap_scanner_spark.plans.catalog import table
 
-    cpus = local_cores()
+def scale_main(factor: int) -> None:
+    """The headline queries at a ``factor``× replication of the sf dir
+    (from sf0.1, 10× is sf1-equivalent and 100× sf10-equivalent over
+    the TPC-H tables), Spark AND same-box DuckDB on the same oracle SQL
+    over the same parquet, recorded as BENCH_10X.json / BENCH_100X.json.
+    At 10× the pipeline/text/ann operators cross over; the TPC-H
+    queries are still mostly dispatch-bound there, and 100× shows where
+    each of their plans crosses over."""
     entries = registry()
-    bench_names = sorted(n for n, e in entries.items() if "bench" in e.tags)
-    # Warmup without .cache(): same measurement fix as main() — every
-    # timed run computes from the parquet inputs (r21 ground rules).
-    for t in ("region", "nation", "customer", "supplier", "part",
-              "orders", "lineitem", "events", "documents", "embeddings"):
-        table(spark, dst, t).count()
-    _force(entries["q1_pricing_summary"].fn(spark, dst))
-
-    passes = int(os.environ.get("SPARK_GRAFT_BENCH_PASSES", "2"))
-    best: dict[str, float] = {n: float("inf") for n in bench_names}
-    for _ in range(passes):
-        for name in bench_names:
-            t0 = time.perf_counter()
-            _force(entries[name].fn(spark, dst))
-            best[name] = min(best[name], time.perf_counter() - t0)
-    timings = {name: round(v, 3) for name, v in best.items()}
+    dst, tables, names, sf = _scale_setup(factor, entries)
+    spark = get_spark(app_name=f"bench{factor}x")
+    spark.sparkContext.setLogLevel("ERROR")
+    cpus = local_cores()
+    timings = _time_suite(spark, entries, names, dst, tables, _PASSES)
     spark.stop()
 
-    # Same-box DuckDB on the identical oracle SQL over the same 10x
-    # parquet — the ratio denominator SCALE.md's checks used.
-    con = duckdb.connect()
-    con.execute(f"SET threads={cpus}")
-    for t in ("region", "nation", "customer", "supplier", "part", "orders",
-              "lineitem", "events", "documents", "embeddings"):
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM "
-            f"read_parquet('{os.path.join(dst, t + '.parquet')}')"
-        )
-    duck: dict[str, float] = {}
-    for name in bench_names:
-        sql = entries[name].oracle
-        if not sql:
-            continue
-        tbest = float("inf")
-        for _ in range(2):
-            t0 = time.perf_counter()
-            con.execute(sql).fetchall()
-            tbest = min(tbest, time.perf_counter() - t0)
-        duck[name] = round(tbest, 3)
-
-    ratios = {
-        n: round(timings[n] / duck[n], 2)
-        for n in bench_names
-        if duck.get(n)
-    }
-    for msg in regression_report(timings, repo, sf=1.0):
-        print(f"REGRESSION(10x) {msg}", file=sys.stderr)
     payload = {
-        "metric": "headline_queries_total_sec_10x",
+        "metric": "headline_queries_total_sec_10x"
+        if factor == 10
+        else f"tpch_queries_total_sec_{factor}x",
         "value": round(sum(timings.values()), 3),
         "unit": "sec",
         "queries": timings,
-        "sf": 1.0,
-        "duck": duck,
-        "duck_total": round(sum(duck.values()), 3),
-        "ratios": ratios,
+        "sf": sf,
+        "cpus": cpus,
+        **_duck_pairing(entries, timings, dst, tables, cpus, reps=2),
         "notes": (
-            "sf1-equivalent dir: sf0.1 replicated 10x with "
-            "FK-consistent id offsets and per-replica variation "
+            f"sf{sf:g}-equivalent dir: the sf dir's "
+            f"{'relational tables' if factor >= 100 else 'tables'} "
+            f"replicated {factor}x with FK-consistent id offsets "
             "(bench.py build_scale10x_dir). duck = same oracle SQL, "
             f"{cpus} threads, warm best-of-2, same parquet."
         ),
     }
-    with open(os.path.join(repo, "BENCH_10X.json"), "w") as f:
-        json.dump(payload, f, indent=1, sort_keys=True)
-        f.write("\n")
+    _write_json(f"BENCH_{factor}X.json", payload)
     print(json.dumps(payload))
 
 
-def scale100x_main() -> None:
-    """The third scale loop: the 13 TPC-H bench queries at an
-    sf10-equivalent (100×) replication of the relational tables,
-    Spark AND DuckDB (same oracle SQL, same parquet, warm best-of-2),
-    recorded as BENCH_100X.json. Exists to answer the one scale
-    question the 10× loop left open: the TPC-H micro-queries are
-    dispatch-floor-bound at sf0.1 AND still mostly floor-bound at 10×
-    — one more order of magnitude shows where each plan actually
-    crosses over. Only relational tables are built (see
-    _RELATIONAL_TABLES note); the pipeline/text/ann crossover is
-    already recorded at 10×."""
-    import duckdb
-
-    src = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    dst = os.environ.get("SPARK_GRAFT_100X_DIR", "/tmp/spark_graft_sf10eq")
-    repo = os.path.dirname(os.path.abspath(__file__))
-    if not os.path.exists(os.path.join(dst, ".complete")):
-        print(f"building 100x dir {dst} from {src} ...", file=sys.stderr)
-        build_scale10x_dir(src, dst, factor=100, tables=_RELATIONAL_TABLES)
-
-    spark = get_spark(app_name="bench100x")
-    spark.sparkContext.setLogLevel("ERROR")
-    from duckdb_redis_olap_scanner_spark.plans.catalog import table
-
-    cpus = local_cores()
+def scaling_main(factor: int) -> None:
+    """Core-scaling evidence at the 10×/100× dirs. At sf0.1 every table
+    is a single-row-group parquet file, so scans are 1 task at any core
+    count and a core-scaling ratio there is ~1 by construction. At 10×
+    the scans split and core count becomes observable for the
+    CPU-bound operators; at 100× (TPC-H subset, multi-second queries)
+    it separates for the relational plans too. This mode runs the suite
+    at $SPARK_GRAFT_CPUS (default: the usable CPUs) and at a quarter of
+    that, one Spark session each built by the same ``get_spark``, and
+    records SCALING_10X.json / SCALING_100X.json with per-query ratios
+    and executed task counts."""
     entries = registry()
-    bench_names = sorted(
-        n for n, e in entries.items()
-        if "bench" in e.tags and n.startswith("q")
-    )
-    # Warmup without .cache(): every timed run computes from parquet.
-    for t in _RELATIONAL_TABLES:
-        table(spark, dst, t).count()
-    _force(entries["q1_pricing_summary"].fn(spark, dst))
-
-    passes = int(os.environ.get("SPARK_GRAFT_BENCH_PASSES", "2"))
-    best: dict[str, float] = {n: float("inf") for n in bench_names}
-    for _ in range(passes):
-        for name in bench_names:
-            spark.sparkContext.setJobDescription(f"bench100x: {name}")
-            t0 = time.perf_counter()
-            _force(entries[name].fn(spark, dst))
-            best[name] = min(best[name], time.perf_counter() - t0)
-    spark.sparkContext.setJobDescription(None)
-    timings = {name: round(v, 3) for name, v in best.items()}
-    spark.stop()
-
-    con = duckdb.connect()
-    con.execute(f"SET threads={cpus}")
-    for t in _RELATIONAL_TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM "
-            f"read_parquet('{os.path.join(dst, t + '.parquet')}')"
-        )
-    duck: dict[str, float] = {}
-    for name in bench_names:
-        sql = entries[name].oracle
-        if not sql:
-            continue
-        tbest = float("inf")
-        for _ in range(2):
-            t0 = time.perf_counter()
-            con.execute(sql).fetchall()
-            tbest = min(tbest, time.perf_counter() - t0)
-        duck[name] = round(tbest, 3)
-
-    ratios = {
-        n: round(timings[n] / duck[n], 2)
-        for n in bench_names
-        if duck.get(n)
-    }
-    payload = {
-        "metric": "tpch_queries_total_sec_100x",
-        "value": round(sum(timings.values()), 3),
-        "unit": "sec",
-        "queries": timings,
-        "sf": 10.0,
-        "duck": duck,
-        "duck_total": round(sum(duck.values()), 3),
-        "ratios": ratios,
-        "ratio_total": round(
-            sum(timings.values()) / sum(duck.values()), 3
-        ) if duck else None,
-        "notes": (
-            "sf10-equivalent dir: sf0.1 relational tables replicated "
-            "100x with FK-consistent id offsets "
-            "(bench.py build_scale10x_dir factor=100). duck = same "
-            f"oracle SQL, {cpus} threads, warm best-of-2, same "
-            "parquet. TPC-H q* bench queries only — the pipeline/"
-            "text/ann scale story is BENCH_10X.json."
-        ),
-    }
-    with open(os.path.join(repo, "BENCH_100X.json"), "w") as f:
-        json.dump(payload, f, indent=1, sort_keys=True)
-        f.write("\n")
-    print(json.dumps(payload))
-
-
-def scaling10x_main(factor: int = 10) -> None:
-    """Core-scaling evidence at the 10×/100× dirs (r21 verdict item
-    1). The driver's 8-vs-32-core ratios at sf0.1 are ~1 BY
-    CONSTRUCTION: every sf0.1 table is a single-row-group parquet file
-    (scans are 1 task at any core count) — so the flat ratios say
-    "this SF can't use more cores", not "the harness ignores
-    $SPARK_GRAFT_CPUS". At the 10× dir the scans split ~32+ ways and
-    core count becomes observable for the CPU-bound operators; at the
-    100× dir (TPC-H subset, multi-second queries) it separates for
-    the relational plans too. This mode runs the suite at
-    $SPARK_GRAFT_CPUS (default: the usable CPUs) and at a low core
-    count (default 8), one Spark session each — the SAME get_spark
-    construction the driver uses, master local[N] from the env var —
-    and records SCALING_10X.json / SCALING_100X.json with per-query
-    ratios and executed task counts."""
-    src = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    if factor >= 100:
-        dst = os.environ.get("SPARK_GRAFT_100X_DIR", "/tmp/spark_graft_sf10eq")
-        artifact, sf_out = "SCALING_100X.json", 10.0
-    else:
-        dst = os.environ.get("SPARK_GRAFT_10X_DIR", "/tmp/spark_graft_sf1eq")
-        artifact, sf_out = "SCALING_10X.json", 1.0
-    repo = os.path.dirname(os.path.abspath(__file__))
-    if not os.path.exists(os.path.join(dst, ".complete")):
-        print(f"building {factor}x dir {dst} from {src} ...", file=sys.stderr)
-        build_scale10x_dir(
-            src, dst, factor=factor,
-            tables=_RELATIONAL_TABLES if factor >= 100 else _ALL_TABLES,
-        )
-
-    from duckdb_redis_olap_scanner_spark.plans.catalog import table
-
+    dst, tables, names, sf = _scale_setup(factor, entries)
     cpus_main = local_cores()
-    cpus_low = int(os.environ.get("SPARK_GRAFT_CPUS_LOW", "8"))
-    passes = int(os.environ.get("SPARK_GRAFT_BENCH_PASSES", "2"))
-    entries = registry()
-    # Only the tables the dir actually holds (the 100× dir replicates
-    # the relational subset), and only the queries over those tables.
-    tables_here = tuple(
-        t for t in _ALL_TABLES
-        if os.path.exists(os.path.join(dst, f"{t}.parquet"))
-    )
-    bench_names = sorted(
-        n for n, e in entries.items()
-        if "bench" in e.tags
-        and (len(tables_here) == len(_ALL_TABLES) or n.startswith("q"))
-    )
+    cpus_low = max(1, cpus_main // 4)
 
     saved_cpus = os.environ.get("SPARK_GRAFT_CPUS")
     results: dict[int, dict] = {}
@@ -580,33 +380,19 @@ def scaling10x_main(factor: int = 10) -> None:
         # conservative direction for a claim that more cores help.
         for cpus in (cpus_low, cpus_main):
             # get_spark derives master=local[N] and every width/AQE
-            # formula from this env var — identical to a driver run at
-            # that core count (no hard-coded master anywhere).
+            # formula from this env var — no hard-coded master anywhere.
             os.environ["SPARK_GRAFT_CPUS"] = str(cpus)
-            spark = get_spark(app_name=f"scaling10x-{cpus}")
+            spark = get_spark(app_name=f"scaling{factor}x-{cpus}")
             spark.sparkContext.setLogLevel("ERROR")
-            for t in tables_here:
-                table(spark, dst, t).count()
-            _force(entries["q1_pricing_summary"].fn(spark, dst))
-            best: dict[str, float] = {n: float("inf") for n in bench_names}
-            for _ in range(passes):
-                for name in bench_names:
-                    spark.sparkContext.setJobDescription(
-                        f"scaling10x[{cpus}]: {name}"
-                    )
-                    t0 = time.perf_counter()
-                    _force(entries[name].fn(spark, dst))
-                    best[name] = min(best[name], time.perf_counter() - t0)
-            spark.sparkContext.setJobDescription(None)
-            tasks = _task_counts(spark, entries, bench_names, dst)
+            best = _time_suite(spark, entries, names, dst, tables, _PASSES)
             results[cpus] = {
-                "queries": {n: round(v, 3) for n, v in best.items()},
+                "queries": best,
                 "total": round(sum(best.values()), 3),
                 "default_parallelism": spark.sparkContext.defaultParallelism,
                 "shuffle_partitions": int(
                     spark.conf.get("spark.sql.shuffle.partitions")
                 ),
-                "tasks": tasks,
+                "tasks": _task_counts(spark, entries, names, dst),
             }
             spark.stop()
     finally:
@@ -617,65 +403,56 @@ def scaling10x_main(factor: int = 10) -> None:
 
     main_q = results[cpus_main]["queries"]
     low_q = results[cpus_low]["queries"]
-    ratios = {
-        n: round(low_q[n] / main_q[n], 2)
-        for n in bench_names
-        if main_q.get(n)
-    }
     payload = {
         "metric": f"scaling_{factor}x_low_over_main",
         "cpus_main": cpus_main,
         "cpus_low": cpus_low,
         "main": results[cpus_main],
         "low": results[cpus_low],
-        "ratios": ratios,
+        "ratios": {
+            n: round(low_q[n] / main_q[n], 2) for n in names if main_q.get(n)
+        },
         "ratio_total": round(
             results[cpus_low]["total"] / results[cpus_main]["total"], 3
         ),
-        "sf": sf_out,
+        "sf": sf,
         "unit": "sec",
         "notes": (
             f"Core-scaling evidence at the {factor}x dir, where "
-            "parallelism is observable (scans split ~32 ways; at "
-            "sf0.1 every table is a single-row-group file so scans "
-            "are 1 task at any core count and 8-vs-32 ratios sit at "
-            "~1 by construction). ratios = low-core sec / main-core "
-            "sec per query, min over passes, noop sink, warmup per "
-            "session; the low-core session runs FIRST so page-cache "
-            "bias, if any, shrinks the ratio (conservative). tasks = "
-            "executed task counts per query per session "
+            "parallelism is observable (at sf0.1 every table is a "
+            "single-row-group file, so scans are 1 task at any core "
+            "count). cpus_low = cpus_main // 4. ratios = low-core sec / "
+            "main-core sec per query, min over passes, noop sink, "
+            "warmup per session; the low-core session runs FIRST so "
+            "page-cache bias, if any, shrinks the ratio (conservative). "
+            "tasks = executed task counts per query per session "
             "(statusTracker)."
         ),
     }
-    with open(os.path.join(repo, artifact), "w") as f:
-        json.dump(payload, f, indent=1, sort_keys=True)
-        f.write("\n")
+    _write_json(f"SCALING_{factor}X.json", payload)
     print(json.dumps(payload))
 
 
 def streaming_main() -> None:
-    """Timed surface for the STREAMING operators (r21 verdict item 7).
+    """Timed surface for the STREAMING operators.
 
     The registry's stream_* entries run the same transformations in
-    batch mode (that's what the driver's oracle can check); this mode
+    batch mode (that is what the DuckDB oracle can check); this mode
     times the real micro-batch executions — file stream source over
     the sf dir's events parquet (a fixed, deterministic row budget),
     availableNow trigger, memory sink, fresh checkpoint per run — so
     optimization claims about streaming_ops.py/streaming/events.py are
-    falsifiable instead of 'examined, left'. Records STREAM_BENCH.json
-    (min over passes; each sample is one complete stream run including
-    source listing, state store setup and sink commit). Not part of
-    the driver-parsed headline line — additive artifact only."""
+    falsifiable. Records STREAM_BENCH.json (min over passes; each
+    sample is one complete stream run including source listing, state
+    store setup and sink commit). Not part of the headline line
+    main() prints."""
     import shutil
     import tempfile
 
     from duckdb_redis_olap_scanner_spark.streaming import events as SE
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    sf = float(
-        os.path.basename(sf_dir.rstrip("/")).replace("sf", "") or "0.1"
-    )
-    repo = os.path.dirname(os.path.abspath(__file__))
+    sf = _sf_of(sf_dir)
     cpus = local_cores()
     spark = get_spark(app_name="bench-streaming")
     spark.sparkContext.setLogLevel("ERROR")
@@ -695,7 +472,6 @@ def streaming_main() -> None:
         os.path.join(sf_dir, "events.parquet")
     ).count()
 
-    passes = int(os.environ.get("SPARK_GRAFT_BENCH_PASSES", "2"))
     best: dict[str, float] = {n: float("inf") for n in OPS}
     rows_out: dict[str, int] = {}
     run_id = 0
@@ -704,7 +480,7 @@ def streaming_main() -> None:
     SE.run_stream_to_memory(
         SE.tumbling_window_counts(src), "s_warmup"
     ).count()
-    for _ in range(passes):
+    for _ in range(_PASSES):
         for name, (fn, mode) in OPS.items():
             run_id += 1
             qname = f"sbench_{run_id}"
@@ -741,194 +517,71 @@ def streaming_main() -> None:
             "rows_out sanity-pins each op's emitted row count."
         ),
     }
-    with open(os.path.join(repo, "STREAM_BENCH.json"), "w") as f:
-        json.dump(payload, f, indent=1, sort_keys=True)
-        f.write("\n")
+    _write_json("STREAM_BENCH.json", payload)
     print(json.dumps(payload))
     spark.stop()
 
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    sf = float(os.path.basename(sf_dir.rstrip("/")).replace("sf", "") or "0.1")
+    sf = _sf_of(sf_dir)
 
     spark = get_spark(app_name="bench")
     spark.sparkContext.setLogLevel("ERROR")
     cpus = local_cores()
+    host = socket.gethostname()
 
     entries = registry()
     bench_names = sorted(n for n, e in entries.items() if "bench" in e.tags)
+    timings = _time_suite(
+        spark, entries, bench_names, sf_dir, _ALL_TABLES,
+        _MAIN_PASSES, _MAIN_REPS,
+    )
+    total = round(sum(timings.values()), 3)
 
-    # Warmup: JVM JIT + codegen + parquet footer caches (+ OS page
-    # cache for the files — which the DuckDB pairing enjoys equally).
-    # MEASUREMENT FIX (r21): rounds <=20 additionally .cache()d every
-    # base table here and pre-built a persisted secondary custkey
-    # layout for q13, so the timed queries read Spark's in-memory
-    # columnar cache instead of computing from parquet. Under the
-    # optimization-round ground rules that is result caching outside
-    # the timed region (gaming), so it is removed: every timed run now
-    # computes end-to-end from the parquet inputs. Recorded
-    # BENCH_r<=20 numbers used the cached methodology and are NOT
-    # directly comparable — see OPTIMIZATION_r21.md for both series.
-    from duckdb_redis_olap_scanner_spark.plans.catalog import table
-
-    for t in ("region", "nation", "customer", "supplier", "part",
-              "orders", "lineitem", "events", "documents", "embeddings"):
-        table(spark, sf_dir, t).count()
-    _force(entries["q1_pricing_summary"].fn(spark, sf_dir))
-
-    # Sampling shape: PASSES over the suite × consecutive REPS per
-    # query, best across all samples. Two forces pull opposite ways:
-    # consecutive reps of one query run against a warm codegen cache
-    # (round-robin over 19 queries overflows the bounded generated-
-    # class cache, and every sample pays recompilation — measured ~2×
-    # inflation), while this host's ±25% bursty neighbor noise can
-    # poison all consecutive samples of one query. Passes × reps takes
-    # one warm sample per pass AND separates passes in time; 3 passes
-    # (6 samples/query, ~+40 s wall) because round-6 back-to-back runs
-    # measured 2.67 s and 3.36 s for identical code — the extra pass
-    # buys the min a third independent time window.
-    passes = int(os.environ.get("SPARK_GRAFT_BENCH_PASSES", "3"))
-    reps = int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "2"))
-    best: dict[str, float] = {n: float("inf") for n in bench_names}
-    for _ in range(passes):
-        for name in bench_names:
-            spark.sparkContext.setJobDescription(f"bench: {name}")
-            for _ in range(reps):
-                t0 = time.perf_counter()
-                _force(entries[name].fn(spark, sf_dir))
-                best[name] = min(best[name], time.perf_counter() - t0)
-    spark.sparkContext.setJobDescription(None)
-    timings = {name: round(v, 3) for name, v in best.items()}
-
-    # Per-query dispatch floor: job floor + exchanges × per-exchange
-    # floor, both measured on this host. A query whose time ≈ its
-    # floor is scheduler-bound, not plan-bound — mechanically
-    # separable from a real regression.
-    job_floor, ex_floor, arrow_floor = _dispatch_floor_model(spark)
-    # Queries that run EXTRA driver jobs before their main action —
-    # the floor model otherwise charges one job per query.
-    # ann_cosine_topk collects its ≤5 query vectors in a separate job
-    # (the closed-over-queries Arrow scorer design) before the scan.
-    extra_jobs = {"ann_cosine_topk": 1}
-    floor_sec = {}
-    for name in bench_names:
-        df = entries[name].fn(spark, sf_dir)
-        floor_sec[name] = round(
-            job_floor * (1 + extra_jobs.get(name, 0))
-            + _plan_exchanges(df) * ex_floor
-            + _plan_arrow_stages(df) * arrow_floor,
-            3,
-        )
-
-    # Scaling evidence (r21 verdict item 1): per-query executed task
-    # counts + the session's actual parallelism, recorded OUTSIDE the
-    # timed region, so the payload itself shows whether more cores
-    # CAN help at this SF (a 1-task scan is core-count-invariant by
-    # construction, not by a harness bug).
+    # Per-query executed task counts and the session's parallelism,
+    # recorded OUTSIDE the timed region, so the payload shows whether
+    # more cores CAN help at this SF (a 1-task scan is core-count-
+    # invariant by construction).
     task_counts = _task_counts(spark, entries, bench_names, sf_dir)
 
-    # Regression guard on stderr — stdout stays the single JSON line
-    # the driver parses. Floors from THIS run so a noisy host raises
-    # the bar with itself.
-    repo_dir = os.path.dirname(os.path.abspath(__file__))
-    for msg in regression_report(timings, repo_dir, sf=sf, floor_sec=floor_sec):
+    # Regression guard on stderr — stdout stays the one JSON line.
+    for msg in regression_report(timings, _REPO, sf=sf, cpus=cpus):
         print(f"REGRESSION {msg}", file=sys.stderr)
 
     if "--duck-local" in sys.argv:
-        # Same-box DuckDB pairing at THIS sf (the r17 verdict asked for
-        # the sf0.1 ratio as a committed artifact, not a judge rerun):
-        # identical oracle SQL over the same parquet, same thread
-        # count, warm best-of-3 to mirror the Spark min-of-N shape.
-        # Written to BENCH_DUCK_LOCAL.json; stdout stays the single
-        # driver-parsed JSON line.
-        import duckdb
-
-        con = duckdb.connect()
-        con.execute(f"SET threads={cpus}")
-        for t in ("region", "nation", "customer", "supplier", "part",
-                  "orders", "lineitem", "events", "documents",
-                  "embeddings"):
-            con.execute(
-                f"CREATE VIEW {t} AS SELECT * FROM "
-                f"read_parquet('{os.path.join(sf_dir, t + '.parquet')}')"
-            )
-        duck: dict[str, float] = {}
-        for name in bench_names:
-            sql = entries[name].oracle
-            if not sql:
-                continue
-            tbest = float("inf")
-            for _ in range(3):
-                t0 = time.perf_counter()
-                con.execute(sql).fetchall()
-                tbest = min(tbest, time.perf_counter() - t0)
-            duck[name] = round(tbest, 3)
-        ratios = {
-            n: round(timings[n] / duck[n], 2)
-            for n in bench_names
-            if duck.get(n)
-        }
-        spark_total = round(sum(timings.values()), 3)
-        duck_total = round(sum(duck.values()), 3)
-        with open(
-            os.path.join(repo_dir, "BENCH_DUCK_LOCAL.json"), "w"
-        ) as f:
-            json.dump(
-                {
-                    "metric": "headline_spark_vs_duckdb_local_sec",
-                    "sf": sf,
-                    "cpus": cpus,
-                    "spark": timings,
-                    "spark_total": spark_total,
-                    "duck": duck,
-                    "duck_total": duck_total,
-                    "ratios": ratios,
-                    "ratio_total": round(spark_total / duck_total, 3)
-                    if duck_total
-                    else None,
-                    "notes": (
-                        "Same-box pairing: Spark min over passes x reps "
-                        "(see main), DuckDB the identical oracle SQL on "
-                        "the same parquet views, warm best-of-3, "
-                        f"{cpus} threads. Written by bench.py "
-                        "--duck-local on a quiet host."
-                    ),
-                },
-                f,
-                indent=1,
-                sort_keys=True,
-            )
-            f.write("\n")
+        # Same-box DuckDB pairing at THIS sf, warm best-of-3 to mirror
+        # the Spark min-of-N shape. stdout stays the one JSON line.
+        _write_json("BENCH_DUCK_LOCAL.json", {
+            "metric": "headline_spark_vs_duckdb_local_sec",
+            "sf": sf,
+            "cpus": cpus,
+            "host": host,
+            "spark": timings,
+            "spark_total": total,
+            **_duck_pairing(entries, timings, sf_dir, _ALL_TABLES, cpus, reps=3),
+            "notes": (
+                "Same-box pairing: Spark min over passes x reps "
+                "(see main), DuckDB the identical oracle SQL on "
+                "the same parquet views, warm best-of-3, "
+                f"{cpus} threads. Written by bench.py --duck-local."
+            ),
+        })
 
     if "--record-baseline" in sys.argv:
-        # Persist this run's min-of-N timings + floors as the local
-        # quiet-host baseline the guard prefers over driver-recorded
-        # BENCH_r*.json (driver runs share the host with the judge and
-        # have measured ±25% hotter — r10 recorded 3.027 s for code an
-        # idle host runs in 2.243 s).
-        path = os.path.join(repo_dir, "BENCH_BASELINE_LOCAL.json")
-        rec = merge_baseline(
-            load_recorded_bench(path),
-            timings,
-            sf,
-            fresh="--fresh-baseline" in sys.argv,
-        )
-        with open(path, "w") as f:
-            json.dump(
-                {
-                    "metric": "headline_queries_total_sec",
-                    "value": round(sum(rec.values()), 3),
-                    "unit": "sec",
-                    "queries": rec,
-                    "sf": sf,
-                    "floor_sec": floor_sec,
-                    "notes": "quiet-host min-of-N baseline for the regression guard",
-                },
-                f,
-            )
+        # This run becomes the record the guard compares later runs
+        # with, at the same sf and core count.
+        _write_json(_BASELINE, {
+            "metric": "headline_queries_total_sec",
+            "value": total,
+            "unit": "sec",
+            "queries": timings,
+            "sf": sf,
+            "cpus": cpus,
+            "host": host,
+            "notes": "min-of-N baseline for the regression guard",
+        })
 
-    total = round(sum(timings.values()), 3)
     print(
         json.dumps(
             {
@@ -937,12 +590,6 @@ def main() -> None:
                 "unit": "sec",
                 "queries": timings,
                 "sf": sf,
-                "floor_sec": floor_sec,
-                "floor_model": {
-                    "job_sec": round(job_floor, 4),
-                    "per_exchange_sec": round(ex_floor, 4),
-                    "per_arrow_stage_sec": round(arrow_floor, 4),
-                },
                 "cpus": cpus,
                 "default_parallelism": spark.sparkContext.defaultParallelism,
                 "shuffle_partitions": int(
@@ -950,24 +597,15 @@ def main() -> None:
                 ),
                 "tasks": task_counts,
                 "notes": (
-                    "floor_sec = measured job floor x (1 + extra "
-                    "driver jobs) + executed-plan exchange count x "
-                    "per-exchange floor + Python/Arrow stage count x "
-                    "per-arrow-stage floor, all measured on this "
-                    "host; a query near its floor is "
-                    "scheduler-bound, not plan-bound. r21: warmup no "
-                    "longer caches base tables or pre-builds keyed "
-                    "layouts — every timed run computes from parquet "
-                    "(see OPTIMIZATION_r21.md, measurement fix). "
-                    "r22: tasks = executed task count per query (one "
-                    "forced run outside the timed region, "
-                    "statusTracker). At sf0.1 every table is a "
-                    "single-row-group parquet file (scans = 1 task "
-                    "at ANY core count), so 8-vs-32-core "
-                    "ratios CANNOT separate here by construction — "
-                    "core scaling is observable at the 10x dir "
-                    "(bench.py --scaling10x, SCALING_10X.json), "
-                    "where scans split ~32 ways."
+                    "Best of passes x reps per query, noop sink; the "
+                    "warmup caches no table, so every timed run "
+                    "computes from parquet. tasks = executed task "
+                    "count per query (one forced run outside the "
+                    "timed region, statusTracker). At sf0.1 every "
+                    "table is a single-row-group parquet file (scans "
+                    "= 1 task at ANY core count), so core scaling is "
+                    "observable only at the 10x dir (bench.py "
+                    "--scaling10x, SCALING_10X.json)."
                 ),
             }
         )
@@ -979,12 +617,12 @@ if __name__ == "__main__":
     if "--streaming" in sys.argv:
         streaming_main()
     elif "--scale100x" in sys.argv:
-        scale100x_main()
+        scale_main(100)
     elif "--scaling100x" in sys.argv:
-        scaling10x_main(factor=100)
+        scaling_main(100)
     elif "--scaling10x" in sys.argv:
-        scaling10x_main()
+        scaling_main(10)
     elif "--scale10x" in sys.argv:
-        scale10x_main()
+        scale_main(10)
     else:
         main()

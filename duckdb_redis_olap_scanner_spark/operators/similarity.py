@@ -73,8 +73,8 @@ def _sqnorm(a: Column) -> Column:
 # 64 `get`+multiply terms per pair, no re-flooring.  (Round 3 inlined
 # the flooring into the per-pair dot, re-quantizing both vectors for
 # every one of the Q·N pairs and carrying a full interpreted-HOF
-# fallback tree at every call site; that doubled `ann_cosine_topk` —
-# VERDICT.md r3.  This layout restores once-per-row quantization while
+# fallback tree at every call site; that doubled `ann_cosine_topk`.
+# This layout restores once-per-row quantization while
 # keeping the codegen'd per-pair loop.)
 #
 # Per-element math is IDENTICAL to the lambda form (floor(x * 1000)

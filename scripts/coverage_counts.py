@@ -1,8 +1,8 @@
 #!/usr/bin/env python
 """Reproducible COVERAGE.md numbers, generated from the registry.
 
-VERDICT r11 found a hand-edited drift (COVERAGE.md said 219 entries,
-the registry has 218). This script is the fix: every count quoted in
+A hand-edited count once drifted (COVERAGE.md said 219 entries, the
+registry had 218). This script is the fix: every count quoted in
 COVERAGE.md comes from ``catalog.registry()``, so the docs can always
 be re-derived:
 

@@ -13,7 +13,7 @@ loop or ``parametrize`` — and prints a JSON summary:
     {"entries_total": N, "with_third_opinion": K,
      "without": [names...], "detection": "ast-expression contexts"}
 
-Tightened from the r17 quoted-token regex (ADVICE r17): names that
+Tightened from an earlier quoted-token regex: names that
 appear ONLY in docstrings, comments, or skip/xfail ``reason`` strings
 no longer count, so a mention in an audit file's header prose cannot
 inflate the completeness claim. Under-counting remains possible only

@@ -6,8 +6,8 @@ row-cap contract.
 The branches are volume-gated on real file sizes, so at the test SFs
 they never fire on their own; these tests force them by patching the
 static gate the query functions consult, then compare rows against the
-same DuckDB oracle the registry entry declares. This is the suite twin
-of the manual 100× verification recorded in OPTIMIZATION_r21.md.
+same DuckDB oracle the registry entry declares, so the branches are
+checked in the suite and not only by a manual run at 100×.
 """
 
 from __future__ import annotations

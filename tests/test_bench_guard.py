@@ -1,9 +1,9 @@
 """The per-query bench-regression guard: bench.py compares each run's
-timings to the quiet-host BENCH_BASELINE_LOCAL.json (else the newest
-recorded BENCH_r*.json) with threshold 1.5 × max(recorded, floor) +
-0.15 s absolute jitter slack, so a suite-wide slowdown is caught
-in-round while sub-floor queries on a noisy host don't cry wolf. No
-Spark — pure parsing/comparison logic over the recorded artifacts."""
+timings to BENCH_BASELINE_LOCAL.json, a record taken at the same sf and
+core count, and flags a query slower than 1.5 × recorded + 0.15 s
+absolute jitter slack, so a real slowdown is caught while sub-second
+queries on a noisy host don't cry wolf. No Spark — pure parsing and
+comparison logic over the committed record."""
 
 from __future__ import annotations
 
@@ -11,145 +11,72 @@ import json
 import os
 import sys
 
-import pytest
-
 _REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, _REPO)
 
 import bench  # noqa: E402
 
 
-def _newest_recorded():
-    import glob
-
-    for path in sorted(
-        glob.glob(os.path.join(_REPO, "BENCH_r*.json")), reverse=True
-    ):
-        rec = bench.load_recorded_bench(path)
-        if rec and rec.get("queries"):
-            return rec
-    return None
-
-
-def test_recorded_rounds_parse():
-    rec = _newest_recorded()
-    if rec is None:
-        pytest.skip("no recorded BENCH_r*.json in repo root")
-    assert rec["queries"] and all(
-        isinstance(v, (int, float)) for v in rec["queries"].values()
-    )
+def _committed_baseline() -> dict:
+    prev = bench.resolve_baseline(_REPO)
+    assert prev is not None, "BENCH_BASELINE_LOCAL.json missing or empty"
+    return prev
 
 
 def test_identical_timings_pass():
-    """Self-comparison form (r18 verdict): a run whose timings equal
-    the guard's OWN resolved baseline must produce zero flags — true by
-    construction for any tolerance > 1, on any host. The earlier shape
-    (compare the newest driver-written BENCH_r*.json against the
-    committed quiet-host baseline) reddened the suite whenever the
-    driver benched on a hot host — it asserted host weather, not guard
-    logic, and the builder cannot control the artifact."""
-    prev = bench.resolve_baseline(_REPO)
-    if prev is None:
-        pytest.skip("no recorded bench baseline in repo root")
+    """A run whose timings equal the guard's own resolved baseline
+    produces zero flags — true by construction for any tolerance > 1,
+    on any host, so the test asserts guard logic, not host weather."""
+    prev = _committed_baseline()
     assert bench.regression_report(dict(prev["queries"]), _REPO) == []
 
 
 def test_regression_detected():
-    """Delta form (r18 verdict): seeding a ×4 slowdown into the newest
-    recorded run must add EXACTLY the victim's flag relative to the
-    unseeded report — pre-existing flags (a hot-host driver record vs
-    the quiet baseline) neither mask the seeded one nor fail the
-    assertion."""
-    rec = _newest_recorded()
-    if rec is None:
-        pytest.skip("no recorded BENCH_r*.json in repo root")
-    timings = dict(rec["queries"])
-    pre = set(bench.regression_report(dict(timings), _REPO))
-    # The slowest query ×4 clears ratio, floor, and absolute slack —
-    # an unmistakable real regression must always flag. The victim
-    # must exist in the guard's RESOLVED baseline (a query added to
-    # bench.py after the committed baseline was recorded is invisible
-    # to the guard until the next --record-baseline, by design).
-    prev = bench.resolve_baseline(_REPO)
-    candidates = [q for q in timings if q in prev["queries"]]
-    assert candidates, "no overlap between newest record and baseline"
-    victim = max(candidates, key=timings.get)
+    """Seeding a ×4 slowdown of the slowest query into the committed
+    record flags exactly that query."""
+    timings = dict(_committed_baseline()["queries"])
+    assert bench.regression_report(dict(timings), _REPO) == []
+    # The slowest query ×4 clears both the ratio and the absolute
+    # slack — an unmistakable real regression must always flag.
+    victim = max(timings, key=timings.get)
     timings[victim] = timings[victim] * 4.0
-    post = set(bench.regression_report(timings, _REPO))
-    new = post - pre
-    assert len(new) == 1 and next(iter(new)).startswith(f"{victim}:")
-    # And nothing that was quiet before became loud: the seed touched
-    # one query, so the unseeded flags (if any) carry over verbatim.
-    assert pre - post == {m for m in pre if m.startswith(f"{victim}:")}
+    report = bench.regression_report(timings, _REPO)
+    assert len(report) == 1 and report[0].startswith(f"{victim}:")
 
 
 def test_jitter_below_slack_not_flagged(tmp_path):
-    """A sub-floor query inflated by host jitter (< ratio·bar + slack)
-    stays quiet — the r10 false-flag scenario."""
+    """A short query inflated by host jitter (< ratio·base + slack)
+    stays quiet."""
     base = {
         "metric": "m", "value": 0.1, "unit": "sec",
         "queries": {"tiny": 0.10}, "sf": 0.1,
-        "floor_sec": {"tiny": 0.15},
     }
-    (tmp_path / "BENCH_r01.json").write_text(json.dumps(base))
-    # 0.30 s vs bar max(0.10, 0.15)=0.15 → 1.5·0.15+0.15 = 0.375: quiet.
-    assert bench.regression_report({"tiny": 0.30}, str(tmp_path)) == []
-    # 0.40 s exceeds it: flagged.
-    assert len(bench.regression_report({"tiny": 0.40}, str(tmp_path))) == 1
-
-
-def test_local_baseline_preferred(tmp_path):
-    noisy = {
-        "metric": "m", "value": 9.0, "unit": "sec",
-        "queries": {"q": 9.0}, "sf": 0.1,
-    }
-    quiet = {
-        "metric": "m", "value": 1.0, "unit": "sec",
-        "queries": {"q": 1.0}, "sf": 0.1,
-    }
-    (tmp_path / "BENCH_r09.json").write_text(json.dumps(noisy))
-    (tmp_path / "BENCH_BASELINE_LOCAL.json").write_text(json.dumps(quiet))
-    # 3.0 s would pass vs the noisy 9.0 s record but must flag vs the
-    # quiet-host 1.0 s baseline.
-    assert len(bench.regression_report({"q": 3.0}, str(tmp_path))) == 1
+    (tmp_path / "BENCH_BASELINE_LOCAL.json").write_text(json.dumps(base))
+    # bar = 1.5·0.10 + 0.15 = 0.30 s: 0.29 s is quiet, 0.31 s flags.
+    assert bench.regression_report({"tiny": 0.29}, str(tmp_path)) == []
+    assert len(bench.regression_report({"tiny": 0.31}, str(tmp_path))) == 1
 
 
 def test_resolve_baseline_order(tmp_path):
-    """resolve_baseline: quiet-host local file wins; newest BENCH_r* is
-    the fallback; sf mismatch disqualifies; empty dir → None."""
+    """resolve_baseline reads only the local record, and only when its
+    sf and cpus match the run's; an empty dir gives None."""
     assert bench.resolve_baseline(str(tmp_path)) is None
-    old = {"metric": "m", "value": 2.0, "unit": "sec", "queries": {"q": 2.0}, "sf": 0.1}
-    new = {"metric": "m", "value": 3.0, "unit": "sec", "queries": {"q": 3.0}, "sf": 0.1}
-    (tmp_path / "BENCH_r01.json").write_text(json.dumps(old))
-    (tmp_path / "BENCH_r02.json").write_text(json.dumps(new))
-    assert bench.resolve_baseline(str(tmp_path))["queries"] == {"q": 3.0}
-    quiet = {"metric": "m", "value": 1.0, "unit": "sec", "queries": {"q": 1.0}, "sf": 0.1}
-    (tmp_path / "BENCH_BASELINE_LOCAL.json").write_text(json.dumps(quiet))
+    rec = {
+        "metric": "m", "value": 1.0, "unit": "sec",
+        "queries": {"q": 1.0}, "sf": 0.1, "cpus": 4,
+    }
+    (tmp_path / "BENCH_BASELINE_LOCAL.json").write_text(json.dumps(rec))
     assert bench.resolve_baseline(str(tmp_path))["queries"] == {"q": 1.0}
-    # sf-gated: a 0.01 ask skips the 0.1 local file AND the 0.1 records.
+    assert bench.resolve_baseline(str(tmp_path), sf=0.1, cpus=4) is not None
+    # sf-gated and cpus-gated: times from another scale factor or core
+    # count are not comparable.
     assert bench.resolve_baseline(str(tmp_path), sf=0.01) is None
+    assert bench.resolve_baseline(str(tmp_path), sf=0.1, cpus=8) is None
+    # A gated-out baseline flags nothing, however slow the run.
+    assert bench.regression_report({"q": 9.0}, str(tmp_path), cpus=8) == []
     # Self-comparison against the resolved baseline is empty by
     # construction — the invariant test_identical_timings_pass leans on.
     assert bench.regression_report({"q": 1.0}, str(tmp_path)) == []
-
-
-def test_merge_baseline_semantics():
-    """The --record-baseline write path, unit-pinned (the r18 stale-
-    optimism came exactly from this logic being untested inline):
-    same-sf min-merge by default, REPLACE on fresh, never merge across
-    sf, keep-old-only-via-min."""
-    old = {"sf": 0.1, "queries": {"a": 1.0, "b": 2.0, "gone": 0.5}}
-    new = {"a": 1.5, "b": 1.5, "new": 3.0}
-    # default: per-query min, old-only queries carried, new ones added
-    assert bench.merge_baseline(old, new, 0.1) == {
-        "a": 1.0, "b": 1.5, "gone": 0.5, "new": 3.0
-    }
-    # fresh: replacement — no ratcheted minima, no resurrected queries
-    assert bench.merge_baseline(old, new, 0.1, fresh=True) == new
-    # sf mismatch: numbers aren't comparable, never merge
-    assert bench.merge_baseline(old, new, 0.01) == new
-    # no prior baseline
-    assert bench.merge_baseline(None, new, 0.1) == new
 
 
 from hypothesis import given, settings  # noqa: E402
@@ -164,20 +91,17 @@ _timings = st.dictionaries(
 
 
 @settings(max_examples=80, deadline=None)
-@given(_timings, st.floats(min_value=0.0, max_value=10.0))
-def test_guard_self_comparison_is_always_empty(tmp_path_factory, queries, floor):
+@given(_timings)
+def test_guard_self_comparison_is_always_empty(tmp_path_factory, queries):
     """Invariant behind test_identical_timings_pass: ANY recorded run
-    compared against itself is flag-free — for every timing mix and
-    floor, since tolerance > 1 and slack > 0."""
-    import json as _json
-
+    compared against itself is flag-free — for every timing mix, since
+    tolerance > 1 and slack > 0."""
     d = tmp_path_factory.mktemp("selfcmp")
     rec = {
         "metric": "m", "value": sum(queries.values()), "unit": "sec",
         "queries": queries, "sf": 0.1,
-        "floor_sec": {k: floor for k in queries},
     }
-    (d / "BENCH_BASELINE_LOCAL.json").write_text(_json.dumps(rec))
+    (d / "BENCH_BASELINE_LOCAL.json").write_text(json.dumps(rec))
     assert bench.regression_report(dict(queries), str(d)) == []
 
 
@@ -187,29 +111,14 @@ def test_guard_seeding_flags_exactly_the_victim(tmp_path_factory, queries):
     """Invariant behind test_regression_detected: multiplying ONE
     query by 4 (plus the full absolute slack) over its own baseline
     adds exactly that query's flag and no other."""
-    import json as _json
-
     d = tmp_path_factory.mktemp("seed")
     rec = {
         "metric": "m", "value": sum(queries.values()), "unit": "sec",
         "queries": queries, "sf": 0.1,
     }
-    (d / "BENCH_BASELINE_LOCAL.json").write_text(_json.dumps(rec))
+    (d / "BENCH_BASELINE_LOCAL.json").write_text(json.dumps(rec))
     victim = sorted(queries)[0]
     seeded = dict(queries)
     seeded[victim] = seeded[victim] * 4.0 + 0.31
     report = bench.regression_report(seeded, str(d))
     assert len(report) == 1 and report[0].startswith(f"{victim}:")
-
-
-def test_wrapper_and_raw_formats_parse(tmp_path):
-    line = {"metric": "m", "value": 1.0, "unit": "sec", "queries": {"q": 0.5}, "sf": 0.1}
-    raw = tmp_path / "BENCH_r01.json"
-    raw.write_text(json.dumps(line))
-    wrapped = tmp_path / "BENCH_r02.json"
-    wrapped.write_text(
-        json.dumps({"n": 1, "rc": 0, "tail": "noise\n" + json.dumps(line) + "\n"})
-    )
-    assert bench.load_recorded_bench(str(raw))["queries"] == {"q": 0.5}
-    assert bench.load_recorded_bench(str(wrapped))["queries"] == {"q": 0.5}
-    assert bench.load_recorded_bench(str(tmp_path / "missing.json")) is None
